@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * a single-SF number cannot show the design property that matters at
   * 100 TB — sub-quadratic candidate growth. This sweep does.
   */
-object BenchScale {
+object BenchScale extends Sweep.SingleLeg {
 
   /** The sweep's validity gate: a speedup is only evidence if the prefix
     * and exhaustive plans produced IDENTICAL pair sets. Called after the
@@ -33,23 +33,17 @@ object BenchScale {
           s"containment_pairs_equal=$containEqual): artifact written but the run is " +
           "INVALID — its speedups must not be cited")
 
-  private def exec(df: org.apache.spark.sql.DataFrame): Long =
-    df.queryExecution.toRdd.count()
+  private val regime = sys.env.getOrElse("SPARK_GRAFT_SCALE_REGIME", "linear")
+  val metric = "scale_sweep"
+  val artifactFile = s"BENCH_SCALE_$regime.json"
 
-  private def drop(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    System.gc()
-  }
+  override def extra(done: Seq[Sweep.Leg]): Sweep.Fields = Seq("regime" -> regime)
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
-    val spark = GraftSession.get()
+  def leg(c: Sweep.Ctx, factor: Int): Sweep.Leg = {
     // the sweep measures the prefix MACHINERY: disable the toy-scale
     // crossover so the prefix path never silently re-routes to the
     // exhaustive plan it is being compared against
-    spark.conf.set(operators.Scale.PrefixCrossoverConf, "0")
+    c.spark.conf.set(operators.Scale.PrefixCrossoverConf, "0")
 
     // Two scaling regimes, SPARK_GRAFT_SCALE_REGIME:
     //  - "linear" (default): each replica gets its own source suffix, so
@@ -60,9 +54,8 @@ object BenchScale {
     //    grows 10× and the qualifying pair set grows ~100× — the worst-case
     //    block-blowup stress.
     // Replica doc_ids shifted far past any real id in both regimes.
-    val regime = sys.env.getOrElse("SPARK_GRAFT_SCALE_REGIME", "linear")
     def scaledDocs = {
-      val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("source"), col("text"))
+      val docs = Tables.documents(c.spark, c.sfDir).select(col("doc_id"), col("source"), col("text"))
       (0 until factor)
         .map { i =>
           val src = if (regime == "quadratic") col("source")
@@ -81,12 +74,7 @@ object BenchScale {
       "ngram_adaptive"      -> (() => pipeline.Dedup.ngramJaccardAdaptiveFrom(scaledDocs)),
       "containment_prefix"  -> (() => pipeline.Dedup.bagOverlapPrefixFrom(scaledDocs)),
       "containment_exhaustive" -> (() => pipeline.Dedup.bagOverlapFrom(scaledDocs)))
-
-    // warm the code paths once at base scale so JIT/codegen is off the clock
-    variants.foreach { case (_, fn) =>
-      try { exec(fn().limit(1)); () } catch { case _: Throwable => }
-    }
-    drop(spark)
+    c.warm(variants.map(_._2()): _*)
 
     // snapshot the dispatcher's decision IMMEDIATELY after its timed run:
     // the equality phase below re-runs the prefix/exhaustive builders, and
@@ -95,13 +83,7 @@ object BenchScale {
     var adaptiveRoute = ""
     var adaptiveEst = (0.0, 0.0)
     val times = variants.map { case (name, fn) =>
-      val t = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        exec(fn())
-        val dt = (System.nanoTime() - t0) / 1e9
-        drop(spark)
-        dt
-      }.min
+      val t = c.time(fn())
       if (name == "ngram_adaptive") {
         adaptiveRoute = pipeline.Dedup.lastAdaptiveRoute
         adaptiveEst = pipeline.Dedup.lastAdaptiveEstimates
@@ -132,7 +114,7 @@ object BenchScale {
       val eq = p.count() == n && p.except(e).isEmpty && e.except(p).isEmpty
       p.unpersist(blocking = true)
       e.unpersist(blocking = true)
-      drop(spark)
+      c.drop()
       (n, eq)
     }
     val (jaccardPairs, jaccardEqual) = family(
@@ -164,25 +146,20 @@ object BenchScale {
     }
     val (tChosen, tOther) =
       if (adaptiveRoute == "prefix") (tPrefix, tExhaustive) else (tExhaustive, tPrefix)
-    val json = {
-      val ts = times.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-      s"""{"metric":"scale_sweep","regime":"$regime","sf":"$sfDir","factor":$factor,"reps":$reps,""" +
-        s""""times_sec":$ts,"jaccard_pairs":$jaccardPairs,"containment_pairs":$containPairs,""" +
-        s""""jaccard_pairs_equal":$jaccardEqual,"containment_pairs_equal":$containEqual,""" +
-        s""""adaptive_route":"$adaptiveRoute","adaptive_est_pairs":{"exhaustive":$adExh,"prefix":$adPre},""" +
-        s""""adaptive_route_within_2x":$routeOk}"""
-    }
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"BENCH_SCALE_$regime.json"),
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    spark.stop()
-    println(json)
-    // after the print (driver tail-capture still sees the record): an
-    // uncaught throw here exits the JVM nonzero
-    enforcePairEquality(jaccardEqual, containEqual)
-    if (!routeOk)
-      throw new IllegalStateException(
-        s"adaptive dispatcher routed '$adaptiveRoute' ($tChosen s) against a ≥2× " +
-          s"faster alternative ($tOther s) in the $regime regime: the candidate " +
-          "estimates are mis-modeling the corpus — artifact written but INVALID")
+    Sweep.Leg(s"x$factor", Seq(
+      "times_sec" -> Sweep.obj(times: _*),
+      "jaccard_pairs" -> jaccardPairs, "containment_pairs" -> containPairs,
+      "jaccard_pairs_equal" -> jaccardEqual, "containment_pairs_equal" -> containEqual,
+      "adaptive_route" -> adaptiveRoute,
+      "adaptive_est_pairs" -> Sweep.obj("exhaustive" -> adExh, "prefix" -> adPre),
+      "adaptive_route_within_2x" -> routeOk),
+      () => {
+        enforcePairEquality(jaccardEqual, containEqual)
+        if (!routeOk)
+          throw new IllegalStateException(
+            s"adaptive dispatcher routed '$adaptiveRoute' ($tChosen s) against a ≥2× " +
+              s"faster alternative ($tOther s) in the $regime regime: the candidate " +
+              "estimates are mis-modeling the corpus — artifact written but INVALID")
+      })
   }
 }

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   *
   * Writes `BENCH_SCALE_analytics.json`; prints the JSON as the last line.
   */
-object BenchScaleAnalytics {
+object BenchScaleAnalytics extends Sweep.Legs {
 
   def enforce(name: String, base: Long, scaled: Long, factor: Int): Unit =
     if (base <= 0 || scaled != factor * base)
@@ -31,54 +31,20 @@ object BenchScaleAnalytics {
           "(expected scaled == factor * base > 0) — artifact written but the run's " +
           "timings must not be cited")
 
-  private def exec(df: org.apache.spark.sql.DataFrame): Long =
-    df.queryExecution.toRdd.count()
+  val metric = "scale_sweep_analytics"
+  val artifactFile = "BENCH_SCALE_analytics.json"
 
-  private def drop(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    System.gc()
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // a 10× leg AND a 100× leg by default: 10× can hide a log factor the
-    // brief's "survive a 100× scale-up" bar cares about; 100× of the sf0.1
-    // events table (~10M rows) is trivially in-RAM, so the only cost is
-    // wall-clock. SPARK_GRAFT_SCALE_FACTOR still pins a single leg.
-    val factors = sys.env.get("SPARK_GRAFT_SCALE_FACTOR").map(f => Seq(f.toInt))
-      .getOrElse(sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTORS", "10,100")
-        .split(",").map(_.trim.toInt).toSeq)
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
-    val spark = GraftSession.get()
-    val legs = factors.map(f => runLeg(spark, sfDir, f, reps))
-    val json =
-      s"""{"metric":"scale_sweep_analytics","sf":"$sfDir","reps":$reps,""" +
-        s""""factors":[${factors.mkString(",")}],""" +
-        s""""legs":{${legs.map(_._1).mkString(",")}}}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_SCALE_analytics.json"),
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    spark.stop()
-    println(json)
-    // after the print (driver tail-capture still sees the record): an
-    // uncaught throw here exits the JVM nonzero
-    legs.foreach(_._2.apply())
-  }
-
-  /** One factor leg: timings + exact ×factor gates. Returns the leg's JSON
-    * fragment and a deferred enforcement thunk (run after the artifact is
-    * written so an invalid run still leaves its flagged record).
-    */
-  private def runLeg(spark: org.apache.spark.sql.SparkSession, sfDir: String,
-                     factor: Int, reps: Int): (String, () => Unit) = {
+  /** One factor leg: timings + exact ×factor gates. */
+  def leg(c: Sweep.Ctx, factor: Int): Sweep.Leg = {
 
     def replica(i: Int) =
-      Tables.events(spark, sfDir).select(
+      Tables.events(c.spark, c.sfDir).select(
         (col("event_id") + lit(i.toLong * 1000000000L)).as("event_id"),
         col("ts"),
         (col("user_id") + lit(i.toLong * 1000000000L)).as("user_id"),
         col("event_type"), col("value"))
-    def base = Tables.spread(spark, replica(0))
-    def scaled = Tables.spread(spark, (0 until factor).map(replica).reduce(_ union _))
+    def base = Tables.spread(c.spark, replica(0))
+    def scaled = Tables.spread(c.spark, (0 until factor).map(replica).reduce(_ union _))
 
     import operators.LogPipeline._
     val family: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = Seq(
@@ -86,33 +52,17 @@ object BenchScaleAnalytics {
       "event_funnel" -> (ev => a13FunnelTransform(ev)),
       "cohort_retention" -> (ev => a14CohortTransform(ev)),
       "active_users" -> (ev => a18ActiveTransform(ev)))
-
-    // warm codegen/JIT off the clock
-    family.foreach { case (_, mk) =>
-      try { exec(mk(base).limit(1)); () } catch { case _: Throwable => }
-    }
-    drop(spark)
-
-    def timed(mk: => org.apache.spark.sql.DataFrame): Double = {
-      val runs = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        exec(mk)
-        val dt = (System.nanoTime() - t0) / 1e9
-        drop(spark)
-        dt
-      }
-      runs.min
-    }
+    c.warm(family.map(_._2(base)): _*)
 
     val times = family.map { case (name, mk) =>
-      (name, timed(mk(base)), timed(mk(scaled)))
+      name -> Sweep.obj("base_sec" -> c.time(mk(base)), "scaled_sec" -> c.time(mk(scaled)))
     }
 
     // exact ×factor gates, computed OFF the timed path. History rows and
     // funnel stage counts are scalar relations; cohort cells and per-day
     // actives are checked cell-by-cell so a compensating error can't hide.
-    val baseHist = exec(scd2Transform(base))
-    val scaledHist = exec(scd2Transform(scaled))
+    val baseHist = Sweep.exec(scd2Transform(base))
+    val scaledHist = Sweep.exec(scd2Transform(scaled))
     val bf = a13FunnelTransform(base).collect().head
     val sf = a13FunnelTransform(scaled).collect().head
     val funnelExact = (0 to 2).forall(i => sf.getLong(i) == factor * bf.getLong(i))
@@ -120,8 +70,7 @@ object BenchScaleAnalytics {
       .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
     val bc = cellMap(a14CohortTransform(base))
     val sc = cellMap(a14CohortTransform(scaled))
-    val cohortExact = bc.nonEmpty && sc.keySet == bc.keySet &&
-      bc.forall { case (k, v) => sc(k) == factor * v }
+    val cohortExact = Sweep.exactMultiple(bc, sc, factor)
     def dayMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     val bd = dayMap(a18ActiveTransform(base))
@@ -129,25 +78,21 @@ object BenchScaleAnalytics {
     val activeExact = bd.nonEmpty && sd.keySet == bd.keySet &&
       bd.forall { case (k, (dau, wau)) => sd(k) == ((factor * dau, factor * wau)) }
 
-    val timesJson = times.map { case (n, b, s) =>
-      s""""$n":{"base_sec":$b,"scaled_sec":$s}"""
-    }.mkString(",")
-    val legJson =
-      s""""x$factor":{"factor":$factor,"times":{$timesJson},""" +
-        s""""base_hist_rows":$baseHist,"scaled_hist_rows":$scaledHist,""" +
-        s""""hist_exact_multiple":${scaledHist == factor.toLong * baseHist},""" +
-        s""""funnel_exact_multiple":$funnelExact,""" +
-        s""""cohort_cells_exact_multiple":$cohortExact,""" +
-        s""""active_days_exact_multiple":$activeExact}"""
-    val enforceLeg = () => {
-      enforce("scd2_history", baseHist, scaledHist, factor)
-      if (!funnelExact) throw new IllegalStateException(
-        s"analytics sweep invalid at x$factor: funnel counts not exact multiples")
-      if (!cohortExact) throw new IllegalStateException(
-        s"analytics sweep invalid at x$factor: cohort cells not exact multiples")
-      if (!activeExact) throw new IllegalStateException(
-        s"analytics sweep invalid at x$factor: per-day actives not exact multiples")
-    }
-    (legJson, enforceLeg)
+    Sweep.Leg(s"x$factor", Seq(
+      "factor" -> factor, "times" -> Sweep.obj(times: _*),
+      "base_hist_rows" -> baseHist, "scaled_hist_rows" -> scaledHist,
+      "hist_exact_multiple" -> (scaledHist == factor.toLong * baseHist),
+      "funnel_exact_multiple" -> funnelExact,
+      "cohort_cells_exact_multiple" -> cohortExact,
+      "active_days_exact_multiple" -> activeExact),
+      () => {
+        enforce("scd2_history", baseHist, scaledHist, factor)
+        if (!funnelExact) throw new IllegalStateException(
+          s"analytics sweep invalid at x$factor: funnel counts not exact multiples")
+        if (!cohortExact) throw new IllegalStateException(
+          s"analytics sweep invalid at x$factor: cohort cells not exact multiples")
+        if (!activeExact) throw new IllegalStateException(
+          s"analytics sweep invalid at x$factor: per-day actives not exact multiples")
+      })
   }
 }

@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   * floors, candidate-touch signal) on the 100×-replicated corpus, with
   * the artifact flushed after every leg.
   */
-object BenchScaleAnn {
+object BenchScaleAnn extends Sweep.Family[Sweep.Leg] {
 
   def enforce(quantRecall: Double, lshRows: Long, ivfRows: Long,
               pqRecall: Double = 1.0, ivfpqRows: Long = 1L): Unit = {
@@ -68,14 +68,6 @@ object BenchScaleAnn {
     if (ivfpqTunedRecall < 0.5)
       throw new IllegalStateException(
         s"tuned IVF-PQ recall $ivfpqTunedRecall < 0.5: run INVALID")
-  }
-
-  private def exec(df: org.apache.spark.sql.DataFrame): Long =
-    df.queryExecution.toRdd.count()
-
-  private def drop(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    System.gc()
   }
 
   /** The planted-cluster eval corpus: each base vector gets `groups − 1`
@@ -142,20 +134,33 @@ object BenchScaleAnn {
       .reduce(_ union _)
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // factor = the FULL leg (all 11 variants, both query loads, planted +
-    // ceiling evals); extraFactors get the focused 100× treatment below —
-    // the ANN family's exact-×factor sweep story (round-13 verdict item 5)
-    val factors = sys.env.get("SPARK_GRAFT_SCALE_FACTOR").map(f => Seq(f.toInt))
-      .getOrElse(sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTORS", "10,100")
-        .split(",").map(_.trim.toInt).toSeq)
-    val factor = factors.head
-    val extraFactors = factors.tail
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
-    val spark = GraftSession.get()
+  val artifactFile = "BENCH_SCALE_ann.json"
 
-    def scaledVecs = scaledVecsFrom(spark, sfDir, factor)
+  /** The first factor is the FULL leg (all 11 variants, both query loads,
+    * planted + ceiling evals); each further factor gets the focused big
+    * leg — the ANN family's exact-×factor sweep story (round-13 verdict
+    * item 5).
+    */
+  def legs(c: Sweep.Ctx): Iterator[Sweep.Leg] =
+    c.factors.iterator.zipWithIndex.map {
+      case (f, 0) => fullLeg(c, f)
+      case (f, _) => bigLeg(c, f)
+    }
+
+  def artifact(c: Sweep.Ctx, done: Seq[Sweep.Leg]): Sweep.Fields =
+    Seq("metric" -> "scale_sweep_ann", "sf" -> c.sfDir, "factor" -> c.factor, "reps" -> c.reps) ++
+      done.take(1).flatMap(_.fields) ++ Seq("factors" -> c.factors,
+        "legs" -> Sweep.obj(done.drop(1).map(l => l.name -> Sweep.obj(l.fields: _*)): _*))
+
+  def gates(done: Seq[Sweep.Leg]): Unit = done.foreach(_.gate())
+
+  private def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+    df.select(col("query_id"), col("neighbor_id"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  private def fullLeg(c: Sweep.Ctx, factor: Int): Sweep.Leg = {
+    val spark = c.spark
+    def scaledVecs = scaledVecsFrom(spark, c.sfDir, factor)
 
     // two query loads: at 10 queries the broadcast brute scan is hard to
     // beat (one pass, tiny probe side); the blocked methods' structural
@@ -163,8 +168,9 @@ object BenchScaleAnn {
     // query LOAD, so the artifact records both
     // JL two-stage: candidate depth = 2.5% of the scaled corpus — the
     // touch fraction is recorded and the recall gate is relative to it
-    val baseCount = Tables.embeddings(spark, sfDir).count()
+    val baseCount = Tables.embeddings(spark, c.sfDir).count()
     val jlDepth = ((baseCount * factor) / 40).toInt.max(100)
+    val jlTouch = jlDepth.toDouble / (baseCount * factor)
 
     // tuned production operating points (round-8, picked by AnnCalibrate's
     // measured recall grid): multi-table LSH with 16 independent 8-plane
@@ -190,50 +196,27 @@ object BenchScaleAnn {
       "ivfpq_t" -> (() => pipeline.Similarity.ivfPqTopKFrom(scaledVecs, nQueries = nq, m = 32, nProbe = 3, iters = 2, rerankDepth = 50)),
       "jl_rr" -> (() => pipeline.Similarity.jlRerankFrom(scaledVecs, nQueries = nq, depth = jlDepth)))
 
-    // warm code paths once so JIT/codegen is off the clock
-    variants(10).foreach { case (_, fn) =>
-      try { exec(fn().limit(1)); () } catch { case _: Throwable => }
-    }
-    drop(spark)
-
-    def timeAll(nq: Int) = variants(nq).map { case (name, fn) =>
-      val t = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        exec(fn())
-        val dt = (System.nanoTime() - t0) / 1e9
-        drop(spark)
-        dt
-      }.min
-      name -> t
-    }
+    c.warm(variants(10).map(_._2()): _*)
+    def timeAll(nq: Int) = variants(nq).map { case (name, fn) => name -> c.time(fn()) }
     val times = timeAll(10)
     val timesLoaded = timeAll(500)
 
-    // recall vs brute on the SAME scaled corpus (off the clock)
-    def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
-      df.select(col("query_id"), col("neighbor_id"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val brute = pairSet(pipeline.Similarity.bruteForceTopKFrom(scaledVecs))
-    val recalls = Seq(
-      "lsh"   -> pairSet(pipeline.Similarity.lshTopKFrom(scaledVecs)),
-      "lsh_mp" -> pairSet(pipeline.Similarity.lshMultiProbeTopKFrom(scaledVecs)),
-      "lsh_mt" -> pairSet(pipeline.Similarity.lshMultiTableTopKFrom(scaledVecs, nTables = 16)),
-      "ivf"   -> pairSet(pipeline.Similarity.ivfTopKFrom(scaledVecs)),
-      "quant" -> pairSet(pipeline.Similarity.quantTopKFrom(scaledVecs)),
-      "pq"    -> pairSet(pipeline.Similarity.pqTopKFrom(scaledVecs)),
-      "pq_t"  -> pairSet(pipeline.Similarity.pqTopKFrom(scaledVecs, m = 32, iters = 2, rerankDepth = 50)),
-      "ivfpq" -> pairSet(pipeline.Similarity.ivfPqTopKFrom(scaledVecs)),
-      "ivfpq_t" -> pairSet(pipeline.Similarity.ivfPqTopKFrom(scaledVecs, m = 32, nProbe = 3, iters = 2, rerankDepth = 50)),
-      "jl_rr" -> pairSet(pipeline.Similarity.jlRerankFrom(scaledVecs, depth = jlDepth)))
-      .map { case (n, s) =>
-        (n, (brute intersect s).size.toDouble / brute.size, s.size.toLong)
-      }
+    // recall vs brute on the SAME scaled corpus (off the clock), at the
+    // 10-query load
+    val (bruteQ10, approxQ10) = variants(10).partition(_._1 == "brute")
+    val brute = pairSet(bruteQ10.head._2())
+    val recalls = approxQ10.map { case (n, fn) =>
+      val s = pairSet(fn())
+      (n, (brute intersect s).size.toDouble / brute.size, s.size.toLong)
+    }
+    val recall = recalls.map { case (k, r, _) => k -> r }.toMap
+    val rows = recalls.map { case (k, _, n) => k -> n }.toMap
 
     // planted-cluster eval: same tuned operating points, corpus with
     // genuine neighbor structure (see plantedVecsFrom) — recall here is
     // the production number; the random-corpus recalls above are the
     // zero-margin robustness number
-    val planted = plantedVecsFrom(spark, sfDir)
+    val planted = plantedVecsFrom(spark, c.sfDir)
     val pBrute = pairSet(pipeline.Similarity.bruteForceTopKFrom(planted))
     val sameGroupFrac =
       pBrute.count(p => p._1 % Shift == p._2 % Shift).toDouble / pBrute.size.max(1)
@@ -243,7 +226,7 @@ object BenchScaleAnn {
       "ivfpq_t" -> pairSet(pipeline.Similarity.ivfPqTopKFrom(planted, m = 32, nProbe = 3, iters = 2, rerankDepth = 50)))
       .map { case (n, s) => n -> (pBrute intersect s).size.toDouble / pBrute.size.max(1) }
       .toMap
-    drop(spark)
+    c.drop()
 
     // adversarial-ceiling probe (round-10 stretch): the tuned points sit
     // at 0.58–0.62 recall on this near-random corpus (planted = 1.0). Does
@@ -256,61 +239,79 @@ object BenchScaleAnn {
         val r = (brute intersect pairSet(pipeline.Similarity.pqTopKFrom(
           scaledVecs, m = 32, ks = ks, iters = it, rerankDepth = 50))).size.toDouble /
           brute.size.max(1)
-        drop(spark)
+        c.drop()
         lbl -> r
       }
 
-    // focused big legs (default 100×, round-13 verdict item 5): the
-    // scale-path operating points timed and recall-gated on the same
-    // corpus construction at 10× the sweep size. Brute stays the oracle —
-    // one broadcast pass over the scaled corpus — and the blocked methods
-    // must hold non-empty results, their recall floors, and a bounded
-    // candidate-touch fraction as the corpus grows 100×. Runs AFTER the
-    // full-leg artifact exists on disk (flush-per-leg convention: a
-    // late-leg crash keeps the 10× record).
-    def bigLeg(f: Int): (String, () => Unit) = {
-      def vecs = scaledVecsFrom(spark, sfDir, f)
-      val corpusN = baseCount * f
-      val jlDepthF = (corpusN / 40).toInt.max(100)
-      val jlTouchF = jlDepthF.toDouble / corpusN
-      // the rerank shortlist must SCALE with the distractor count: the
-      // depth-50 point tuned at 10× recorded 0.40 recall at 100× (the ADC
-      // shortlist starves — measured grid in the round-14 session:
-      // depth 100 → 0.44, depth 200 → 0.56, nProbe 6 adds ~nothing).
-      // depth = max(50, corpus/1000) reproduces the 10× tuned point AND
-      // the recovered 100× one, at a rerank touch of 0.1% of the corpus —
-      // the same corpus-proportional-depth rule the JL-rerank path uses.
-      val pqDepthF = math.max(50L, corpusN / 1000).toInt
-      val legVariants: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-        "brute" -> (() => pipeline.Similarity.bruteForceTopKFrom(vecs, nQueries = 10)),
-        "lsh_mt" -> (() => pipeline.Similarity.lshMultiTableTopKFrom(vecs, nQueries = 10, nTables = 16)),
-        "ivf" -> (() => pipeline.Similarity.ivfTopKFrom(vecs, nQueries = 10)),
-        "ivfpq_t" -> (() => pipeline.Similarity.ivfPqTopKFrom(vecs, nQueries = 10,
-          m = 32, nProbe = 3, iters = 2, rerankDepth = pqDepthF)),
-        "jl_rr" -> (() => pipeline.Similarity.jlRerankFrom(vecs, nQueries = 10, depth = jlDepthF)))
-      val legTimes = legVariants.map { case (name, fn) =>
-        val t = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          exec(fn())
-          val dt = (System.nanoTime() - t0) / 1e9
-          drop(spark)
-          dt
-        }.min
-        name -> t
-      }
-      val legBrute = pairSet(pipeline.Similarity.bruteForceTopKFrom(vecs))
-      val legRecalls = legVariants.filter(_._1 != "brute").map { case (name, fn) =>
-        val s = pairSet(fn())
-        drop(spark)
-        (name, (legBrute intersect s).size.toDouble / legBrute.size.max(1), s.size.toLong)
-      }
-      val legJson =
-        s""""x$f":{"factor":$f,"corpus_rows":$corpusN,""" +
-          legTimes.map { case (k, v) => "\"t_" + k + "\":" + v }.mkString("", ",", ",") +
-          legRecalls.map { case (k, r, _) => "\"r_" + k + "\":" + r }.mkString("", ",", ",") +
-          s""""brute_pairs":${legBrute.size},"jl_depth":$jlDepthF,"jl_touch":$jlTouchF,""" +
-          s""""pq_rerank_depth":$pqDepthF,"pq_rerank_touch":${pqDepthF.toDouble / corpusN}}"""
-      val gate = () => {
+    Sweep.Leg(s"x$factor", Seq(
+      "times_sec_q10" -> Sweep.obj(times: _*), "times_sec_q500" -> Sweep.obj(timesLoaded: _*),
+      "recall_vs_brute" -> Sweep.obj(recalls.map { case (k, r, _) => k -> r }: _*),
+      "brute_pairs" -> brute.size,
+      "params" -> Sweep.obj(
+        "lsh_mt" -> Sweep.obj("nPlanes" -> 8, "nTables" -> 16),
+        "pq_t" -> Sweep.obj("m" -> 32, "ks" -> 16, "iters" -> 2, "rerankDepth" -> 50),
+        "ivfpq_t" -> Sweep.obj("m" -> 32, "ks" -> 16, "iters" -> 2, "nProbe" -> 3, "rerankDepth" -> 50)),
+      "recall_floors" -> Sweep.obj("lsh_mt" -> 0.5, "pq_t" -> 0.5, "ivfpq_t" -> 0.5,
+        "quant" -> 0.8, "pq" -> 0.05),
+      "planted_recall" -> Sweep.obj(pRecalls.toSeq.sortBy(_._1): _*),
+      "planted_brute_pairs" -> pBrute.size,
+      "planted_same_group_frac" -> sameGroupFrac,
+      "planted_floors" -> Sweep.obj("lsh_mt" -> 0.8, "pq_t" -> 0.8, "ivfpq_t" -> 0.8),
+      "pq_ceiling_grid" -> Sweep.obj(ceilingGrid: _*),
+      "jl_depth" -> jlDepth, "jl_touch" -> jlTouch),
+      () => {
+        enforce(recall("quant"), rows("lsh"), rows("ivf"), recall("pq"), rows("ivfpq"))
+        enforceTuned(recall("lsh_mt"), recall("pq_t"), recall("ivfpq_t"))
+        enforcePlanted(pRecalls, sameGroupFrac)
+        // JL rerank signal gate: recall must clearly beat its candidate-touch
+        // fraction (a random depth-sized candidate set scores ~touch)
+        if (recall("jl_rr") < (4 * jlTouch).max(0.2))
+          throw new IllegalStateException(
+            s"JL rerank recall ${recall("jl_rr")} carries no signal over touch $jlTouch: run INVALID")
+      })
+  }
+
+  /** A focused big leg (default 100×, round-13 verdict item 5): the
+    * scale-path operating points timed and recall-gated on the same
+    * corpus construction at 10× the sweep size. Brute stays the oracle —
+    * one broadcast pass over the scaled corpus — and the blocked methods
+    * must hold non-empty results, their recall floors, and a bounded
+    * candidate-touch fraction as the corpus grows 100×.
+    */
+  private def bigLeg(c: Sweep.Ctx, f: Int): Sweep.Leg = {
+    def vecs = scaledVecsFrom(c.spark, c.sfDir, f)
+    val corpusN = Tables.embeddings(c.spark, c.sfDir).count() * f
+    val jlDepthF = (corpusN / 40).toInt.max(100)
+    val jlTouchF = jlDepthF.toDouble / corpusN
+    // the rerank shortlist must SCALE with the distractor count: the
+    // depth-50 point tuned at 10× recorded 0.40 recall at 100× (the ADC
+    // shortlist starves — grid measured in round 14:
+    // depth 100 → 0.44, depth 200 → 0.56, nProbe 6 adds ~nothing).
+    // depth = max(50, corpus/1000) reproduces the 10× tuned point AND
+    // the recovered 100× one, at a rerank touch of 0.1% of the corpus —
+    // the same corpus-proportional-depth rule the JL-rerank path uses.
+    val pqDepthF = math.max(50L, corpusN / 1000).toInt
+    val legVariants: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "brute" -> (() => pipeline.Similarity.bruteForceTopKFrom(vecs, nQueries = 10)),
+      "lsh_mt" -> (() => pipeline.Similarity.lshMultiTableTopKFrom(vecs, nQueries = 10, nTables = 16)),
+      "ivf" -> (() => pipeline.Similarity.ivfTopKFrom(vecs, nQueries = 10)),
+      "ivfpq_t" -> (() => pipeline.Similarity.ivfPqTopKFrom(vecs, nQueries = 10,
+        m = 32, nProbe = 3, iters = 2, rerankDepth = pqDepthF)),
+      "jl_rr" -> (() => pipeline.Similarity.jlRerankFrom(vecs, nQueries = 10, depth = jlDepthF)))
+    val legTimes = legVariants.map { case (name, fn) => name -> c.time(fn()) }
+    val legBrute = pairSet(pipeline.Similarity.bruteForceTopKFrom(vecs))
+    val legRecalls = legVariants.filter(_._1 != "brute").map { case (name, fn) =>
+      val s = pairSet(fn())
+      c.drop()
+      (name, (legBrute intersect s).size.toDouble / legBrute.size.max(1), s.size.toLong)
+    }
+    Sweep.Leg(s"x$f",
+      Seq("factor" -> f, "corpus_rows" -> corpusN) ++
+        legTimes.map { case (k, v) => s"t_$k" -> v } ++
+        legRecalls.map { case (k, r, _) => s"r_$k" -> r } ++
+        Seq("brute_pairs" -> legBrute.size, "jl_depth" -> jlDepthF, "jl_touch" -> jlTouchF,
+          "pq_rerank_depth" -> pqDepthF, "pq_rerank_touch" -> pqDepthF.toDouble / corpusN),
+      () => {
         val rows = legRecalls.map { case (k, _, n) => k -> n }.toMap
         val rec = legRecalls.map { case (k, r, _) => k -> r }.toMap
         if (rows("ivfpq_t") == 0 || rows("lsh_mt") == 0 || rows("ivf") == 0)
@@ -324,60 +325,6 @@ object BenchScaleAnn {
           throw new IllegalStateException(
             s"ANN x$f leg invalid: jl_rr recall ${rec("jl_rr")} carries no " +
               s"signal over candidate touch $jlTouchF")
-      }
-      (legJson, gate)
-    }
-
-    def buildJson(legs: Seq[String]) = {
-      val ts = times.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-      val tl = timesLoaded.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-      val rc = recalls.map { case (k, r, _) => "\"" + k + "\":" + r }.mkString("{", ",", "}")
-      val pc = pRecalls.toSeq.sortBy(_._1).map { case (k, r) => "\"" + k + "\":" + r }.mkString("{", ",", "}")
-      s"""{"metric":"scale_sweep_ann","sf":"$sfDir","factor":$factor,"reps":$reps,""" +
-        s""""times_sec_q10":$ts,"times_sec_q500":$tl,"recall_vs_brute":$rc,"brute_pairs":${brute.size},""" +
-        s""""params":{"lsh_mt":{"nPlanes":8,"nTables":16},"pq_t":{"m":32,"ks":16,"iters":2,"rerankDepth":50},""" +
-        s""""ivfpq_t":{"m":32,"ks":16,"iters":2,"nProbe":3,"rerankDepth":50}},""" +
-        s""""recall_floors":{"lsh_mt":0.5,"pq_t":0.5,"ivfpq_t":0.5,"quant":0.8,"pq":0.05},""" +
-        s""""planted_recall":$pc,"planted_brute_pairs":${pBrute.size},""" +
-        s""""planted_same_group_frac":$sameGroupFrac,""" +
-        s""""planted_floors":{"lsh_mt":0.8,"pq_t":0.8,"ivfpq_t":0.8},""" +
-        s""""pq_ceiling_grid":${ceilingGrid.map { case (k, r) => "\"" + k + "\":" + r }.mkString("{", ",", "}")},""" +
-        s""""jl_depth":$jlDepth,"jl_touch":${jlDepth.toDouble / (baseCount * factor)},""" +
-        s""""factors":[${factors.mkString(",")}],""" +
-        s""""legs":${legs.mkString("{", ",", "}")}}"""
-    }
-    def flush(s: String): Unit = {
-      java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_SCALE_ann.json"),
-        (s + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      ()
-    }
-    flush(buildJson(Nil)) // the full 10× leg survives a big-leg crash
-    val (bigJsons, bigGates) = extraFactors.foldLeft((Seq.empty[String], Seq.empty[() => Unit])) {
-      case ((js, gs), f) =>
-        val (j, g) = bigLeg(f)
-        flush(buildJson(js :+ j))
-        (js :+ j, gs :+ g)
-    }
-    val json = buildJson(bigJsons)
-    flush(json)
-    spark.stop()
-    println(json)
-    bigGates.foreach(_.apply())
-    enforce(recalls.collectFirst { case ("quant", r, _) => r }.get,
-      recalls.collectFirst { case ("lsh", _, n) => n }.get,
-      recalls.collectFirst { case ("ivf", _, n) => n }.get,
-      recalls.collectFirst { case ("pq", r, _) => r }.get,
-      recalls.collectFirst { case ("ivfpq", _, n) => n }.get)
-    enforceTuned(recalls.collectFirst { case ("lsh_mt", r, _) => r }.get,
-      recalls.collectFirst { case ("pq_t", r, _) => r }.get,
-      recalls.collectFirst { case ("ivfpq_t", r, _) => r }.get)
-    enforcePlanted(pRecalls, sameGroupFrac)
-    // JL rerank signal gate: recall must clearly beat its candidate-touch
-    // fraction (a random depth-sized candidate set scores ~touch)
-    val jlRecall = recalls.collectFirst { case ("jl_rr", r, _) => r }.get
-    val jlTouch = jlDepth.toDouble / (baseCount * factor)
-    if (jlRecall < (4 * jlTouch).max(0.2))
-      throw new IllegalStateException(
-        s"JL rerank recall $jlRecall carries no signal over touch $jlTouch: run INVALID")
+      })
   }
 }

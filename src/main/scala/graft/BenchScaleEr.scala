@@ -30,120 +30,64 @@ import org.apache.spark.sql.functions._
   *
   * Writes `BENCH_SCALE_er.json`; prints the JSON as the last line.
   */
-object BenchScaleEr {
+object BenchScaleEr extends Sweep.Legs {
 
-  private def exec(df: org.apache.spark.sql.DataFrame): Long =
-    df.queryExecution.toRdd.count()
+  val metric = "scale_sweep_er"
+  val artifactFile = "BENCH_SCALE_er.json"
 
-  private def drop(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    System.gc()
-  }
+  override def extra(done: Seq[Sweep.Leg]): Sweep.Fields = Seq("legs_done" -> done.size)
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val factors = sys.env.get("SPARK_GRAFT_SCALE_FACTOR").map(f => Seq(f.toInt))
-      .getOrElse(sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTORS", "10,100")
-        .split(",").map(_.trim.toInt).toSeq)
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
-    val spark = GraftSession.get()
+  def leg(c: Sweep.Ctx, factor: Int): Sweep.Leg =
+    SweepTmp.withDir(s"graft_sweep_er_x$factor") { scaledDir =>
+      val spark = c.spark
+      Sweep.replicate(c, scaledDir, "customer", factor,
+        "c_custkey" -> 1000000000L, "c_nationkey" -> 1000L)
 
-    // the artifact is re-flushed after EVERY leg: a crash in a later leg
-    // must not discard finished legs' timings (round-11 ADVICE)
-    val legs = scala.collection.mutable.ArrayBuffer[(String, () => Unit)]()
-    def flush(): String = {
-      val json =
-        s"""{"metric":"scale_sweep_er","sf":"$sfDir","reps":$reps,""" +
-          s""""factors":[${factors.mkString(",")}],"legs_done":${legs.size},""" +
-          s""""legs":{${legs.map(_._1).mkString(",")}}}"""
-      java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_SCALE_er.json"),
-        (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      json
+      val family = Seq("er_blocked_pairs", "er_entities", "er_golden_records")
+        .map(n => n -> SparkEntry.queries(n))
+      c.warm(family.map(_._2(spark, c.sfDir)): _*)
+
+      val times = family.map { case (name, mk) =>
+        name -> Sweep.obj("base_sec" -> c.time(mk(spark, c.sfDir)),
+          "scaled_sec" -> c.time(mk(spark, scaledDir)))
+      }
+
+      // ---- exact ×factor gates over replica-invariant histograms --------
+      def hist(df: org.apache.spark.sql.DataFrame): Map[Seq[Any], Long] =
+        df.collect().map { r =>
+          (0 until r.length - 1).map(r.get) -> r.getLong(r.length - 1)
+        }.toMap
+      def exactMultiple(mkHist: String => org.apache.spark.sql.DataFrame): Boolean =
+        Sweep.exactMultiple(hist(mkHist(c.sfDir)), hist(mkHist(scaledDir)), factor)
+      // match pairs: per-distance counts
+      val pairsExact = exactMultiple(d =>
+        SparkEntry.queries("er_blocked_pairs")(spark, d)
+          .groupBy(col("dist")).agg(count(lit(1)).as("ct")))
+      // entities: cluster-size histogram (sizes are replica-invariant)
+      val entitiesExact = exactMultiple(d =>
+        SparkEntry.queries("er_entities")(spark, d)
+          .groupBy(col("entity_id")).agg(count(lit(1)).as("sz"))
+          .groupBy(col("sz")).agg(count(lit(1)).as("ct")))
+      // golden records: full survivorship histogram — balances and segment
+      // spans are identical per replica, so every cell must scale exactly
+      val goldenExact = exactMultiple(d =>
+        SparkEntry.queries("er_golden_records")(spark, d)
+          .groupBy(col("n_members"), col("n_segments"),
+            round(col("total_balance"), 2).as("bal"))
+          .agg(count(lit(1)).as("ct")))
+
+      Sweep.Leg(s"x$factor", Seq(
+        "factor" -> factor, "times" -> Sweep.obj(times: _*),
+        "pairs_exact_multiple" -> pairsExact, "entities_exact_multiple" -> entitiesExact,
+        "golden_exact_multiple" -> goldenExact),
+        () => {
+          def gate(ok: Boolean, what: String): Unit =
+            if (!ok) throw new IllegalStateException(
+              s"ER sweep invalid at x$factor: $what — artifact written but timings " +
+                "must not be cited")
+          gate(pairsExact, "pair distance histogram not an exact multiple")
+          gate(entitiesExact, "entity-size histogram not an exact multiple")
+          gate(goldenExact, "golden-record histogram not an exact multiple")
+        })
     }
-    factors.foreach { f => legs += runLeg(spark, sfDir, f, reps); flush() }
-    val json = flush()
-    spark.stop()
-    println(json)
-    // uncaught throw after the print exits the JVM nonzero (BenchScale contract)
-    legs.foreach(_._2.apply())
-  }
-
-  private def runLeg(spark: org.apache.spark.sql.SparkSession, sfDir: String,
-                     factor: Int, reps: Int): (String, () => Unit) = {
-    val SHIFT = 1000000000L
-    val scaledDir = SweepTmp.dir(s"graft_sweep_er_x$factor")
-    val base = Tables.table(spark, sfDir, "customer")
-    (0 until factor).map { i =>
-      base.withColumn("c_custkey", col("c_custkey") + lit(i * SHIFT))
-        .withColumn("c_nationkey", col("c_nationkey") + lit(i * 1000L))
-    }.reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(s"$scaledDir/customer.parquet")
-
-    val family = Seq("er_blocked_pairs", "er_entities", "er_golden_records")
-      .map(n => n -> SparkEntry.queries(n))
-
-    family.foreach { case (_, mk) =>
-      try { exec(mk(spark, sfDir).limit(1)); () } catch { case _: Throwable => }
-    }
-    drop(spark)
-
-    def timed(mk: => org.apache.spark.sql.DataFrame): Double =
-      (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        exec(mk)
-        val dt = (System.nanoTime() - t0) / 1e9
-        drop(spark)
-        dt
-      }.min
-
-    val times = family.map { case (name, mk) =>
-      (name, timed(mk(spark, sfDir)), timed(mk(spark, scaledDir)))
-    }
-
-    // ---- exact ×factor gates over replica-invariant histograms ----------
-    def hist(df: org.apache.spark.sql.DataFrame): Map[Seq[Any], Long] =
-      df.collect().map { r =>
-        (0 until r.length - 1).map(r.get) -> r.getLong(r.length - 1)
-      }.toMap
-    def exactMultiple(mkHist: String => org.apache.spark.sql.DataFrame): Boolean = {
-      val b = hist(mkHist(sfDir))
-      val s = hist(mkHist(scaledDir))
-      b.nonEmpty && s.keySet == b.keySet &&
-        b.forall { case (k, v) => s(k) == factor * v }
-    }
-    // match pairs: per-distance counts
-    val pairsExact = exactMultiple(d =>
-      SparkEntry.queries("er_blocked_pairs")(spark, d)
-        .groupBy(col("dist")).agg(count(lit(1)).as("ct")))
-    // entities: cluster-size histogram (sizes are replica-invariant)
-    val entitiesExact = exactMultiple(d =>
-      SparkEntry.queries("er_entities")(spark, d)
-        .groupBy(col("entity_id")).agg(count(lit(1)).as("sz"))
-        .groupBy(col("sz")).agg(count(lit(1)).as("ct")))
-    // golden records: full survivorship histogram — balances and segment
-    // spans are identical per replica, so every cell must scale exactly
-    val goldenExact = exactMultiple(d =>
-      SparkEntry.queries("er_golden_records")(spark, d)
-        .groupBy(col("n_members"), col("n_segments"),
-          round(col("total_balance"), 2).as("bal"))
-        .agg(count(lit(1)).as("ct")))
-
-    val timesJson = times.map { case (n, b, s) =>
-      s""""$n":{"base_sec":$b,"scaled_sec":$s}"""
-    }.mkString(",")
-    val legJson =
-      s""""x$factor":{"factor":$factor,"times":{$timesJson},""" +
-        s""""pairs_exact_multiple":$pairsExact,"entities_exact_multiple":$entitiesExact,""" +
-        s""""golden_exact_multiple":$goldenExact}"""
-    val enforce = () => {
-      def gate(ok: Boolean, what: String): Unit =
-        if (!ok) throw new IllegalStateException(
-          s"ER sweep invalid at x$factor: $what — artifact written but timings " +
-            "must not be cited")
-      gate(pairsExact, "pair distance histogram not an exact multiple")
-      gate(entitiesExact, "entity-size histogram not an exact multiple")
-      gate(goldenExact, "golden-record histogram not an exact multiple")
-    }
-    (legJson, enforce)
-  }
 }

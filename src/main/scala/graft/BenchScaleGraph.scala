@@ -34,132 +34,79 @@ import org.apache.spark.sql.functions._
   *
   * Writes `BENCH_SCALE_graph.json`; prints the JSON as the last line.
   */
-object BenchScaleGraph {
+object BenchScaleGraph extends Sweep.Legs {
 
-  private def exec(df: org.apache.spark.sql.DataFrame): Long =
-    df.queryExecution.toRdd.count()
+  val metric = "scale_sweep_graph"
+  val artifactFile = "BENCH_SCALE_graph.json"
 
-  private def drop(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    System.gc()
-  }
+  override def extra(done: Seq[Sweep.Leg]): Sweep.Fields = Seq(
+    "legs_done" -> done.size,
+    // heap geometry moves these scan-bound walls (runbook: 81 s at
+    // 20g vs 159 s at 32g for the same 10× leg) — self-describe it
+    "heap_gb" -> (Runtime.getRuntime.maxMemory() >> 30),
+    "closing_join" -> ("shuffled-hash past the broadcast gate (round-13: the SMJ " +
+      "wedge-stream sort was the term that capped earlier rounds at 30x/60x)"))
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val factors = sys.env.get("SPARK_GRAFT_SCALE_FACTOR").map(f => Seq(f.toInt))
-      .getOrElse(sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTORS", "10,100")
-        .split(",").map(_.trim.toInt).toSeq)
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
-    val spark = GraftSession.get()
+  def leg(c: Sweep.Ctx, factor: Int): Sweep.Leg =
+    SweepTmp.withDir(s"graft_sweep_graph_x$factor") { scaledDir =>
+      val spark = c.spark
+      Sweep.replicate(c, scaledDir, "lineitem", factor,
+        "l_orderkey" -> 1000000000L, "l_partkey" -> 1000000000L)
+      val mk = SparkEntry.queries("graph_triangles")
 
-    // the artifact is re-flushed after EVERY leg: a crash in a later leg
-    // (e.g. an OOM at a large factor) must not discard finished legs'
-    // timings (round-11 ADVICE) — partial artifacts carry the legs done
-    val legs = scala.collection.mutable.ArrayBuffer[(String, () => Unit)]()
-    def flush(): String = {
-      val json =
-        s"""{"metric":"scale_sweep_graph","sf":"$sfDir","reps":$reps,""" +
-          s""""factors":[${factors.mkString(",")}],""" +
-          s""""legs_done":${legs.size},""" +
-          // heap geometry moves these scan-bound walls (runbook: 81 s at
-          // 20g vs 159 s at 32g for the same 10× leg) — self-describe it
-          s""""heap_gb":${Runtime.getRuntime.maxMemory() >> 30},""" +
-          s""""closing_join":"shuffled-hash past the broadcast gate (round-13: the SMJ wedge-stream sort was the term that capped earlier rounds at 30x/60x)",""" +
-          s""""legs":{${legs.map(_._1).mkString(",")}}}"""
-      java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_SCALE_graph.json"),
-        (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      json
-    }
-    factors.foreach { f => legs += runLeg(spark, sfDir, f, reps); flush() }
-    val json = flush()
-    spark.stop()
-    println(json)
-    // uncaught throw after the print exits the JVM nonzero (BenchScale contract)
-    legs.foreach(_._2.apply())
-  }
-
-  private def runLeg(spark: org.apache.spark.sql.SparkSession, sfDir: String,
-                     factor: Int, reps: Int): (String, () => Unit) = {
-    val SHIFT = 1000000000L
-    val scaledDir = SweepTmp.dir(s"graft_sweep_graph_x$factor")
-    val base = Tables.table(spark, sfDir, "lineitem")
-    (0 until factor).map { i =>
-      base.withColumn("l_orderkey", col("l_orderkey") + lit(i * SHIFT))
-        .withColumn("l_partkey", col("l_partkey") + lit(i * SHIFT))
-    }.reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(s"$scaledDir/lineitem.parquet")
-
-    val mk = SparkEntry.queries("graph_triangles")
-
-    // spill-aware partition sizing (the 100 TB posture: partitions sized to
-    // executor memory, not the other way round): the wedge table grows
-    // linearly in the factor, so a ≥40× leg at 32 shuffle partitions puts
-    // >1 GB of sort state on each of 32 concurrent tasks and OOMs a 20 g
-    // heap — scale the partition count with the factor instead of the heap
-    // (a bigger heap measurably SLOWS this rig: 159 s at 32 g vs ~81–108 s
-    // at 20 g for the same 10× leg). AQE coalesces the small ones back.
-    val partKey = "spark.sql.shuffle.partitions"
-    val basePartitions = spark.conf.get(partKey)
-    def withScaledPartitions[T](body: => T): T = {
-      val n = 32 * math.max(1, factor / 10)
-      spark.conf.set(partKey, n.toString)
-      // the reused edge tables go DISK_ONLY at sweep scale: their default
-      // deserialized in-memory checkpoint blocks (2 × ~70M rows at 60×)
-      // pin the heap the wedge join's sorts need (Scale.checkpointed doc)
-      if (factor >= 40)
-        spark.conf.set(graft.operators.Scale.CheckpointLevelConf, "DISK_ONLY")
-      try body finally {
-        spark.conf.set(partKey, basePartitions)
-        spark.conf.unset(graft.operators.Scale.CheckpointLevelConf)
+      // spill-aware partition sizing (the 100 TB posture: partitions sized to
+      // executor memory, not the other way round): the wedge table grows
+      // linearly in the factor, so a ≥40× leg at 32 shuffle partitions puts
+      // >1 GB of sort state on each of 32 concurrent tasks and OOMs a 20 g
+      // heap — scale the partition count with the factor instead of the heap
+      // (a bigger heap measurably SLOWS this rig: 159 s at 32 g vs ~81–108 s
+      // at 20 g for the same 10× leg). AQE coalesces the small ones back.
+      val partKey = "spark.sql.shuffle.partitions"
+      val basePartitions = spark.conf.get(partKey)
+      val scaledPartitions = 32 * math.max(1, factor / 10)
+      def withScaledPartitions[T](body: => T): T = {
+        spark.conf.set(partKey, scaledPartitions.toString)
+        // the reused edge tables go DISK_ONLY at sweep scale: their default
+        // deserialized in-memory checkpoint blocks (2 × ~70M rows at 60×)
+        // pin the heap the wedge join's sorts need (Scale.checkpointed doc)
+        if (factor >= 40)
+          spark.conf.set(graft.operators.Scale.CheckpointLevelConf, "DISK_ONLY")
+        try body finally {
+          spark.conf.set(partKey, basePartitions)
+          spark.conf.unset(graft.operators.Scale.CheckpointLevelConf)
+        }
       }
+
+      c.warm(mk(spark, c.sfDir))
+      val baseSec = c.time(mk(spark, c.sfDir))
+      val scaledSec = withScaledPartitions(c.time(mk(spark, scaledDir)))
+
+      // ---- exact ×factor gates, off the timed path ----------------------
+      // per-(degree, tri_ct, clust_coeff) histogram: each cell's part count
+      // must scale exactly; clust_coeff is derived from (d, tri) so including
+      // it gates the coefficient arithmetic too
+      def hist(dir: String): Map[(Long, Long, Double), Long] =
+        mk(spark, dir).groupBy(col("degree"), col("tri_ct"), col("clust_coeff"))
+          .agg(count(lit(1)).as("ct")).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)) -> r.getLong(3)).toMap
+      val hb = hist(c.sfDir)
+      val hs = withScaledPartitions(hist(scaledDir))
+      val histExact = Sweep.exactMultiple(hb, hs, factor)
+      val rowsB = hb.values.sum
+      val rowsS = hs.values.sum
+      val trisB = hb.map { case ((_, t, _), ct) => t * ct }.sum / 3
+      val trisS = hs.map { case ((_, t, _), ct) => t * ct }.sum / 3
+
+      Sweep.Leg(s"x$factor", Seq(
+        "factor" -> factor, "scaled_shuffle_partitions" -> scaledPartitions,
+        "times" -> Sweep.obj("graph_triangles" ->
+          Sweep.obj("base_sec" -> baseSec, "scaled_sec" -> scaledSec)),
+        "rows" -> Sweep.obj("base" -> rowsB, "scaled" -> rowsS),
+        "triangles" -> Sweep.obj("base" -> trisB, "scaled" -> trisS),
+        "hist_cells" -> hb.size, "hist_exact_multiple" -> histExact),
+        () => if (!histExact) throw new IllegalStateException(
+          s"graph sweep invalid at x$factor: (degree, tri_ct, coeff) histogram not an " +
+            s"exact ×$factor multiple (base ${hb.size} cells / $rowsB rows, scaled " +
+            s"${hs.size} / $rowsS) — artifact written but timings must not be cited"))
     }
-
-    // warm codegen/JIT off the clock
-    try { exec(mk(spark, sfDir).limit(1)); () } catch { case _: Throwable => }
-    drop(spark)
-
-    def timed(dir: String): Double =
-      (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        exec(mk(spark, dir))
-        val dt = (System.nanoTime() - t0) / 1e9
-        drop(spark)
-        dt
-      }.min
-
-    val baseSec = timed(sfDir)
-    val scaledSec = withScaledPartitions(timed(scaledDir))
-
-    // ---- exact ×factor gates, off the timed path ------------------------
-    // per-(degree, tri_ct, clust_coeff) histogram: each cell's part count
-    // must scale exactly; clust_coeff is derived from (d, tri) so including
-    // it gates the coefficient arithmetic too
-    def hist(dir: String): Map[(Long, Long, Double), Long] =
-      mk(spark, dir).groupBy(col("degree"), col("tri_ct"), col("clust_coeff"))
-        .agg(count(lit(1)).as("ct")).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)) -> r.getLong(3)).toMap
-    val hb = hist(sfDir)
-    val hs = withScaledPartitions(hist(scaledDir))
-    val histExact = hb.nonEmpty && hs.keySet == hb.keySet &&
-      hb.forall { case (k, v) => hs(k) == factor * v }
-    val rowsB = hb.values.sum
-    val rowsS = hs.values.sum
-    val trisB = hb.map { case ((_, t, _), ct) => t * ct }.sum / 3
-    val trisS = hs.map { case ((_, t, _), ct) => t * ct }.sum / 3
-
-    val legJson =
-      s""""x$factor":{"factor":$factor,""" +
-        s""""scaled_shuffle_partitions":${32 * math.max(1, factor / 10)},""" +
-        s""""times":{"graph_triangles":{"base_sec":$baseSec,"scaled_sec":$scaledSec}},""" +
-        s""""rows":{"base":$rowsB,"scaled":$rowsS},""" +
-        s""""triangles":{"base":$trisB,"scaled":$trisS},""" +
-        s""""hist_cells":${hb.size},"hist_exact_multiple":$histExact}"""
-    val enforce = () => {
-      if (!histExact) throw new IllegalStateException(
-        s"graph sweep invalid at x$factor: (degree, tri_ct, coeff) histogram not an " +
-          s"exact ×$factor multiple (base ${hb.size} cells / $rowsB rows, scaled " +
-          s"${hs.size} / $rowsS) — artifact written but timings must not be cited")
-    }
-    (legJson, enforce)
-  }
 }

@@ -28,139 +28,96 @@ import org.apache.spark.sql.functions._
   *
   * Writes `BENCH_SCALE_relational.json`; prints the JSON as the last line.
   */
-object BenchScaleRelational {
+object BenchScaleRelational extends Sweep.SingleLeg {
 
-  private def exec(df: org.apache.spark.sql.DataFrame): Long =
-    df.queryExecution.toRdd.count()
+  val metric = "scale_sweep_relational"
+  val artifactFile = "BENCH_SCALE_relational.json"
 
-  private def drop(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    System.gc()
-  }
+  def leg(c: Sweep.Ctx, factor: Int): Sweep.Leg =
+    SweepTmp.withDir("graft_sweep_rel") { scaledDir =>
+      val spark = c.spark
+      val sfDir = c.sfDir
+      // ---- build the scaled dir: f disjoint key-shifted replicas --------
+      writeScaledTpch(c, scaledDir, factor)
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
-    val spark = GraftSession.get()
-    val SHIFT = 1000000000L
+      val family = Seq("q4_order_priority", "q7_nation_trade", "q17_small_qty",
+        "q18_large_orders", "q22_idle_balance", "graph_pagerank")
+        .map(n => n -> SparkEntry.queries(n))
+      c.warm(family.map(_._2(spark, sfDir)): _*)
 
-    // ---- build the scaled dir: f disjoint key-shifted replicas ----------
-    val scaledDir = SweepTmp.dir("graft_sweep_rel")
-    def shifted(name: String, keyCols: Seq[String]): Unit = {
-      val t = Tables.table(spark, sfDir, name)
-      val reps = (0 until factor).map { i =>
-        keyCols.foldLeft(t) { (df, k) =>
-          df.withColumn(k, col(k) + lit(i * SHIFT)) }
-      }.reduce(_ unionByName _)
-      reps.write.mode("overwrite").parquet(s"$scaledDir/$name.parquet")
+      val times = family.map { case (name, mk) =>
+        name -> Sweep.obj("base_sec" -> c.time(mk(spark, sfDir)),
+          "scaled_sec" -> c.time(mk(spark, scaledDir)))
+      }
+
+      // ---- exact ×factor gates, off the timed path ----------------------
+      def exactMultiple[K](cells: String => Map[K, Long]): Boolean =
+        Sweep.exactMultiple(cells(sfDir), cells(scaledDir), factor)
+      // q4: (priority) -> order_ct; q7 keys (cust_nation, supp_nation) but
+      // the count column sits at position 3 — project counts explicitly
+      val q4Exact = exactMultiple(d => SparkEntry.queries("q4_order_priority")(spark, d)
+        .collect().map(r => r.get(0) -> r.getLong(1)).toMap)
+      val q7Exact = exactMultiple(d => operators.Relational.q7NationTrade(spark, d)
+        .select(col("cust_nation"), col("supp_nation"), col("line_ct")).collect()
+        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap)
+      def q17LineCount(dir: String) =
+        operators.Relational.q17SmallQty(spark, dir).collect().head.getLong(1)
+      val q17b = q17LineCount(sfDir)
+      val q17s = q17LineCount(scaledDir)
+      // q18's top-20 LIMIT does not scale; gate the HAVING population itself
+      def bigOrderCount(dir: String): Long =
+        Tables.lineitem(spark, dir).groupBy(col("l_orderkey"))
+          .agg(sum(col("l_quantity").cast("decimal(18,2)")).as("q"))
+          .filter(col("q") > lit(250).cast("decimal(18,2)")).count()
+      val q18b = bigOrderCount(sfDir)
+      val q18s = bigOrderCount(scaledDir)
+      val q22Exact = exactMultiple(d => operators.Relational.q22IdleBalance(spark, d)
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)
+      val prB = pipeline.Graph.pageRank(spark, sfDir).collect()
+      val prS = pipeline.Graph.pageRank(spark, scaledDir).collect()
+      val prNodesExact = prS.length == factor * prB.length && prB.nonEmpty
+      val prMass = prS.map(_.getDouble(1)).sum
+      // micro-unit quantization drifts mass by ≤ ~0.5µ per node per rounding
+      // step (3 iterations + init) — the bound scales with node count
+      val prMassOk = math.abs(prMass - 1.0) < 2.0e-6 * prS.length
+      val q17Exact = q17s == factor * q17b && q17b > 0
+      val q18Exact = q18s == factor * q18b && q18b > 0
+
+      Sweep.Leg(s"x$factor", Seq(
+        "times" -> Sweep.obj(times: _*),
+        "q4_exact_multiple" -> q4Exact, "q7_exact_multiple" -> q7Exact,
+        "q17_line_ct" -> Sweep.obj("base" -> q17b, "scaled" -> q17s),
+        "q17_exact_multiple" -> q17Exact,
+        "q18_big_orders" -> Sweep.obj("base" -> q18b, "scaled" -> q18s),
+        "q18_exact_multiple" -> q18Exact,
+        "q22_exact_multiple" -> q22Exact,
+        "pagerank_nodes_exact" -> prNodesExact, "pagerank_mass" -> prMass),
+        () => {
+          def gate(ok: Boolean, what: String): Unit =
+            if (!ok) throw new IllegalStateException(
+              s"relational sweep invalid: $what — artifact written but timings must not be cited")
+          gate(q4Exact, "q4 per-priority counts not exact multiples")
+          gate(q7Exact, "q7 per-nation-pair counts not exact multiples")
+          gate(q17Exact, s"q17 line count $q17b -> $q17s")
+          gate(q18Exact, s"q18 big-order count $q18b -> $q18s")
+          gate(q22Exact, "q22 per-nation counts not exact multiples")
+          gate(prNodesExact, s"pagerank nodes ${prB.length} -> ${prS.length}")
+          gate(prMassOk, s"pagerank mass $prMass")
+        })
     }
-    shifted("orders", Seq("o_orderkey", "o_custkey"))
-    shifted("lineitem", Seq("l_orderkey", "l_partkey", "l_suppkey"))
-    shifted("customer", Seq("c_custkey"))
-    shifted("part", Seq("p_partkey"))
-    shifted("supplier", Seq("s_suppkey"))
-    for (dim <- Seq("nation", "region"))
-      Tables.table(spark, sfDir, dim).write.mode("overwrite")
-        .parquet(s"$scaledDir/$dim.parquet")
 
-    val family = Seq("q4_order_priority", "q7_nation_trade", "q17_small_qty",
-      "q18_large_orders", "q22_idle_balance", "graph_pagerank")
-      .map(n => n -> SparkEntry.queries(n))
-
-    // warm codegen/JIT off the clock
-    family.foreach { case (_, mk) =>
-      try { exec(mk(spark, sfDir).limit(1)); () } catch { case _: Throwable => }
-    }
-    drop(spark)
-
-    def timed(mk: => org.apache.spark.sql.DataFrame): Double =
-      (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        exec(mk)
-        val dt = (System.nanoTime() - t0) / 1e9
-        drop(spark)
-        dt
-      }.min
-
-    val times = family.map { case (name, mk) =>
-      (name, timed(mk(spark, sfDir)), timed(mk(spark, scaledDir)))
-    }
-
-    // ---- exact ×factor gates, off the timed path ------------------------
-    def kv(df: org.apache.spark.sql.DataFrame, keyW: Int): Map[Seq[Any], Long] =
-      df.collect().map(r => (0 until keyW).map(r.get) -> r.getLong(keyW)).toMap
-    def exactMultiple(name: String, keyW: Int): Boolean = {
-      val b = kv(SparkEntry.queries(name)(spark, sfDir).select(
-        col("*")), keyW)
-      val s = kv(SparkEntry.queries(name)(spark, scaledDir).select(
-        col("*")), keyW)
-      b.nonEmpty && s.keySet == b.keySet &&
-        b.forall { case (k, v) => s(k) == factor * v }
-    }
-    // q4: (priority) -> order_ct; q7 keys (cust_nation, supp_nation) but
-    // the count column sits at position 3 — project counts explicitly
-    val q4Exact = exactMultiple("q4_order_priority", 1)
-    val q7b = operators.Relational.q7NationTrade(spark, sfDir)
-      .select(col("cust_nation"), col("supp_nation"), col("line_ct")).collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    val q7s = operators.Relational.q7NationTrade(spark, scaledDir)
-      .select(col("cust_nation"), col("supp_nation"), col("line_ct")).collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    val q7Exact = q7b.nonEmpty && q7s.keySet == q7b.keySet &&
-      q7b.forall { case (k, v) => q7s(k) == factor * v }
-    val q17b = operators.Relational.q17SmallQty(spark, sfDir)
-      .collect().head.getLong(1)
-    val q17s = operators.Relational.q17SmallQty(spark, scaledDir)
-      .collect().head.getLong(1)
-    // q18's top-20 LIMIT does not scale; gate the HAVING population itself
-    def bigOrderCount(dir: String): Long =
-      Tables.lineitem(spark, dir).groupBy(col("l_orderkey"))
-        .agg(sum(col("l_quantity").cast("decimal(18,2)")).as("q"))
-        .filter(col("q") > lit(250).cast("decimal(18,2)")).count()
-    val q18b = bigOrderCount(sfDir)
-    val q18s = bigOrderCount(scaledDir)
-    val q22b = operators.Relational.q22IdleBalance(spark, sfDir).collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val q22s = operators.Relational.q22IdleBalance(spark, scaledDir).collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val q22Exact = q22b.nonEmpty && q22s.keySet == q22b.keySet &&
-      q22b.forall { case (k, v) => q22s(k) == factor * v }
-    val prB = pipeline.Graph.pageRank(spark, sfDir).collect()
-    val prS = pipeline.Graph.pageRank(spark, scaledDir).collect()
-    val prNodesExact = prS.length == factor * prB.length && prB.nonEmpty
-    val prMass = prS.map(_.getDouble(1)).sum
-    // micro-unit quantization drifts mass by ≤ ~0.5µ per node per rounding
-    // step (3 iterations + init) — the bound scales with node count
-    val prMassOk = math.abs(prMass - 1.0) < 2.0e-6 * prS.length
-
-    val timesJson = times.map { case (n, b, s) =>
-      s""""$n":{"base_sec":$b,"scaled_sec":$s}"""
-    }.mkString(",")
-    val json =
-      s"""{"metric":"scale_sweep_relational","sf":"$sfDir","factor":$factor,"reps":$reps,""" +
-        s""""times":{$timesJson},""" +
-        s""""q4_exact_multiple":$q4Exact,"q7_exact_multiple":$q7Exact,""" +
-        s""""q17_line_ct":{"base":$q17b,"scaled":$q17s},""" +
-        s""""q17_exact_multiple":${q17s == factor * q17b && q17b > 0},""" +
-        s""""q18_big_orders":{"base":$q18b,"scaled":$q18s},""" +
-        s""""q18_exact_multiple":${q18s == factor * q18b && q18b > 0},""" +
-        s""""q22_exact_multiple":$q22Exact,""" +
-        s""""pagerank_nodes_exact":$prNodesExact,"pagerank_mass":$prMass}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_SCALE_relational.json"),
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    spark.stop()
-    println(json)
-    // uncaught throw after the print exits the JVM nonzero (BenchScale contract)
-    def gate(ok: Boolean, what: String): Unit =
-      if (!ok) throw new IllegalStateException(
-        s"relational sweep invalid: $what — artifact written but timings must not be cited")
-    gate(q4Exact, "q4 per-priority counts not exact multiples")
-    gate(q7Exact, "q7 per-nation-pair counts not exact multiples")
-    gate(q17s == factor * q17b && q17b > 0, s"q17 line count $q17b -> $q17s")
-    gate(q18s == factor * q18b && q18b > 0, s"q18 big-order count $q18b -> $q18s")
-    gate(q22Exact, "q22 per-nation counts not exact multiples")
-    gate(prNodesExact, s"pagerank nodes ${prB.length} -> ${prS.length}")
-    gate(prMassOk, s"pagerank mass $prMass")
+  /** The TPC-H tables as `factor` disjoint replicas under `dir`: every
+    * entity key shifted per replica, nation/region copied once (fixed-
+    * cardinality dims). Shared with `BenchScaleTpch`.
+    */
+  def writeScaledTpch(c: Sweep.Ctx, dir: String, factor: Int): Unit = {
+    val shift = 1000000000L
+    Sweep.replicate(c, dir, "orders", factor, "o_orderkey" -> shift, "o_custkey" -> shift)
+    Sweep.replicate(c, dir, "lineitem", factor,
+      "l_orderkey" -> shift, "l_partkey" -> shift, "l_suppkey" -> shift)
+    Sweep.replicate(c, dir, "customer", factor, "c_custkey" -> shift)
+    Sweep.replicate(c, dir, "part", factor, "p_partkey" -> shift)
+    Sweep.replicate(c, dir, "supplier", factor, "s_suppkey" -> shift)
+    Seq("nation", "region").foreach(Sweep.replicate(c, dir, _, 1))
   }
 }

@@ -35,71 +35,25 @@ import org.apache.spark.sql.functions._
   * Artifact first (`BENCH_SCALE_sketch.json`), nonzero exit on any gate
   * violation — the `BenchScale` contract.
   */
-object BenchScaleSketch {
+object BenchScaleSketch extends Sweep.Legs {
 
-  private def exec(df: org.apache.spark.sql.DataFrame): Long =
-    df.queryExecution.toRdd.count()
-
-  private def drop(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    System.gc()
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // 10× AND 100× legs by default (the BenchScaleAnalytics convention):
-    // the 100× leg catches log factors and sketch-merge drift a 10× sweep
-    // can hide. SPARK_GRAFT_SCALE_FACTOR still pins a single leg.
-    val factors = sys.env.get("SPARK_GRAFT_SCALE_FACTOR").map(f => Seq(f.toInt))
-      .getOrElse(sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTORS", "10,100")
-        .split(",").map(_.trim.toInt).toSeq)
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
-    val spark = GraftSession.get()
-    try {
-      val legs = factors.map { f =>
-        // a leg that trips a gate still contributes its JSON (with the
-        // violation recorded) — the artifact lands before any throw
-        val (json, err) =
-          try { val j = runLeg(spark, sfDir, f, reps); (j, None) }
-          catch { case e: IllegalStateException =>
-            (s""""x$f":{"factor":$f,"gate_error":${"\"" + e.getMessage.replace("\"", "'") + "\""}}""",
-              Some(e))
-          }
-        (json, err)
-      }
-      val json =
-        s"""{"metric":"scale_sweep_sketch","sf":"$sfDir","reps":$reps,""" +
-          s""""factors":[${factors.mkString(",")}],""" +
-          s""""legs":{${legs.map(_._1).mkString(",")}}}"""
-      java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_SCALE_sketch.json"),
-        (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      println(json)
-      legs.flatMap(_._2).headOption.foreach(throw _)
-    } finally spark.stop()
-  }
+  val metric = "scale_sweep_sketch"
+  val artifactFile = "BENCH_SCALE_sketch.json"
 
   /** One factor leg: exact-mode ×factor validity gates, sketch error
-    * bounds at both scales, timings. Throws IllegalStateException on any
-    * gate violation (caught by main, recorded in the artifact, re-thrown
-    * after the write).
+    * bounds at both scales, timings. The gates here run inside the leg; a
+    * violation ends the leg early, which then records only the violation
+    * in the artifact and re-throws it from its deferred gate.
     */
-  private def runLeg(spark: org.apache.spark.sql.SparkSession, sfDir: String,
-                     factor: Int, reps: Int): String = {
-    val SHIFT = 1000000000L
-    val scaledDir = SweepTmp.dir("graft_sweep_sketch")
-    try {
-      def shifted(name: String, keyCols: Seq[String]): Unit = {
-        val t = Tables.table(spark, sfDir, name)
-        val copies = (0 until factor).map { i =>
-          keyCols.foldLeft(t)((df, k) => df.withColumn(k, col(k) + lit(i * SHIFT)))
-        }.reduce(_ unionByName _)
-        copies.write.mode("overwrite").parquet(s"$scaledDir/$name.parquet")
-      }
-      shifted("events", Seq("event_id", "user_id"))
-      shifted("orders", Seq("o_orderkey", "o_custkey"))
-      shifted("customer", Seq("c_custkey"))
-      Tables.table(spark, sfDir, "nation").write.mode("overwrite")
-        .parquet(s"$scaledDir/nation.parquet")
+  def leg(c: Sweep.Ctx, factor: Int): Sweep.Leg =
+    try SweepTmp.withDir("graft_sweep_sketch") { scaledDir =>
+      val spark = c.spark
+      val sfDir = c.sfDir
+      val shift = 1000000000L
+      Sweep.replicate(c, scaledDir, "events", factor, "event_id" -> shift, "user_id" -> shift)
+      Sweep.replicate(c, scaledDir, "orders", factor, "o_orderkey" -> shift, "o_custkey" -> shift)
+      Sweep.replicate(c, scaledDir, "customer", factor, "c_custkey" -> shift)
+      Sweep.replicate(c, scaledDir, "nation", 1)
 
       val family = Seq("a2_product_stats", "a3_province_stats", "a8_percentiles")
         .map(n => n -> SparkEntry.queries(n))
@@ -109,26 +63,16 @@ object BenchScaleSketch {
         try body finally operators.Scale.scaleMode(spark, on = false)
       }
 
-      // fail-fast warmup, both dirs, both modes
+      // warm-up, both dirs, both modes
       family.foreach { case (_, mk) =>
-        exec(mk(spark, sfDir).limit(1)); exec(mk(spark, scaledDir).limit(1))
-        sketched { exec(mk(spark, sfDir).limit(1)); exec(mk(spark, scaledDir).limit(1)) }
+        c.warm(mk(spark, sfDir), mk(spark, scaledDir))
+        sketched(c.warm(mk(spark, sfDir), mk(spark, scaledDir)))
       }
-      drop(spark)
-
-      def timed(mk: => org.apache.spark.sql.DataFrame): Double =
-        (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          exec(mk)
-          val dt = (System.nanoTime() - t0) / 1e9
-          drop(spark)
-          dt
-        }.min
 
       val times = family.map { case (name, mk) =>
         (name,
-          timed(mk(spark, sfDir)), timed(mk(spark, scaledDir)),
-          sketched(timed(mk(spark, sfDir))), sketched(timed(mk(spark, scaledDir))))
+          c.time(mk(spark, sfDir)), c.time(mk(spark, scaledDir)),
+          sketched(c.time(mk(spark, sfDir))), sketched(c.time(mk(spark, scaledDir))))
       }
 
       // ---- accuracy + exactness gates, off the timed path ---------------
@@ -236,23 +180,18 @@ object BenchScaleSketch {
       // HLL tying it, so the honest verdict is per-op and per-scale.
       def verdictOf(es: Double, ss: Double): String =
         if (ss * 1.2 < es) "sketch" else if (es * 1.2 < ss) "exact" else "either"
-      val timesJson = times.map { case (n, eb, es, sb, ss) =>
-        s""""$n":{"exact_base_sec":$eb,"exact_scaled_sec":$es,""" +
-          s""""sketch_base_sec":$sb,"sketch_scaled_sec":$ss,""" +
-          s""""recommended_mode":"${verdictOf(es, ss)}"}"""
-      }.mkString(",")
-      s""""x$factor":{"factor":$factor,"times":{$timesJson},""" +
-        s""""hll_max_rel_err":{"base":$hllErrBase,"scaled":$hllErrScaled,"bound":0.15},""" +
-        s""""tdigest_max_rank_err":{"base":$rankErrBase,"scaled":$rankErrScaled,"bound":0.05}}"""
-    } finally {
-      def rm(p: java.nio.file.Path): Unit = {
-        if (java.nio.file.Files.isDirectory(p)) {
-          val s = java.nio.file.Files.list(p)
-          try s.forEach(rm(_)) finally s.close()
-        }
-        java.nio.file.Files.deleteIfExists(p)
+      val timeFields = times.map { case (n, eb, es, sb, ss) =>
+        n -> Sweep.obj("exact_base_sec" -> eb, "exact_scaled_sec" -> es,
+          "sketch_base_sec" -> sb, "sketch_scaled_sec" -> ss,
+          "recommended_mode" -> verdictOf(es, ss))
       }
-      rm(java.nio.file.Paths.get(scaledDir))
+      Sweep.Leg(s"x$factor", Seq(
+        "factor" -> factor, "times" -> Sweep.obj(timeFields: _*),
+        "hll_max_rel_err" -> Sweep.obj("base" -> hllErrBase, "scaled" -> hllErrScaled, "bound" -> 0.15),
+        "tdigest_max_rank_err" -> Sweep.obj("base" -> rankErrBase, "scaled" -> rankErrScaled,
+          "bound" -> 0.05)))
+    } catch {
+      case e: IllegalStateException =>
+        Sweep.Leg(s"x$factor", Seq("factor" -> factor, "gate_error" -> e.getMessage), () => throw e)
     }
-  }
 }

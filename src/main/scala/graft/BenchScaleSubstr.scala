@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *
   * Writes `BENCH_SCALE_substr.json`; prints the JSON as the last line.
   */
-object BenchScaleSubstr {
+object BenchScaleSubstr extends Sweep.Legs {
 
   /** Validity gate: salted replication must reproduce the base span
     * structure exactly `factor` times; a deviation means cross-replica
@@ -33,70 +33,24 @@ object BenchScaleSubstr {
           "(expected scaled == factor * base > 0) — artifact written but the run's " +
           "timings must not be cited")
 
-  private def exec(df: org.apache.spark.sql.DataFrame): Long =
-    df.queryExecution.toRdd.count()
+  val metric = "scale_sweep_substr"
+  val artifactFile = "BENCH_SCALE_substr.json"
 
-  private def drop(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    System.gc()
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // 10× AND 100× legs by default (see BenchScaleAnalytics): the 100× leg
-    // catches log factors a 10× sweep can hide. SPARK_GRAFT_SCALE_FACTOR
-    // still pins a single leg.
-    val factors = sys.env.get("SPARK_GRAFT_SCALE_FACTOR").map(f => Seq(f.toInt))
-      .getOrElse(sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTORS", "10,100")
-        .split(",").map(_.trim.toInt).toSeq)
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
-    val spark = GraftSession.get()
-    val legs = factors.map(f => runLeg(spark, sfDir, f, reps))
-    val json =
-      s"""{"metric":"scale_sweep_substr","sf":"$sfDir","reps":$reps,""" +
-        s""""factors":[${factors.mkString(",")}],""" +
-        s""""legs":{${legs.map(_._1).mkString(",")}}}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_SCALE_substr.json"),
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    spark.stop()
-    println(json)
-    // after the print (driver tail-capture still sees the record): an
-    // uncaught throw here exits the JVM nonzero
-    legs.foreach(_._2.apply())
-  }
-
-  /** One factor leg: span + passage timings and exact ×factor gates; the
-    * enforcement is deferred so the artifact lands before any throw.
-    */
-  private def runLeg(spark: org.apache.spark.sql.SparkSession, sfDir: String,
-                     factor: Int, reps: Int): (String, () => Unit) = {
+  /** One factor leg: span + passage timings and exact ×factor gates. */
+  def leg(c: Sweep.Ctx, factor: Int): Sweep.Leg = {
 
     // replica i: ids shifted past any real id; every token salted with
     // "ri" so gram hashes never collide across replicas
     def replica(i: Int) =
-      Tables.documents(spark, sfDir).select(
+      Tables.documents(c.spark, c.sfDir).select(
         (col("doc_id") + lit(i.toLong * 10000000L)).as("doc_id"),
         regexp_replace(col("text"), "(\\S+)", s"$$1r$i").as("text"))
-    def base = Tables.spread(spark, replica(0))
-    def scaled = Tables.spread(spark, (0 until factor).map(replica).reduce(_ union _))
+    def base = Tables.spread(c.spark, replica(0))
+    def scaled = Tables.spread(c.spark, (0 until factor).map(replica).reduce(_ union _))
 
-    // warm codegen/JIT off the clock
-    try { exec(pipeline.Dedup.duplicateSpansFrom(base).limit(1)); () }
-    catch { case _: Throwable => }
-    drop(spark)
-
-    def timed(mk: => org.apache.spark.sql.DataFrame): (Double, Long) = {
-      val runs = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        val rows = exec(mk)
-        val dt = (System.nanoTime() - t0) / 1e9
-        drop(spark)
-        (dt, rows)
-      }
-      (runs.map(_._1).min, runs.head._2)
-    }
-    val (baseSec, baseSpans) = timed(pipeline.Dedup.duplicateSpansFrom(base))
-    val (scaledSec, scaledSpans) = timed(pipeline.Dedup.duplicateSpansFrom(scaled))
+    c.warm(pipeline.Dedup.duplicateSpansFrom(base))
+    val (baseSec, baseSpans) = c.timed(Sweep.exec(pipeline.Dedup.duplicateSpansFrom(base)))
+    val (scaledSec, scaledSpans) = c.timed(Sweep.exec(pipeline.Dedup.duplicateSpansFrom(scaled)))
 
     // passage-dedup leg under the SAME salted construction: passages never
     // collide across replicas, so doc count, total passages, and total
@@ -107,39 +61,28 @@ object BenchScaleSubstr {
         .collect().head
       (r.getLong(0), r.getLong(1), r.getLong(2))
     }
-    def timedPassage(mk: => org.apache.spark.sql.DataFrame): (Double, (Long, Long, Long)) = {
-      val runs = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        val totals = passageTotals(mk)
-        val dt = (System.nanoTime() - t0) / 1e9
-        drop(spark)
-        (dt, totals)
-      }
-      (runs.map(_._1).min, runs.head._2)
-    }
     val (pBaseSec, (pbDocs, pbPass, pbKept)) =
-      timedPassage(pipeline.Dedup.passageDedupStripFrom(base))
+      c.timed(passageTotals(pipeline.Dedup.passageDedupStripFrom(base)))
     val (pScaledSec, (psDocs, psPass, psKept)) =
-      timedPassage(pipeline.Dedup.passageDedupStripFrom(scaled))
+      c.timed(passageTotals(pipeline.Dedup.passageDedupStripFrom(scaled)))
     val passageExact = psDocs == factor * pbDocs && psPass == factor * pbPass &&
       psKept == factor * pbKept && pbKept > 0
 
-    val legJson =
-      s""""x$factor":{"factor":$factor,""" +
-        s""""base_sec":$baseSec,"scaled_sec":$scaledSec,""" +
-        s""""base_spans":$baseSpans,"scaled_spans":$scaledSpans,""" +
-        s""""spans_exact_multiple":${scaledSpans == factor.toLong * baseSpans},""" +
-        s""""passage":{"base_sec":$pBaseSec,"scaled_sec":$pScaledSec,""" +
-        s""""base_docs":$pbDocs,"base_passages":$pbPass,"base_kept":$pbKept,""" +
-        s""""scaled_docs":$psDocs,"scaled_passages":$psPass,"scaled_kept":$psKept,""" +
-        s""""exact_multiple":$passageExact}}"""
-    val enforceLeg = () => {
-      enforce(baseSpans, scaledSpans, factor)
-      if (!passageExact)
-        throw new IllegalStateException(
-          s"passage sweep invalid: docs $pbDocs→$psDocs passages $pbPass→$psPass " +
-            s"kept $pbKept→$psKept factor=$factor — timings must not be cited")
-    }
-    (legJson, enforceLeg)
+    Sweep.Leg(s"x$factor", Seq(
+      "factor" -> factor, "base_sec" -> baseSec, "scaled_sec" -> scaledSec,
+      "base_spans" -> baseSpans, "scaled_spans" -> scaledSpans,
+      "spans_exact_multiple" -> (scaledSpans == factor.toLong * baseSpans),
+      "passage" -> Sweep.obj(
+        "base_sec" -> pBaseSec, "scaled_sec" -> pScaledSec,
+        "base_docs" -> pbDocs, "base_passages" -> pbPass, "base_kept" -> pbKept,
+        "scaled_docs" -> psDocs, "scaled_passages" -> psPass, "scaled_kept" -> psKept,
+        "exact_multiple" -> passageExact)),
+      () => {
+        enforce(baseSpans, scaledSpans, factor)
+        if (!passageExact)
+          throw new IllegalStateException(
+            s"passage sweep invalid: docs $pbDocs→$psDocs passages $pbPass→$psPass " +
+              s"kept $pbKept→$psKept factor=$factor — timings must not be cited")
+      })
   }
 }

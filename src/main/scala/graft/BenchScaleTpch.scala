@@ -30,187 +30,101 @@ import org.apache.spark.sql.functions._
   *
   * Writes `BENCH_SCALE_tpch.json`; prints the JSON as the last line.
   */
-object BenchScaleTpch {
+object BenchScaleTpch extends Sweep.Legs {
 
-  private def exec(df: org.apache.spark.sql.DataFrame): Long =
-    df.queryExecution.toRdd.count()
+  val metric = "scale_sweep_tpch"
+  val artifactFile = "BENCH_SCALE_tpch.json"
 
-  private def drop(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    System.gc()
-  }
+  override def extra(done: Seq[Sweep.Leg]): Sweep.Fields = Seq("legs_done" -> done.size)
 
-  private def rm(p: java.nio.file.Path): Unit = {
-    if (java.nio.file.Files.isDirectory(p)) {
-      val s = java.nio.file.Files.list(p)
-      try s.forEach(rm(_)) finally s.close()
+  def leg(c: Sweep.Ctx, factor: Int): Sweep.Leg =
+    SweepTmp.withDir(s"graft_sweep_tpch_x$factor") { scaledDir =>
+      val spark = c.spark
+      val sfDir = c.sfDir
+      BenchScaleRelational.writeScaledTpch(c, scaledDir, factor)
+      val family = Seq("q6_forecast_revenue", "q8_market_share", "q9_product_profit",
+        "q12_ship_lag", "q16_supplier_cnt", "q19_disjunctive_rev",
+        "q20_excess_supp", "q21_waiting_supp")
+        .map(n => n -> SparkEntry.queries(n))
+
+      // warm BOTH dir variants: unreadable scaled parquet must fail here too
+      c.warm(family.flatMap { case (_, mk) => Seq(mk(spark, sfDir), mk(spark, scaledDir)) }: _*)
+
+      val times = family.map { case (name, mk) =>
+        name -> Sweep.obj("base_sec" -> c.time(mk(spark, sfDir)),
+          "scaled_sec" -> c.time(mk(spark, scaledDir)))
+      }
+
+      // ---- exact ×factor gates, off the timed path ------------------------
+      import operators.{Relational => R}
+      val q6b = R.q6ForecastRevenue(spark, sfDir).collect().head.getLong(1)
+      val q6s = R.q6ForecastRevenue(spark, scaledDir).collect().head.getLong(1)
+      val q6Exact = q6s == factor * q6b && q6b > 0
+
+      def shareMap(dir: String): Map[Long, Double] =
+        R.q8MarketShare(spark, dir).collect()
+          .map(r => r.getLong(0) -> r.getDouble(3)).toMap
+      val q8b = shareMap(sfDir)
+      val q8s = shareMap(scaledDir)
+      val q8Invariant = q8b.nonEmpty && q8s.keySet == q8b.keySet &&
+        q8b.forall { case (k, v) => math.abs(q8s(k) - v) < 1e-9 }
+
+      def q9Map(dir: String): Map[(String, Long), Long] =
+        R.q9ProductProfit(spark, dir).collect()
+          .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(3)).toMap
+      val q9Exact = Sweep.exactMultiple(q9Map(sfDir), q9Map(scaledDir), factor)
+
+      def q12Map(dir: String): Map[String, (Long, Long)] =
+        R.q12ShipLag(spark, dir).collect()
+          .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+      val q12b = q12Map(sfDir)
+      val q12s = q12Map(scaledDir)
+      val q12Exact = q12b.nonEmpty && q12s.keySet == q12b.keySet &&
+        q12b.forall { case (k, (h, l)) => q12s(k) == ((factor * h, factor * l)) }
+
+      def q16Map(dir: String): Map[(String, String, Int), Long] =
+        R.q16SupplierCnt(spark, dir).collect()
+          .map(r => (r.getString(0), r.getString(1), r.getInt(2)) -> r.getLong(3)).toMap
+      val q16Exact = Sweep.exactMultiple(q16Map(sfDir), q16Map(scaledDir), factor)
+
+      val q19b = R.q19DisjunctiveRev(spark, sfDir).collect().head.getLong(1)
+      val q19s = R.q19DisjunctiveRev(spark, scaledDir).collect().head.getLong(1)
+      val q19Exact = q19s == factor * q19b && q19b > 0
+
+      val q20b = R.q20ExcessSupp(spark, sfDir).count()
+      val q20s = R.q20ExcessSupp(spark, scaledDir).count()
+      val q20Exact = q20s == factor * q20b && q20b > 0
+
+      // q21's top-20 LIMIT does not scale; gate the sole-late population
+      // itself (the q18 discipline), using the SAME helper the query
+      // aggregates — one definition of the ship-lag proxy (round-7 advice)
+      def soleLateCount(dir: String): Long = R.q21SoleLatePairs(spark, dir).count()
+      val q21b = soleLateCount(sfDir)
+      val q21s = soleLateCount(scaledDir)
+      val q21Exact = q21s == factor * q21b && q21b > 0
+
+      Sweep.Leg(s"x$factor", Seq(
+        "factor" -> factor, "times" -> Sweep.obj(times: _*),
+        "q6_line_ct" -> Sweep.obj("base" -> q6b, "scaled" -> q6s), "q6_exact_multiple" -> q6Exact,
+        "q8_share_invariant" -> q8Invariant,
+        "q9_exact_multiple" -> q9Exact, "q12_exact_multiple" -> q12Exact,
+        "q16_exact_multiple" -> q16Exact,
+        "q19_line_ct" -> Sweep.obj("base" -> q19b, "scaled" -> q19s), "q19_exact_multiple" -> q19Exact,
+        "q20_suppliers" -> Sweep.obj("base" -> q20b, "scaled" -> q20s), "q20_exact_multiple" -> q20Exact,
+        "q21_sole_late" -> Sweep.obj("base" -> q21b, "scaled" -> q21s), "q21_exact_multiple" -> q21Exact),
+        () => {
+          def gate(ok: Boolean, what: String): Unit =
+            if (!ok) throw new IllegalStateException(
+              s"tpch sweep invalid at x$factor: $what — artifact written but timings " +
+                "must not be cited")
+          gate(q6Exact, s"q6 line count $q6b -> $q6s")
+          gate(q8Invariant, "q8 per-year shares not replication-invariant")
+          gate(q9Exact, "q9 per-(nation, year) counts not exact multiples")
+          gate(q12Exact, "q12 per-bucket counts not exact multiples")
+          gate(q16Exact, "q16 per-group distinct-supplier counts not exact multiples")
+          gate(q19Exact, s"q19 line count $q19b -> $q19s")
+          gate(q20Exact, s"q20 dominant suppliers $q20b -> $q20s")
+          gate(q21Exact, s"q21 sole-late population $q21b -> $q21s")
+        })
     }
-    java.nio.file.Files.deleteIfExists(p)
-    ()
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val factors = sys.env.get("SPARK_GRAFT_SCALE_FACTOR").map(f => Seq(f.toInt))
-      .getOrElse(sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTORS", "10,100")
-        .split(",").map(_.trim.toInt).toSeq)
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
-    val spark = GraftSession.get()
-
-    // the artifact is re-flushed after EVERY leg: a crash in a later leg
-    // must not discard finished legs' timings (round-11 ADVICE)
-    val legs = scala.collection.mutable.ArrayBuffer[(String, () => Unit)]()
-    def flush(): String = {
-      val json =
-        s"""{"metric":"scale_sweep_tpch","sf":"$sfDir","reps":$reps,""" +
-          s""""factors":[${factors.mkString(",")}],"legs_done":${legs.size},""" +
-          s""""legs":{${legs.map(_._1).mkString(",")}}}"""
-      java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_SCALE_tpch.json"),
-        (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      json
-    }
-    factors.foreach { f => legs += runLeg(spark, sfDir, f, reps); flush() }
-    val json = flush()
-    spark.stop()
-    println(json)
-    // uncaught throw after the print exits the JVM nonzero (BenchScale contract)
-    legs.foreach(_._2.apply())
-  }
-
-  private def runLeg(spark: org.apache.spark.sql.SparkSession, sfDir: String,
-                     factor: Int, reps: Int): (String, () => Unit) = {
-    val SHIFT = 1000000000L
-    val scaledDir = SweepTmp.dir(s"graft_sweep_tpch_x$factor")
-    try {
-    def shifted(name: String, keyCols: Seq[String]): Unit = {
-      val t = Tables.table(spark, sfDir, name)
-      val copies = (0 until factor).map { i =>
-        keyCols.foldLeft(t) { (df, k) =>
-          df.withColumn(k, col(k) + lit(i * SHIFT)) }
-      }.reduce(_ unionByName _)
-      copies.write.mode("overwrite").parquet(s"$scaledDir/$name.parquet")
-    }
-    shifted("orders", Seq("o_orderkey", "o_custkey"))
-    shifted("lineitem", Seq("l_orderkey", "l_partkey", "l_suppkey"))
-    shifted("customer", Seq("c_custkey"))
-    shifted("part", Seq("p_partkey"))
-    shifted("supplier", Seq("s_suppkey"))
-    for (dim <- Seq("nation", "region"))
-      Tables.table(spark, sfDir, dim).write.mode("overwrite")
-        .parquet(s"$scaledDir/$dim.parquet")
-
-    val family = Seq("q6_forecast_revenue", "q8_market_share", "q9_product_profit",
-      "q12_ship_lag", "q16_supplier_cnt", "q19_disjunctive_rev",
-      "q20_excess_supp", "q21_waiting_supp")
-      .map(n => n -> SparkEntry.queries(n))
-
-    // warm BOTH dir variants and let failures propagate: a broken query
-    // registration or unreadable scaled parquet must fail fast here, not
-    // surface later inside the timed loop (round-7 advice)
-    family.foreach { case (_, mk) =>
-      exec(mk(spark, sfDir).limit(1))
-      exec(mk(spark, scaledDir).limit(1))
-    }
-    drop(spark)
-
-    def timed(mk: => org.apache.spark.sql.DataFrame): Double =
-      (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        exec(mk)
-        val dt = (System.nanoTime() - t0) / 1e9
-        drop(spark)
-        dt
-      }.min
-
-    val times = family.map { case (name, mk) =>
-      (name, timed(mk(spark, sfDir)), timed(mk(spark, scaledDir)))
-    }
-
-    // ---- exact ×factor gates, off the timed path ------------------------
-    import operators.{Relational => R}
-    val q6b = R.q6ForecastRevenue(spark, sfDir).collect().head.getLong(1)
-    val q6s = R.q6ForecastRevenue(spark, scaledDir).collect().head.getLong(1)
-    val q6Exact = q6s == factor * q6b && q6b > 0
-
-    def shareMap(dir: String): Map[Long, Double] =
-      R.q8MarketShare(spark, dir).collect()
-        .map(r => r.getLong(0) -> r.getDouble(3)).toMap
-    val q8b = shareMap(sfDir)
-    val q8s = shareMap(scaledDir)
-    val q8Invariant = q8b.nonEmpty && q8s.keySet == q8b.keySet &&
-      q8b.forall { case (k, v) => math.abs(q8s(k) - v) < 1e-9 }
-
-    def q9Map(dir: String): Map[(String, Long), Long] =
-      R.q9ProductProfit(spark, dir).collect()
-        .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(3)).toMap
-    val q9b = q9Map(sfDir)
-    val q9s = q9Map(scaledDir)
-    val q9Exact = q9b.nonEmpty && q9s.keySet == q9b.keySet &&
-      q9b.forall { case (k, v) => q9s(k) == factor * v }
-
-    def q12Map(dir: String): Map[String, (Long, Long)] =
-      R.q12ShipLag(spark, dir).collect()
-        .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    val q12b = q12Map(sfDir)
-    val q12s = q12Map(scaledDir)
-    val q12Exact = q12b.nonEmpty && q12s.keySet == q12b.keySet &&
-      q12b.forall { case (k, (h, l)) => q12s(k) == ((factor * h, factor * l)) }
-
-    def q16Map(dir: String): Map[(String, String, Int), Long] =
-      R.q16SupplierCnt(spark, dir).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getInt(2)) -> r.getLong(3)).toMap
-    val q16b = q16Map(sfDir)
-    val q16s = q16Map(scaledDir)
-    val q16Exact = q16b.nonEmpty && q16s.keySet == q16b.keySet &&
-      q16b.forall { case (k, v) => q16s(k) == factor * v }
-
-    val q19b = R.q19DisjunctiveRev(spark, sfDir).collect().head.getLong(1)
-    val q19s = R.q19DisjunctiveRev(spark, scaledDir).collect().head.getLong(1)
-    val q19Exact = q19s == factor * q19b && q19b > 0
-
-    val q20b = R.q20ExcessSupp(spark, sfDir).count()
-    val q20s = R.q20ExcessSupp(spark, scaledDir).count()
-    val q20Exact = q20s == factor * q20b && q20b > 0
-
-    // q21's top-20 LIMIT does not scale; gate the sole-late population
-    // itself (the q18 discipline), using the SAME helper the query
-    // aggregates — one definition of the ship-lag proxy (round-7 advice)
-    def soleLateCount(dir: String): Long = R.q21SoleLatePairs(spark, dir).count()
-    val q21b = soleLateCount(sfDir)
-    val q21s = soleLateCount(scaledDir)
-    val q21Exact = q21s == factor * q21b && q21b > 0
-
-    val timesJson = times.map { case (n, b, s) =>
-      s""""$n":{"base_sec":$b,"scaled_sec":$s}"""
-    }.mkString(",")
-    val legJson =
-      s""""x$factor":{"factor":$factor,"times":{$timesJson},""" +
-        s""""q6_line_ct":{"base":$q6b,"scaled":$q6s},"q6_exact_multiple":$q6Exact,""" +
-        s""""q8_share_invariant":$q8Invariant,""" +
-        s""""q9_exact_multiple":$q9Exact,"q12_exact_multiple":$q12Exact,""" +
-        s""""q16_exact_multiple":$q16Exact,""" +
-        s""""q19_line_ct":{"base":$q19b,"scaled":$q19s},"q19_exact_multiple":$q19Exact,""" +
-        s""""q20_suppliers":{"base":$q20b,"scaled":$q20s},"q20_exact_multiple":$q20Exact,""" +
-        s""""q21_sole_late":{"base":$q21b,"scaled":$q21s},"q21_exact_multiple":$q21Exact}"""
-    val enforce = () => {
-      def gate(ok: Boolean, what: String): Unit =
-        if (!ok) throw new IllegalStateException(
-          s"tpch sweep invalid at x$factor: $what — artifact written but timings " +
-            "must not be cited")
-      gate(q6Exact, s"q6 line count $q6b -> $q6s")
-      gate(q8Invariant, "q8 per-year shares not replication-invariant")
-      gate(q9Exact, "q9 per-(nation, year) counts not exact multiples")
-      gate(q12Exact, "q12 per-bucket counts not exact multiples")
-      gate(q16Exact, "q16 per-group distinct-supplier counts not exact multiples")
-      gate(q19Exact, s"q19 line count $q19b -> $q19s")
-      gate(q20Exact, s"q20 dominant suppliers $q20b -> $q20s")
-      gate(q21Exact, s"q21 sole-late population $q21b -> $q21s")
-    }
-    (legJson, enforce)
-    } finally {
-      // delete eagerly per leg, not just at JVM exit: a 100× scaled copy is
-      // tens of GB and two legs would coexist under /tmp otherwise
-      rm(java.nio.file.Paths.get(scaledDir))
-    }
-  }
 }

@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 
 /** Whole-registry executed-plan audit: runs EVERY SparkEntry query at the
   * given SF and records per-query plan-health counters into
-  * `PLAN_AUDIT.json` — the automated successor of the per-round manual
-  * `PlanDump*` spot checks.
+  * `PLAN_AUDIT.json` — the automated successor of per-round manual plan
+  * spot checks (`graft.PlanDump` still dumps named queries' plans).
   *
   * Counters per query (from the AQE-final executed plan):
   *  - `exchanges`           shuffle exchanges (corpus reshuffle points).

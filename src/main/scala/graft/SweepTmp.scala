@@ -3,10 +3,8 @@ package graft
 /** Temp-dir hygiene for the scale-sweep mains: each sweep materializes a
   * 10×/100× scaled parquet copy of its input tables, and before this helper
   * those directories accumulated under /tmp across runs (gigabytes per
-  * sweep). The enforcement gates in every sweep THROW after the artifact is
-  * printed, so a `finally` would have to thread through each main's tail —
-  * a JVM shutdown hook deletes the directory on both the green and the
-  * tripped exit path instead.
+  * sweep). Every directory is also deleted by a JVM shutdown hook, so a
+  * crashed or gate-tripped run cleans up on its exit path too.
   */
 object SweepTmp {
 
@@ -15,6 +13,15 @@ object SweepTmp {
     val p = java.nio.file.Files.createTempDirectory(prefix)
     Runtime.getRuntime.addShutdownHook(new Thread(() => delete(p.toFile)))
     p.toString
+  }
+
+  /** A temp directory for `body`, deleted as soon as `body` returns or
+    * throws: a 100× scaled copy is tens of GB, and two legs' copies must
+    * not coexist.
+    */
+  def withDir[T](prefix: String)(body: String => T): T = {
+    val d = dir(prefix)
+    try body(d) finally delete(new java.io.File(d))
   }
 
   private def delete(f: java.io.File): Unit = {

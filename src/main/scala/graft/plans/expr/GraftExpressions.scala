@@ -1239,6 +1239,11 @@ object PqEncode {
   * bit-identical. Fewer than n tokens → 0 (the exploded rendering produced
   * no rows for the doc; callers coalesce the absent group to 0).
   *
+  * Null contract: the equivalence holds for arrays without null elements,
+  * which is every array `graft_tokenize` yields. A null element throws
+  * `IllegalArgumentException`, where `concat_ws` skipped it and built a
+  * shorter gram. A null array or null n yields null.
+  *
   * Replaces a corpus×grams explode + two aggregations + pivot per n
   * (`text_topngram_frac`): the gram table never leaves the row.
   */
@@ -1299,6 +1304,11 @@ object MaxNgramCount {
   * higher-order trees that re-slice and allocate per element (profiled as
   * the dominant stage of text_bigram_surprisal). Fewer than n tokens →
   * empty array, as the exploded renderings produced no rows.
+  *
+  * Null contract: the equivalence holds for arrays without null elements,
+  * which is every array `graft_tokenize` yields. A null element throws
+  * `IllegalArgumentException`, where `concat_ws` skipped it and built a
+  * shorter gram. A null array or null n yields null.
   */
 case class NgramArray(left: Expression, right: Expression)
     extends BinaryExpression {

@@ -44,16 +44,13 @@ class DimStore(spark: SparkSession, basePath: String,
   private def numBuckets: Int =
     spark.conf.get("spark.graft.dim.buckets", "16").toInt
 
-  /** Per-table superset of every on-disk bucket's columns (r15): seeded
-    * from a one-time mergeSchema pass over all bucket dirs, refreshed to
-    * each staged write's union schema (which by construction contains the
-    * previous cache, hence every untouched bucket). Lets steady-state
-    * upserts read touched buckets with an explicit schema — zero
-    * per-batch footer inference. The store is single-writer, so no other
-    * process can widen a bucket behind the cache.
+  /** This store's key into the process-wide `DimStore.bucketSchemaCache`:
+    * the canonical table path, resolved once here so two instances over
+    * the same directory (however spelled) share one cache entry and no
+    * upsert pays a filesystem call for it.
     */
-  private val bucketSchemaCache =
-    scala.collection.concurrent.TrieMap[String, org.apache.spark.sql.types.StructType]()
+  private val canonicalBase = new java.io.File(basePath).getCanonicalPath
+  private def cacheKey(table: String) = s"$canonicalBase/$table"
 
   /** Bucket of a key value: hash of a CANONICAL string form so the same
     * logical key buckets identically whatever numeric type a batch arrives
@@ -238,7 +235,7 @@ class DimStore(spark: SparkSession, basePath: String,
         .filter(p => new java.io.File(p).exists)
       if (paths.isEmpty) None
       else {
-        val sch = bucketSchemaCache.getOrElseUpdate(table, {
+        val sch = DimStore.bucketSchemaCache.getOrElseUpdate(cacheKey(table), {
           val allDirs = Option(tableDir.listFiles()).getOrElse(Array.empty)
             .filter(f => f.isDirectory && f.getName.startsWith("graft_bucket="))
             .map(_.getPath).toIndexedSeq
@@ -264,11 +261,12 @@ class DimStore(spark: SparkSession, basePath: String,
       // each an output-task file commit. One partition per bucket writes
       // exactly one file per bucket: the bucket is this store's unit of
       // rewrite (at 100 TB you raise spark.graft.dim.buckets, not the
-      // per-bucket file count). This shape is the measured floor: the
-      // round-14 A/B probe (`ProbeDimWrite`) recorded 0.47 s/upsert
-      // median isolated, with the v2 file-output committer at 0.50 and a
-      // single-task dynamic write at 0.56 — the cost is Spark job fixed
-      // overhead, not task commits, so neither variant is kept.
+      // per-bucket file count). This shape is the measured floor: a
+      // round-14 A/B over a 20-batch, two-table replay of the warehouse's
+      // dim traffic (OPTIMIZATION_r14.md) recorded 0.47 s/upsert median
+      // isolated, with the v2 file-output committer at 0.50 and a
+      // single-task dynamic write at 0.56 — the ~0.47 s floor is Spark job
+      // fixed cost, not task commits, so neither variant is kept.
       staged.repartition(nb, col("graft_bucket"))
         .write.mode(SaveMode.Overwrite).partitionBy("graft_bucket").parquet(tmp)
       // the store's own completion sentinel, independent of the committer
@@ -278,7 +276,7 @@ class DimStore(spark: SparkSession, basePath: String,
     }
     // refresh the schema cache to the staged union (⊇ old cache ⊇ every
     // untouched bucket; the touched buckets ARE this schema)
-    bucketSchemaCache.put(table, org.apache.spark.sql.types.StructType(
+    DimStore.bucketSchemaCache.put(cacheKey(table), org.apache.spark.sql.types.StructType(
       staged.schema.filterNot(_.name == "graft_bucket")))
     phase("swap") {
       touched.foreach { i =>
@@ -385,6 +383,25 @@ class DimStore(spark: SparkSession, basePath: String,
     */
   def lookup(table: String, keyCol: String, key: Any): Array[org.apache.spark.sql.Row] =
     read(table).map(_.filter(col(keyCol) === lit(key)).collect()).getOrElse(Array.empty)
+}
+
+object DimStore {
+
+  /** Per-table superset of every on-disk bucket's columns (r15), keyed by
+    * canonical table path and shared by every instance in the process:
+    * seeded from a one-time mergeSchema pass over all bucket dirs,
+    * refreshed to each staged write's union schema (which by construction
+    * contains the previous entry, hence every untouched bucket). Lets
+    * steady-state upserts read touched buckets with an explicit schema —
+    * zero per-batch footer inference. Per instance, a second store on the
+    * same path that added a column would leave the first one's entry
+    * stale, and its explicit-schema read would silently drop the column;
+    * shared, every writer in the process widens the one entry. The store
+    * has one writing process, so no other process can widen a bucket
+    * behind the cache.
+    */
+  private[graft] val bucketSchemaCache =
+    scala.collection.concurrent.TrieMap[String, org.apache.spark.sql.types.StructType]()
 }
 
 /** S5 analog: dynamic per-row topic routing

@@ -179,9 +179,11 @@ class DimStoreSpec extends SparkSpecBase {
         .filter(_.getName.startsWith("graft_bucket=")).map(_.getPath).toIndexedSeq
       spark.read.option("mergeSchema", "true").parquet(dirs: _*)
     }
-    // FRESH instance (restart, empty cache): an upsert that touches key 3's
-    // bucket with a batch LACKING w and an older version — the re-seeded
-    // superset schema must keep (ts=5, w=extra3) as key 3's winner
+    // FRESH instance after a restart (the process-wide cache emptied): an
+    // upsert that touches key 3's bucket with a batch LACKING w and an
+    // older version — the re-seeded superset schema must keep (ts=5,
+    // w=extra3) as key 3's winner
+    DimStore.bucketSchemaCache.clear()
     val store2 = new DimStore(spark, base)
     store2.upsert("t", Seq((3L, 2L, "v3-stale")).toDF("k", "ts", "v"), "k", "ts")
     val row3 = allBuckets().filter(col("k") === 3L).collect()
@@ -193,5 +195,28 @@ class DimStoreSpec extends SparkSpecBase {
     val row3b = allBuckets().filter(col("k") === 3L).collect()
     assert(row3b.length == 1 && row3b.head.getAs[Long]("ts") == 9L)
     assert(allBuckets().count() == 64)
+  }
+
+  test("two interleaved instances on one path share the schema cache: no column dropped") {
+    // instance A caches the narrow schema; instance B (same table, path
+    // spelled differently) adds a column on key 3; A's next upsert of key
+    // 3's bucket must read that bucket WITH the new column — a per-instance
+    // cache would read it with A's stale narrow schema and write it back
+    // without the column
+    import spark.implicits._
+    val base = Files.createTempDirectory("dimstore_interleave").toString
+    val a = new DimStore(spark, base)
+    val b = new DimStore(spark, s"$base/.")
+    a.upsert("t", (0L until 64L).map(k => (k, 1L, s"v$k")).toDF("k", "ts", "v"), "k", "ts")
+    b.upsert("t", Seq((3L, 5L, "v3b", "extra3")).toDF("k", "ts", "v", "w"), "k", "ts")
+    a.upsert("t", Seq((3L, 2L, "v3-stale")).toDF("k", "ts", "v"), "k", "ts")
+    val dirs = new java.io.File(s"$base/t").listFiles()
+      .filter(_.getName.startsWith("graft_bucket=")).map(_.getPath).toIndexedSeq
+    val all = spark.read.option("mergeSchema", "true").parquet(dirs: _*)
+    assert(all.columns.contains("w"), "the interleaved upsert dropped column w")
+    val row3 = all.filter(col("k") === 3L).collect()
+    assert(row3.length == 1)
+    assert(row3.head.getAs[Long]("ts") == 5L && row3.head.getAs[String]("w") == "extra3")
+    assert(all.count() == 64)
   }
 }

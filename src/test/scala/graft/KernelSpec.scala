@@ -40,11 +40,18 @@ class KernelSpec extends SparkSpecBase with TableDrivenPropertyChecks {
     // corpus-table DuckDB oracles mirror
     val extra = texts.filterNot(_.exists(c =>
       (c >= 0x4E00 && c <= 0x9FFF) || (c >= 0x3400 && c <= 0x4DBF))) ++
-      Seq("  leading and\ttrailing  ", "A\nB\r\nC", "İIıi ẞß")
-    val df = extra.toDF("text").select(
+      Seq("  leading and\ttrailing  ", "A\nB\r\nC", "İIıi ẞß", " ", "\t\n \r")
+    // null text included: the n-gram kernels throw on a null element, so
+    // the tokenizer feeding them must never yield one (null in, null out)
+    val df = (extra.map(Option(_)) :+ None).toDF("text").select(
       call_function("graft_tokenize", col("text")).as("kernel"),
       filter(split(lower(col("text")), "\\s+"), w => length(w) > 0).as("fold"))
-    df.collect().foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1)))
+    val rows = df.collect()
+    rows.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1)))
+    rows.foreach(r => assert(Option(r.getSeq[String](0)).forall(!_.contains(null))))
+    assert(rows.last.isNullAt(0))
+    assert(rows.filter(r => !r.isNullAt(0) && r.getSeq[String](0).isEmpty).length == 3,
+      "empty and whitespace-only texts yield empty token arrays")
   }
 
   test("graft_tokenize CJK bigram fallback (IK-analyzer parity, U1)") {

@@ -1,0 +1,81 @@
+package graft
+
+import java.nio.file.Files
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+
+/** The sweep harness contract every `BenchScale*` main relies on: the
+  * artifact is rewritten after each leg, the gates run only once it is on
+  * disk, and the JSON writer escapes what it is given. Runs on the shared
+  * session with a no-op stop.
+  */
+class SweepSpec extends SparkSpecBase {
+
+  private val sfDir = "/data/\"quoted\"\\back\\slash"
+
+  private def parse(p: java.nio.file.Path): JsonNode =
+    new ObjectMapper().readTree(new String(Files.readAllBytes(p), "UTF-8"))
+
+  /** A fake family with legs at factors 2 and 3, each built by `mk`. */
+  private def family(mk: Int => Sweep.Leg) = new Sweep.Legs {
+    val metric = "fake_sweep"
+    val artifactFile = "unused.json"
+    def leg(c: Sweep.Ctx, factor: Int): Sweep.Leg = mk(factor)
+  }
+
+  private def artifactPath() =
+    Files.createTempDirectory("sweep_spec").resolve("BENCH_SCALE_fake.json")
+
+  test("a leg that crashes keeps the finished legs on disk, and no gate runs") {
+    val out = artifactPath()
+    var stops = 0
+    val crashing = family {
+      case 2 => Sweep.Leg("x2", Seq("rows" -> 7L, "exact" -> false),
+        () => throw new IllegalStateException("x2 gate tripped"))
+      case _ => throw new RuntimeException("x3 leg crashed")
+    }
+    val e = intercept[RuntimeException] {
+      Sweep.run(crashing, Sweep.Ctx(spark, sfDir, Seq(2, 3), 1), out, () => stops += 1)
+    }
+    assert(e.getMessage == "x3 leg crashed", "the crash, not leg 1's gate, ends the run")
+    assert(stops == 1)
+    val j = parse(out)
+    assert(j.get("legs").size == 1)
+    assert(j.get("legs").get("x2").get("rows").asLong == 7L)
+    assert(!j.get("legs").get("x2").get("exact").asBoolean)
+    assert(j.get("sf").asText == sfDir, "sfDir must round-trip through the JSON writer")
+  }
+
+  test("the gate throws only after the artifact holds every leg, is printed, and stopped") {
+    val out = artifactPath()
+    var stops = 0
+    var atFirstGate: Option[(Int, JsonNode)] = None
+    val gated = family { f =>
+      Sweep.Leg(s"x$f", Seq("rows" -> 7L * f, "sec" -> 0.5), () => {
+        if (atFirstGate.isEmpty) atFirstGate = Some((stops, parse(out)))
+        throw new IllegalStateException(s"x$f gate tripped")
+      })
+    }
+    val printed = new java.io.ByteArrayOutputStream()
+    val e = intercept[IllegalStateException] {
+      Console.withOut(printed) {
+        Sweep.run(gated, Sweep.Ctx(spark, sfDir, Seq(2, 3), 1), out, () => stops += 1)
+      }
+    }
+    assert(e.getMessage == "x2 gate tripped", "gates run in leg order")
+    val (stopsThen, onDisk) = atFirstGate.get
+    assert(stopsThen == 1, "the gate runs after the session stop")
+    assert(onDisk.get("legs").size == 2, "the gate sees the artifact with every leg")
+    assert(onDisk.get("legs").get("x3").get("rows").asLong == 21L)
+    assert(onDisk.get("sf").asText == sfDir)
+    val lastLine = printed.toString("UTF-8").linesIterator.toSeq.last
+    assert(new ObjectMapper().readTree(lastLine) == onDisk, "the artifact is the last stdout line")
+  }
+
+  test("the JSON writer escapes quotes, backslashes and control characters") {
+    val s = "a\"b\\c\nd\u0001"
+    val j = new ObjectMapper().readTree(
+      Sweep.render(Sweep.obj("s" -> s, "xs" -> Seq(1, 2), "nan" -> Double.NaN)))
+    assert(j.get("s").asText == s)
+    assert(j.get("xs").size == 2 && j.get("nan").isNull)
+  }
+}

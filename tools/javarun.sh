@@ -3,6 +3,8 @@
 # (runbook: bare java at default heap changes scan-bound wall-clock; keep
 # -Xmx pinned via HEAP, default 8g).
 HEAP="${HEAP:-8g}"
+# the classes of the checkout this script lives in, wherever it was copied
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic \
@@ -15,4 +17,4 @@ done
 exec java -Xmx$HEAP $ADD_OPENS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Duser.language=en -Duser.country=US \
-  -cp "/opt/spark/jars/*:/root/repo/target/scala-2.13/classes" "$@"
+  -cp "/opt/spark/jars/*:$ROOT/target/scala-2.13/classes" "$@"
