@@ -319,16 +319,18 @@ object BenchStream {
     // a store-scanning probe would add O(store) on top and fail loudly.
     // (Old numerator/denominator still recorded in the artifact:
     // cold_read_bytes_median, store_bytes, bands_store_bytes.)
-    // Floor = MEDIAN of the first coldBatches batches (ADVICE r14): those
-    // run against the near-empty store with the same batch sizing as the
-    // cold tail, so median-vs-median compares like with like — the global
-    // min assumed every batch has identical input size and ≤5% read-byte
-    // jitter, and a single small or page-aligned batch would flake the
-    // gate with a healthy probe. A store-scanning probe still adds
-    // O(store) ≫ 5% of a batch floor and fails loudly. The raw min stays
-    // recorded alongside.
+    // Floor = MEDIAN of the coldBatches batches after the first (ADVICE
+    // r14): those run against the near-empty store with the same batch
+    // sizing as the cold tail, so median-vs-median compares like with like
+    // — the global min assumed every batch has identical input size and
+    // ≤5% read-byte jitter, and a single small or page-aligned batch would
+    // flake the gate with a healthy probe. The first batch is left out: it
+    // bootstraps the store (IVF seeds, bloom and band-store creation, no
+    // prior store to probe), a different read profile from the cold tail.
+    // A store-scanning probe still adds O(store) ≫ 5% of a batch floor and
+    // fails loudly. The raw min stays recorded alongside.
     val batchFloorBytes = batchBytes.min
-    val floorMedian = median(batchBytes.take(coldBatches).map(_.toDouble).toSeq)
+    val floorMedian = median(batchBytes.slice(1, coldBatches + 1).map(_.toDouble).toSeq)
     val coldFlatOk = coldMedian <= floorMedian * 1.05
     val compactEvery = spark.conf.get(
       graft.streaming.CorpusJob.CompactEveryConf,

@@ -244,14 +244,6 @@ object Scale {
     else df
   }
 
-  /** Pre-partition two frames on the join key so a subsequent join needs
-    * no exchange of its own (both children arrive hash-partitioned) —
-    * the API-level stand-in for bucketed tables when writing through the
-    * catalog isn't available.
-    */
-  def coPartitioned(left: DataFrame, right: DataFrame, key: String, parts: Int): (DataFrame, DataFrame) =
-    (left.repartition(parts, col(key)), right.repartition(parts, col(key)))
-
   /** Distributed running sum of `valueCol` over the global `sortCols`
     * ordering, WITHOUT the single-partition `Window.orderBy` trap (which
     * plans an Exchange SinglePartition carrying every row through one

@@ -107,7 +107,7 @@ class ApproxPercentileRule extends Rule[LogicalPlan] {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-  import graft.plans.expr._
+  import graft.plans.expr.GraftKernel
 
   private def fn(name: String, arity: Int, build: Seq[Expression] => Expression) =
     (new FunctionIdentifier(name),
@@ -120,30 +120,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => new ApproxDistinctRule)
     ext.injectOptimizerRule(_ => new ApproxPercentileRule)
-    // Native codegen kernels (see graft.plans.expr) as SQL functions, so
-    // both the column API (call_function) and spark.sql can use them.
-    ext.injectFunction(fn("graft_tokenize", 1, a => TokenizeWords(a(0))))
-    ext.injectFunction(fn("graft_dot", 2, a => ArrayDot(a(0), a(1))))
-    ext.injectFunction(fn("graft_eq_count", 2, a => ArrayEqCount(a(0), a(1))))
-    ext.injectFunction(fn("graft_pq_adc", 3, a => PqAdcSum(a(0), a(1), a(2))))
-    ext.injectFunction(fn("graft_pq_encode", 4, a => PqEncode(a(0), a(1), a(2), a(3))))
-    ext.injectFunction(fn("graft_max_ngram_ct", 2, a => MaxNgramCount(a(0), a(1))))
-    ext.injectFunction(fn("graft_ngrams", 2, a => NgramArray(a(0), a(1))))
-    ext.injectFunction(fn("graft_winnow", 3, a => WinnowFingerprints(a(0), a(1), a(2))))
-    ext.injectFunction(fn("graft_bag_intersect", 2, a => BagIntersect(a(0), a(1))))
-    ext.injectFunction(fn("graft_bag_counts", 1, a => BagCounts(a(0))))
-    ext.injectFunction(fn("graft_bag_intersect_counts", 2, a => BagIntersectCounts(a(0), a(1))))
-    ext.injectFunction(fn("graft_bag_jaccard", 4, a => BagJaccard(a(0), a(1), a(2), a(3))))
-    ext.injectFunction(fn("graft_bag_overlap", 4, a => BagOverlap(a(0), a(1), a(2), a(3))))
-    ext.injectFunction(fn("graft_prefix_tokens", 2, a => PrefixTokens(a(0), a(1))))
-    ext.injectFunction(fn("graft_prefix_tokens_vocab", 3,
-      a => PrefixTokensVocab(a(0), a(1), a(2))))
-    ext.injectFunction(fn("graft_norm", 1, a => ArrayNorm(a(0))))
-    ext.injectFunction(fn("graft_hash_tokens", 1, a => HashTokens(a(0))))
-    ext.injectFunction(fn("graft_shingles", 1, a => ShingleHashes(a(0))))
-    ext.injectFunction(fn("graft_minhash", 1, a => MinHashSig(a(0))))
-    ext.injectFunction(fn("graft_simhash32", 1, a => SimHash32(a(0))))
-    ext.injectFunction(fn("graft_char_entropy", 1, a => CharEntropy(a(0))))
+    // Native codegen kernels (see graft.plans.expr.GraftKernel) as SQL
+    // functions, so both the column API (call_function) and spark.sql can
+    // use them.
+    GraftKernel.table.foreach(k =>
+      ext.injectFunction(fn(k.name, k.args.size, GraftKernel(k.name, _))))
     // Spark's own runtime-filter bloom expressions, surfaced as callable
     // functions so an explicit semi-join reduction can build/apply the
     // filter where the optimizer's injection heuristics don't reach

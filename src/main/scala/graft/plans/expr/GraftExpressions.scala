@@ -1,35 +1,23 @@
 package graft.plans.expr
 
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Native Catalyst expressions (with `doGenCode`) for the engine's hot
-  * array kernels.
+/** Shared math of the native kernels (see [[GraftKernel]]).
   *
   * Spark's higher-order functions (`aggregate`, `transform`, `zip_with`,
   * `filter`) are `CodegenFallback`: every invocation drops out of
   * whole-stage codegen into interpreted eval and allocates per element —
   * a 64-slot MinHash fold allocates a fresh 64-long array per shingle.
-  * These expressions compute the identical math (same operation order,
-  * same integer/IEEE semantics, verified against the unchanged DuckDB
-  * oracles) as tight generated loops that stay inside whole-stage codegen.
-  *
-  * Registered as SQL functions (`graft_dot`, `graft_norm`,
-  * `graft_hash_tokens`, `graft_shingles`, `graft_minhash`,
-  * `graft_simhash32`) via `GraftExtensions.injectFunction`, so they are
-  * callable both from the column API (`call_function`) and from
-  * `spark.sql(...)`.
-  *
-  * Null contract: null top-level inputs yield null (standard
-  * null-intolerant semantics); null ARRAY ELEMENTS — which the engine's
-  * own tokenizer/hash stages never produce, but direct SQL callers can —
-  * raise a descriptive IllegalArgumentException rather than NPE-ing the
-  * task. graft_dot/graft_eq_count also require equal lengths and fail
-  * loud on mismatch (surfacing corrupt/mixed-dimension vectors instead
-  * of silently truncating or nulling).
+  * The kernels compute the identical math (same operation order, same
+  * integer/IEEE semantics, verified against the unchanged DuckDB oracles)
+  * as tight static loops that generated code calls from inside
+  * whole-stage codegen.
   */
 object Kernels {
   /** 2^61 - 1, the Mersenne prime all shingle/minhash arithmetic reduces by. */
@@ -83,30 +71,202 @@ object Kernels {
     val d = java.security.MessageDigest.getInstance("MD5").digest(bytes)
     ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) | ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
   }
+
+  /** Spark `Round(x, 6)` double semantics, verbatim (spec-asserted):
+    * BigDecimal HALF_UP at scale 6, NaN/Infinity passed through
+    * (BigDecimal.valueOf would throw).
+    */
+  def round6(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 }
 
-private object TypeChecks {
-  def arrayOfNumeric(dt: DataType, what: String, elems: Seq[DataType]): TypeCheckResult =
-    dt match {
-      case ArrayType(et, _) if elems.contains(et) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$what requires array<${elems.mkString("|")}>, got ${other.sql}")
-    }
+/** One accepted argument type: its text in the type-check failure message
+  * and the test a child's data type must pass.
+  */
+final case class Arg(sql: String, accepts: DataType => Boolean) {
+  def named(label: String): Arg = copy(sql = s"$sql $label")
+}
 
-  /** Java accessor snippet for one array element, widened to double. */
-  def doubleGetter(dt: DataType, arr: String, i: String): String =
-    dt.asInstanceOf[ArrayType].elementType match {
-      case FloatType  => s"(double) $arr.getFloat($i)"
-      case DoubleType => s"$arr.getDouble($i)"
-      case other      => throw new IllegalStateException(s"unsupported element type $other")
-    }
+object Arg {
+  private val names = Map[DataType, String](StringType -> "string", IntegerType -> "int",
+    LongType -> "long", FloatType -> "float", DoubleType -> "double")
 
-  def doubleAt(dt: DataType, arr: ArrayData, i: Int): Double =
-    dt.asInstanceOf[ArrayType].elementType match {
-      case FloatType  => arr.getFloat(i).toDouble
-      case DoubleType => arr.getDouble(i)
-      case other      => throw new IllegalStateException(s"unsupported element type $other")
+  def of(dt: DataType): Arg = Arg(names(dt), _ == dt)
+
+  def array(elems: DataType*): Arg = Arg(elems.map(names).mkString("array<", "|", ">"), {
+    case ArrayType(et, _) => elems.contains(et)
+    case _ => false
+  })
+
+  def arrayOfStruct(fields: DataType*): Arg =
+    Arg(fields.map(names).mkString("array<struct<", ",", ">>"), {
+      case ArrayType(StructType(fs), _) => fs.map(_.dataType).toSeq == fields
+      case _ => false
+    })
+}
+
+/** One row of the kernel table: the SQL name, the accepted argument types,
+  * the result type, and the object whose static `compute` runs the kernel.
+  * Generated code calls `target.compute(args..., flags...)`; interpreted
+  * `eval` calls `call` with the same values in the same order (the flags
+  * are boxed there). `flags` are compile-time constants worked out from
+  * the argument types, e.g. whether a vector holds floats or doubles.
+  * `compute` returns the Java type of `result`.
+  */
+final case class Kernel(name: String, args: Seq[Arg], result: DataType, target: AnyRef,
+                        flags: Seq[DataType] => Seq[Boolean] = _ => Nil)(
+    val call: Array[Any] => Any) {
+  /** The class Janino sees: a Scala object's static forwarders. */
+  def javaTarget: String = target.getClass.getName.stripSuffix("$")
+}
+
+/** A native kernel call: `name` picks its row in [[GraftKernel.table]].
+  * Rendered in plans and SQL under that name (`graft_minhash(...)`).
+  *
+  * Null contract, stated once for every kernel:
+  *  - any null argument gives null. Arguments are evaluated left to right
+  *    and the first null skips the rest and the kernel, in generated code
+  *    and in `eval` alike;
+  *  - no null check is generated for an argument that cannot be null, and
+  *    none at all when no argument can be;
+  *  - the result is nullable iff some argument is, and foldable iff every
+  *    argument is (constant folding and `LocalRelation` go through `eval`);
+  *  - a null array ELEMENT, or array lengths that do not fit together,
+  *    throws a descriptive IllegalArgumentException from `compute` — the
+  *    engine's own stages never produce them, but a SQL caller can.
+  * NaN and ±Infinity follow IEEE arithmetic and pass through the 6-digit
+  * rounding unchanged; `graft_pq_encode` orders them as Spark SQL does
+  * (NaN greatest).
+  */
+case class GraftKernel(name: String, children: Seq[Expression]) extends Expression {
+  @transient private lazy val kernel = GraftKernel.byName(name)
+  @transient private lazy val flags = kernel.flags(children.map(_.dataType))
+
+  override def prettyName: String = name
+  override protected def stringArgs: Iterator[Any] = children.iterator
+  override def dataType: DataType = kernel.result
+  override def nullable: Boolean = children.exists(_.nullable)
+  override def foldable: Boolean = children.forall(_.foldable)
+
+  override def checkInputDataTypes(): TypeCheckResult = {
+    val types = children.map(_.dataType)
+    def list(xs: Seq[String]) = if (xs.size == 1) xs.head else xs.mkString("(", ", ", ")")
+    if (types.size == kernel.args.size && kernel.args.zip(types).forall { case (a, t) => a.accepts(t) })
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$name requires ${list(kernel.args.map(_.sql))}, got ${list(types.map(_.sql))}")
+  }
+
+  override def eval(input: InternalRow): Any = {
+    val values = new Array[Any](children.size + flags.size)
+    var i = 0
+    val it = children.iterator
+    while (it.hasNext) {
+      values(i) = it.next().eval(input)
+      if (values(i) == null) return null
+      i += 1
     }
+    flags.copyToArray(values, i)
+    kernel.call(values)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val gens = children.map(_.genCode(ctx))
+    val call = (gens.map(_.value.toString) ++ flags.map(_.toString))
+      .mkString(s"${ev.value} = ${kernel.javaTarget}.compute(", ", ", ");")
+    val declare = s"${CodeGenerator.javaType(dataType)} ${ev.value} = " +
+      s"${CodeGenerator.defaultValue(dataType)};"
+    if (!nullable)
+      ev.copy(code = code"""
+        |${gens.map(_.code).reduce(_ + _)}
+        |$declare
+        |$call""".stripMargin, isNull = FalseLiteral)
+    else {
+      // each argument's code runs only once every earlier one is non-null
+      val body = children.zip(gens).foldRight(s"${ev.isNull} = false;\n$call") {
+        case ((c, g), inner) => s"${g.code}\n" + ctx.nullSafeExec(c.nullable, g.isNull.toString)(inner)
+      }
+      ev.copy(code = code"""
+        |boolean ${ev.isNull} = true;
+        |$declare
+        |$body""".stripMargin)
+    }
+  }
+
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): GraftKernel =
+    copy(children = c)
+}
+
+object GraftKernel {
+  private def arr(v: Any): ArrayData = v.asInstanceOf[ArrayData]
+  private val str = Arg.of(StringType)
+  private val int = Arg.of(IntegerType)
+  private val long = Arg.of(LongType)
+  private val vec = Arg.array(FloatType, DoubleType)
+  private val doubles = Arg.array(DoubleType)
+  private val longs = Arg.array(LongType)
+  private val strings = Arg.array(StringType)
+  private val bag = Arg.arrayOfStruct(StringType, LongType)
+  private val isFloat: Seq[DataType] => Seq[Boolean] =
+    _.map(_.asInstanceOf[ArrayType].elementType == FloatType)
+  private val stringsOut = ArrayType(StringType, containsNull = false)
+  private val longsOut = ArrayType(LongType, containsNull = false)
+  private val bagOut = ArrayType(StructType(Seq(StructField("tok", StringType, nullable = false),
+    StructField("tf", LongType, nullable = false))), containsNull = false)
+
+  /** Every kernel `GraftExtensions` registers as a SQL function. */
+  val table: Seq[Kernel] = Seq(
+    Kernel("graft_tokenize", Seq(str), stringsOut, TokenizeWords)(
+      v => TokenizeWords.compute(v(0))),
+    Kernel("graft_dot", Seq(vec, vec), DoubleType, ArrayDot, isFloat)(
+      v => ArrayDot.compute(arr(v(0)), arr(v(1)), v(2).asInstanceOf[Boolean], v(3).asInstanceOf[Boolean])),
+    Kernel("graft_eq_count", Seq(longs, longs), IntegerType, ArrayEqCount)(
+      v => ArrayEqCount.compute(arr(v(0)), arr(v(1)))),
+    Kernel("graft_pq_adc", Seq(longs.named("codes"), longs.named("lut"), int.named("ks")),
+      LongType, PqAdcSum)(
+      v => PqAdcSum.compute(arr(v(0)), arr(v(1)), v(2).asInstanceOf[Int])),
+    Kernel("graft_pq_encode", Seq(doubles.named("emb"), doubles.named("codebook"),
+      doubles.named("cbnorms"), int.named("ks")), longsOut, PqEncode)(
+      v => PqEncode.compute(arr(v(0)), arr(v(1)), arr(v(2)), v(3).asInstanceOf[Int])),
+    Kernel("graft_max_ngram_ct", Seq(strings, int.named("n")), LongType, MaxNgramCount)(
+      v => MaxNgramCount.compute(arr(v(0)), v(1).asInstanceOf[Int])),
+    Kernel("graft_ngrams", Seq(strings, int.named("n")), stringsOut, NgramArray)(
+      v => NgramArray.compute(arr(v(0)), v(1).asInstanceOf[Int])),
+    Kernel("graft_winnow", Seq(str, int.named("k"), int.named("w")), longsOut,
+      WinnowFingerprints)(
+      v => WinnowFingerprints.compute(v(0).asInstanceOf[org.apache.spark.unsafe.types.UTF8String], v(1).asInstanceOf[Int],
+        v(2).asInstanceOf[Int])),
+    Kernel("graft_bag_intersect", Seq(strings, strings), IntegerType, BagIntersect)(
+      v => BagIntersect.compute(arr(v(0)), arr(v(1)))),
+    Kernel("graft_bag_counts", Seq(strings), bagOut, BagCounts)(
+      v => BagCounts.compute(arr(v(0)))),
+    Kernel("graft_bag_intersect_counts", Seq(bag, bag), LongType, BagIntersectCounts)(
+      v => BagIntersectCounts.compute(arr(v(0)), arr(v(1)))),
+    Kernel("graft_bag_jaccard", Seq(bag, bag, long, long), DoubleType, BagJaccard)(
+      v => BagJaccard.compute(arr(v(0)), arr(v(1)), v(2).asInstanceOf[Long], v(3).asInstanceOf[Long])),
+    Kernel("graft_bag_overlap", Seq(bag, bag, long, long), DoubleType, BagOverlap)(
+      v => BagOverlap.compute(arr(v(0)), arr(v(1)), v(2).asInstanceOf[Long], v(3).asInstanceOf[Long])),
+    Kernel("graft_prefix_tokens", Seq(Arg.arrayOfStruct(LongType, StringType, LongType), long),
+      stringsOut, PrefixTokens)(
+      v => PrefixTokens.compute(arr(v(0)), v(1).asInstanceOf[Long])),
+    Kernel("graft_prefix_tokens_vocab", Seq(bag, bag, long), stringsOut, PrefixTokensVocab)(
+      v => PrefixTokensVocab.compute(arr(v(0)), arr(v(1)), v(2).asInstanceOf[Long])),
+    Kernel("graft_norm", Seq(vec), DoubleType, ArrayNorm, isFloat)(
+      v => ArrayNorm.compute(arr(v(0)), v(1).asInstanceOf[Boolean])),
+    Kernel("graft_hash_tokens", Seq(strings), longsOut, HashTokens)(
+      v => HashTokens.compute(arr(v(0)))),
+    Kernel("graft_shingles", Seq(longs), longsOut, ShingleHashes)(
+      v => ShingleHashes.compute(arr(v(0)))),
+    Kernel("graft_minhash", Seq(longs), longsOut, MinHashSig)(
+      v => MinHashSig.compute(arr(v(0)))),
+    Kernel("graft_simhash32", Seq(longs), LongType, SimHash32)(
+      v => SimHash32.compute(arr(v(0)))),
+    Kernel("graft_char_entropy", Seq(str), DoubleType, CharEntropy)(
+      v => CharEntropy.compute(v(0))))
+
+  private val byName: Map[String, Kernel] = table.map(k => k.name -> k).toMap
 }
 
 /** Left-to-right dot product of two equal-length numeric arrays, double
@@ -117,28 +277,6 @@ private object TypeChecks {
   * an error surfaces corrupt/mixed-dimension embeddings instead of
   * silently nulling scores), as do null elements.
   */
-case class ArrayDot(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val l = TypeChecks.arrayOfNumeric(left.dataType, "graft_dot", Seq(FloatType, DoubleType))
-    if (l.isFailure) l
-    else TypeChecks.arrayOfNumeric(right.dataType, "graft_dot", Seq(FloatType, DoubleType))
-  }
-
-  private def aFloat = left.dataType.asInstanceOf[ArrayType].elementType == FloatType
-  private def bFloat = right.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    ArrayDot.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], aFloat, bFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.plans.expr.ArrayDot.compute($a, $b, $aFloat, $bFloat);")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): ArrayDot =
-    copy(left = l, right = r)
-}
-
 object ArrayDot {
   def compute(x: ArrayData, y: ArrayData, xFloat: Boolean, yFloat: Boolean): Double = {
     val n = x.numElements()
@@ -163,25 +301,6 @@ object ArrayDot {
   * equal-length arrays (the MinHash signature-agreement estimator),
   * without the three interpreted higher-order hops per pair.
   */
-case class ArrayEqCount(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = IntegerType
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_eq_count requires (array<long>, array<long>), got $other")
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    ArrayEqCount.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.plans.expr.ArrayEqCount.compute($a, $b);")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): ArrayEqCount =
-    copy(left = l, right = r)
-}
-
 object ArrayEqCount {
   def compute(x: ArrayData, y: ArrayData): Int = {
     val n = x.numElements()
@@ -205,25 +324,6 @@ object ArrayEqCount {
   * be sorted with `array_sort` (binary UTF8String order — the same order
   * the merge compares with); duplicates implement the min(tf) naturally.
   */
-case class BagIntersect(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = IntegerType
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(StringType, _), ArrayType(StringType, _)) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_bag_intersect requires (array<string>, array<string>), got $other")
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    BagIntersect.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.plans.expr.BagIntersect.compute($a, $b);")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): BagIntersect =
-    copy(left = l, right = r)
-}
-
 object BagIntersect {
   def compute(a: ArrayData, b: ArrayData): Int = {
     Kernels.requireNoNullElements(a, "graft_bag_intersect")
@@ -243,23 +343,6 @@ object BagIntersect {
 /** Euclidean norm with the same fold order as
   * `sqrt(aggregate(a, 0.0, (acc, x) => acc + x*x))`.
   */
-case class ArrayNorm(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult =
-    TypeChecks.arrayOfNumeric(child.dataType, "graft_norm", Seq(FloatType, DoubleType))
-
-  private def isFloat = child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override protected def nullSafeEval(a: Any): Any =
-    ArrayNorm.compute(a.asInstanceOf[ArrayData], isFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.expr.ArrayNorm.compute($a, $isFloat);")
-
-  override protected def withNewChildInternal(c: Expression): ArrayNorm = copy(child = c)
-}
-
 object ArrayNorm {
   def compute(x: ArrayData, isFloat: Boolean): Double = {
     Kernels.requireNoNullElements(x, "graft_norm")
@@ -299,26 +382,6 @@ object ArrayNorm {
   * whole-stage codegen — this kernel keeps the full
   * tokenize→hash→signature pipeline inside one codegen span.
   */
-case class TokenizeWords(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_tokenize requires string, got ${other.sql}")
-  }
-
-  override protected def nullSafeEval(a: Any): Any = TokenizeWords.compute(a)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"""
-         |${ev.value} = (org.apache.spark.sql.catalyst.util.GenericArrayData)
-         |  graft.plans.expr.TokenizeWords.compute($a);
-       """.stripMargin)
-
-  override protected def withNewChildInternal(c: Expression): TokenizeWords = copy(child = c)
-}
-
 object TokenizeWords {
   private val WS = java.util.regex.Pattern.compile("\\s+")
 
@@ -372,29 +435,8 @@ object TokenizeWords {
   * `transform(toks, w => conv(substring(md5(w),1,8),16,10) :: long)` but
   * hashing bytes directly instead of hex-encoding + string base conversion.
   */
-case class HashTokens(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_hash_tokens requires array<string>, got ${other.sql}")
-  }
-
-  override protected def nullSafeEval(a: Any): Any =
-    new GenericArrayData(HashTokens.compute(a.asInstanceOf[ArrayData]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"""
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  graft.plans.expr.HashTokens.compute($a));
-       """.stripMargin)
-
-  override protected def withNewChildInternal(c: Expression): HashTokens = copy(child = c)
-}
-
 object HashTokens {
-  def compute(x: ArrayData): Array[Long] = {
+  def compute(x: ArrayData): GenericArrayData = {
     Kernels.requireNoNullElements(x, "graft_hash_tokens")
     val out = new Array[Long](x.numElements())
     var i = 0
@@ -402,7 +444,7 @@ object HashTokens {
       out(i) = Kernels.md5Prefix64(x.getUTF8String(i).getBytes)
       i += 1
     }
-    out
+    new GenericArrayData(out)
   }
 }
 
@@ -414,32 +456,11 @@ object HashTokens {
   * then every hash reduced `% 4294967291` and deduplicated preserving
   * first-occurrence order (array_distinct semantics).
   */
-case class ShingleHashes(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_shingles requires array<long>, got ${other.sql}")
-  }
-
-  override protected def nullSafeEval(a: Any): Any =
-    new GenericArrayData(ShingleHashes.compute(a.asInstanceOf[ArrayData]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"""
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  graft.plans.expr.ShingleHashes.compute($a));
-       """.stripMargin)
-
-  override protected def withNewChildInternal(c: Expression): ShingleHashes = copy(child = c)
-}
-
 object ShingleHashes {
   /** Shared by eval and generated code (the kernel is branchy enough that a
     * static method keeps the generated method bodies small for JIT).
     */
-  def compute(th: ArrayData): Array[Long] = {
+  def compute(th: ArrayData): GenericArrayData = {
     Kernels.requireNoNullElements(th, "graft_shingles")
     val n = th.numElements()
     val C = Kernels.ShingleC
@@ -469,7 +490,7 @@ object ShingleHashes {
     val it = seen.iterator()
     var k = 0
     while (it.hasNext) { out(k) = it.next(); k += 1 }
-    out
+    new GenericArrayData(out)
   }
 }
 
@@ -480,30 +501,6 @@ object ShingleHashes {
   * walks every occurrence. On repetitive corpora (distinct ≪ total) this
   * is the verification kernel's whole cost model.
   */
-case class BagIntersectCounts(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = LongType
-  private def ok(dt: DataType): Boolean = dt match {
-    case ArrayType(StructType(Array(a, b)), _) =>
-      a.dataType == StringType && b.dataType == LongType
-    case _ => false
-  }
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_bag_intersect_counts requires two array<struct<string,long>>, got " +
-        s"(${left.dataType.sql}, ${right.dataType.sql})")
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    BagIntersectCounts.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.plans.expr.BagIntersectCounts.compute($a, $b);")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): BagIntersectCounts =
-    copy(left = l, right = r)
-}
-
 object BagIntersectCounts {
   def compute(a: ArrayData, b: ArrayData): Long = {
     val n = a.numElements(); val m = b.numElements()
@@ -531,66 +528,9 @@ object BagIntersectCounts {
   * Rounding replicates Spark's `Round` on doubles exactly
   * (BigDecimal HALF_UP at scale 6), so oracle hashes are unchanged.
   */
-case class BagJaccard(first: Expression, second: Expression,
-                      third: Expression, fourth: Expression) extends Expression {
-  override def children: Seq[Expression] = Seq(first, second, third, fourth)
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def dataType: DataType = DoubleType
-  private def bagOk(dt: DataType): Boolean = dt match {
-    case ArrayType(StructType(Array(a, b)), _) =>
-      a.dataType == StringType && b.dataType == LongType
-    case _ => false
-  }
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (bagOk(first.dataType) && bagOk(second.dataType) &&
-        third.dataType == LongType && fourth.dataType == LongType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "graft_bag_jaccard requires (array<struct<string,long>>, array<struct<string,long>>, long, long), got " +
-        children.map(_.dataType.sql).mkString("(", ", ", ")"))
-
-  override def foldable: Boolean = children.forall(_.foldable)
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val a = first.eval(input); val b = second.eval(input)
-    val ta = third.eval(input); val tb = fourth.eval(input)
-    if (a == null || b == null || ta == null || tb == null) null
-    else BagJaccard.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      ta.asInstanceOf[Long], tb.asInstanceOf[Long])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val evs = children.map(_.genCode(ctx))
-    val nullCheck = evs.map(e => e.isNull.toString).mkString(" || ")
-    val childCode = evs.map(_.code).reduce(_ + _)
-    ev.copy(code = childCode +
-      code"""
-        |boolean ${ev.isNull} = $nullCheck;
-        |double ${ev.value} = -1.0;
-        |if (!${ev.isNull}) {
-        |  ${ev.value} = graft.plans.expr.BagJaccard.compute(
-        |    ${evs(0).value}, ${evs(1).value}, ${evs(2).value}, ${evs(3).value});
-        |}
-      """.stripMargin)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): BagJaccard =
-    BagJaccard(newChildren(0), newChildren(1), newChildren(2), newChildren(3))
-}
-
 object BagJaccard {
-  /** Spark Round(double, 6) semantics: BigDecimal HALF_UP at scale 6,
-    * NaN/Infinity passed through (BigDecimal.valueOf would throw).
-    */
-  def round6(raw: Double): Double =
-    if (raw.isNaN || raw.isInfinite) raw
-    else java.math.BigDecimal.valueOf(raw)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-
   def compute(a: ArrayData, b: ArrayData, totalA: Long, totalB: Long): Double =
-    round6({
+    Kernels.round6({
       val inter = BagIntersectCounts.compute(a, b)
       inter.toDouble / (totalA + totalB - inter).toDouble
     })
@@ -601,58 +541,9 @@ object BagJaccard {
   * kernel of the prefix-filtered containment join, same single-pass
   * rationale as `graft_bag_jaccard`.
   */
-case class BagOverlap(first: Expression, second: Expression,
-                      third: Expression, fourth: Expression) extends Expression {
-  override def children: Seq[Expression] = Seq(first, second, third, fourth)
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def dataType: DataType = DoubleType
-  private def bagOk(dt: DataType): Boolean = dt match {
-    case ArrayType(StructType(Array(a, b)), _) =>
-      a.dataType == StringType && b.dataType == LongType
-    case _ => false
-  }
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (bagOk(first.dataType) && bagOk(second.dataType) &&
-        third.dataType == LongType && fourth.dataType == LongType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "graft_bag_overlap requires (array<struct<string,long>>, array<struct<string,long>>, long, long), got " +
-        children.map(_.dataType.sql).mkString("(", ", ", ")"))
-
-  override def foldable: Boolean = children.forall(_.foldable)
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val a = first.eval(input); val b = second.eval(input)
-    val ta = third.eval(input); val tb = fourth.eval(input)
-    if (a == null || b == null || ta == null || tb == null) null
-    else BagOverlap.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      ta.asInstanceOf[Long], tb.asInstanceOf[Long])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val evs = children.map(_.genCode(ctx))
-    val nullCheck = evs.map(e => e.isNull.toString).mkString(" || ")
-    val childCode = evs.map(_.code).reduce(_ + _)
-    ev.copy(code = childCode +
-      code"""
-        |boolean ${ev.isNull} = $nullCheck;
-        |double ${ev.value} = -1.0;
-        |if (!${ev.isNull}) {
-        |  ${ev.value} = graft.plans.expr.BagOverlap.compute(
-        |    ${evs(0).value}, ${evs(1).value}, ${evs(2).value}, ${evs(3).value});
-        |}
-      """.stripMargin)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): BagOverlap =
-    BagOverlap(newChildren(0), newChildren(1), newChildren(2), newChildren(3))
-}
-
 object BagOverlap {
   def compute(a: ArrayData, b: ArrayData, totalA: Long, totalB: Long): Double =
-    BagJaccard.round6(
+    Kernels.round6(
       BagIntersectCounts.compute(a, b).toDouble / math.min(totalA, totalB).toDouble)
 }
 
@@ -663,29 +554,6 @@ object BagOverlap {
   * same order `graft_bag_intersect` merges with); an out-of-order input
   * fails loud rather than silently splitting runs into wrong counts.
   */
-case class BagCounts(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("tok", StringType, nullable = false),
-      StructField("tf", LongType, nullable = false))), containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_bag_counts requires array<string>, got ${other.sql}")
-  }
-
-  override protected def nullSafeEval(a: Any): Any =
-    BagCounts.compute(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"""
-         |${ev.value} = (org.apache.spark.sql.catalyst.util.GenericArrayData)
-         |  graft.plans.expr.BagCounts.compute($a);
-       """.stripMargin)
-
-  override protected def withNewChildInternal(c: Expression): BagCounts = copy(child = c)
-}
-
 object BagCounts {
   def compute(st: ArrayData): GenericArrayData = {
     Kernels.requireNoNullElements(st, "graft_bag_counts")
@@ -717,30 +585,6 @@ object BagCounts {
   * over every token row: the sort is per-document over its DISTINCT
   * tokens, inside one codegen'd projection.
   */
-case class PrefixTokens(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(StructType(Array(a, b, c)), _), LongType)
-      if a.dataType == LongType && b.dataType == StringType && c.dataType == LongType =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_prefix_tokens requires (array<struct<long,string,long>>, long), got $other")
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    PrefixTokens.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""
-         |${ev.value} = (org.apache.spark.sql.catalyst.util.GenericArrayData)
-         |  graft.plans.expr.PrefixTokens.compute($a, $b);
-       """.stripMargin)
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): PrefixTokens =
-    copy(left = l, right = r)
-}
-
 object PrefixTokens {
   def compute(pairs: ArrayData, limit: Long): GenericArrayData = {
     val n = pairs.numElements()
@@ -786,54 +630,6 @@ object PrefixTokens {
   * vocab is built from the same corpus, so a miss is pipeline corruption,
   * not data.
   */
-case class PrefixTokensVocab(first: Expression, second: Expression,
-                             third: Expression) extends Expression {
-  override def children: Seq[Expression] = Seq(first, second, third)
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  private def pairOk(dt: DataType): Boolean = dt match {
-    case ArrayType(StructType(Array(a, b)), _) =>
-      a.dataType == StringType && b.dataType == LongType
-    case _ => false
-  }
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (pairOk(first.dataType) && pairOk(second.dataType) && third.dataType == LongType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "graft_prefix_tokens_vocab requires (array<struct<string,long>>, " +
-        "array<struct<string,long>>, long), got " +
-        children.map(_.dataType.sql).mkString("(", ", ", ")"))
-
-  override def foldable: Boolean = children.forall(_.foldable)
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val a = first.eval(input); val v = second.eval(input); val l = third.eval(input)
-    if (a == null || v == null || l == null) null
-    else PrefixTokensVocab.compute(a.asInstanceOf[ArrayData],
-      v.asInstanceOf[ArrayData], l.asInstanceOf[Long])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val evs = children.map(_.genCode(ctx))
-    val nullCheck = evs.map(e => e.isNull.toString).mkString(" || ")
-    val childCode = evs.map(_.code).reduce(_ + _)
-    ev.copy(code = childCode +
-      code"""
-        |boolean ${ev.isNull} = $nullCheck;
-        |org.apache.spark.sql.catalyst.util.GenericArrayData ${ev.value} = null;
-        |if (!${ev.isNull}) {
-        |  ${ev.value} = graft.plans.expr.PrefixTokensVocab.compute(
-        |    ${evs(0).value}, ${evs(1).value}, ${evs(2).value});
-        |}
-      """.stripMargin)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): PrefixTokensVocab =
-    PrefixTokensVocab(newChildren(0), newChildren(1), newChildren(2))
-}
-
 object PrefixTokensVocab {
   def compute(bag: ArrayData, vocab: ArrayData, limit: Long): GenericArrayData = {
     val n = bag.numElements()
@@ -884,29 +680,8 @@ object PrefixTokensVocab {
   * Long.MaxValue — identical to the 64-slot `aggregate` fold, without the
   * per-element 64-long array allocation.
   */
-case class MinHashSig(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_minhash requires array<long>, got ${other.sql}")
-  }
-
-  override protected def nullSafeEval(a: Any): Any =
-    new GenericArrayData(MinHashSig.compute(a.asInstanceOf[ArrayData]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"""
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  graft.plans.expr.MinHashSig.compute($a));
-       """.stripMargin)
-
-  override protected def withNewChildInternal(c: Expression): MinHashSig = copy(child = c)
-}
-
 object MinHashSig {
-  def compute(hs: ArrayData): Array[Long] = {
+  def compute(hs: ArrayData): GenericArrayData = {
     Kernels.requireNoNullElements(hs, "graft_minhash")
     val slots = new Array[Long](Kernels.NumHashes)
     java.util.Arrays.fill(slots, Long.MaxValue)
@@ -924,7 +699,7 @@ object MinHashSig {
       }
       j += 1
     }
-    slots
+    new GenericArrayData(slots)
   }
 }
 
@@ -932,23 +707,6 @@ object MinHashSig {
   * votes from each hash's bit `i`; bit set iff the vote sum is positive —
   * identical to the 32-slot vote `aggregate` + when-chain reduction.
   */
-case class SimHash32(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_simhash32 requires array<long>, got ${other.sql}")
-  }
-
-  override protected def nullSafeEval(a: Any): Any = SimHash32.compute(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.expr.SimHash32.compute($a);")
-
-  override protected def withNewChildInternal(c: Expression): SimHash32 = copy(child = c)
-}
-
 object SimHash32 {
   def compute(hs: ArrayData): Long = {
     Kernels.requireNoNullElements(hs, "graft_simhash32")
@@ -984,23 +742,6 @@ object SimHash32 {
   * map-side inside whole-stage codegen: the score costs one projection,
   * no explode/groupBy shuffle of per-character rows.
   */
-case class CharEntropy(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_char_entropy requires string, got ${other.sql}")
-  }
-
-  override protected def nullSafeEval(a: Any): Any = CharEntropy.compute(a)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.expr.CharEntropy.compute($a);")
-
-  override protected def withNewChildInternal(c: Expression): CharEntropy = copy(child = c)
-}
-
 object CharEntropy {
   def compute(a: Any): Double = {
     val s = a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString
@@ -1035,47 +776,6 @@ object CharEntropy {
   * the result equals the decimal-sum rendering bit-for-bit after the
   * single final division by 1e6.
   */
-case class PqAdcSum(first: Expression, second: Expression, third: Expression)
-    extends Expression {
-  override def children: Seq[Expression] = Seq(first, second, third)
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _), IntegerType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"graft_pq_adc requires (array<long> codes, array<long> lut, int ks), got $other")
-    }
-  override def foldable: Boolean = children.forall(_.foldable)
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val c = first.eval(input); val l = second.eval(input); val k = third.eval(input)
-    if (c == null || l == null || k == null) null
-    else PqAdcSum.compute(c.asInstanceOf[ArrayData], l.asInstanceOf[ArrayData],
-      k.asInstanceOf[Int])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val evs = children.map(_.genCode(ctx))
-    val nullCheck = evs.map(e => e.isNull.toString).mkString(" || ")
-    val childCode = evs.map(_.code).reduce(_ + _)
-    ev.copy(code = childCode +
-      code"""
-        |boolean ${ev.isNull} = $nullCheck;
-        |long ${ev.value} = 0L;
-        |if (!${ev.isNull}) {
-        |  ${ev.value} = graft.plans.expr.PqAdcSum.compute(
-        |    ${evs(0).value}, ${evs(1).value}, ${evs(2).value});
-        |}
-        |""".stripMargin)
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): PqAdcSum =
-    copy(first = c(0), second = c(1), third = c(2))
-}
-
 object PqAdcSum {
   def compute(codes: ArrayData, lut: ArrayData, ks: Int): Long = {
     Kernels.requireNoNullElements(codes, "graft_pq_adc")
@@ -1108,7 +808,7 @@ object PqAdcSum {
   *    exact `ArrayDot.compute` / `ArrayNorm.compute` arithmetic;
   *  - rounding is Spark `Round(_, 6)`'s double path verbatim: NaN/Inf
   *    pass through, else `BigDecimal.valueOf(x).setScale(6, HALF_UP)`
-  *    (`PqEncode.round6`, spec-asserted against `round()` itself);
+  *    (`Kernels.round6`, spec-asserted against `round()` itself);
   *  - the argmax comparator is Spark's SQL double ordering
   *    (`-0.0 == 0.0`, NaN greatest — `if (x == y) 0 else
   *    Double.compare(x, y)`), descending, first-match over ascending
@@ -1123,57 +823,7 @@ object PqAdcSum {
   * derived (`m = cbn.length/ks`, `sd = emb.length/m`) and every length
   * is cross-checked loudly.
   */
-case class PqEncode(first: Expression, second: Expression, third: Expression,
-                    fourth: Expression) extends Expression {
-  override def children: Seq[Expression] = Seq(first, second, third, fourth)
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType, fourth.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _),
-            ArrayType(DoubleType, _), IntegerType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        "graft_pq_encode requires (array<double> emb, array<double> codebook, " +
-          s"array<double> cbnorms, int ks), got $other")
-    }
-  override def foldable: Boolean = children.forall(_.foldable)
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val e = first.eval(input); val cb = second.eval(input)
-    val cbn = third.eval(input); val k = fourth.eval(input)
-    if (e == null || cb == null || cbn == null || k == null) null
-    else PqEncode.compute(e.asInstanceOf[ArrayData], cb.asInstanceOf[ArrayData],
-      cbn.asInstanceOf[ArrayData], k.asInstanceOf[Int])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val evs = children.map(_.genCode(ctx))
-    val nullCheck = evs.map(e => e.isNull.toString).mkString(" || ")
-    val childCode = evs.map(_.code).reduce(_ + _)
-    ev.copy(code = childCode +
-      code"""
-        |boolean ${ev.isNull} = $nullCheck;
-        |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        |if (!${ev.isNull}) {
-        |  ${ev.value} = graft.plans.expr.PqEncode.compute(
-        |    ${evs(0).value}, ${evs(1).value}, ${evs(2).value}, ${evs(3).value});
-        |}
-        |""".stripMargin)
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): PqEncode =
-    copy(first = c(0), second = c(1), third = c(2), fourth = c(3))
-}
-
 object PqEncode {
-  /** Spark `Round(x, 6)` double semantics, verbatim (spec-asserted). */
-  def round6(x: Double): Double =
-    if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) x
-    else java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-
   /** Spark SQL double ordering: -0.0 == 0.0, NaN greatest. */
   private def cmp(x: Double, y: Double): Int =
     if (x == y) 0 else java.lang.Double.compare(x, y)
@@ -1217,7 +867,7 @@ object PqEncode {
         // score NaN
         require(den != 0.0,
           s"graft_pq_encode: zero-norm subvector/centroid at (s=$s, cell=$cell) — division by zero")
-        val ccos = round6(dacc / den)
+        val ccos = Kernels.round6(dacc / den)
         if (bestCell < 0 || cmp(ccos, best) > 0) { best = ccos; bestCell = cell }
         cell += 1
       }
@@ -1247,27 +897,6 @@ object PqEncode {
   * Replaces a corpus×grams explode + two aggregations + pivot per n
   * (`text_topngram_frac`): the gram table never leaves the row.
   */
-case class MaxNgramCount(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), IntegerType) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"graft_max_ngram_ct requires (array<string>, int n), got $other")
-    }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    MaxNgramCount.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.plans.expr.MaxNgramCount.compute($a, $b);")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): MaxNgramCount =
-    copy(left = l, right = r)
-}
-
 object MaxNgramCount {
   private val Space = org.apache.spark.unsafe.types.UTF8String.fromString(" ")
 
@@ -1310,27 +939,6 @@ object MaxNgramCount {
   * `IllegalArgumentException`, where `concat_ws` skipped it and built a
   * shorter gram. A null array or null n yields null.
   */
-case class NgramArray(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), IntegerType) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"graft_ngrams requires (array<string>, int n), got $other")
-    }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    NgramArray.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.plans.expr.NgramArray.compute($a, $b);")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): NgramArray =
-    copy(left = l, right = r)
-}
-
 object NgramArray {
   private val Space = org.apache.spark.unsafe.types.UTF8String.fromString(" ")
 
@@ -1361,47 +969,6 @@ object NgramArray {
   * per window — the rendering that pinned one core for ~17 minutes at
   * sf0.1 before this kernel existed.
   */
-case class WinnowFingerprints(first: Expression, second: Expression, third: Expression)
-    extends Expression {
-  override def children: Seq[Expression] = Seq(first, second, third)
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (StringType, IntegerType, IntegerType) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"graft_winnow requires (string, int k, int w), got $other")
-    }
-  override def foldable: Boolean = children.forall(_.foldable)
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val t = first.eval(input); val k = second.eval(input); val w = third.eval(input)
-    if (t == null || k == null || w == null) null
-    else WinnowFingerprints.compute(
-      t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      k.asInstanceOf[Int], w.asInstanceOf[Int])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val evs = children.map(_.genCode(ctx))
-    val nullCheck = evs.map(e => e.isNull.toString).mkString(" || ")
-    val childCode = evs.map(_.code).reduce(_ + _)
-    ev.copy(code = childCode +
-      code"""
-        |boolean ${ev.isNull} = $nullCheck;
-        |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        |if (!${ev.isNull}) {
-        |  ${ev.value} = graft.plans.expr.WinnowFingerprints.compute(
-        |    ${evs(0).value}, ${evs(1).value}, ${evs(2).value});
-        |}
-        |""".stripMargin)
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): WinnowFingerprints =
-    copy(first = c(0), second = c(1), third = c(2))
-}
-
 object WinnowFingerprints {
   def compute(text: org.apache.spark.unsafe.types.UTF8String, k: Int,
               w: Int): ArrayData = {

@@ -269,6 +269,40 @@ class KernelSpec extends SparkSpecBase with TableDrivenPropertyChecks {
       "graft_bag_counts: input not sorted")
   }
 
+  test("every kernel, every argument position: a null argument gives null, folded and in codegen") {
+    import graft.plans.expr.GraftKernel
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    val kernels = GraftKernel.table.map(_.name).toSet
+    val registered = spark.sql("SHOW FUNCTIONS LIKE 'graft_*'").collect().map(_.getString(0)).toSet
+    assert(registered -- Set("graft_bloom_agg", "graft_bloom_might_contain") == kernels)
+    // one typed sample per argument type the table accepts
+    val samples = Seq("'a b'", "2", "2L", "array('a', 'b')", "array(1L, 2L)",
+      "array(1.0D, 2.0D)", "array(named_struct('tok', 'a', 'tf', 1L))",
+      "array(named_struct('df', 1L, 'tok', 'a', 'tf', 1L))")
+      .map(s => s -> spark.sql(s"SELECT $s").schema.head.dataType)
+    // generated code must compile: no silent fallback to interpreted eval
+    val strict = Seq("spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+    strict.foreach { case (key, v) => spark.conf.set(key, v) }
+    try for (k <- GraftKernel.table) {
+      val picks = k.args.map(a => samples.find(s => a.accepts(s._2))
+        .getOrElse(fail(s"no sample for ${k.name} argument ${a.sql}")))
+      def call(pos: Int, arg: String) =
+        picks.indices.map(i => if (i == pos) arg else picks(i)._1).mkString(s"${k.name}(", ", ", ")")
+      assert(!spark.sql(s"SELECT ${call(-1, "")}").schema.head.nullable, k.name)
+      for (pos <- picks.indices) {
+        val (sample, dt) = picks(pos)
+        val folded = spark.sql(s"SELECT ${call(pos, s"CAST(NULL AS ${dt.sql})")}")
+        assert(!folded.queryExecution.optimizedPlan.expressions
+          .exists(_.exists(_.isInstanceOf[GraftKernel])), s"${k.name} #$pos not folded")
+        assert(folded.collect().head.isNullAt(0), s"${k.name} #$pos folded")
+        val generated = spark.range(1).selectExpr(call(pos, s"CASE WHEN id < 0 THEN $sample END"))
+        assert(generated.queryExecution.executedPlan.exists(_.isInstanceOf[WholeStageCodegenExec]))
+        assert(generated.collect().head.isNullAt(0), s"${k.name} #$pos generated")
+      }
+    } finally strict.foreach { case (key, _) => spark.conf.unset(key) }
+  }
+
   test("kernels usable from spark.sql (registered SQL functions)") {
     val r = spark.sql(
       "SELECT graft_simhash32(graft_hash_tokens(array('a','b'))) AS s, " +

@@ -380,10 +380,10 @@ class OperatorSpec extends SparkSpecBase {
     val sigDf = Dedup.signatureTable(spark, sf("documents"))
     sigDf.collect() // finalize THIS df's adaptive plan (count() would plan a new one)
     val sig = sigDf.queryExecution.executedPlan.toString
-    assert(sig.toLowerCase.contains("minhashsig(shinglehashes(hashtokens(tokenizewords("),
+    assert(sig.toLowerCase.contains("graft_minhash(graft_shingles(graft_hash_tokens(graft_tokenize("),
       s"kernels not fused into one projection:\n$sig")
     // codegen spans render as a `*(n)` prefix in compact plan strings
-    assert(sig.linesIterator.exists(l => l.contains("minhashsig") && l.trim.matches("""^\+?-?\s*\*\(\d+\).*""")),
+    assert(sig.linesIterator.exists(l => l.contains("graft_minhash") && l.trim.matches("""^\+?-?\s*\*\(\d+\).*""")),
       s"kernel projection not inside a whole-stage codegen span:\n$sig")
   }
 
@@ -431,7 +431,7 @@ class OperatorSpec extends SparkSpecBase {
     assert(!prefix.contains("Window"), s"window pass crept back into the prefix join:\n$prefix")
     assert(!prefix.contains("SortMergeJoin"),
       s"pair/verify joins must broadcast at test SF:\n$prefix")
-    assert(prefix.toLowerCase.contains("bagjaccard"),
+    assert(prefix.toLowerCase.contains("graft_bag_jaccard"),
       s"fused verify kernel missing:\n$prefix")
 
     // a9 rollup: Expand must sit ABOVE the per-(region, nation) aggregate

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.plans.expr.PqEncode
+import graft.plans.expr.Kernels
 
 /** Bit-equivalence of the `graft_pq_encode` kernel (r15) with the window
   * rendering it replaced: per (vector, subspace), the code is the cell of
@@ -28,7 +28,7 @@ class PqEncodeSpec extends SparkSpecBase {
       .select(col("x"), round(col("x"), 6).as("r"))
     df.collect().foreach { row =>
       val x = row.getDouble(0); val sparkR = row.getDouble(1)
-      val kernelR = PqEncode.round6(x)
+      val kernelR = Kernels.round6(x)
       assert(java.lang.Double.doubleToRawLongBits(sparkR) ==
         java.lang.Double.doubleToRawLongBits(kernelR) ||
         (sparkR.isNaN && kernelR.isNaN),

@@ -153,22 +153,6 @@ class ScaleSpec extends SparkSpecBase {
     } finally spark.conf.unset(Scale.DedupSaltConf)
   }
 
-  test("co-partitioned frames join with reused partitioning") {
-    val (l, r) = Scale.coPartitioned(
-      Tables.lineitem(spark, sf("lineitem")).select("l_orderkey", "l_quantity"),
-      Tables.orders(spark, sf("orders")).select("o_orderkey", "o_totalprice")
-        .withColumnRenamed("o_orderkey", "l_orderkey"),
-      "l_orderkey", 8)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = l.join(r, "l_orderkey")
-      val plan = joined.queryExecution.executedPlan.toString
-      // exactly the two explicit repartitions — the join itself adds none
-      val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
-      assert(exchanges == 2, s"expected 2 explicit exchanges, plan:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-  }
-
   test("BenchScale enforces prefix/exhaustive pair-set equality (diverging run fails)") {
     intercept[IllegalStateException] { BenchScale.enforcePairEquality(false, true) }
     intercept[IllegalStateException] { BenchScale.enforcePairEquality(true, false) }
