@@ -11,6 +11,17 @@ import org.apache.spark.sql.SparkSession
   * shuffle-partition count sized to the local core count rather than the 200
   * default. On a 1000-executor cluster the same builder is used with
   * `spark.sql.shuffle.partitions` raised to O(2–3× total cores) by config.
+  *
+  * `file:` is re-registered to `graft.sources.LocalFs`'s filesystem, for
+  * both Hadoop APIs: `FileSystem` (parquet sinks, file-stream sources, state
+  * stores) and `FileContext` (Spark's default checkpoint file manager, which
+  * writes every offset/commit log entry and state delta through a temp file
+  * and a rename). Without libhadoop, Hadoop's stock local filesystem starts
+  * a `chmod` process for every file and directory it creates and a
+  * `readlink` process for every checkpoint rename — thousands per minute of
+  * micro-batches. The graft class does both in-process. Symlink handling,
+  * the `.crc` sidecars, umask and the checkpoint manager are unchanged, so
+  * file contents, modes and commit atomicity are too.
   */
 object GraftSession {
   def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
@@ -37,6 +48,9 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries", "2000")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sources.GraftLocalFs].getName)
 
   def get(): SparkSession = {
     val s = builder().getOrCreate()

@@ -156,13 +156,13 @@ class DimStore(spark: SparkSession, basePath: String,
         .filter(d => d.isDirectory && d.getName.startsWith("graft_bucket="))
         .foreach { src =>
           val dst = new java.io.File(s"${path(table)}/${src.getName}")
-          rmTreeF(dst)
+          LocalFs.rmTree(dst)
           java.nio.file.Files.move(src.toPath, dst.toPath,
             java.nio.file.StandardCopyOption.ATOMIC_MOVE)
           ()
         }
     }
-    rmTree(tmp.getPath)
+    LocalFs.rmTree(tmp)
   }
 
   /** Upsert a batch of rows keyed by `keyCol`, versioned by `versionCol`
@@ -286,29 +286,16 @@ class DimStore(spark: SparkSession, basePath: String,
         // bucket during a full migration — nothing to place
         if (src.exists()) {
           val dst = new java.io.File(s"${path(table)}/graft_bucket=$i")
-          rmTreeF(dst)
+          LocalFs.rmTree(dst)
           java.nio.file.Files.move(src.toPath, dst.toPath,
             java.nio.file.StandardCopyOption.ATOMIC_MOVE)
           ()
         }
       }
-      rmTree(tmp)
+      LocalFs.rmTree(new java.io.File(tmp))
       // migration complete: the flat files' rows now live in the buckets
       flatFiles.foreach(f => java.nio.file.Files.deleteIfExists(f.toPath))
     }
-  }
-
-  private def rmTreeF(d: java.io.File): Unit = {
-    if (d.isDirectory) d.listFiles().foreach(rmTreeF)
-    d.delete(); ()
-  }
-
-  private def rmTree(dir: String): Unit = {
-    val d = new java.io.File(dir)
-    if (d.exists)
-      java.nio.file.Files.walk(d.toPath)
-        .sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
   }
 
   /** Whole-store read: partition discovery over the bucket directories;

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.util.sketch.BloomFilter
 import graft.pipeline.Dedup
+import graft.sources.LocalFs
 import graft.functions.VectorFunctions._
 
 /** The end-to-end streaming corpus pipeline: stream ingest → incremental
@@ -291,12 +292,6 @@ object CorpusJob {
     Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
       .filter(d => d.isDirectory && d.getName.startsWith(prefix)).toSeq
 
-  private def rmTree(dir: java.io.File): Unit =
-    if (dir.exists)
-      java.nio.file.Files.walk(dir.toPath)
-        .sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-
   /** Write band rows as the bucketed+sorted L1 base INTO `dest` (which the
     * caller swaps or owns): one file per bucket, sorted by `band_key`, so
     * the probe's pushed In filter prunes row groups by key-range stats.
@@ -348,7 +343,7 @@ object CorpusJob {
     val tmp = new java.io.File(compactTmp(stateDir))
     if (!tmp.exists) return
     if (compactOk(stateDir).exists) finishCompactSwap(stateDir)
-    else rmTree(tmp)
+    else LocalFs.rmTree(tmp)
   }
 
   /** The swap, idempotent under a crash at ANY point: the sentinel records
@@ -364,18 +359,18 @@ object CorpusJob {
     val keep = new String(
       java.nio.file.Files.readAllBytes(compactOk(stateDir).toPath),
       java.nio.charset.StandardCharsets.UTF_8).linesIterator.toSet
-    listDirs(root, "kb=").filterNot(d => keep.contains(d.getName)).foreach(rmTree)
+    listDirs(root, "kb=").filterNot(d => keep.contains(d.getName)).foreach(LocalFs.rmTree)
     listDirs(compactTmp(stateDir), "kb=").foreach { src =>
       val dst = new java.io.File(s"$root/${src.getName}")
-      rmTree(dst) // the pre-compaction copy this staged bucket supersedes
+      LocalFs.rmTree(dst) // the pre-compaction copy this staged bucket supersedes
       java.nio.file.Files.move(src.toPath, dst.toPath,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       ()
     }
     // L0 is folded into the new base; appends go only after every staged
     // bucket is in place (a crash before this line replays to here)
-    listDirs(root, "append_").foreach(rmTree)
-    rmTree(new java.io.File(compactTmp(stateDir)))
+    listDirs(root, "append_").foreach(LocalFs.rmTree)
+    LocalFs.rmTree(new java.io.File(compactTmp(stateDir)))
   }
 
   /** Fold L0 appends into the bucketed L1 base once `compactEvery` have
@@ -446,7 +441,7 @@ object CorpusJob {
     val tmp = new java.io.File(corpusMigrateTmp(stateDir))
     if (!tmp.exists) return
     if (new java.io.File(tmp, "_graft_staged_ok").exists) finishCorpusMigrate(stateDir)
-    else rmTree(tmp)
+    else LocalFs.rmTree(tmp)
   }
 
   /** Idempotent under a crash at any point: only the legacy FLAT files are
@@ -462,12 +457,12 @@ object CorpusJob {
       .foreach(f => java.nio.file.Files.deleteIfExists(f.toPath))
     listDirs(corpusMigrateTmp(stateDir), "cell=").foreach { src =>
       val d = new java.io.File(s"${dst.getPath}/${src.getName}")
-      rmTree(d) // half-moved retry: the staged copy supersedes it
+      LocalFs.rmTree(d) // half-moved retry: the staged copy supersedes it
       java.nio.file.Files.move(src.toPath, d.toPath,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       ()
     }
-    rmTree(new java.io.File(corpusMigrateTmp(stateDir)))
+    LocalFs.rmTree(new java.io.File(corpusMigrateTmp(stateDir)))
   }
 
   // ----------------------------------------------------------- seeds

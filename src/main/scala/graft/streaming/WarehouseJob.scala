@@ -1,10 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.LogPipeline
-import graft.sources.{DimStore, Topics}
+import graft.sources.{DimStore, LocalFs, Topics}
 
 /** End-to-end streaming warehouse: the reference's ODS→DWD→DWS topology as
   * ONE Structured Streaming query over a topic source (`Topics` — real
@@ -84,18 +85,12 @@ class WarehouseJob(spark: SparkSession, outDir: String,
         .toDF("source_type", "sink_type", "sink_table", "sink_pk", "sink_columns")
   }
 
-  /** Delete `dir` recursively if present. */
-  private def rmTree(dir: java.io.File): Unit = {
-    if (dir.isDirectory) dir.listFiles().foreach(rmTree)
-    dir.delete(); ()
-  }
-
   /** Publish one staged sink dir: replace the target batch dir wholesale
     * with an atomic rename (same filesystem), so replays are idempotent.
     */
   private def publish(src: java.io.File, dstBatchDir: java.io.File): Unit = {
     if (src.exists()) {
-      rmTree(dstBatchDir)
+      LocalFs.rmTree(dstBatchDir)
       dstBatchDir.getParentFile.mkdirs()
       java.nio.file.Files.move(src.toPath, dstBatchDir.toPath,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
@@ -116,6 +111,16 @@ class WarehouseJob(spark: SparkSession, outDir: String,
     */
   @volatile private var profRecord: (String, Double) => Unit = (_, _) => ()
 
+  /** Runs the concurrent dim upserts. The job owns it: a shared pool's
+    * reused threads keep the Spark local properties of whichever batch
+    * created them. Daemon threads, reclaimed after a minute idle.
+    */
+  private val upsertPool = java.util.concurrent.Executors.newCachedThreadPool { (r: Runnable) =>
+    val t = new Thread(r, "graft-dim-upsert")
+    t.setDaemon(true)
+    t
+  }
+
   def start(sourceTopic: String, checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
     val dims = new DimStore(spark, s"$outDir/dim",
       (name, sec) => profRecord(s"dim_phase_$name", sec))
@@ -128,7 +133,7 @@ class WarehouseJob(spark: SparkSession, outDir: String,
         if (marker.exists()) ()
         else {
         val staging = new java.io.File(s"$outDir/_staging/$batchId")
-        rmTree(staging) // stale staging from a crashed prior attempt
+        LocalFs.rmTree(staging) // stale staging from a crashed prior attempt
         val prof = scala.collection.mutable.LinkedHashMap[String, Double]()
         def record(section: String, dt: Double): Unit =
           // synchronized: the dim upserts time themselves from parallel threads
@@ -220,21 +225,22 @@ class WarehouseJob(spark: SparkSession, outDir: String,
           // has finished (success or failure): leaving a sibling upsert
           // running while the batch fails would let a same-JVM restart's
           // replayed upsert race the orphan on the shared staging dir and
-          // the bucket renames.
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.ExecutionContext.Implicits.global
-          import scala.concurrent.duration.Duration
+          // the bucket renames. Each upsert runs under this batch's Spark
+          // local properties (batch id, query id, job group), so its jobs
+          // are cancelled by `stop()` and counted with the batch.
           val upserts = dimPlans.filter(_._4 > 0).map { case (table, pk, cols, _) =>
-            Future(timed(s"dim_upsert_$table") {
-              dims.upsert(table,
-                r.filter(col("sink_table") === table).select(cols.map(col): _*),
-                pk, "ts")
-            })
+            SQLExecution.withThreadLocalCaptured(
+                spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], upsertPool) {
+              timed(s"dim_upsert_$table") {
+                dims.upsert(table,
+                  r.filter(col("sink_table") === table).select(cols.map(col): _*),
+                  pk, "ts")
+              }
+            }
           }
-          val settled = Await.result(
-            Future.sequence(upserts.toSeq.map(_.transform(scala.util.Success(_)))),
-            Duration.Inf)
-          settled.foreach(_.get) // rethrows the first failure — all settled
+          // join every upsert, then rethrow the first failure unwrapped
+          val failures = upserts.flatMap(f => scala.util.Try(f.join()).failed.toOption)
+          failures.headOption.foreach(e => throw Option(e.getCause).getOrElse(e))
 
           // DWS: A1 visitor stats over the clean stream (per-batch PARTIAL
           // rows keyed by (stt,edt,event_type) — see class doc contract).
@@ -258,7 +264,7 @@ class WarehouseJob(spark: SparkSession, outDir: String,
             publish(new java.io.File(staging, "stats"), new java.io.File(s"$outDir/stats/batch=$batchId"))
             marker.getParentFile.mkdirs()
             marker.createNewFile()
-            rmTree(staging)
+            LocalFs.rmTree(staging)
           }
           if (profileEnabled) {
             // Locale.ROOT: the sidecar is JSON — a comma-decimal default

@@ -238,4 +238,56 @@ class WarehouseJobSpec extends SparkSpecBase {
       q.stop()
     } finally spark.conf.unset("spark.graft.maxDimBatchRows")
   }
+
+  test("every job started while batch N runs, dim upserts included, carries batch N and the query") {
+    // Ground truth without timestamps: FENCE jobs run on this thread before
+    // a slice becomes visible and after its batch finished. The listener
+    // sees job starts in submission order, so the jobs between the two
+    // fences are exactly that batch's.
+    val events = Tables.events(spark, sf("sf0.001")).localCheckpoint()
+    val slices = (0 until 3).map(i => events.filter(pmod(col("event_id"), lit(3)) === i))
+    for (s <- slices) assert(s.filter(col("event_type").isin("purchase", "signup"))
+      .select("event_type").distinct().count() == 2, "every slice must upsert both dim tables")
+    val src = Files.createTempDirectory("whp_src")
+    val fence = "graft.spec.fence"
+    val seen = new java.util.concurrent.LinkedBlockingQueue[java.util.Properties]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).getOrElse(new java.util.Properties()))
+    }
+    def jobsUntilFence(): Seq[java.util.Properties] = {
+      spark.sparkContext.setLocalProperty(fence, "1")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setLocalProperty(fence, null)
+      Iterator.continually(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(p => p != null && p.getProperty(fence) == null).toSeq
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val q = new WarehouseJob(spark, Files.createTempDirectory("whp_out").toString)
+        .start(src.toString, Files.createTempDirectory("whp_ckpt").toString)
+      try {
+        for ((slice, i) <- slices.zipWithIndex) {
+          // one part file, moved in after the fence: the slice is one batch
+          val stage = Files.createTempDirectory("whp_stage").resolve("s")
+          slice.coalesce(1).write.parquet(stage.toString)
+          val part = Files.list(stage).filter(_.getFileName.toString.endsWith(".parquet"))
+            .findFirst().get
+          jobsUntilFence()
+          Files.move(part, src.resolve(s"slice-$i.parquet"))
+          q.processAllAvailable()
+          val n = q.lastProgress.batchId.toString
+          val batchJobs = jobsUntilFence()
+          // dirty/facts/stats writes, config and dim-count collects, 2 upserts
+          assert(batchJobs.size >= 6, s"batch $n: only ${batchJobs.size} jobs")
+          for (p <- batchJobs) {
+            assert(p.getProperty("streaming.sql.batchId") == n,
+              s"a job of batch $n carried batch ${p.getProperty("streaming.sql.batchId")}")
+            assert(p.getProperty("sql.streaming.queryId") == q.id.toString)
+            assert(p.getProperty("spark.jobGroup.id") == q.runId.toString)
+          }
+        }
+      } finally q.stop()
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
