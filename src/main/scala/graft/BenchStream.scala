@@ -106,10 +106,7 @@ object BenchStream {
         val tmp = SweepTmp.dir(s"bstream_wh_b$b")
         slice.coalesce(4).write.mode("overwrite").parquet(tmp)
         new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet"))
-          .foreach { f =>
-            java.nio.file.Files.move(f.toPath,
-              java.nio.file.Paths.get(src, s"b${b}_${f.getName}"))
-          }
+          .foreach(f => graft.sources.LocalFs.replace(f, new java.io.File(src, s"b${b}_${f.getName}")))
         q.processAllAvailable()
       }
       total = spark.read.parquet(src).count()

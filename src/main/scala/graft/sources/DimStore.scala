@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * invalidation" disappears because each micro-batch re-reads the store.
   *
   * Storage is last-write-wins keyed parquet, HASH-BUCKETED by key
-  * (`graft_bucket=<i>` subdirectories, `spark.graft.dim.buckets` of them,
-  * default 16): an upsert rewrites ONLY the buckets its batch keys hash
+  * (`graft_bucket=<i>` subdirectories, [[DimStore.Buckets]] of them): an
+  * upsert rewrites ONLY the buckets its batch keys hash
   * into, so per-batch I/O is O(touched buckets), not O(table) — the Spark
   * rendering of the reference's per-row Phoenix UPSERT
   * (`app/function/DimSinkFunction.java:68-77`). A slowly-growing dim (the
@@ -40,9 +40,6 @@ class DimStore(spark: SparkSession, basePath: String,
     profileHook(name, (System.nanoTime() - t0) / 1e9)
     r
   }
-
-  private def numBuckets: Int =
-    spark.conf.get("spark.graft.dim.buckets", "16").toInt
 
   /** This store's key into the process-wide `DimStore.bucketSchemaCache`:
     * the canonical table path, resolved once here so two instances over
@@ -81,8 +78,8 @@ class DimStore(spark: SparkSession, basePath: String,
       case _ => col(keyCol).cast("string")
     }
 
-  private def bucketOf(df: DataFrame, keyCol: String, nb: Int) =
-    pmod(xxhash64(canonicalKey(df, keyCol)), lit(nb.toLong)).cast("int")
+  private def bucketOf(df: DataFrame, keyCol: String) =
+    pmod(xxhash64(canonicalKey(df, keyCol)), lit(DimStore.Buckets.toLong)).cast("int")
 
   /** Last-write-wins collapse shared by the upsert merge and the
     * mixed-layout read: highest `versionCol` per `keyCol` wins, version
@@ -101,12 +98,9 @@ class DimStore(spark: SparkSession, basePath: String,
     * bucket write so the crashed-migration window always knows how to
     * collapse a mixed layout on read.
     */
-  private def writeMeta(table: String, keyCol: String, versionCol: String): Unit = {
-    new java.io.File(path(table)).mkdirs()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"${path(table)}/_graft_meta"),
+  private def writeMeta(table: String, keyCol: String, versionCol: String): Unit =
+    LocalFs.writeAtomic(new java.io.File(s"${path(table)}/_graft_meta"),
       s"keyCol=$keyCol\nversionCol=$versionCol\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  }
 
   private def readMeta(table: String): Option[(String, String)] = {
     val f = java.nio.file.Paths.get(s"${path(table)}/_graft_meta")
@@ -120,49 +114,28 @@ class DimStore(spark: SparkSession, basePath: String,
     } else None
   }
 
-  /** Completed-staging marker, written by the STORE itself (driver-side,
-    * after the staged write returns) rather than relying on Spark's
-    * job-committer `_SUCCESS` file: a deployment with
-    * `mapreduce.fileoutputcommitter.marksuccessfuljobs=false` never writes
-    * `_SUCCESS`, which would make a genuinely completed staging look like
-    * a partial write and get deleted AFTER a destination bucket was
-    * already removed — exactly the lost-bucket window the swap recovery
-    * exists to close. `_SUCCESS` is still honored on read for stores
-    * staged by older versions of this code.
+  private def staging(table: String) = new java.io.File(s"${path(table)}/_tmp_upsert")
+
+  /** A staging is complete once sealed (`LocalFs.seal`, written by the
+    * store itself, so it does not depend on the committer's `_SUCCESS`,
+    * which `mapreduce.fileoutputcommitter.marksuccessfuljobs=false` turns
+    * off). `_SUCCESS` is still honored for stores staged by older versions
+    * of this code.
     */
   private def stagedComplete(tmp: java.io.File): Boolean =
-    new java.io.File(tmp, "_graft_staged_ok").exists ||
-      new java.io.File(tmp, "_SUCCESS").exists
+    LocalFs.isSealed(tmp) || new java.io.File(tmp, "_SUCCESS").exists
 
-  /** Complete a crashed upsert's pending bucket swaps before anything else
-    * touches the store. The staged dirs under `_tmp_upsert` are the
-    * AUTHORITATIVE merged state (old bucket ∪ batch, deduped) only once the
-    * staged write finished — the store's own `_graft_staged_ok` sentinel
-    * (see `stagedComplete`) records exactly that. Without the marker the
-    * staging is a partial write from a crash BEFORE any destination bucket
-    * was deleted, so dropping it loses nothing. With it, the crash may
-    * have landed between a destination bucket's delete and the move that
-    * replaces it — the bucket's ONLY surviving copy lives in staging — so
-    * every staged bucket still present is swapped into place (a staged
-    * bucket strictly supersedes the pre-batch bucket it merged), and only
-    * then is the staging dir removed. Idempotent: already-moved buckets
-    * have no staged src left.
+  /** The upsert's commit, run both as its own swap step and, at the start
+    * of every upsert, to settle a crashed attempt (`LocalFs.recover`): a
+    * complete staging holds the merged state (old bucket ∪ batch, deduped)
+    * of exactly the buckets the batch touched, so each staged bucket
+    * replaces its live one; an incomplete one is dropped.
     */
   private def recoverStaged(table: String): Unit = {
-    val tmp = new java.io.File(s"${path(table)}/_tmp_upsert")
-    if (!tmp.exists) return
-    if (stagedComplete(tmp)) {
-      Option(tmp.listFiles()).getOrElse(Array.empty)
-        .filter(d => d.isDirectory && d.getName.startsWith("graft_bucket="))
-        .foreach { src =>
-          val dst = new java.io.File(s"${path(table)}/${src.getName}")
-          LocalFs.rmTree(dst)
-          java.nio.file.Files.move(src.toPath, dst.toPath,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          ()
-        }
+    val tmp = staging(table)
+    LocalFs.recover(tmp, stagedComplete(tmp)) {
+      LocalFs.swapIn(tmp, new java.io.File(path(table)), "graft_bucket=")
     }
-    LocalFs.rmTree(tmp)
   }
 
   /** Upsert a batch of rows keyed by `keyCol`, versioned by `versionCol`
@@ -172,24 +145,21 @@ class DimStore(spark: SparkSession, basePath: String,
     * Only the key-hash buckets present in the batch are merged and
     * rewritten — in ONE Spark job: the batch plus the touched buckets'
     * current rows are unioned, collapsed last-write-wins, and written to a
-    * staging dir `partitionBy(graft_bucket)`; each staged bucket dir is
-    * then swapped into place with a driver-side atomic rename. (The
+    * staging dir `partitionBy(graft_bucket)`, sealed, and swapped into
+    * place by the staged-commit protocol in `LocalFs`. (The
     * previous rendering looped the buckets sequentially — two jobs per
     * bucket, ~35 jobs for a batch touching all 16 — and was the dominant
     * term of the streaming warehouse's per-batch fixed cost.) Crash
-    * recovery: a retry FIRST completes any pending swaps from a crashed
-    * prior attempt (`recoverStaged` — a completed staging is authoritative,
-    * so the delete-then-move window cannot orphan a bucket's only copy),
-    * then re-merges; the versioned dedup converges, and `read()` both
-    * ignores the `_`-prefixed staging dir and unions a COMPLETED staging
-    * back in, so the store is never unreadable or lossy in the window.
+    * recovery: a retry FIRST settles a crashed prior attempt
+    * (`recoverStaged`), then re-merges; the versioned dedup converges, and
+    * `read()` reads a complete staging in place of the buckets it
+    * supersedes, so the store is never unreadable or lossy in the window.
     *
     * A store written by the pre-bucket flat layout is migrated in the same
     * one pass (every bucket rewritten once, flat files then removed).
     */
   def upsert(table: String, batch: DataFrame, keyCol: String, versionCol: String): Unit = {
     recoverStaged(table)
-    val nb = numBuckets
     val tableDir = new java.io.File(path(table))
     val flatFiles = Option(tableDir.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
@@ -208,10 +178,10 @@ class DimStore(spark: SparkSession, basePath: String,
     writeMeta(table, keyCol, versionCol) // before any bucket write: a crash
     // mid-migration must leave enough metadata for read() to collapse the
     // mixed layout it creates
-    val batchB = batch.withColumn("__b", bucketOf(batch, keyCol, nb))
-    // touched buckets: driver-side collect bounded by numBuckets
+    val batchB = batch.withColumn("__b", bucketOf(batch, keyCol))
+    // touched buckets: driver-side collect bounded by the bucket count
     val touched: Seq[Int] = phase("touched_collect") {
-      if (legacy.isDefined) 0 until nb
+      if (legacy.isDefined) 0 until DimStore.Buckets
       else batchB.select(col("__b")).distinct().collect().map(_.getInt(0)).toSeq.sorted
     }
     // ONE multi-path read for every touched bucket: a per-bucket
@@ -236,9 +206,7 @@ class DimStore(spark: SparkSession, basePath: String,
       if (paths.isEmpty) None
       else {
         val sch = DimStore.bucketSchemaCache.getOrElseUpdate(cacheKey(table), {
-          val allDirs = Option(tableDir.listFiles()).getOrElse(Array.empty)
-            .filter(f => f.isDirectory && f.getName.startsWith("graft_bucket="))
-            .map(_.getPath).toIndexedSeq
+          val allDirs = LocalFs.listDirs(tableDir, "graft_bucket=").map(_.getPath)
           org.apache.spark.sql.types.StructType(
             spark.read.option("mergeSchema", "true").parquet(allDirs: _*)
               .schema.filterNot(_.name == "graft_bucket"))
@@ -252,49 +220,36 @@ class DimStore(spark: SparkSession, basePath: String,
     val merged = (Seq(batchB.drop("__b")) ++ bucketExisting.toSeq ++ legacy.toSeq)
       .reduce(_.unionByName(_, allowMissingColumns = true))
     val deduped = dedupLatest(merged, keyCol, versionCol)
-    val staged = deduped.withColumn("graft_bucket", bucketOf(deduped, keyCol, nb))
-    val tmp = s"${path(table)}/_tmp_upsert"
+    val staged = deduped.withColumn("graft_bucket", bucketOf(deduped, keyCol))
+    val tmp = staging(table)
     phase("staged_write") {
       // repartition ON the partition column first: the dedup window leaves
       // the frame hash-partitioned by key (32 shuffle partitions), and
       // `partitionBy` from that layout writes up to 32 files PER BUCKET —
       // each an output-task file commit. One partition per bucket writes
       // exactly one file per bucket: the bucket is this store's unit of
-      // rewrite (at 100 TB you raise spark.graft.dim.buckets, not the
-      // per-bucket file count). This shape is the measured floor: a
+      // rewrite (a bigger store needs a bigger `Buckets`, not more files
+      // per bucket). This shape is the measured floor: a
       // round-14 A/B over a 20-batch, two-table replay of the warehouse's
       // dim traffic (OPTIMIZATION_r14.md) recorded 0.47 s/upsert median
       // isolated, with the v2 file-output committer at 0.50 and a
       // single-task dynamic write at 0.56 — the ~0.47 s floor is Spark job
       // fixed cost, not task commits, so neither variant is kept.
-      staged.repartition(nb, col("graft_bucket"))
-        .write.mode(SaveMode.Overwrite).partitionBy("graft_bucket").parquet(tmp)
-      // the store's own completion sentinel, independent of the committer
-      // conf (see stagedComplete) — written only once the job returned
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$tmp/_graft_staged_ok"), Array.empty[Byte])
+      staged.repartition(DimStore.Buckets, col("graft_bucket"))
+        .write.mode(SaveMode.Overwrite).partitionBy("graft_bucket").parquet(tmp.getPath)
+      LocalFs.seal(tmp) // only once the job returned
     }
     // refresh the schema cache to the staged union (⊇ old cache ⊇ every
     // untouched bucket; the touched buckets ARE this schema)
     DimStore.bucketSchemaCache.put(cacheKey(table), org.apache.spark.sql.types.StructType(
       staged.schema.filterNot(_.name == "graft_bucket")))
     phase("swap") {
-      touched.foreach { i =>
-        val src = new java.io.File(s"$tmp/graft_bucket=$i")
-        // a touched bucket always stages ≥1 row (the batch's rows hash there
-        // and dedup keeps one row per key); absent src = genuinely empty
-        // bucket during a full migration — nothing to place
-        if (src.exists()) {
-          val dst = new java.io.File(s"${path(table)}/graft_bucket=$i")
-          LocalFs.rmTree(dst)
-          java.nio.file.Files.move(src.toPath, dst.toPath,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          ()
-        }
-      }
-      LocalFs.rmTree(new java.io.File(tmp))
+      // the staged buckets are exactly the touched ones: a touched bucket
+      // stages ≥1 row, and every merged row re-hashes to the bucket it came
+      // from (the bucket count is fixed)
+      recoverStaged(table)
       // migration complete: the flat files' rows now live in the buckets
-      flatFiles.foreach(f => java.nio.file.Files.deleteIfExists(f.toPath))
+      flatFiles.foreach(LocalFs.rmTree)
     }
   }
 
@@ -308,13 +263,11 @@ class DimStore(spark: SparkSession, basePath: String,
     * both halves are read by EXPLICIT paths and collapsed with the same
     * versioned last-write-wins dedup the upsert retry applies (key/version
     * columns from `_graft_meta`). A store caught in the SWAP window — a
-    * COMPLETED staging (the `_graft_staged_ok` sentinel, see
-    * `stagedComplete`) whose bucket moves were interrupted, possibly after
-    * a destination bucket was deleted — is read losslessly too: each
-    * staged bucket dir is read IN PLACE OF the live bucket it supersedes
-    * (so even a pre-meta store never shows a key twice), WITHOUT mutating
-    * the store —
-    * repair itself belongs to the next `upsert`'s `recoverStaged`. The
+    * COMPLETED staging (see `stagedComplete`) whose bucket moves were
+    * interrupted, possibly after a destination bucket was deleted — is read
+    * losslessly too: each staged bucket dir is read IN PLACE OF the live
+    * bucket it supersedes (so even a pre-meta store never shows a key
+    * twice), WITHOUT mutating the store — repair itself belongs to the next `upsert`'s `recoverStaged`. The
     * store is thus never unreadable or lossy in the exact windows the
     * upsert retry exists to recover from.
     */
@@ -325,14 +278,10 @@ class DimStore(spark: SparkSession, basePath: String,
       val entries = Option(tableDir.listFiles()).getOrElse(Array.empty)
       val flat = entries
         .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-      val buckets = entries
-        .filter(f => f.isDirectory && f.getName.startsWith("graft_bucket="))
-      val tmp = new java.io.File(s"${path(table)}/_tmp_upsert")
-      val stagedDirs: Array[java.io.File] =
-        if (stagedComplete(tmp))
-          Option(tmp.listFiles()).getOrElse(Array.empty)
-            .filter(d => d.isDirectory && d.getName.startsWith("graft_bucket="))
-        else Array.empty
+      val buckets = LocalFs.listDirs(tableDir, "graft_bucket=")
+      val tmp = staging(table)
+      val stagedDirs =
+        if (stagedComplete(tmp)) LocalFs.listDirs(tmp, "graft_bucket=") else Nil
       // a completed staged bucket strictly SUPERSEDES the live bucket it
       // merged (old ∪ batch, deduped) — read the staged copy INSTEAD of
       // unioning both. With `_graft_meta` present the versioned dedup
@@ -349,8 +298,8 @@ class DimStore(spark: SparkSession, basePath: String,
           // explicit leaf-dir paths: no partition discovery, so no synthetic
           // graft_bucket column and no layout conflict between the halves
           val parts = Seq(
-            liveBuckets.map(_.getPath).toSeq, flat.map(_.getPath).toSeq,
-            stagedDirs.map(_.getPath).toSeq)
+            liveBuckets.map(_.getPath), flat.map(_.getPath).toSeq,
+            stagedDirs.map(_.getPath))
             .filter(_.nonEmpty)
             .map(ps => spark.read.parquet(ps: _*))
           val merged = parts.reduce(_.unionByName(_, allowMissingColumns = true))
@@ -373,6 +322,12 @@ class DimStore(spark: SparkSession, basePath: String,
 }
 
 object DimStore {
+
+  /** Buckets per table. Fixed: nothing records the count in a store, and
+    * a store re-hashed under another count would lose the rows of every
+    * bucket an upsert does not touch.
+    */
+  val Buckets = 16
 
   /** Per-table superset of every on-disk bucket's columns (r15), keyed by
     * canonical table path and shared by every instance in the process:

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import java.io.File
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -75,8 +77,8 @@ import graft.functions.VectorFunctions._
   *    landed and whose batching changed on replay — they are semi-joined
   *    against the survivor store) and rebuilds the bloom fresh, so
   *    neither crash debris nor bloom saturation accumulates. Staged under
-  *    `_compact_tmp` with a completion sentinel and recovered on the next
-  *    batch, the `DimStore.recoverStaged` discipline.
+  *    `_compact_tmp` and committed by the staged-commit protocol in
+  *    `LocalFs`; a crashed compaction is settled by the next batch.
   *  - '''candidate verification stays against the CORPUS''': band-index
   *    hits are confirmed by fetching the candidate survivors' signatures
   *    from the survivor store, pruned by a pushed `doc_id IN` filter
@@ -167,18 +169,20 @@ object CorpusJob {
     * so a replay's count must stop growing once the store passes `nCells`
     * rows. `BenchStream` records and gates this per batch.
     */
-  def rebuildCount(stateDir: String): Long = {
-    val p = java.nio.file.Paths.get(rebuildsPath(stateDir))
-    if (java.nio.file.Files.exists(p))
-      new String(java.nio.file.Files.readAllBytes(p),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-    else 0L
-  }
+  def rebuildCount(stateDir: String): Long =
+    readSidecar(rebuildsPath(stateDir)).fold(0L)(_.trim.toLong)
 
   private def bumpRebuilds(stateDir: String): Unit =
-    java.nio.file.Files.write(java.nio.file.Paths.get(rebuildsPath(stateDir)),
-      (rebuildCount(stateDir) + 1).toString
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    writeSidecar(rebuildsPath(stateDir), (rebuildCount(stateDir) + 1).toString)
+
+  /** Small text sidecars, replaced atomically (`LocalFs.writeAtomic`). */
+  private def readSidecar(path: String): Option[String] = {
+    val f = new File(path)
+    if (f.exists) Some(new String(java.nio.file.Files.readAllBytes(f.toPath), UTF_8)) else None
+  }
+
+  private def writeSidecar(path: String, text: String): Unit =
+    LocalFs.writeAtomic(new File(path), text.getBytes(UTF_8))
 
   /** Survivor store if it exists: (doc_id, sig, emb, nrm, cell). */
   private def loadCorpus(spark: SparkSession, stateDir: String): Option[DataFrame] =
@@ -187,8 +191,7 @@ object CorpusJob {
     else None
 
   private def writeCount(stateDir: String, n: Long): Unit =
-    java.nio.file.Files.write(java.nio.file.Paths.get(countPath(stateDir)),
-      n.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    writeSidecar(countPath(stateDir), n.toString)
 
   /** Survivor count from the sidecar, so no micro-batch runs a corpus-wide
     * action just to pick the append-vs-rebuild branch. The count only
@@ -202,11 +205,9 @@ object CorpusJob {
     existing match {
       case None => 0L
       case Some(c) =>
-        val p = java.nio.file.Paths.get(countPath(stateDir))
-        if (java.nio.file.Files.exists(p))
-          new String(java.nio.file.Files.readAllBytes(p),
-            java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-        else { val n = c.count(); writeCount(stateDir, n); n }
+        readSidecar(countPath(stateDir)).fold {
+          val n = c.count(); writeCount(stateDir, n); n
+        }(_.trim.toLong)
     }
 
   private def bandRows(df: DataFrame): DataFrame = df
@@ -243,15 +244,10 @@ object CorpusJob {
 
   private def writeBloom(stateDir: String, capacity: Long, keys: Long,
                          bf: BloomFilter): Unit = {
-    val tmp = java.nio.file.Paths.get(s"${bandsPath(stateDir)}/_bloom_tmp")
-    val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-      java.nio.file.Files.newOutputStream(tmp)))
-    try { out.writeLong(capacity); out.writeLong(keys); bf.writeTo(out) }
-    finally out.close()
-    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(bloomPath(stateDir)),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(bytes)
+    out.writeLong(capacity); out.writeLong(keys); bf.writeTo(out)
+    LocalFs.writeAtomic(new File(bloomPath(stateDir)), bytes.toByteArray)
   }
 
   /** Build the bloom from the index's actual rows (one distributed agg) —
@@ -277,20 +273,11 @@ object CorpusJob {
   private def confInt(spark: SparkSession, key: String, dflt: Int): Int =
     spark.conf.get(key, dflt.toString).toInt
 
-  private def bandBucketsOf(stateDir: String): Option[Int] = {
-    val p = java.nio.file.Paths.get(markerPath(stateDir))
-    if (!java.nio.file.Files.exists(p)) None
-    else new String(java.nio.file.Files.readAllBytes(p),
-      java.nio.charset.StandardCharsets.UTF_8).trim.stripPrefix("kb=").toIntOption
-  }
+  private def bandBucketsOf(stateDir: String): Option[Int] =
+    readSidecar(markerPath(stateDir)).flatMap(_.trim.stripPrefix("kb=").toIntOption)
 
   private def writeMarker(stateDir: String, nb: Int): Unit =
-    java.nio.file.Files.write(java.nio.file.Paths.get(markerPath(stateDir)),
-      s"kb=$nb\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-  private def listDirs(path: String, prefix: String): Seq[java.io.File] =
-    Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.getName.startsWith(prefix)).toSeq
+    writeSidecar(markerPath(stateDir), s"kb=$nb\n")
 
   /** Write band rows as the bucketed+sorted L1 base INTO `dest` (which the
     * caller swaps or owns): one file per bucket, sorted by `band_key`, so
@@ -330,47 +317,27 @@ object CorpusJob {
 
   // --------------------------------------------------------- compaction
 
-  private def compactTmp(stateDir: String) = s"${bandsPath(stateDir)}/_compact_tmp"
-  private def compactOk(stateDir: String) =
-    new java.io.File(s"${compactTmp(stateDir)}/_graft_staged_ok")
+  private def compactTmp(stateDir: String) = new File(s"${bandsPath(stateDir)}/_compact_tmp")
 
-  /** Complete or discard a crashed compaction before anything reads the
-    * index (the `DimStore.recoverStaged` discipline): a staging WITH the
-    * sentinel is the authoritative compacted base — finish the swap; one
-    * without it is a partial write — drop it, the L0/L1 state is intact.
+  /** Settle a compaction staging (`LocalFs.recover`): a sealed one is the
+    * authoritative compacted base — finish the swap; an unsealed one is a
+    * partial write — drop it, the L0/L1 state is intact. The seal's
+    * manifest is the new base's bucket list, so a retry can tell an
+    * already-moved new bucket (listed, absent from staging — keep) from a
+    * stale old bucket (not listed — delete); a blind delete-all-then-move
+    * would destroy an already-moved bucket whose staged copy is gone. L0
+    * is folded into the new base; appends go only after every staged
+    * bucket is in place.
     */
   private def recoverCompact(stateDir: String): Unit = {
-    val tmp = new java.io.File(compactTmp(stateDir))
-    if (!tmp.exists) return
-    if (compactOk(stateDir).exists) finishCompactSwap(stateDir)
-    else LocalFs.rmTree(tmp)
-  }
-
-  /** The swap, idempotent under a crash at ANY point: the sentinel records
-    * the compacted base's bucket list, so a retry can tell an
-    * already-moved new bucket (in the list, absent from staging — keep)
-    * from a stale old bucket (not in the list — delete). A blind
-    * delete-all-then-move would destroy an already-moved bucket whose
-    * staged copy is gone — the lost-bucket window `DimStore.recoverStaged`
-    * exists to close, recreated one level up.
-    */
-  private def finishCompactSwap(stateDir: String): Unit = {
-    val root = bandsPath(stateDir)
-    val keep = new String(
-      java.nio.file.Files.readAllBytes(compactOk(stateDir).toPath),
-      java.nio.charset.StandardCharsets.UTF_8).linesIterator.toSet
-    listDirs(root, "kb=").filterNot(d => keep.contains(d.getName)).foreach(LocalFs.rmTree)
-    listDirs(compactTmp(stateDir), "kb=").foreach { src =>
-      val dst = new java.io.File(s"$root/${src.getName}")
-      LocalFs.rmTree(dst) // the pre-compaction copy this staged bucket supersedes
-      java.nio.file.Files.move(src.toPath, dst.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      ()
+    val tmp = compactTmp(stateDir)
+    LocalFs.recover(tmp, LocalFs.isSealed(tmp)) {
+      val root = new File(bandsPath(stateDir))
+      val keep = LocalFs.manifest(tmp).toSet
+      LocalFs.listDirs(root, "kb=").filterNot(d => keep(d.getName)).foreach(LocalFs.rmTree)
+      LocalFs.swapIn(tmp, root, "kb=")
+      LocalFs.listDirs(root, "append_").foreach(LocalFs.rmTree)
     }
-    // L0 is folded into the new base; appends go only after every staged
-    // bucket is in place (a crash before this line replays to here)
-    listDirs(root, "append_").foreach(LocalFs.rmTree)
-    LocalFs.rmTree(new java.io.File(compactTmp(stateDir)))
   }
 
   /** Fold L0 appends into the bucketed L1 base once `compactEvery` have
@@ -386,16 +353,13 @@ object CorpusJob {
   private def maybeCompact(spark: SparkSession, stateDir: String,
                            corpus: DataFrame, nb: Int, survivorCount: Long): Unit = {
     val every = confInt(spark, CompactEveryConf, CompactEveryDefault)
-    if (listDirs(bandsPath(stateDir), "append_").size < every) return
+    if (LocalFs.listDirs(new File(bandsPath(stateDir)), "append_").size < every) return
     val clean = readBands(spark, stateDir).distinct()
       .join(corpus.select(col("doc_id")), Seq("doc_id"), "left_semi")
-    writeBandsBase(clean, nb, compactTmp(stateDir))
-    // sentinel carries the new base's bucket list — the swap's idempotence
-    // depends on it (see finishCompactSwap)
-    java.nio.file.Files.write(compactOk(stateDir).toPath,
-      listDirs(compactTmp(stateDir), "kb=").map(_.getName).mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finishCompactSwap(stateDir)
+    val tmp = compactTmp(stateDir)
+    writeBandsBase(clean, nb, tmp.getPath)
+    LocalFs.seal(tmp, LocalFs.listDirs(tmp, "kb=").map(_.getName))
+    recoverCompact(stateDir)
     writeMarker(stateDir, nb) // marker lives in the bands dir the swap rewrote
     // the incremental bloom stays valid across the fold (it is a SUPERSET:
     // purged phantom keys linger only as extra false positives), so the
@@ -410,18 +374,17 @@ object CorpusJob {
 
   // ------------------------------------------------- corpus migration
 
-  private def corpusMigrateTmp(stateDir: String) = s"$stateDir/_corpus_migrate"
+  private def corpusMigrateTmp(stateDir: String) = new File(s"$stateDir/_corpus_migrate")
 
-  private def corpusFlatFiles(stateDir: String): Seq[java.io.File] =
-    Option(new java.io.File(corpusPath(stateDir)).listFiles()).getOrElse(Array.empty)
+  private def corpusFlatFiles(stateDir: String): Seq[File] =
+    Option(new File(corpusPath(stateDir)).listFiles()).getOrElse(Array.empty[File])
       .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
       .toSeq
 
   /** One-shot migration of a legacy UNPARTITIONED survivor store to the
-    * cell-partitioned layout (staged + sentinel + swap; recovery completes
-    * or discards exactly like the compaction staging). Without it, an
-    * append under `cell=` dirs next to legacy root files would leave a
-    * layout partition discovery rejects.
+    * cell-partitioned layout, staged and committed like the compaction.
+    * Without it, an append under `cell=` dirs next to legacy root files
+    * would leave a layout partition discovery rejects.
     */
   private def migrateCorpusIfFlat(spark: SparkSession, stateDir: String): Unit = {
     recoverCorpusMigrate(stateDir)
@@ -431,17 +394,9 @@ object CorpusJob {
       .repartition(col("cell")).sortWithinPartitions(col("doc_id"))
       .write.mode("overwrite")
       .option("parquet.block.size", CorpusBlockBytes)
-      .partitionBy("cell").parquet(tmp)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$tmp/_graft_staged_ok"), Array.empty[Byte])
-    finishCorpusMigrate(stateDir)
-  }
-
-  private def recoverCorpusMigrate(stateDir: String): Unit = {
-    val tmp = new java.io.File(corpusMigrateTmp(stateDir))
-    if (!tmp.exists) return
-    if (new java.io.File(tmp, "_graft_staged_ok").exists) finishCorpusMigrate(stateDir)
-    else LocalFs.rmTree(tmp)
+      .partitionBy("cell").parquet(tmp.getPath)
+    LocalFs.seal(tmp)
+    recoverCorpusMigrate(stateDir)
   }
 
   /** Idempotent under a crash at any point: only the legacy FLAT files are
@@ -450,19 +405,13 @@ object CorpusJob {
     * so a retry keeps it; blindly clearing the destination would destroy
     * moved cells whose staged copy is gone).
     */
-  private def finishCorpusMigrate(stateDir: String): Unit = {
-    val dst = new java.io.File(corpusPath(stateDir))
-    java.nio.file.Files.createDirectories(dst.toPath)
-    Option(dst.listFiles()).getOrElse(Array.empty).filter(_.isFile)
-      .foreach(f => java.nio.file.Files.deleteIfExists(f.toPath))
-    listDirs(corpusMigrateTmp(stateDir), "cell=").foreach { src =>
-      val d = new java.io.File(s"${dst.getPath}/${src.getName}")
-      LocalFs.rmTree(d) // half-moved retry: the staged copy supersedes it
-      java.nio.file.Files.move(src.toPath, d.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      ()
+  private def recoverCorpusMigrate(stateDir: String): Unit = {
+    val tmp = corpusMigrateTmp(stateDir)
+    LocalFs.recover(tmp, LocalFs.isSealed(tmp)) {
+      val dst = new File(corpusPath(stateDir))
+      Option(dst.listFiles()).getOrElse(Array.empty[File]).filter(_.isFile).foreach(LocalFs.rmTree)
+      LocalFs.swapIn(tmp, dst, "cell=")
     }
-    LocalFs.rmTree(new java.io.File(corpusMigrateTmp(stateDir)))
   }
 
   // ----------------------------------------------------------- seeds
@@ -585,11 +534,10 @@ object CorpusJob {
           // buckets exactly like the base; a flat single-file append is
           // read whole as before
           val touchedSet = touchedBuckets.toSet
-          val appendDirs = listDirs(root, "append_").flatMap { d =>
-            val kbDirs = Option(d.listFiles()).getOrElse(Array.empty)
-              .filter(x => x.isDirectory && x.getName.startsWith("kb="))
+          val appendDirs = LocalFs.listDirs(new File(root), "append_").flatMap { d =>
+            val kbDirs = LocalFs.listDirs(d, "kb=")
             if (kbDirs.isEmpty) Seq(d.getPath)
-            else kbDirs.toSeq
+            else kbDirs
               .filter(x => x.getName.stripPrefix("kb=").toIntOption.exists(touchedSet))
               .map(_.getPath)
           }
@@ -641,7 +589,12 @@ object CorpusJob {
       val dupsEarlierKept = inBatchPairs.getOrElse(id, Set.empty).exists(kept.contains)
       if (!dupOfCorpus.contains(id) && !dupsEarlierKept) kept += id
     }
-    if (kept.isEmpty) return
+    if (kept.isEmpty) {
+      // a replay whose compaction crashed before its seal still owes the
+      // fold (a listing and nothing more otherwise)
+      existing.foreach(c => maybeCompact(spark, stateDir, c, bandBucketsOf(stateDir).get, priorCount))
+      return
+    }
     val keptDf = sigs.filter(col("doc_id").isInCollection(kept))
 
     // IVF refresh: seeds = first nCells survivors globally; rebuild the

@@ -27,11 +27,11 @@ import graft.sources.{DimStore, LocalFs, Topics}
   *
   * Checkpointing (ST8): the query restarts from `checkpointDir`;
   * `foreachBatch` is at-least-once, so each batch writes to a batch-scoped
-  * STAGING dir and is then published by renaming into a `batch=<id>`
-  * partition dir under each sink (dirty/facts/stats). Publishing replaces
-  * the target batch dir wholesale (delete-then-atomic-rename), so a replay
+  * STAGING dir and is then published into a `batch=<id>` partition dir
+  * under each sink (dirty/facts/stats) with `LocalFs.replace`, so a replay
   * after a mid-batch crash rewrites the same batch dir instead of
-  * appending duplicates; the `_committed_<id>` marker is just the fast-path
+  * appending duplicates. The staging is removed before the
+  * `_committed_<id>` marker is written; the marker is just the fast-path
   * skip for the already-fully-committed case. Dim upserts are keyed and
   * idempotent, so replaying them is safe. Readers of the sinks see an
   * extra `batch` partition column recording provenance. (In kafka mode the
@@ -83,19 +83,6 @@ class WarehouseJob(spark: SparkSession, outDir: String,
         ("purchase", "hbase", "dim_order", "user_id", "user_id,ts,value"),
         ("signup", "hbase", "dim_user", "user_id", "user_id,ts,value"))
         .toDF("source_type", "sink_type", "sink_table", "sink_pk", "sink_columns")
-  }
-
-  /** Publish one staged sink dir: replace the target batch dir wholesale
-    * with an atomic rename (same filesystem), so replays are idempotent.
-    */
-  private def publish(src: java.io.File, dstBatchDir: java.io.File): Unit = {
-    if (src.exists()) {
-      LocalFs.rmTree(dstBatchDir)
-      dstBatchDir.getParentFile.mkdirs()
-      java.nio.file.Files.move(src.toPath, dstBatchDir.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      ()
-    }
   }
 
   /** When `spark.graft.profileBatch=true`, per-section wall times for every
@@ -259,12 +246,14 @@ class WarehouseJob(spark: SparkSession, outDir: String,
 
           // Publish: batch-scoped dirs replaced wholesale → replay-safe.
           timed("publish") {
-            publish(new java.io.File(staging, "dirty"), new java.io.File(s"$outDir/dirty/batch=$batchId"))
-            publish(new java.io.File(staging, "facts"), new java.io.File(s"$outDir/facts/batch=$batchId"))
-            publish(new java.io.File(staging, "stats"), new java.io.File(s"$outDir/stats/batch=$batchId"))
-            marker.getParentFile.mkdirs()
-            marker.createNewFile()
+            for (sink <- Seq("dirty", "facts", "stats")) {
+              val src = new java.io.File(staging, sink)
+              if (src.exists) LocalFs.replace(src, new java.io.File(s"$outDir/$sink/batch=$batchId"))
+            }
+            // staging first: a crash before the marker replays the batch
+            // (idempotent); after it, nothing is left behind
             LocalFs.rmTree(staging)
+            LocalFs.writeAtomic(marker, Array.empty)
           }
           if (profileEnabled) {
             // Locale.ROOT: the sidecar is JSON — a comma-decimal default

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import graft.sources.LocalFs
 import graft.streaming.CorpusJob
 import graft.streaming.CorpusJob.CorpusDoc
 
@@ -206,10 +207,6 @@ class CorpusJobSpec extends SparkSpecBase {
         ()
       }
     }
-    def rmTree(p: java.nio.file.Path): Unit =
-      if (java.nio.file.Files.exists(p))
-        java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .forEach(x => { java.nio.file.Files.deleteIfExists(x); () })
 
     val docs = loadDocs(60)
     val dir = java.nio.file.Files.createTempDirectory("corpus_bandwin").toString
@@ -225,7 +222,7 @@ class CorpusJobSpec extends SparkSpecBase {
     val survAfter = survivors(dir)
     // manufacture the window: batch 2's bands landed, its corpus append
     // (and sidecar bump) lost
-    rmTree(corpusP)
+    LocalFs.rmTree(corpusP.toFile)
     copyTree(backup, corpusP)
     java.nio.file.Files.write(sidecarP, sidecarV)
     assert(survivors(dir).size < survAfter.size, "window setup: corpus rolled back")
@@ -258,10 +255,7 @@ class CorpusJobSpec extends SparkSpecBase {
     // next fast-path batch, and the assignment is unchanged
     def cells(d: String) = spark.read.parquet(s"$d/corpus")
       .select("doc_id", "cell").collect().map(_.toSeq).toSet
-    def rmTree(p: java.nio.file.Path): Unit =
-      java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(x => { java.nio.file.Files.deleteIfExists(x); () })
-    rmTree(seeds)
+    LocalFs.rmTree(seeds.toFile)
     CorpusJob.processBatch(spark, docs.drop(30).toDF(), dir)
     assert(java.nio.file.Files.exists(seeds), "fast path must backfill a missing sidecar")
     // oracle: the one-shot run over the same 60 docs assigns identically
@@ -352,65 +346,6 @@ class CorpusJobSpec extends SparkSpecBase {
       "compaction must purge phantom rows back to lockstep")
   }
 
-  test("compaction swap crash window: recovery converges without losing a bucket") {
-    // the worst point of the swap: some staged buckets already moved
-    // (their staging copy gone), others still staged, a stale
-    // pre-compaction bucket not in the new set, L0 appends not yet
-    // deleted. Recovery must keep the moved buckets (a blind
-    // clear-then-move would destroy them), move the rest, drop the stale
-    // dir and the folded appends — and dedup semantics must be intact.
-    val docs = loadDocs(80)
-    val dir = java.nio.file.Files.createTempDirectory("corpus_swapwin").toString
-    spark.conf.set(CorpusJob.CompactEveryConf, "1")
-    try {
-      docs.take(60).grouped(20).foreach(c => CorpusJob.processBatch(spark, c.toDF(), dir))
-      val bands = new java.io.File(s"$dir/bands")
-      val kbDirs = bands.listFiles().filter(_.getName.startsWith("kb=")).sortBy(_.getName)
-      assert(kbDirs.length > 3, "setup: compacted base present")
-      val tmp = java.nio.file.Paths.get(s"$dir/bands/_compact_tmp")
-      java.nio.file.Files.createDirectories(tmp)
-      // half the new base is "still staged": move those dirs into tmp
-      val staged = kbDirs.take(kbDirs.length / 2)
-      staged.foreach { d =>
-        java.nio.file.Files.move(d.toPath, tmp.resolve(d.getName))
-      }
-      // a stale pre-compaction bucket (content = duplicate rows of a live
-      // bucket) that the new set does not include — must be deleted
-      val donor = kbDirs.last
-      val stale = new java.io.File(s"$dir/bands/kb=9999")
-      java.nio.file.Files.createDirectories(stale.toPath)
-      donor.listFiles().filter(_.isFile).foreach { f =>
-        java.nio.file.Files.copy(f.toPath, stale.toPath.resolve(f.getName))
-      }
-      // an L0 append whose rows the staged base already folded in —
-      // duplicates until recovery deletes it
-      val dupAppend = new java.io.File(s"$dir/bands/append_999999")
-      java.nio.file.Files.createDirectories(dupAppend.toPath)
-      donor.listFiles().filter(_.isFile).foreach { f =>
-        java.nio.file.Files.copy(f.toPath, dupAppend.toPath.resolve(f.getName))
-      }
-      // sentinel carries the full new bucket list (moved + still-staged)
-      java.nio.file.Files.write(tmp.resolve("_graft_staged_ok"),
-        kbDirs.map(_.getName).mkString("\n").getBytes("UTF-8"))
-
-      // next batch recovers the swap, then processes normally (with a
-      // planted cross-batch dup to prove the recovered index still serves)
-      val dup = CorpusDoc(docs.map(_.doc_id).max + 1, docs(7).text + " tok",
-        docs(7).embedding.map(_ + 0.001f))
-      CorpusJob.processBatch(spark, (docs.drop(60) :+ dup).toDF(), dir)
-      assert(!java.nio.file.Files.exists(tmp), "staging cleared")
-      assert(!stale.exists, "stale bucket dropped")
-      assert(!dupAppend.exists, "folded append dropped")
-      assert(!survivors(dir).contains(dup.doc_id), "recovered index still dedups")
-      val oneDir = java.nio.file.Files.createTempDirectory("corpus_swapwin_one").toString
-      CorpusJob.processBatch(spark, (docs :+ dup).toDF(), oneDir)
-      assert(survivors(dir) == survivors(oneDir), "survivors match the oracle")
-      assert(CorpusJob.readBands(spark, dir).count() ==
-        survivors(dir).size.toLong * graft.pipeline.Dedup.Bands,
-        "lockstep after swap recovery")
-    } finally spark.conf.unset(CorpusJob.CompactEveryConf)
-  }
-
   test("legacy v1 store (flat corpus, unbucketed bands, no bloom) migrates in place") {
     // Stores written by the previous layout: corpus as unpartitioned
     // parquet with `cell` as a data column, band index as root parquet
@@ -424,11 +359,8 @@ class CorpusJobSpec extends SparkSpecBase {
     val corpus = spark.read.parquet(s"$dir/corpus")
       .select("doc_id", "sig", "emb", "nrm", "cell").localCheckpoint()
     val bands = CorpusJob.readBands(spark, dir).localCheckpoint()
-    def rmTree(p: java.nio.file.Path): Unit =
-      java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(x => { java.nio.file.Files.deleteIfExists(x); () })
-    rmTree(java.nio.file.Paths.get(s"$dir/corpus"))
-    rmTree(java.nio.file.Paths.get(s"$dir/bands"))
+    LocalFs.rmTree(new java.io.File(s"$dir/corpus"))
+    LocalFs.rmTree(new java.io.File(s"$dir/bands"))
     corpus.repartition(2).write.parquet(s"$dir/corpus")      // v1: flat files
     bands.repartition(1).write.parquet(s"$dir/bands")        // v1: root files
     assert(new java.io.File(s"$dir/corpus").listFiles().exists(f =>

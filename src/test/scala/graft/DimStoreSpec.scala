@@ -4,21 +4,19 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.functions._
 import graft.sources.DimStore
 
-/** Crash-window contracts of the bucketed dim store's staged upsert
-  * (S8/ST8): the delete-then-swap publish leaves exactly two recoverable
-  * windows, and both must be lossless —
+/** The bucketed dim store (S8/ST8). `CrashPointSpec` crashes an upsert
+  * before each of its commit steps; the crash-window cases here are the
+  * on-disk states it cannot produce —
   *
-  *  - swap window: the staged write COMPLETED (`_tmp_upsert/_SUCCESS`
-  *    present) and the crash landed between a destination bucket's delete
-  *    and the move replacing it, so the bucket's only surviving copy lives
-  *    in staging. `read()` must union the staging back in (non-mutating),
-  *    and the next `upsert()` must first complete the pending swaps
-  *    (`recoverStaged`) instead of deleting the staging — the round-12
-  *    rendering deleted it, silently dropping every key not in the retry's
-  *    batch.
-  *  - write window: the crash landed MID staged write (no `_SUCCESS`), so
-  *    no destination bucket was touched; dropping the partial staging is
-  *    the correct recovery and the store is byte-identical to pre-batch.
+  *  - swap window of a store staged by older code, whose staging is marked
+  *    complete only by the committer's `_SUCCESS`: `read()` must read the
+  *    staging in, and the next `upsert()` must first complete the pending
+  *    swaps instead of deleting the staging (which would drop every key
+  *    not in the retry's batch);
+  *  - write window: the crash landed MID staged write (no `_SUCCESS`, no
+  *    seal, unreadable files), so no destination bucket was touched;
+  *    dropping the partial staging is the correct recovery;
+  *  - a pre-meta store in the swap window.
   */
 class DimStoreSpec extends SparkSpecBase {
 
@@ -27,8 +25,8 @@ class DimStoreSpec extends SparkSpecBase {
 
   /** Manufacture the swap window for bucket `b` of `table`: move the live
     * bucket dir into a fresh `_tmp_upsert` (as the completed staging's
-    * output) and mark it `_SUCCESS` — the exact on-disk state after
-    * `rmTreeF(dst)` succeeded and the move never ran.
+    * output) and mark it `_SUCCESS` — the on-disk state after the live
+    * bucket's delete succeeded and the move never ran.
     */
   private def makeSwapWindow(base: String, table: String, b: Int): Unit = {
     val tmp = Paths.get(s"$base/$table/_tmp_upsert")
@@ -102,34 +100,6 @@ class DimStoreSpec extends SparkSpecBase {
       s"each bucket must be one parquet file, got ${perBucket.mkString(",")}")
   }
 
-  test("completed staging is recognized by the store's own sentinel, without _SUCCESS") {
-    // a deployment with mapreduce.fileoutputcommitter.marksuccessfuljobs=
-    // false never writes `_SUCCESS`; the store's own `_graft_staged_ok`
-    // (written driver-side after the staged write returns) must be enough
-    // for both read() and the retry's swap recovery — otherwise a
-    // completed staging is misread as a partial write and deleted after a
-    // destination bucket was already removed (the lost-bucket window)
-    import spark.implicits._
-    val base = Files.createTempDirectory("dimstore_sentinel").toString
-    val store = new DimStore(spark, base)
-    store.upsert("t", (0L until 64L).map(k => (k, 1L, s"v$k")).toDF("k", "ts", "v"), "k", "ts")
-    val victim = new java.io.File(s"$base/t").listFiles()
-      .filter(_.getName.startsWith("graft_bucket=")).head.getName
-      .stripPrefix("graft_bucket=").toInt
-    val tmp = Paths.get(s"$base/t/_tmp_upsert")
-    Files.createDirectories(tmp)
-    Files.move(Paths.get(s"$base/t/graft_bucket=$victim"),
-      tmp.resolve(s"graft_bucket=$victim"), StandardCopyOption.ATOMIC_MOVE)
-    Files.createFile(tmp.resolve("_graft_staged_ok")) // sentinel only, no _SUCCESS
-    assert(keySet(store.read("t").get) == (0L until 64L).toSet,
-      "read must treat the sentinel-marked staging as completed")
-    store.upsert("t", Seq((1000L, 2L, "new")).toDF("k", "ts", "v"), "k", "ts")
-    assert(keySet(store.read("t").get) == (0L until 64L).toSet + 1000L,
-      "retry must swap the sentinel-marked staged bucket into place, not drop it")
-    // and the new upsert itself left a sentinel-free store (staging cleared)
-    assert(!new java.io.File(s"$base/t/_tmp_upsert").exists())
-  }
-
   test("pre-meta store in the swap window: staged bucket replaces the live copy, no duplicate keys") {
     // the window where a destination bucket was NOT yet deleted: both the
     // live bucket and its completed staged successor exist. read() must
@@ -158,6 +128,24 @@ class DimStoreSpec extends SparkSpecBase {
     assert(keySet(r) == (0L until 64L).toSet)
     assert(r.count() == 64,
       "staged bucket must replace the live copy on read — no duplicate keys in the window")
+  }
+
+  test("the bucket count is fixed: a changed spark.graft.dim.buckets loses and duplicates no key") {
+    // the count was a conf read on every upsert, but no store records it:
+    // re-hashing a touched bucket's old rows under another count moved
+    // them into buckets the upsert never swapped, and keys left in the
+    // untouched old buckets showed up twice
+    import spark.implicits._
+    val base = Files.createTempDirectory("dimstore_buckets").toString
+    val store = new DimStore(spark, base)
+    store.upsert("t", (0L until 64L).map(k => (k, 1L, s"v$k")).toDF("k", "ts", "v"), "k", "ts")
+    spark.conf.set("spark.graft.dim.buckets", "12")
+    try store.upsert("t", Seq((3L, 2L, "v3b"), (1000L, 2L, "new")).toDF("k", "ts", "v"), "k", "ts")
+    finally spark.conf.unset("spark.graft.dim.buckets")
+    val r = store.read("t").get
+    assert(keySet(r) == (0L until 64L).toSet + 1000L, "keys lost")
+    assert(r.count() == 65, "keys duplicated")
+    assert(r.filter(col("k") === 3L).select("v").as[String].collect().toSeq == Seq("v3b"))
   }
 
   test("schema cache survives evolution: new columns merge, fresh stores re-seed") {
