@@ -1,8 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Keyed dimension store — the Spark rendering of the reference's
   * Phoenix/HBase dim tables + Redis cache (S8/S9:
@@ -81,9 +82,9 @@ class DimStore(spark: SparkSession, basePath: String,
   private def bucketOf(df: DataFrame, keyCol: String) =
     pmod(xxhash64(canonicalKey(df, keyCol)), lit(DimStore.Buckets.toLong)).cast("int")
 
-  /** Last-write-wins collapse shared by the upsert merge and the
-    * mixed-layout read: highest `versionCol` per `keyCol` wins, version
-    * ties broken deterministically by a whole-row hash.
+  /** Last-write-wins collapse of the upsert merge: highest `versionCol`
+    * per `keyCol` wins, version ties broken deterministically by a
+    * whole-row hash.
     */
   private def dedupLatest(df: DataFrame, keyCol: String, versionCol: String): DataFrame = {
     val rowHash = xxhash64(df.columns.map(col).toIndexedSeq: _*)
@@ -93,47 +94,25 @@ class DimStore(spark: SparkSession, basePath: String,
       .drop("__rn")
   }
 
-  /** Per-table key/version metadata (`_graft_meta`, underscore-prefixed so
-    * parquet readers and the flat-file scan ignore it), written before any
-    * bucket write so the crashed-migration window always knows how to
-    * collapse a mixed layout on read.
-    */
-  private def writeMeta(table: String, keyCol: String, versionCol: String): Unit =
-    LocalFs.writeAtomic(new java.io.File(s"${path(table)}/_graft_meta"),
-      s"keyCol=$keyCol\nversionCol=$versionCol\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-  private def readMeta(table: String): Option[(String, String)] = {
-    val f = java.nio.file.Paths.get(s"${path(table)}/_graft_meta")
-    if (java.nio.file.Files.exists(f)) {
-      val kv = new String(java.nio.file.Files.readAllBytes(f),
-        java.nio.charset.StandardCharsets.UTF_8)
-        .linesIterator.filter(_.contains("=")).map { l =>
-          val Array(k, v) = l.split("=", 2); k -> v
-        }.toMap
-      for (k <- kv.get("keyCol"); v <- kv.get("versionCol")) yield (k, v)
-    } else None
-  }
-
   private def staging(table: String) = new java.io.File(s"${path(table)}/_tmp_upsert")
 
-  /** A staging is complete once sealed (`LocalFs.seal`, written by the
-    * store itself, so it does not depend on the committer's `_SUCCESS`,
-    * which `mapreduce.fileoutputcommitter.marksuccessfuljobs=false` turns
-    * off). `_SUCCESS` is still honored for stores staged by older versions
-    * of this code.
+  /** The table's column superset (`DimStore.bucketSchemaCache`), seeded on
+    * first use by one mergeSchema pass over `dirs`, which must hold every
+    * column of the store between them.
     */
-  private def stagedComplete(tmp: java.io.File): Boolean =
-    LocalFs.isSealed(tmp) || new java.io.File(tmp, "_SUCCESS").exists
+  private def schemaOf(table: String, dirs: Seq[java.io.File]): StructType =
+    DimStore.bucketSchemaCache.getOrElseUpdate(cacheKey(table),
+      spark.read.option("mergeSchema", "true").parquet(dirs.map(_.getPath): _*).schema)
 
   /** The upsert's commit, run both as its own swap step and, at the start
     * of every upsert, to settle a crashed attempt (`LocalFs.recover`): a
-    * complete staging holds the merged state (old bucket ∪ batch, deduped)
+    * sealed staging holds the merged state (old bucket ∪ batch, deduped)
     * of exactly the buckets the batch touched, so each staged bucket
-    * replaces its live one; an incomplete one is dropped.
+    * replaces its live one; an unsealed one is dropped.
     */
   private def recoverStaged(table: String): Unit = {
     val tmp = staging(table)
-    LocalFs.recover(tmp, stagedComplete(tmp)) {
+    LocalFs.recover(tmp, LocalFs.isSealed(tmp)) {
       LocalFs.swapIn(tmp, new java.io.File(path(table)), "graft_bucket=")
     }
   }
@@ -152,37 +131,16 @@ class DimStore(spark: SparkSession, basePath: String,
     * term of the streaming warehouse's per-batch fixed cost.) Crash
     * recovery: a retry FIRST settles a crashed prior attempt
     * (`recoverStaged`), then re-merges; the versioned dedup converges, and
-    * `read()` reads a complete staging in place of the buckets it
+    * `read()` reads a sealed staging in place of the buckets it
     * supersedes, so the store is never unreadable or lossy in the window.
-    *
-    * A store written by the pre-bucket flat layout is migrated in the same
-    * one pass (every bucket rewritten once, flat files then removed).
     */
   def upsert(table: String, batch: DataFrame, keyCol: String, versionCol: String): Unit = {
     recoverStaged(table)
     val tableDir = new java.io.File(path(table))
-    val flatFiles = Option(tableDir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-    // legacy flat store: fold every row in once. Read by EXPLICIT file
-    // paths, not the directory — a migration that crashed between bucket
-    // writes and flat-file deletion leaves a mixed layout that directory
-    // listing + partition discovery reject ("conflicting directory
-    // structures"); explicit paths make the retry converge instead.
-    // During a retry rows may exist BOTH in a bucket and in the remaining
-    // flat files — both sides are merged; the versioned dedup collapses
-    // the overlap deterministically.
-    val legacy: Option[DataFrame] =
-      if (flatFiles.nonEmpty)
-        Some(spark.read.parquet(flatFiles.map(_.getPath).toIndexedSeq: _*))
-      else None
-    writeMeta(table, keyCol, versionCol) // before any bucket write: a crash
-    // mid-migration must leave enough metadata for read() to collapse the
-    // mixed layout it creates
     val batchB = batch.withColumn("__b", bucketOf(batch, keyCol))
     // touched buckets: driver-side collect bounded by the bucket count
     val touched: Seq[Int] = phase("touched_collect") {
-      if (legacy.isDefined) 0 until DimStore.Buckets
-      else batchB.select(col("__b")).distinct().collect().map(_.getInt(0)).toSeq.sorted
+      batchB.select(col("__b")).distinct().collect().map(_.getInt(0)).toSeq.sorted
     }
     // ONE multi-path read for every touched bucket: a per-bucket
     // spark.read.parquet pays driver-side footer/schema inference per
@@ -195,30 +153,28 @@ class DimStore(spark: SparkSession, basePath: String,
     // exactly that per-batch mergeSchema pass. The cache seeds from ALL
     // bucket dirs (not just touched — a column living only in an
     // untouched bucket must survive into the superset) and is refreshed
-    // to the staged write's union schema below, so it is always a
-    // superset of every on-disk bucket; parquet nulls the gaps of files
-    // missing a cached column exactly like mergeSchema did. Buckets can
-    // still legitimately differ in schema (an upsert batch with new
+    // to the staged write's union schema below. A batch that touches only
+    // new buckets still merges an EMPTY frame of the cached schema, so
+    // that union always contains the previous entry: the cache is a
+    // superset of every on-disk bucket, and parquet nulls the gaps of
+    // files missing a cached column exactly like mergeSchema did. Buckets
+    // can still legitimately differ in schema (an upsert batch with new
     // columns rewrites only ITS buckets).
     val bucketExisting: Option[DataFrame] = phase("bucket_open") {
-      val paths = touched.map(i => s"${path(table)}/graft_bucket=$i")
-        .filter(p => new java.io.File(p).exists)
-      if (paths.isEmpty) None
+      val live = LocalFs.listDirs(tableDir, "graft_bucket=")
+      if (live.isEmpty) None
       else {
-        val sch = DimStore.bucketSchemaCache.getOrElseUpdate(cacheKey(table), {
-          val allDirs = LocalFs.listDirs(tableDir, "graft_bucket=").map(_.getPath)
-          org.apache.spark.sql.types.StructType(
-            spark.read.option("mergeSchema", "true").parquet(allDirs: _*)
-              .schema.filterNot(_.name == "graft_bucket"))
-        })
-        Some(spark.read.schema(sch).parquet(paths: _*))
+        val sch = schemaOf(table, live)
+        val paths = touched.map(i => new java.io.File(tableDir, s"graft_bucket=$i"))
+          .filter(_.exists).map(_.getPath)
+        Some(if (paths.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), sch)
+          else spark.read.schema(sch).parquet(paths: _*))
       }
     }
     // merge WITHOUT the bucket column so the dedup tie-break hash sees
     // exactly the upserted schema (the bucket is re-derived afterwards —
     // it is a pure function of the key, so rows land where they came from)
-    val merged = (Seq(batchB.drop("__b")) ++ bucketExisting.toSeq ++ legacy.toSeq)
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+    val merged = bucketExisting.fold(batch)(batch.unionByName(_, allowMissingColumns = true))
     val deduped = dedupLatest(merged, keyCol, versionCol)
     val staged = deduped.withColumn("graft_bucket", bucketOf(deduped, keyCol))
     val tmp = staging(table)
@@ -241,77 +197,34 @@ class DimStore(spark: SparkSession, basePath: String,
     }
     // refresh the schema cache to the staged union (⊇ old cache ⊇ every
     // untouched bucket; the touched buckets ARE this schema)
-    DimStore.bucketSchemaCache.put(cacheKey(table), org.apache.spark.sql.types.StructType(
-      staged.schema.filterNot(_.name == "graft_bucket")))
+    DimStore.bucketSchemaCache.put(cacheKey(table), merged.schema)
     phase("swap") {
       // the staged buckets are exactly the touched ones: a touched bucket
       // stages ≥1 row, and every merged row re-hashes to the bucket it came
       // from (the bucket count is fixed)
       recoverStaged(table)
-      // migration complete: the flat files' rows now live in the buckets
-      flatFiles.foreach(LocalFs.rmTree)
     }
   }
 
-  /** Whole-store read: partition discovery over the bucket directories;
-    * the synthetic `graft_bucket` partition column is dropped so callers see
-    * exactly the upserted schema.
-    *
-    * A store caught in the crashed-migration window — flat leftover files
-    * next to bucket directories — is readable too: a directory-path read
-    * would reject the mixed layout ("conflicting directory structures"), so
-    * both halves are read by EXPLICIT paths and collapsed with the same
-    * versioned last-write-wins dedup the upsert retry applies (key/version
-    * columns from `_graft_meta`). A store caught in the SWAP window — a
-    * COMPLETED staging (see `stagedComplete`) whose bucket moves were
-    * interrupted, possibly after a destination bucket was deleted — is read
-    * losslessly too: each staged bucket dir is read IN PLACE OF the live
-    * bucket it supersedes (so even a pre-meta store never shows a key
-    * twice), WITHOUT mutating the store — repair itself belongs to the next `upsert`'s `recoverStaged`. The
-    * store is thus never unreadable or lossy in the exact windows the
-    * upsert retry exists to recover from.
+  /** Whole-store read, one path: the live bucket dirs, except any that a
+    * SEALED staging supersedes (the swap window: the staged bucket holds
+    * the merged old ∪ batch rows, and its live copy may already be
+    * deleted), plus those staged buckets — read in place, without
+    * mutating the store; the repair belongs to the next `upsert`'s
+    * `recoverStaged`. Every key lives in exactly one bucket, so no key
+    * shows twice. The dirs are read by explicit path (no partition
+    * discovery, so no synthetic `graft_bucket` column) with the store's
+    * column superset: a plain read takes its schema from one file and
+    * drops a column that bucket lacks.
     */
   def read(table: String): Option[DataFrame] = {
-    val tableDir = new java.io.File(path(table))
-    if (!tableDir.exists) None
-    else {
-      val entries = Option(tableDir.listFiles()).getOrElse(Array.empty)
-      val flat = entries
-        .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-      val buckets = LocalFs.listDirs(tableDir, "graft_bucket=")
-      val tmp = staging(table)
-      val stagedDirs =
-        if (stagedComplete(tmp)) LocalFs.listDirs(tmp, "graft_bucket=") else Nil
-      // a completed staged bucket strictly SUPERSEDES the live bucket it
-      // merged (old ∪ batch, deduped) — read the staged copy INSTEAD of
-      // unioning both. With `_graft_meta` present the versioned dedup
-      // would collapse the overlap anyway, but a pre-meta store caught in
-      // the swap window has no key/version to dedup by, and the raw union
-      // would show every key in a not-yet-swapped bucket twice.
-      val stagedNames = stagedDirs.map(_.getName).toSet
-      val liveBuckets = buckets.filterNot(b => stagedNames.contains(b.getName))
-      // dir holding only metadata (crash between the meta write and the
-      // first bucket write): an empty store, not a schema-inference error
-      if (flat.isEmpty && buckets.isEmpty && stagedDirs.isEmpty) return None
-      val df =
-        if (flat.nonEmpty || stagedDirs.nonEmpty) {
-          // explicit leaf-dir paths: no partition discovery, so no synthetic
-          // graft_bucket column and no layout conflict between the halves
-          val parts = Seq(
-            liveBuckets.map(_.getPath), flat.map(_.getPath).toSeq,
-            stagedDirs.map(_.getPath))
-            .filter(_.nonEmpty)
-            .map(ps => spark.read.parquet(ps: _*))
-          val merged = parts.reduce(_.unionByName(_, allowMissingColumns = true))
-          readMeta(table) match {
-            case Some((keyCol, versionCol)) => dedupLatest(merged, keyCol, versionCol)
-            // pre-meta store caught mid-crash: raw union is still a read
-            // (the next upsert's retry collapses it)
-            case None => merged
-          }
-        } else spark.read.parquet(path(table))
-      Some(if (df.columns.contains("graft_bucket")) df.drop("graft_bucket") else df)
-    }
+    val tmp = staging(table)
+    val staged = if (LocalFs.isSealed(tmp)) LocalFs.listDirs(tmp, "graft_bucket=") else Nil
+    val replaced = staged.map(_.getName).toSet
+    val dirs = LocalFs.listDirs(new java.io.File(path(table)), "graft_bucket=")
+      .filterNot(d => replaced(d.getName)) ++ staged
+    if (dirs.isEmpty) None
+    else Some(spark.read.schema(schemaOf(table, dirs)).parquet(dirs.map(_.getPath): _*))
   }
 
   /** Point lookup — test/debug convenience mirroring `DimUtil.getDimInfo`;
@@ -343,16 +256,5 @@ object DimStore {
     * behind the cache.
     */
   private[graft] val bucketSchemaCache =
-    scala.collection.concurrent.TrieMap[String, org.apache.spark.sql.types.StructType]()
-}
-
-/** S5 analog: dynamic per-row topic routing
-  * (`utils/MyKafkaUtil.java:29-38`, used `BaseDBApp.java:93-99`): rows
-  * carry their destination in a column; the sink writes each group to its
-  * own path/topic. With a real Kafka sink this is just the `topic` column;
-  * the file rendering is `partitionBy` — one directory per sink table.
-  */
-object DynamicTopicSink {
-  def write(df: DataFrame, outDir: String, topicCol: String = "sink_table"): Unit =
-    df.write.mode(SaveMode.Append).partitionBy(topicCol).parquet(outDir)
+    scala.collection.concurrent.TrieMap[String, StructType]()
 }

@@ -15,7 +15,7 @@ import org.apache.hadoop.fs.permission.FsPermission
   * filesystem that Spark's parquet writers, file-stream sources, state
   * stores and checkpoint logs all go through, and the one staged-commit
   * protocol the stores publish with (WarehouseJob's batch sinks, DimStore's
-  * bucket swap, CorpusJob's compaction and corpus migration).
+  * bucket swap and CorpusJob's compaction).
   *
   * Without libhadoop's native code, Hadoop's `RawLocalFileSystem` starts a
   * `chmod` process for every file and directory it creates and a `readlink`

@@ -153,8 +153,7 @@ object CorpusJob {
   /** Survivor-store schema, passed explicitly on every read so the `cell`
     * PARTITION column keeps a stable LongType (directory-value inference
     * would flip int→long as seed ids grow past 2³¹) and no read pays a
-    * footer-inference pass. Legacy unpartitioned stores carry `cell` as a
-    * data column of the same type — the one schema reads both layouts.
+    * footer-inference pass.
     */
   private val corpusSchema = StructType(Seq(
     StructField("doc_id", LongType),
@@ -196,10 +195,12 @@ object CorpusJob {
   /** Survivor count from the sidecar, so no micro-batch runs a corpus-wide
     * action just to pick the append-vs-rebuild branch. The count only
     * DECIDES anything while the seed set is forming (`< nCells`), and every
-    * rebuild rewrites the sidecar from the materialized store, so a stale
-    * value (crash between parquet write and sidecar write) costs at most
-    * one extra rebuild, never a wrong survivor set. A legacy store with no
-    * sidecar is counted once and the sidecar backfilled.
+    * rebuild rewrites the sidecar from the materialized store. A value left
+    * stale by a crash between parquet write and sidecar write is mended
+    * by the replay: below `nCells` (a crashed rebuild) it forces one more
+    * rebuild, never a fast path against half-written seeds; at or above
+    * it (a crashed fast-path append) the replayed batch recounts (see
+    * `processBatch`). A lost sidecar is counted once and backfilled.
     */
   private def loadCount(existing: Option[DataFrame], stateDir: String): Long =
     existing match {
@@ -290,29 +291,20 @@ object CorpusJob {
       .option("parquet.block.size", BandBlockBytes)
       .partitionBy("kb").parquet(dest)
 
-  /** Band index rebuilt wholesale from the survivor store (the authority):
-    * used by the seed-bootstrap rebuild, the v1→v2 layout migration, and
-    * the missing-index self-heal. Wipes the bands dir (phantoms included),
-    * then marker and bloom — a crash between the steps re-heals on the
-    * next batch (marker/bloom absent → rebuilt again from the corpus).
-    */
-  private def rebuildBandsFromCorpus(spark: SparkSession, stateDir: String,
-                                     corpus: DataFrame, keysEstimate: Long): Int = {
-    val nb = confInt(spark, BandBucketsConf, BandBucketsDefault)
-    val bands = bandRows(corpus.select(col("doc_id"), col("sig")))
-    writeBandsBase(bands, nb, bandsPath(stateDir))
-    writeMarker(stateDir, nb)
-    rebuildBloom(stateDir, readBands(spark, stateDir), keysEstimate)
-    nb
-  }
-
-  /** Fast-path layout guard: marker present → v2 store, return its bucket
-    * count; absent → one-shot migration/self-heal from the corpus.
+  /** Fast-path layout guard: the `_v2` marker present → return its bucket
+    * count; absent (lost) → self-heal: the band index is rebuilt wholesale
+    * from the survivor store (the authority). The bands dir is wiped
+    * (phantoms included), then marker and bloom are written — a crash
+    * between the steps re-heals on the next batch.
     */
   private def ensureBandsV2(spark: SparkSession, stateDir: String,
                             corpus: DataFrame, priorCount: Long): Int =
     bandBucketsOf(stateDir).getOrElse {
-      rebuildBandsFromCorpus(spark, stateDir, corpus, priorCount * Dedup.Bands)
+      val nb = confInt(spark, BandBucketsConf, BandBucketsDefault)
+      writeBandsBase(bandRows(corpus.select(col("doc_id"), col("sig"))), nb, bandsPath(stateDir))
+      writeMarker(stateDir, nb)
+      rebuildBloom(stateDir, readBands(spark, stateDir), priorCount * Dedup.Bands)
+      nb
     }
 
   // --------------------------------------------------------- compaction
@@ -372,48 +364,6 @@ object CorpusJob {
     }
   }
 
-  // ------------------------------------------------- corpus migration
-
-  private def corpusMigrateTmp(stateDir: String) = new File(s"$stateDir/_corpus_migrate")
-
-  private def corpusFlatFiles(stateDir: String): Seq[File] =
-    Option(new File(corpusPath(stateDir)).listFiles()).getOrElse(Array.empty[File])
-      .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-      .toSeq
-
-  /** One-shot migration of a legacy UNPARTITIONED survivor store to the
-    * cell-partitioned layout, staged and committed like the compaction.
-    * Without it, an append under `cell=` dirs next to legacy root files
-    * would leave a layout partition discovery rejects.
-    */
-  private def migrateCorpusIfFlat(spark: SparkSession, stateDir: String): Unit = {
-    recoverCorpusMigrate(stateDir)
-    if (corpusFlatFiles(stateDir).isEmpty) return
-    val tmp = corpusMigrateTmp(stateDir)
-    spark.read.schema(corpusSchema).parquet(corpusPath(stateDir))
-      .repartition(col("cell")).sortWithinPartitions(col("doc_id"))
-      .write.mode("overwrite")
-      .option("parquet.block.size", CorpusBlockBytes)
-      .partitionBy("cell").parquet(tmp.getPath)
-    LocalFs.seal(tmp)
-    recoverCorpusMigrate(stateDir)
-  }
-
-  /** Idempotent under a crash at any point: only the legacy FLAT files are
-    * deleted (a `cell=` dir at the destination can only be this
-    * migration's own already-moved output — the legacy layout had none —
-    * so a retry keeps it; blindly clearing the destination would destroy
-    * moved cells whose staged copy is gone).
-    */
-  private def recoverCorpusMigrate(stateDir: String): Unit = {
-    val tmp = corpusMigrateTmp(stateDir)
-    LocalFs.recover(tmp, LocalFs.isSealed(tmp)) {
-      val dst = new File(corpusPath(stateDir))
-      Option(dst.listFiles()).getOrElse(Array.empty[File]).filter(_.isFile).foreach(LocalFs.rmTree)
-      LocalFs.swapIn(tmp, dst, "cell=")
-    }
-  }
-
   // ----------------------------------------------------------- seeds
 
   /** The nCells seed centroids as (cell_seed, c_emb, c_nrm) — FROZEN once
@@ -423,8 +373,8 @@ object CorpusJob {
     * `seeds` sidecar, rewritten by every rebuild BEFORE the count sidecar
     * (the count is the fast-path commit point, so a crash between the two
     * forces one more rebuild, never a fast path against stale seeds). A
-    * legacy store without the sidecar derives once from the survivor
-    * store and backfills — the count-sidecar discipline.
+    * lost sidecar is derived once from the survivor store and backfilled —
+    * the count-sidecar discipline.
     */
   private def deriveSeeds(corpus: DataFrame, nCells: Int): DataFrame =
     corpus.orderBy(col("doc_id")).limit(nCells)
@@ -473,7 +423,6 @@ object CorpusJob {
                    threshold: Double = 0.5, nCells: Int = 4): Unit = {
     if (batch.isEmpty) return
     recoverCompact(stateDir)
-    migrateCorpusIfFlat(spark, stateDir)
     val sigs = batch
       .select(col("doc_id"), col("text"),
         transform(col("embedding"), x => x.cast("double")).as("emb"))
@@ -482,7 +431,7 @@ object CorpusJob {
         col("emb"), norm(col("emb")).as("nrm"))
       .localCheckpoint()
     val existing = loadCorpus(spark, stateDir)
-    val priorCount = loadCount(existing, stateDir)
+    val storedCount = loadCount(existing, stateDir)
 
     // The driver-side inputs of the greedy resolution come back in ONE
     // tagged collect off the checkpointed `sigs`: the batch's own band
@@ -506,20 +455,20 @@ object CorpusJob {
     // arrivals that near-duplicate an already-ingested survivor: bloom
     // prefilter (keys the sidecar rules out never touch disk) → pruned
     // L1/L0 candidate scan → corpus-confirmed signature verification.
-    val dupOfCorpus: Set[Long] = existing match {
-      case None => Set.empty
+    val confirmed: Seq[CandPair] = existing match {
+      case None => Nil
       case Some(corpus) =>
-        val nb = ensureBandsV2(spark, stateDir, corpus, priorCount)
+        val nb = ensureBandsV2(spark, stateDir, corpus, storedCount)
         val bloom = readBloom(stateDir).getOrElse {
-          // lost/legacy sidecar: backfill once from the index (the
+          // lost sidecar: backfill once from the index (the
           // count-sidecar discipline), then read it back
           rebuildBloom(stateDir, readBands(spark, stateDir),
-            priorCount * Dedup.Bands)
+            storedCount * Dedup.Bands)
           readBloom(stateDir).get
         }._3
         val present = batchBands.filter(p =>
           bloom.mightContainString(bloomKeyStr(p.band, p.band_key)))
-        if (present.isEmpty) Set.empty
+        if (present.isEmpty) Nil
         else {
           val presentKeys = present.map(_.band_key).distinct
           val root = bandsPath(stateDir)
@@ -559,7 +508,7 @@ object CorpusJob {
                 // probe a single shuffle-free stage
                 .collect().map(r => CandPair(r.getLong(0), r.getLong(1))).distinct
             }
-          if (candidates.isEmpty) Set.empty
+          if (candidates.isEmpty) Nil
           else {
             // confirm against the SURVIVOR STORE (the authority): fetch
             // candidate sigs via a pushed doc_id In filter — survivor
@@ -577,11 +526,24 @@ object CorpusJob {
                 .join(sigs.select(col("doc_id").as("batch_id"), col("sig").as("sig_a")),
                   "batch_id")
                 .filter(estJaccard(col("sig_a"), col("sig_b")) >= threshold)
-                .select(col("batch_id"))
-                .collect().map(_.getLong(0)).toSet // the Set dedups
+                .select(col("batch_id"), col("corpus_id"))
+                .collect().map(r => CandPair(r.getLong(0), r.getLong(1))).toSeq
             }
           }
         }
+    }
+
+    val dupOfCorpus = confirmed.map(_.batch_id).toSet
+    // an arrival confirmed against its own stored copy makes this batch a
+    // replay, and a fast-path batch's count sidecar may predate its
+    // survivor append (a crash before `writeCount`): recount once and
+    // rewrite it. Below nCells the stale count is a crashed rebuild's
+    // commit point: left short, it makes the next batch rebuild (seeds
+    // included), which a recount here would skip
+    val priorCount = existing match {
+      case Some(c) if storedCount >= nCells && confirmed.exists(p => p.batch_id == p.corpus_id) =>
+        val n = c.count(); writeCount(stateDir, n); n
+      case _ => storedCount
     }
 
     val kept = scala.collection.mutable.LinkedHashSet[Long]()
@@ -757,8 +719,8 @@ object CorpusJob {
     }
     val q = queries.select(col("query_id"), col("q_emb"), norm(col("q_emb")).as("q_nrm"))
     // serve the frozen seeds from the 4-row sidecar (no corpus scan per
-    // retrieval); stores from before the sidecar existed derive inline —
-    // retrieval stays non-mutating, the next processBatch backfills
+    // retrieval); a lost sidecar is derived inline — retrieval stays
+    // non-mutating, the next processBatch backfills
     val cents = (if (new java.io.File(seedsPath(stateDir)).exists())
         spark.read.parquet(seedsPath(stateDir))
       else deriveSeeds(corpus, nCells))

@@ -30,6 +30,15 @@ class CorpusJobSpec extends SparkSpecBase {
     spark.read.parquet(s"$stateDir/corpus").select("doc_id")
       .collect().map(_.getLong(0)).toSet
 
+  private def copyTree(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
+    java.nio.file.Files.walk(src).forEach { p =>
+      val t = dst.resolve(src.relativize(p))
+      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
+      else java.nio.file.Files.copy(p, t)
+      ()
+    }
+  }
+
   private def queriesDf = {
     val dir = "/root/testdata/sf0.001"
     Tables.embeddings(spark, dir).filter(col("vec_id") < 3)
@@ -199,15 +208,6 @@ class CorpusJobSpec extends SparkSpecBase {
     // subdir — the round-12 root-append rendering appended a second copy,
     // and with full rebuilds gated to the seed bootstrap nothing ever
     // purged it, permanently failing the survivors × Bands lockstep gate.
-    def copyTree(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
-      java.nio.file.Files.walk(src).forEach { p =>
-        val t = dst.resolve(src.relativize(p))
-        if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
-        else java.nio.file.Files.copy(p, t)
-        ()
-      }
-    }
-
     val docs = loadDocs(60)
     val dir = java.nio.file.Files.createTempDirectory("corpus_bandwin").toString
     CorpusJob.processBatch(spark, docs.take(30).toDF(), dir)
@@ -236,6 +236,44 @@ class CorpusJobSpec extends SparkSpecBase {
     // and the index content itself is duplicate-free per (doc_id, band)
     assert(CorpusJob.readBands(spark, dir)
       .groupBy("doc_id", "band").count().filter(col("count") > 1).count() == 0)
+  }
+
+  test("crashed bootstrap rebuild: the replay leaves the count short, so the next batch rebuilds the seeds") {
+    // a second bootstrap rebuild crashes after its corpus overwrite: the
+    // seeds, count and rebuilds sidecars still hold the pre-batch values.
+    // The replay finds its own docs and keeps none; were it to recount,
+    // the next batch would take the fast path with the old, short seeds
+    val docs = loadDocs(24)
+    val (b1, b2, b3) = (docs.take(2), docs.slice(2, 5), docs.drop(5))
+    def cells(d: String) = spark.read.parquet(s"$d/corpus")
+      .select("doc_id", "cell").collect().map(_.toSeq).toSet
+    def seedIds(d: String) = spark.read.parquet(s"$d/seeds")
+      .select("cell_seed").collect().map(_.getLong(0)).sorted.toSeq
+    def top(d: String) = CorpusJob.retrieve(spark, d, queriesDf).collect().map(_.toSeq).toSet
+
+    val clean = java.nio.file.Files.createTempDirectory("corpus_boot_clean").toString
+    Seq(b1, b2, b3).foreach(b => CorpusJob.processBatch(spark, b.toDF(), clean))
+
+    val dir = java.nio.file.Files.createTempDirectory("corpus_boot_crash").toString
+    CorpusJob.processBatch(spark, b1.toDF(), dir)
+    val seedsP = java.nio.file.Paths.get(s"$dir/seeds")
+    val seedsBak = java.nio.file.Files.createTempDirectory("corpus_boot_seeds")
+    copyTree(seedsP, seedsBak)
+    val sidecars = Seq("corpus_rows", "rebuilds").map(n => java.nio.file.Paths.get(s"$dir/$n"))
+    val sidecarBytes = sidecars.map(java.nio.file.Files.readAllBytes)
+    CorpusJob.processBatch(spark, b2.toDF(), dir)
+    assert(survivors(dir).size >= 4, "setup: batch 2 completes the seed set")
+    LocalFs.rmTree(seedsP.toFile)
+    copyTree(seedsBak, seedsP)
+    sidecars.zip(sidecarBytes).foreach { case (p, b) => java.nio.file.Files.write(p, b) }
+    assert(seedIds(dir).size < 4, "setup: seeds rolled back to the short set")
+
+    CorpusJob.processBatch(spark, b2.toDF(), dir) // the replay
+    CorpusJob.processBatch(spark, b3.toDF(), dir)
+    assert(seedIds(dir) == seedIds(clean))
+    assert(cells(dir) == cells(clean))
+    assert(top(dir) == top(clean))
+    assert(CorpusJob.rebuildCount(dir) == CorpusJob.rebuildCount(clean))
   }
 
   test("seeds sidecar: frozen centroids served without a corpus scan; lost sidecar backfilled") {
@@ -346,49 +384,15 @@ class CorpusJobSpec extends SparkSpecBase {
       "compaction must purge phantom rows back to lockstep")
   }
 
-  test("legacy v1 store (flat corpus, unbucketed bands, no bloom) migrates in place") {
-    // Stores written by the previous layout: corpus as unpartitioned
-    // parquet with `cell` as a data column, band index as root parquet
-    // files, no _v2 marker, no _bloom. The first fast-path batch must
-    // migrate both (cell-partitioned corpus, bucketed+bloomed bands) and
-    // dedup EXACTLY as the one-shot oracle over the same ingest.
-    val docs = loadDocs(60)
-    val dir = java.nio.file.Files.createTempDirectory("corpus_legacy").toString
-    // build a modern store, then flatten it to the v1 layout
-    CorpusJob.processBatch(spark, docs.take(30).toDF(), dir)
-    val corpus = spark.read.parquet(s"$dir/corpus")
-      .select("doc_id", "sig", "emb", "nrm", "cell").localCheckpoint()
-    val bands = CorpusJob.readBands(spark, dir).localCheckpoint()
-    LocalFs.rmTree(new java.io.File(s"$dir/corpus"))
-    LocalFs.rmTree(new java.io.File(s"$dir/bands"))
-    corpus.repartition(2).write.parquet(s"$dir/corpus")      // v1: flat files
-    bands.repartition(1).write.parquet(s"$dir/bands")        // v1: root files
-    assert(new java.io.File(s"$dir/corpus").listFiles().exists(f =>
-      f.isFile && f.getName.endsWith(".parquet")), "setup: flat corpus")
-    // second half (plus a cross-boundary near-dup) through the migration
-    val dup = CorpusDoc(docs.map(_.doc_id).max + 10, docs(5).text + " tok",
-      docs(5).embedding.map(_ + 0.001f))
-    CorpusJob.processBatch(spark, (docs.drop(30) :+ dup).toDF(), dir)
-    assert(new java.io.File(s"$dir/corpus").listFiles().exists(_.getName.startsWith("cell=")),
-      "corpus migrated to cell partitions")
-    assert(new java.io.File(s"$dir/bands/_v2").exists, "bands migrated to v2")
-    assert(!survivors(dir).contains(dup.doc_id), "cross-migration dup dropped")
-    val oneDir = java.nio.file.Files.createTempDirectory("corpus_legacy_one").toString
-    CorpusJob.processBatch(spark, (docs :+ dup).toDF(), oneDir)
-    assert(survivors(dir) == survivors(oneDir),
-      "migrated store must match the one-shot oracle")
-    // retrieval over the migrated store matches too
-    val a = CorpusJob.retrieve(spark, dir, queriesDf).collect().map(_.toSeq).toSet
-    val b = CorpusJob.retrieve(spark, oneDir, queriesDf).collect().map(_.toSeq).toSet
-    assert(a == b && a.nonEmpty)
-  }
-
   test("lost bloom sidecar is backfilled and duplicates are still detected") {
     val docs = loadDocs(40)
     val dir = java.nio.file.Files.createTempDirectory("corpus_bloomloss").toString
     CorpusJob.processBatch(spark, docs.take(20).toDF(), dir)
     assert(java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(s"$dir/bands/_bloom")))
+    // and the _v2 marker: the band index is rebuilt from the corpus too
+    assert(java.nio.file.Files.deleteIfExists(
+      java.nio.file.Paths.get(s"$dir/bands/_v2")))
     val dup = CorpusDoc(docs.map(_.doc_id).max + 1, docs(2).text + " tok",
       docs(2).embedding.map(_ + 0.001f))
     CorpusJob.processBatch(spark, (docs.drop(20) :+ dup).toDF(), dir)

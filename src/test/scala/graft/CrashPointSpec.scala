@@ -20,8 +20,8 @@ import graft.streaming.CorpusJob.CorpusDoc
   *  - a `DimStore.read` inside the crash window shows every key once,
   *    with its old or its new row;
   *  - after the replay, the stores and sinks equal the uninterrupted run;
-  *  - no staging (`_staging/<id>`, `_tmp_upsert`, `_compact_tmp`,
-  *    `_corpus_migrate`) is left behind.
+  *  - no staging (`_staging/<id>`, `_tmp_upsert`, `_compact_tmp`) is left
+  *    behind.
   */
 class CrashPointSpec extends SparkSpecBase {
   import spark.implicits._
@@ -69,7 +69,7 @@ class CrashPointSpec extends SparkSpecBase {
   }
 
   private def residue(root: Path): Seq[Path] = {
-    val names = Set("_tmp_upsert", "_compact_tmp", "_corpus_migrate")
+    val names = Set("_tmp_upsert", "_compact_tmp")
     val w = Files.walk(root)
     try w.iterator.asScala.filter(p => names(p.getFileName.toString) ||
       Option(p.getParent).exists(_.getFileName.toString == "_staging")).toList
@@ -119,34 +119,29 @@ class CrashPointSpec extends SparkSpecBase {
   }
 
   test("DimStore.upsert: every crash point is recovered by the replayed batch") {
-    // `_SUCCESS` off: the store's own seal is the only completion mark
-    spark.conf.set("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-    try {
-      val seed = Files.createTempDirectory("cp_dim_seed").toAbsolutePath
-      new DimStore(spark, seed.toString)
-        .upsert("t", (0L until 64L).map(k => (k, 1L, s"v$k")).toDF("k", "ts", "v"), "k", "ts")
-      val batch = Seq((3L, 2L, "v3b"), (1000L, 2L, "new")).toDF("k", "ts", "v")
-      val before = new DimStore(spark, seed.toString).read("t").get.localCheckpoint()
-      var after: DataFrame = null
-      var cleanBuckets: Seq[String] = Nil
-      val k = everyCrashPoint(() => copyOf(seed, "cp_dim")) { root =>
-        new DimStore(spark, root.toString).upsert("t", batch, "k", "ts")
-      } { root =>
-        assertOldOrNew(new DimStore(spark, root.toString).read("t").get, "k", before, after,
-          s"crash window of $root")
-      } { (k, root) =>
-        // with the bucket column: each row in the bucket it belongs to
-        val buckets = rowsAt(root.resolve("t"))
-        if (k == 0) {
-          cleanBuckets = buckets
-          after = new DimStore(spark, root.toString).read("t").get.localCheckpoint()
-        } else assert(buckets.diff(cleanBuckets).isEmpty && cleanBuckets.diff(buckets).isEmpty,
-          s"k=$k: store differs from the uninterrupted upsert: " +
-            s"extra ${buckets.diff(cleanBuckets)}, missing ${cleanBuckets.diff(buckets)}")
-        assert(text(root.resolve("t/_graft_meta")).contains("keyCol=k\nversionCol=ts\n"))
-      }
-      info(s"K = $k")
-    } finally spark.conf.unset("mapreduce.fileoutputcommitter.marksuccessfuljobs")
+    val seed = Files.createTempDirectory("cp_dim_seed").toAbsolutePath
+    new DimStore(spark, seed.toString)
+      .upsert("t", (0L until 64L).map(k => (k, 1L, s"v$k")).toDF("k", "ts", "v"), "k", "ts")
+    val batch = Seq((3L, 2L, "v3b"), (1000L, 2L, "new")).toDF("k", "ts", "v")
+    val before = new DimStore(spark, seed.toString).read("t").get.localCheckpoint()
+    var after: DataFrame = null
+    var cleanBuckets: Seq[String] = Nil
+    val k = everyCrashPoint(() => copyOf(seed, "cp_dim")) { root =>
+      new DimStore(spark, root.toString).upsert("t", batch, "k", "ts")
+    } { root =>
+      assertOldOrNew(new DimStore(spark, root.toString).read("t").get, "k", before, after,
+        s"crash window of $root")
+    } { (k, root) =>
+      // with the bucket column: each row in the bucket it belongs to
+      val buckets = rowsAt(root.resolve("t"))
+      if (k == 0) {
+        cleanBuckets = buckets
+        after = new DimStore(spark, root.toString).read("t").get.localCheckpoint()
+      } else assert(buckets.diff(cleanBuckets).isEmpty && cleanBuckets.diff(buckets).isEmpty,
+        s"k=$k: store differs from the uninterrupted upsert: " +
+          s"extra ${buckets.diff(cleanBuckets)}, missing ${cleanBuckets.diff(buckets)}")
+    }
+    info(s"K = $k")
   }
 
   test("WarehouseJob batch: every crash point is recovered by the query restarted from its checkpoint") {
@@ -214,7 +209,6 @@ class CrashPointSpec extends SparkSpecBase {
       val phantoms = CorpusJob.readBands(spark, seed.toString).limit(8)
         .withColumn("doc_id", col("doc_id") + 1000000L).localCheckpoint()
       phantoms.repartition(1).write.parquet(seed.resolve("bands/kb=9").toString)
-      val preCount = text(seed.resolve("corpus_rows"))
       // batch 3 appends, then compacts; it carries a near-duplicate of an
       // early document, found only through the base buckets the swap
       // replaces (a replay probes the recovered ones)
@@ -223,7 +217,6 @@ class CrashPointSpec extends SparkSpecBase {
       val batch = (docs.slice(50, 70) :+ dup).toDF()
       var clean: Seq[(String, Any)] = Nil
       var cleanCount: Option[String] = None
-      val staleCount = Seq.newBuilder[Int]
       val k = everyCrashPoint(() => copyOf(seed, "cp_corpus")) { root =>
         CorpusJob.processBatch(spark, batch, root.toString)
       } (_ => ()) { (k, root) =>
@@ -244,13 +237,10 @@ class CrashPointSpec extends SparkSpecBase {
         } else {
           assert(differing(state, clean).isEmpty,
             s"k=$k: ${differing(state, clean).mkString(", ")} differ from the uninterrupted batch")
-          // the survivor count is a hint (see CorpusJob.loadCount): a crash
-          // between the survivor append and its write leaves it stale
-          assert(count == cleanCount || count == preCount, s"k=$k: survivor count $count")
-          if (count != cleanCount) staleCount += k
+          assert(count == cleanCount, s"k=$k: survivor count $count, uninterrupted $cleanCount")
         }
       }
-      info(s"K = $k; survivor count left stale at k = ${staleCount.result().mkString(", ")}")
+      info(s"K = $k")
     } finally {
       spark.conf.unset(CorpusJob.BandBucketsConf)
       spark.conf.unset(CorpusJob.CompactEveryConf)

@@ -2,39 +2,48 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.functions._
-import graft.sources.DimStore
+import graft.sources.{DimStore, LocalFs}
 
 /** The bucketed dim store (S8/ST8). `CrashPointSpec` crashes an upsert
   * before each of its commit steps; the crash-window cases here are the
   * on-disk states it cannot produce —
   *
-  *  - swap window of a store staged by older code, whose staging is marked
-  *    complete only by the committer's `_SUCCESS`: `read()` must read the
-  *    staging in, and the next `upsert()` must first complete the pending
-  *    swaps instead of deleting the staging (which would drop every key
-  *    not in the retry's batch);
-  *  - write window: the crash landed MID staged write (no `_SUCCESS`, no
-  *    seal, unreadable files), so no destination bucket was touched;
-  *    dropping the partial staging is the correct recovery;
-  *  - a pre-meta store in the swap window.
+  *  - swap window retried by a DIFFERENT batch: `read()` must read the
+  *    sealed staging in, and the next `upsert()` must first complete the
+  *    pending swaps instead of deleting the staging (which would drop
+  *    every key not in the retry's batch);
+  *  - write window: the crash landed MID staged write (no seal,
+  *    unreadable files), so no destination bucket was touched; dropping
+  *    the partial staging is the correct recovery;
+  *  - swap window before a live bucket's delete, with a staged copy that
+  *    duplicates the live one.
   */
 class DimStoreSpec extends SparkSpecBase {
 
   private def keySet(df: org.apache.spark.sql.DataFrame): Set[Long] =
     df.select("k").collect().map(_.getLong(0)).toSet
 
+  /** The bucket each key of `table` lives in, read off the store's own
+    * `graft_bucket=` dirs (partition discovery), so no test repeats the
+    * store's bucket hash.
+    */
+  private def bucketsOnDisk(base: String, table: String): Map[Long, Int] = {
+    import spark.implicits._
+    spark.read.parquet(s"$base/$table").select("k", "graft_bucket")
+      .as[(Long, Int)].collect().toMap
+  }
+
   /** Manufacture the swap window for bucket `b` of `table`: move the live
     * bucket dir into a fresh `_tmp_upsert` (as the completed staging's
-    * output) and mark it `_SUCCESS` — the on-disk state after the live
-    * bucket's delete succeeded and the move never ran.
+    * output) and seal it — the on-disk state after the live bucket's
+    * delete succeeded and the move never ran.
     */
   private def makeSwapWindow(base: String, table: String, b: Int): Unit = {
     val tmp = Paths.get(s"$base/$table/_tmp_upsert")
     Files.createDirectories(tmp)
     Files.move(Paths.get(s"$base/$table/graft_bucket=$b"),
       tmp.resolve(s"graft_bucket=$b"), StandardCopyOption.ATOMIC_MOVE)
-    Files.createFile(tmp.resolve("_SUCCESS"))
-    ()
+    LocalFs.seal(tmp.toFile)
   }
 
   test("swap-window crash: read is lossless and the retry recovers the staged bucket") {
@@ -154,8 +163,7 @@ class DimStoreSpec extends SparkSpecBase {
     // must survive a LATER upsert of that bucket from a FRESH store
     // instance (process restart, empty cache) whose batch lacks the column
     // — the cache re-seeds from ALL bucket dirs, so the merged read still
-    // carries it. Asserted against the bucket files (mergeSchema read);
-    // `read()`'s plain partition read is a separate, unchanged surface.
+    // carries it. Asserted against the bucket files (mergeSchema read).
     import spark.implicits._
     val base = Files.createTempDirectory("dimstore_schema").toString
     val store = new DimStore(spark, base)
@@ -206,5 +214,47 @@ class DimStoreSpec extends SparkSpecBase {
     assert(row3.length == 1)
     assert(row3.head.getAs[Long]("ts") == 5L && row3.head.getAs[String]("w") == "extra3")
     assert(all.count() == 64)
+  }
+
+  test("read() shows a column that only some buckets hold, with the store's superset schema") {
+    // a plain partitioned read takes its schema from one file, so it
+    // drops a column that graft_bucket=0 lacks
+    import spark.implicits._
+    val base = Files.createTempDirectory("dimstore_readschema").toString
+    val store = new DimStore(spark, base)
+    store.upsert("t", (0L until 64L).map(k => (k, 1L, s"v$k")).toDF("k", "ts", "v"), "k", "ts")
+    val bucketOf = bucketsOnDisk(base, "t")
+    assert(bucketOf.values.toSet.contains(0), "setup: graft_bucket=0 holds a key")
+    val key = bucketOf.collectFirst { case (k, b) if b != 0 => k }.get
+    store.upsert("t", Seq((key, 2L, "vw", "extra")).toDF("k", "ts", "v", "w"), "k", "ts")
+    def check(r: org.apache.spark.sql.DataFrame): Unit = {
+      assert(r.columns.toSeq == Seq("k", "ts", "v", "w"))
+      val w = r.select("k", "w").as[(Long, Option[String])].collect().toMap
+      assert(w.size == 64 && w(key).contains("extra"))
+      assert((w - key).values.forall(_.isEmpty))
+    }
+    check(store.read("t").get)
+    DimStore.bucketSchemaCache.clear() // a restart: read() re-seeds the superset
+    check(new DimStore(spark, base).read("t").get)
+  }
+
+  test("an upsert touching only new buckets keeps every column in the schema cache") {
+    // a cache refreshed to the staged write's schema alone narrows when a
+    // batch lands only in empty buckets, and the next rewrite of a bucket
+    // holding the dropped column writes the bucket back without it
+    import spark.implicits._
+    val base = Files.createTempDirectory("dimstore_newbucket").toString
+    val store = new DimStore(spark, base)
+    store.upsert("t", Seq((1L, 1L, "a", "w1")).toDF("k", "ts", "v", "w"), "k", "ts")
+    store.upsert("probe", (1L until 100L).map(k => (k, 1L)).toDF("k", "ts"), "k", "ts")
+    val bucketOf = bucketsOnDisk(base, "probe")
+    val other = (2L until 100L).find(k => bucketOf(k) != bucketOf(1L)).get
+    store.upsert("t", Seq((other, 1L, "b")).toDF("k", "ts", "v"), "k", "ts")
+    store.upsert("t", Seq((1L, 0L, "stale")).toDF("k", "ts", "v"), "k", "ts")
+    // the bucket files themselves, not read(), which widens to the cache
+    val dirs = LocalFs.listDirs(new java.io.File(s"$base/t"), "graft_bucket=").map(_.getPath)
+    val all = spark.read.option("mergeSchema", "true").parquet(dirs: _*)
+    assert(all.columns.contains("w"), "the rewrite of key 1's bucket dropped column w")
+    assert(all.filter(col("k") === 1L).select("ts", "w").as[(Long, String)].collect().toSeq == Seq((1L, "w1")))
   }
 }

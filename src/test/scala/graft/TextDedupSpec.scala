@@ -110,11 +110,12 @@ class TextDedupSpec extends SparkSpecBase {
     }
     val before = snapshot()
     assert(before.keys.exists(_.startsWith("graft_bucket=")), s"bucket layout missing: ${before.keys}")
+    // key 7's bucket, read off the bucket dirs (partition discovery)
+    val touched = spark.read.parquet(s"$dir/dim_user").filter(col("id") === 7L)
+      .select("graft_bucket").head.getInt(0)
     // single-key upsert: only key 7's bucket may change
     store.upsert("dim_user", Seq((7L, "updated", 2L)).toDF("id", "name", "v"), "id", "v")
     val after = snapshot()
-    val touched = spark.range(1)
-      .select(pmod(xxhash64(lit("7")), lit(16L)).cast("int")).head.getInt(0)
     val untouchedBefore = before.filter(!_._1.startsWith(s"graft_bucket=$touched"))
     val untouchedAfter = after.filter(!_._1.startsWith(s"graft_bucket=$touched"))
     assert(untouchedAfter == untouchedBefore,
@@ -126,73 +127,12 @@ class TextDedupSpec extends SparkSpecBase {
     assert(store.read("dim_user").get.count() == 64)
   }
 
-  test("DimStore mixed-layout retry (crashed migration) converges without data loss") {
-    val dir = java.nio.file.Files.createTempDirectory("dimstore_retry").toString
-    val store = new graft.sources.DimStore(spark, dir)
-    // bucketed store with rows 1..10 (normal migration)
-    (1L to 10L).map(i => (i, s"n$i", 1L)).toDF("id", "name", "v")
-      .write.parquet(s"$dir/dim_user")
-    store.upsert("dim_user", Seq((1L, "m", 2L)).toDF("id", "name", "v"), "id", "v")
-    // simulate a crashed second migration: a leftover FLAT file lands next
-    // to the bucket dirs, holding an overlap (id 3, OLDER version) and a
-    // row not yet in any bucket (id 11)
-    val stage = java.nio.file.Files.createTempDirectory("stage").toString + "/out"
-    // coalesce(1): the planted leftover must be ONE part file holding BOTH
-    // rows — an uncoalesced 2-row write splits across two part files and
-    // copying `head` would plant only id 3, making the assertions below
-    // claim data loss that never happened
-    Seq((3L, "stale", 0L), (11L, "extra", 1L)).toDF("id", "name", "v")
-      .coalesce(1).write.parquet(stage)
-    val part = new java.io.File(stage).listFiles()
-      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
-    java.nio.file.Files.copy(part.toPath,
-      java.nio.file.Paths.get(s"$dir/dim_user/leftover.parquet"))
-    // retry upsert: must read the flat leftovers by explicit path (mixed
-    // layout), merge them WITH existing bucket contents, and converge
-    store.upsert("dim_user", Seq((2L, "upd", 3L)).toDF("id", "name", "v"), "id", "v")
-    val rows = store.read("dim_user").get.as[(Long, String, Long)].collect()
-      .map { case (id, name, v) => id -> (name, v) }.toMap
-    assert(rows.size == 11, s"expected 11 keys, got ${rows.keySet.toSeq.sorted}")
-    assert(rows(3L) == ("n3", 1L), "older leftover version must lose to the bucket row")
-    assert(rows(11L) == ("extra", 1L), "leftover-only row must be folded in")
-    assert(rows(2L) == ("upd", 3L) && rows(1L) == ("m", 2L))
-    assert(!new java.io.File(s"$dir/dim_user/leftover.parquet").exists,
-      "flat leftovers must be removed after the retry")
-  }
-
-  test("DimStore.read collapses a mixed (crashed-migration) layout without an upsert") {
-    val dir = java.nio.file.Files.createTempDirectory("dimstore_mixedread").toString
-    val store = new graft.sources.DimStore(spark, dir)
-    store.upsert("dim_user",
-      (1L to 10L).map(i => (i, s"n$i", 1L)).toDF("id", "name", "v"), "id", "v")
-    // plant a flat leftover (single part file!) next to the bucket dirs:
-    // id 3 at an OLDER version than its bucket row, id 11 new
-    val stage = java.nio.file.Files.createTempDirectory("stage").toString + "/out"
-    Seq((3L, "stale", 0L), (11L, "extra", 1L)).toDF("id", "name", "v")
-      .coalesce(1).write.parquet(stage)
-    val part = new java.io.File(stage).listFiles()
-      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
-    java.nio.file.Files.copy(part.toPath,
-      java.nio.file.Paths.get(s"$dir/dim_user/leftover.parquet"))
-    // read() — NOT a retry upsert — must return the merged, version-deduped
-    // table: the store is readable in the exact window upsert's retry handles
-    val rows = store.read("dim_user").get.as[(Long, String, Long)].collect()
-      .map { case (id, name, v) => id -> (name, v) }.toMap
-    assert(rows.size == 11, s"expected 11 keys, got ${rows.keySet.toSeq.sorted}")
-    assert(rows(3L) == ("n3", 1L), "older leftover version must lose to the bucket row")
-    assert(rows(11L) == ("extra", 1L), "leftover-only row must be visible")
-    // lookup() rides the same path
-    assert(store.lookup("dim_user", "id", 11L).head.getString(1) == "extra")
-  }
-
   test("DimStore.read of a meta-only dir (crash before first bucket write) is an empty store") {
+    // the table dir exists but holds no bucket yet
     val dir = java.nio.file.Files.createTempDirectory("dimstore_metaonly").toString
     val store = new graft.sources.DimStore(spark, dir)
     new java.io.File(s"$dir/dim_user").mkdirs()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/dim_user/_graft_meta"),
-      "keyCol=id\nversionCol=v\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    assert(store.read("dim_user").isEmpty, "meta-only dir must read as empty, not throw")
+    assert(store.read("dim_user").isEmpty, "a table dir with no bucket must read as empty, not throw")
     assert(store.lookup("dim_user", "id", 1L).isEmpty)
     // and the next upsert proceeds normally from the empty state
     store.upsert("dim_user", Seq((1L, "a", 1L)).toDF("id", "name", "v"), "id", "v")
@@ -220,20 +160,5 @@ class TextDedupSpec extends SparkSpecBase {
     val zero = store.read("dim_user").get.filter("id = 0").collect()
     assert(zero.length == 1 && zero.head.getString(1) == "zero_double",
       s"zero key split across buckets: ${zero.mkString(", ")}")
-  }
-
-  test("DimStore migrates a legacy flat store to buckets in one upsert") {
-    val dir = java.nio.file.Files.createTempDirectory("dimstore_legacy").toString
-    // legacy layout: parquet files directly under the table dir
-    (1L to 10L).map(i => (i, s"n$i", 1L)).toDF("id", "name", "v")
-      .write.parquet(s"$dir/dim_user")
-    val store = new graft.sources.DimStore(spark, dir)
-    store.upsert("dim_user", Seq((3L, "migrated", 2L)).toDF("id", "name", "v"), "id", "v")
-    val tableDir = new java.io.File(s"$dir/dim_user")
-    assert(!tableDir.listFiles().exists(f => f.isFile && f.getName.endsWith(".parquet")),
-      "legacy flat files not removed")
-    assert(store.read("dim_user").get.count() == 10)
-    assert(store.lookup("dim_user", "id", 3L).head.getString(1) == "migrated")
-    assert(store.lookup("dim_user", "id", 5L).head.getString(1) == "n5")
   }
 }
