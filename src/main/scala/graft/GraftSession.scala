@@ -24,8 +24,13 @@ import org.apache.spark.sql.SparkSession
   * file contents, modes and commit atomicity are too.
   */
 object GraftSession {
-  def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-              shufflePartitions: Int = 32): SparkSession.Builder =
+  /** Local core count: `SPARK_GRAFT_CPUS`, else the 32-core rig's. The
+    * default master and the default shuffle-partition count both follow it.
+    */
+  private def cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
+  def builder(master: String = s"local[$cores]",
+              shufflePartitions: Int = cores.toInt): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .appName("graft")

@@ -166,7 +166,8 @@ object LogPipeline {
     * follow-up (side-output branch) → bounce. Here: event_type='view' is the
     * session start, timeout 10 minutes; `lead()` over (user, time) gives both
     * the matched and the timed-out branch in one pass. Streaming rendering:
-    * transformWithState with an event-time timer (graft.streaming).
+    * `StreamOps.j4BounceDetect`, flatMapGroupsWithState with an event-time
+    * timeout.
     */
   def j4Transform(ev: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(tsSec.asc, col("event_id").asc)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale utilities: the levers a 100 TB deployment pulls that small-SF
@@ -63,10 +63,12 @@ object Scale {
   val BroadcastGateConf = "spark.graft.broadcastGateBytes"
   val BroadcastGateDefault: Long = 100L << 20
 
+  /** The session's broadcast gate in bytes (`spark.graft.broadcastGateBytes`). */
+  def broadcastGate(spark: SparkSession): Long =
+    spark.conf.get(BroadcastGateConf, BroadcastGateDefault.toString).toLong
+
   def maybeBroadcast(df: DataFrame, maxBytes: Long = -1L): DataFrame = {
-    val bound =
-      if (maxBytes > 0) maxBytes
-      else df.sparkSession.conf.get(BroadcastGateConf, BroadcastGateDefault.toString).toLong
+    val bound = if (maxBytes > 0) maxBytes else broadcastGate(df.sparkSession)
     if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(bound)) broadcast(df)
     else df
   }
@@ -100,9 +102,7 @@ object Scale {
     */
   def maybeBroadcastMeasured(df: DataFrame, maxBytes: Long = -1L,
                              elseHint: String = ""): DataFrame = {
-    val bound =
-      if (maxBytes > 0) maxBytes
-      else df.sparkSession.conf.get(BroadcastGateConf, BroadcastGateDefault.toString).toLong
+    val bound = if (maxBytes > 0) maxBytes else broadcastGate(df.sparkSession)
     if (measuredBytes(df) <= bound) broadcast(df)
     else if (elseHint.nonEmpty) df.hint(elseHint)
     else df

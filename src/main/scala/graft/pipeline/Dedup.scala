@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.operators.Scale.maybeBroadcast
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions
 
@@ -15,17 +16,6 @@ import graft.functions.VectorFunctions
   * ever run inside a bucket / blocking group.
   */
 object Dedup {
-
-  /** Broadcast-hint a corpus-derived table only when it is actually small:
-    * an unconditional `broadcast()` of a table that scales with the corpus
-    * would force driver-side collection at 100 TB. Gated on Catalyst's
-    * byte estimate (`Scale.maybeBroadcast`) — the earlier row-count gate
-    * both mis-measured (2M rows of token ARRAYS is multi-GB) and paid an
-    * extra `count()` job inside every timed query.
-    */
-  private def maybeBroadcast(df: DataFrame): DataFrame =
-    graft.operators.Scale.maybeBroadcast(df)
-
 
   /** Exact dedup: hash-groupBy on the normalized-text fingerprint. One
     * shuffle on a 128-bit key; at 100 TB this is the cheapest possible
@@ -994,9 +984,7 @@ object Dedup {
       .select(explode(col("bag")).as("b")).select(col("b.tok").as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val limit = col("total") - ceil(col("total") * lit(pruneT)) + 1
-    val gate = base.sparkSession.conf
-      .get(graft.operators.Scale.BroadcastGateConf,
-        graft.operators.Scale.BroadcastGateDefault.toString).toLong
+    val gate = graft.operators.Scale.broadcastGate(base.sparkSession)
     if (dfreq.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(gate)) {
       // vocab as one sorted row; localCheckpoint: (a) the dfreq aggregation
       // runs once however many times the probe plan is consumed, and (b)

@@ -81,9 +81,8 @@ object Graph {
     // maybeBroadcastMeasured was iters−1 redundant jobs. Same gate, same
     // shuffled-hash fallback past it (the 100 TB posture where |V|
     // outgrows the driver).
-    val gate = spark.conf.get(graft.operators.Scale.BroadcastGateConf,
-      graft.operators.Scale.BroadcastGateDefault.toString).toLong
-    val prSmall = graft.operators.Scale.measuredBytes(pr) <= gate
+    val prSmall =
+      graft.operators.Scale.measuredBytes(pr) <= graft.operators.Scale.broadcastGate(spark)
     for (_ <- 1 to iters) {
       // ONE exchange per iteration (r14, guide §2.4). The rank vector is
       // |V| rows off its own checkpoint, so the edge attach broadcasts

@@ -159,29 +159,36 @@ class DimStore(spark: SparkSession, basePath: String,
     // superset of every on-disk bucket, and parquet nulls the gaps of
     // files missing a cached column exactly like mergeSchema did. Buckets
     // can still legitimately differ in schema (an upsert batch with new
-    // columns rewrites only ITS buckets).
-    val bucketExisting: Option[DataFrame] = phase("bucket_open") {
+    // columns rewrites only ITS buckets), but never in a column's type: a
+    // batch that widens one (a Long key arriving as Double) rewrites EVERY
+    // bucket, since parquet cannot read an INT64 column as double and a
+    // store with mixed types could be read by no single schema.
+    //
+    // The merge runs WITHOUT the bucket column so the dedup tie-break hash
+    // sees exactly the upserted schema (the bucket is re-derived afterwards
+    // — it is a pure function of the key, so rows land where they came from).
+    val merged: DataFrame = phase("bucket_open") {
       val live = LocalFs.listDirs(tableDir, "graft_bucket=")
-      if (live.isEmpty) None
+      if (live.isEmpty) batch
       else {
         val sch = schemaOf(table, live)
-        val paths = touched.map(i => new java.io.File(tableDir, s"graft_bucket=$i"))
-          .filter(_.exists).map(_.getPath)
-        Some(if (paths.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), sch)
-          else spark.read.schema(sch).parquet(paths: _*))
+        def mergeWith(paths: Seq[String]) = batch.unionByName(
+          if (paths.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), sch)
+          else spark.read.schema(sch).parquet(paths: _*),
+          allowMissingColumns = true)
+        val touchedOnly = mergeWith(touched.map(i => new java.io.File(tableDir, s"graft_bucket=$i"))
+          .filter(_.exists).map(_.getPath))
+        if (sch.forall(f => touchedOnly.schema(f.name).dataType == f.dataType)) touchedOnly
+        else mergeWith(live.map(_.getPath))
       }
     }
-    // merge WITHOUT the bucket column so the dedup tie-break hash sees
-    // exactly the upserted schema (the bucket is re-derived afterwards —
-    // it is a pure function of the key, so rows land where they came from)
-    val merged = bucketExisting.fold(batch)(batch.unionByName(_, allowMissingColumns = true))
     val deduped = dedupLatest(merged, keyCol, versionCol)
     val staged = deduped.withColumn("graft_bucket", bucketOf(deduped, keyCol))
     val tmp = staging(table)
     phase("staged_write") {
       // repartition ON the partition column first: the dedup window leaves
-      // the frame hash-partitioned by key (32 shuffle partitions), and
-      // `partitionBy` from that layout writes up to 32 files PER BUCKET —
+      // the frame hash-partitioned by key, and `partitionBy` from that
+      // layout writes up to one file per shuffle partition PER BUCKET —
       // each an output-task file commit. One partition per bucket writes
       // exactly one file per bucket: the bucket is this store's unit of
       // rewrite (a bigger store needs a bigger `Buckets`, not more files
@@ -199,7 +206,7 @@ class DimStore(spark: SparkSession, basePath: String,
     // untouched bucket; the touched buckets ARE this schema)
     DimStore.bucketSchemaCache.put(cacheKey(table), merged.schema)
     phase("swap") {
-      // the staged buckets are exactly the touched ones: a touched bucket
+      // the staged buckets are exactly the ones read or touched: each
       // stages ≥1 row, and every merged row re-hashes to the bucket it came
       // from (the bucket count is fixed)
       recoverStaged(table)

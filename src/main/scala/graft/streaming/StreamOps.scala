@@ -29,6 +29,14 @@ object StreamOps {
     f.format(new java.util.Date((ts.getTime / 1000L) * 1000L)) // truncate to second
   }
 
+  /** Full-µs epoch of `t`: `getTime` is ms-truncated, the nanos field
+    * carries the complete fractional second (events are timestamp[us]
+    * parquet), so strict-after comparisons see the same instants as the
+    * batch renderings' timestamp comparisons.
+    */
+  private[streaming] def micros(t: Timestamp): Long =
+    math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
+
   /** ST1 streaming: new/returning visitor correction
     * (`app/dwd/BaseLogApp.java:71-96`). Keyed ValueState — here the
     * GroupState holds "seen" per user; only the first-ever event (by
@@ -121,6 +129,55 @@ object StreamOps {
       .withWatermark("ts", watermark)
       .select(col("user_id"), col("ts"), to_date(col("ts")).as("dt"))
       .dropDuplicatesWithinWatermark("user_id", "dt")
+
+  /** ST2 with the reference's exact state TTL
+    * (`app/dwm/UniqueVisitApp.java:54-87`): keyed state holds the last
+    * passed date per user and the processing time it passed at; an event
+    * passes iff its date differs from the stored one or `ttl` has elapsed
+    * since that pass. Only a pass writes state, so the TTL counts from the
+    * last write — the reference's
+    * `StateTtlConfig.newBuilder(Time.hours(24)).setUpdateType(OnCreateAndWrite)`.
+    *
+    * `flatMapGroupsWithState` resets a key's timeout on every call, so the
+    * timeout is re-armed at the stored pass time + `ttl`: a suppressed
+    * duplicate does not push the expiry back. A timed-out key's state is
+    * removed. A zero `ttl` keeps state forever (no timeout). Unlike the
+    * watermark-scoped `st2DedupedVisits`, the TTL runs on processing
+    * time, like the reference's.
+    *
+    * input: (user_id, date-string); output: first event per (user, date)
+    * within the TTL horizon.
+    */
+  def st2UvDedupTtl(events: Dataset[(Long, String)],
+      ttl: java.time.Duration = java.time.Duration.ofHours(24)): Dataset[(Long, String)] = {
+    import events.sparkSession.implicits._
+    val ttlMs = ttl.toMillis
+    val timeout =
+      if (ttlMs == 0L) GroupStateTimeout.NoTimeout() else GroupStateTimeout.ProcessingTimeTimeout()
+    events
+      .groupByKey(_._1)
+      .flatMapGroupsWithState(OutputMode.Update(), timeout) {
+        (_: Long, rows: Iterator[(Long, String)], state: GroupState[(String, Long)]) =>
+          if (state.hasTimedOut) {
+            state.remove()
+            Iterator.empty
+          } else {
+            val now = state.getCurrentProcessingTimeMs()
+            val out = Seq.newBuilder[(Long, String)]
+            rows.foreach { r =>
+              val pass = state.getOption.forall { case (date, passMs) =>
+                date != r._2 || (ttlMs > 0L && now - passMs >= ttlMs)
+              }
+              if (pass) {
+                out += r
+                state.update((r._2, now))
+              }
+            }
+            if (ttlMs > 0L) state.setTimeoutDuration(state.get._2 + ttlMs - now)
+            out.result().iterator
+          }
+      }
+  }
 
   /** Streaming corpus ingest with exact-dup suppression — the streaming
     * face of `Dedup.exact`: every incoming document is keyed by its
@@ -406,11 +463,6 @@ object StreamOps {
     */
   def a13FunnelStages(events: Dataset[Event]): Dataset[FunnelRow] = {
     import events.sparkSession.implicits._
-    // full micro precision: strict-after comparisons must see the same
-    // instants the batch rendering's timestamp comparisons do, not a
-    // millis truncation that could tie sub-millisecond neighbors
-    def micros(t: Timestamp): Long =
-      math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
     events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
@@ -651,6 +703,120 @@ object StreamOps {
             else BigDecimal((k - 1).toDouble * TWO60 / sk.last.toDouble)
               .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
           Iterator.single(KmvRow(et, est, sk.size))
+      }
+  }
+
+  /** One event's lateness: how far its user's event-time high-water mark
+    * had already passed the event's time on arrival.
+    */
+  case class LateRow(event_id: Long, user_id: Long, late_us: Long)
+
+  /** Live out-of-orderness monitor — the streaming twin of the batch
+    * `Relational.a25LatenessProfile` audit: per event,
+    * `late_us = max(0, maxSoFar − ts)` against the SAME user's event-time
+    * high-water mark. Run beside a production job it answers continuously
+    * what the batch audit answers retrospectively: does the configured
+    * watermark still cover the lateness tail (ST4/ST6 operational
+    * companion).
+    *
+    * State is ONE long per user (the mark). Arrival order: event_id is the
+    * ingest sequence (the batch audit's convention), so each micro-batch's
+    * per-user rows are processed in event_id order and cross-batch order
+    * follows batch arrival — feeding batches in ingest order reproduces
+    * the batch audit exactly (parity-tested).
+    */
+  def a25LatenessMonitor(events: Dataset[Event]): Dataset[LateRow] = {
+    import events.sparkSession.implicits._
+    events
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
+        (user: Long, rows: Iterator[Event], state: GroupState[Long]) =>
+          var mark = state.getOption
+          val out = rows.toSeq.sortBy(_.event_id).map { e =>
+            val tsu = micros(e.ts)
+            val late = mark.fold(0L)(m => math.max(0L, m - tsu))
+            mark = Some(mark.fold(tsu)(math.max(_, tsu)))
+            LateRow(e.event_id, user, late)
+          }
+          mark.foreach(state.update)
+          out.iterator
+      }
+  }
+
+  /** One purchase's running decayed value as of its own time `tsu` (µs). */
+  case class DecayRow(event_id: Long, user_id: Long, tsu: Long, decayed_value: Double)
+
+  /** Streaming twin of the batch `Relational.a26ValueDecay` feature: the
+    * RUNNING exponentially-decayed user value, kept by forward decay — on
+    * each purchase `v ← v·2^(−(t−t_prev)/halfLife) + value`, so state is
+    * two numbers per user (the decayed value as of the last event, and
+    * that event's time) whatever the history length (Cormode et al.'s
+    * forward decay). Decaying the running value to any reference instant
+    * equals the batch Σ value·2^(−(ref−tᵢ)/halfLife); the parity test
+    * checks that identity against `a26ValueDecay` (to float tolerance: the
+    * incremental product associates differently than the batch fold).
+    * Within a micro-batch, purchases fold in (event time, event_id) order.
+    */
+  def a26DecayedValue(purchases: Dataset[Event],
+      halfLifeDays: Double = 30.0): Dataset[DecayRow] = {
+    import purchases.sparkSession.implicits._
+    val halfLifeUs = halfLifeDays * 86400e6
+    purchases
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
+        (user: Long, rows: Iterator[Event], state: GroupState[(Double, Long)]) =>
+          var st = state.getOption
+          val out = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id)).map { e =>
+            val tsu = micros(e.ts)
+            val v = st.fold(0.0) { case (vPrev, tPrev) =>
+              vPrev * math.pow(2.0, -((tsu - tPrev).toDouble / halfLifeUs)) } + e.value
+            st = Some((v, tsu))
+            DecayRow(e.event_id, user, tsu, v)
+          }
+          st.foreach(state.update)
+          out.iterator
+      }
+  }
+
+  /** One event's CUSUM step: both drift sums after it, and whether it
+    * raised the alarm.
+    */
+  case class CusumRow(event_id: Long, event_type: String, tsu: Long,
+                      s_pos: Double, s_neg: Double, alarm: Long)
+
+  /** Streaming drift alarm: Page's recursive CUSUM per event type — the
+    * ONLINE twin of the batch `a30_cusum_change` scan. Where the batch op
+    * locates a level shift retrospectively, the streaming form detects it
+    * as it happens with two numbers of state per key:
+    *
+    *   S⁺ ← max(0, S⁺ + (x − μ0 − k))   (upward drift)
+    *   S⁻ ← max(0, S⁻ + (μ0 − k − x))   (downward drift)
+    *
+    * and raises the alarm when either exceeds the decision interval `h`
+    * (`threshold`), then restarts (the Page reset, so repeated shifts
+    * re-alarm). μ0/k/h are calibration constants from the batch profile
+    * (reference mean, half the shift worth detecting, the ARL knob):
+    * calibrate offline (a29/a30), watch online. Within a micro-batch,
+    * events fold in (event time, event_id) order, so emissions are
+    * deterministic under replay.
+    */
+  def a30CusumAlarms(events: Dataset[Event], mu0: Double, slack: Double,
+      threshold: Double): Dataset[CusumRow] = {
+    import events.sparkSession.implicits._
+    events
+      .groupByKey(_.event_type)
+      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
+        (et: String, rows: Iterator[Event], state: GroupState[(Double, Double)]) =>
+          var (sp, sn) = state.getOption.getOrElse((0.0, 0.0))
+          val out = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id)).map { e =>
+            val spNew = math.max(0.0, sp + (e.value - mu0 - slack))
+            val snNew = math.max(0.0, sn + (mu0 - slack - e.value))
+            val alarm = spNew > threshold || snNew > threshold
+            if (alarm) { sp = 0.0; sn = 0.0 } else { sp = spNew; sn = snNew }
+            CusumRow(e.event_id, et, micros(e.ts), spNew, snNew, if (alarm) 1L else 0L)
+          }
+          state.update((sp, sn))
+          out.iterator
       }
   }
 }

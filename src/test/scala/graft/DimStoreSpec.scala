@@ -257,4 +257,28 @@ class DimStoreSpec extends SparkSpecBase {
     assert(all.columns.contains("w"), "the rewrite of key 1's bucket dropped column w")
     assert(all.filter(col("k") === 1L).select("ts", "w").as[(Long, String)].collect().toSeq == Seq((1L, "w1")))
   }
+
+  test("a key whose type changed survives a restart: every key read once, the next upsert succeeds") {
+    // the Double upsert widens k: rewriting only key 7's bucket as
+    // k: double would leave the others at k: bigint, a store that no one
+    // schema reads (a strict merge refuses it, and parquet cannot read
+    // INT64 as double), so a restarted process could neither read nor
+    // upsert
+    import spark.implicits._
+    val base = Files.createTempDirectory("dimstore_keytype").toString
+    val store = new DimStore(spark, base)
+    store.upsert("t", (0L until 64L).map(k => (k, 1L, s"v$k")).toDF("k", "ts", "v"), "k", "ts")
+    store.upsert("t", Seq((7.0, 2L, "v7b")).toDF("k", "ts", "v"), "k", "ts")
+    DimStore.bucketSchemaCache.clear() // a restart
+    val restarted = new DimStore(spark, base)
+    def rows() = restarted.read("t").get
+      .select(col("k").cast("long"), col("v")).as[(Long, String)].collect().toSeq
+    val keys = rows().map(_._1)
+    assert(keys.sorted == (0L until 64L), s"keys lost or duplicated: ${keys.sorted}")
+    assert(rows().toMap.apply(7L) == "v7b")
+    restarted.upsert("t", Seq((8L, 3L, "v8b")).toDF("k", "ts", "v"), "k", "ts")
+    val after = rows()
+    assert(after.map(_._1).sorted == (0L until 64L))
+    assert(after.toMap.apply(8L) == "v8b" && after.toMap.apply(7L) == "v7b")
+  }
 }

@@ -74,181 +74,110 @@ class StreamingParitySpec extends SparkSpecBase {
     assert(got == batch)
   }
 
-  test("ST1 parity: transformWithState ValueState == batch row_number oracle") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val batch = LogPipeline.st1Transform(fixture.toDF())
-        .as[(Long, Long, Long)].collect().toSet
-      val got = runStream(Seq(fixture.take(4), fixture.drop(4)), "update") { df =>
-        graft.streaming.IsNewProcessor(df.as[Event]).toDF()
-      }.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(got == batch)
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
   test("lateness monitor parity: transformWithState high-water mark == batch a25 definition") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // real corpus slice, fed strictly in ingest (event_id) order — plus
-      // three planted regressions (the sf corpus arrives in-order by
-      // event_id, so the monitor needs injected disorder to show nonzero)
-      val real = graft.Tables.events(spark, "/root/testdata/sf0.001")
-        .withColumn("ts", col("ts").cast("timestamp"))
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .as[Event].collect().sortBy(_.event_id).take(300).toSeq
-      val lateUsers = real.map(_.user_id).distinct.take(3)
-      val planted = lateUsers.zipWithIndex.map { case (u, i) =>
-        val anchor = real.filter(_.user_id == u).maxBy(_.event_id)
-        Event(1000000L + i, new java.sql.Timestamp(anchor.ts.getTime - (i + 1) * 7000L),
-          u, "late_probe", 0.0)
-      }
-      val evs = real ++ planted // ids past the slice: arrive last, behind the mark
-      // batch truth: per-user running max of event-time in ingest order
-      def micros(t: java.sql.Timestamp): Long =
-        math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-      val want = evs.groupBy(_.user_id).values.flatMap { grp =>
-        var maxSoFar = Long.MinValue
-        grp.sortBy(_.event_id).map { e =>
-          val tsu = micros(e.ts)
-          val late = if (maxSoFar == Long.MinValue) 0L else math.max(0L, maxSoFar - tsu)
-          maxSoFar = math.max(maxSoFar, tsu)
-          (e.event_id, e.user_id, late)
-        }
-      }.toSet
-      val got = runStream(Seq(evs.take(150), evs.drop(150)), "update") { df =>
-        graft.streaming.LatenessProcessor(df.as[Event]).toDF()
-      }.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(got == want)
-      // the monitor actually observes disorder in this corpus
-      assert(got.exists(_._3 > 0L), "test slice has no late events — weak fixture")
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    // real corpus slice, fed strictly in ingest (event_id) order — plus
+    // three planted regressions (the sf corpus arrives in-order by
+    // event_id, so the monitor needs injected disorder to show nonzero)
+    val real = graft.Tables.events(spark, "/root/testdata/sf0.001")
+      .withColumn("ts", col("ts").cast("timestamp"))
+      .select("event_id", "ts", "user_id", "event_type", "value")
+      .as[Event].collect().sortBy(_.event_id).take(300).toSeq
+    val lateUsers = real.map(_.user_id).distinct.take(3)
+    val planted = lateUsers.zipWithIndex.map { case (u, i) =>
+      val anchor = real.filter(_.user_id == u).maxBy(_.event_id)
+      Event(1000000L + i, new java.sql.Timestamp(anchor.ts.getTime - (i + 1) * 7000L),
+        u, "late_probe", 0.0)
     }
+    val evs = real ++ planted // ids past the slice: arrive last, behind the mark
+    // batch truth: per-user running max of event-time in ingest order
+    def micros(t: java.sql.Timestamp): Long =
+      math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
+    val want = evs.groupBy(_.user_id).values.flatMap { grp =>
+      var maxSoFar = Long.MinValue
+      grp.sortBy(_.event_id).map { e =>
+        val tsu = micros(e.ts)
+        val late = if (maxSoFar == Long.MinValue) 0L else math.max(0L, maxSoFar - tsu)
+        maxSoFar = math.max(maxSoFar, tsu)
+        (e.event_id, e.user_id, late)
+      }
+    }.toSet
+    val got = runStream(Seq(evs.take(150), evs.drop(150)), "update") { df =>
+      StreamOps.a25LatenessMonitor(df.as[Event]).toDF()
+    }.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(got == want)
+    // the monitor actually observes disorder in this corpus
+    assert(got.exists(_._3 > 0L), "test slice has no late events — weak fixture")
   }
 
   test("CUSUM parity: streaming Page recursion == exact driver fold; alarms fire and reset") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val d = "/root/testdata/sf0.001"
-      val (mu0, slack, h) = (50.0, 5.0, 300.0)
-      val evs = graft.Tables.events(spark, d)
-        .withColumn("ts", col("ts").cast("timestamp"))
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .as[Event].collect().sortBy(_.event_id).toSeq
-      val halves = Seq(evs.take(evs.size / 2), evs.drop(evs.size / 2))
-      val got = runStream(halves, "update") { df =>
-        graft.streaming.CusumProcessor(df.as[Event], mu0, slack, h).toDF()
-      }.map(r => (r.getLong(0), r.getString(1), r.getDouble(3), r.getDouble(4), r.getLong(5)))
-      // exact replay: per type, each half in (tsu, event_id) order (the
-      // processor's within-batch contract), identical double recursion
-      def tsu(e: Event) = math.floorDiv(e.ts.getTime, 1000L) * 1000000L + e.ts.getNanos / 1000L
-      val want = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Double, Double, Long)]
-      val st = scala.collection.mutable.Map.empty[String, (Double, Double)]
-      halves.foreach { half =>
-        half.groupBy(_.event_type).toSeq.flatMap { case (t, g) =>
-          g.sortBy(e => (tsu(e), e.event_id)).map(t -> _) }.foreach { case (t, e) =>
-          val (sp, sn) = st.getOrElse(t, (0.0, 0.0))
-          val spN = math.max(0.0, sp + (e.value - mu0 - slack))
-          val snN = math.max(0.0, sn + (mu0 - slack - e.value))
-          val alarm = spN > h || snN > h
-          st(t) = if (alarm) (0.0, 0.0) else (spN, snN)
-          want += ((e.event_id, t, spN, snN, if (alarm) 1L else 0L))
-        }
-      }
-      assert(got.length == evs.length)
-      assert(got.toSet == want.toSet,
-        s"recursion diverged: extra=${got.toSet -- want.toSet}")
-      // bite: the drift alarm must actually fire on this corpus, and the
-      // post-alarm reset must show a row whose cusum restarts below h
-      val alarms = want.filter(_._5 == 1L)
-      assert(alarms.nonEmpty, "no alarm fired — thresholds vacuous for this data")
-      val perType = want.groupBy(_._2)
-      assert(alarms.exists { a =>
-        perType(a._2).exists(r => r._1 > a._1 && r._3 <= h && r._4 <= h)
-      }, "no post-alarm continuation observed")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    val d = "/root/testdata/sf0.001"
+    val (mu0, slack, h) = (50.0, 5.0, 300.0)
+    val evs = graft.Tables.events(spark, d)
+      .withColumn("ts", col("ts").cast("timestamp"))
+      .select("event_id", "ts", "user_id", "event_type", "value")
+      .as[Event].collect().sortBy(_.event_id).toSeq
+    val halves = Seq(evs.take(evs.size / 2), evs.drop(evs.size / 2))
+    val got = runStream(halves, "update") { df =>
+      StreamOps.a30CusumAlarms(df.as[Event], mu0, slack, h).toDF()
+    }.map(r => (r.getLong(0), r.getString(1), r.getDouble(3), r.getDouble(4), r.getLong(5)))
+    // exact replay: per type, each half in (tsu, event_id) order (the
+    // operator's within-batch contract), identical double recursion
+    def tsu(e: Event) = math.floorDiv(e.ts.getTime, 1000L) * 1000000L + e.ts.getNanos / 1000L
+    val want = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Double, Double, Long)]
+    val st = scala.collection.mutable.Map.empty[String, (Double, Double)]
+    halves.foreach { half =>
+      half.groupBy(_.event_type).toSeq.flatMap { case (t, g) =>
+        g.sortBy(e => (tsu(e), e.event_id)).map(t -> _) }.foreach { case (t, e) =>
+        val (sp, sn) = st.getOrElse(t, (0.0, 0.0))
+        val spN = math.max(0.0, sp + (e.value - mu0 - slack))
+        val snN = math.max(0.0, sn + (mu0 - slack - e.value))
+        val alarm = spN > h || snN > h
+        st(t) = if (alarm) (0.0, 0.0) else (spN, snN)
+        want += ((e.event_id, t, spN, snN, if (alarm) 1L else 0L))
       }
     }
+    assert(got.length == evs.length)
+    assert(got.toSet == want.toSet,
+      s"recursion diverged: extra=${got.toSet -- want.toSet}")
+    // bite: the drift alarm must actually fire on this corpus, and the
+    // post-alarm reset must show a row whose cusum restarts below h
+    val alarms = want.filter(_._5 == 1L)
+    assert(alarms.nonEmpty, "no alarm fired — thresholds vacuous for this data")
+    val perType = want.groupBy(_._2)
+    assert(alarms.exists { a =>
+      perType(a._2).exists(r => r._1 > a._1 && r._3 <= h && r._4 <= h)
+    }, "no post-alarm continuation observed")
   }
 
   test("decay parity: forward-decayed running value folds to the batch a26 figure") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val d = "/root/testdata/sf0.001"
-      val purchases = graft.Tables.events(spark, d)
-        .withColumn("ts", col("ts").cast("timestamp"))
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .as[Event].collect().filter(_.event_type == "purchase")
-        .sortBy(_.event_id).toSeq
-      val rows = runStream(Seq(purchases.take(purchases.size / 2),
-        purchases.drop(purchases.size / 2)), "update") { df =>
-        graft.streaming.DecayProcessor(df.as[Event]).toDF()
-      }.map(r => (r.getLong(1), r.getLong(2), r.getDouble(3)))
-      // the LAST emission per user, forward-decayed to the fixed reference,
-      // must equal the batch Σ value·2^(−(ref−tᵢ)/hl) (float tolerance: the
-      // batch folds 6dp-rounded decimal terms, the stream multiplies
-      // incrementally)
-      val refUs = java.time.Instant.parse("2024-02-01T00:00:00Z").toEpochMilli * 1000L
-      val hlUs = 30.0 * 86400e6
-      val finalPerUser = rows.groupBy(_._1).view
-        .mapValues(_.maxBy(_._2)).toMap
-      val batch = graft.operators.Relational.a26ValueDecay(spark, d).collect()
-        .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-      assert(finalPerUser.keySet == batch.keySet)
-      // and the stream emitted exactly one row per purchase
-      assert(rows.length == purchases.length)
-      finalPerUser.foreach { case (u, (_, tsu, v)) =>
-        val folded = v * math.pow(2.0, -((refUs - tsu).toDouble / hlUs))
-        val want = batch(u)._2
-        assert(math.abs(folded - want) <= 1e-3 + 1e-6 * math.abs(want),
-          s"user $u folded $folded vs batch $want")
-      }
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  test("J4 parity: transformWithState event-time timers == batch lead() oracle") {
-    // transformWithState timers need column families → RocksDB state store
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val batch = LogPipeline.j4Transform(fixture.toDF())
-        .select("event_id").as[Long].collect().toSet
-      val got = runStream(Seq(fixture.take(5), fixture.drop(5), Seq(flush1), Seq(flush2)), "append") { df =>
-        graft.streaming.BounceProcessor(
-          df.withWatermark("ts", "0 seconds")
-            .as[Event].filter(_.user_id >= 0)).toDF()
-      }.map(_.getLong(0)).toSet
-      assert(got == batch)
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    val d = "/root/testdata/sf0.001"
+    val purchases = graft.Tables.events(spark, d)
+      .withColumn("ts", col("ts").cast("timestamp"))
+      .select("event_id", "ts", "user_id", "event_type", "value")
+      .as[Event].collect().filter(_.event_type == "purchase")
+      .sortBy(_.event_id).toSeq
+    val rows = runStream(Seq(purchases.take(purchases.size / 2),
+      purchases.drop(purchases.size / 2)), "update") { df =>
+      StreamOps.a26DecayedValue(df.as[Event]).toDF()
+    }.map(r => (r.getLong(1), r.getLong(2), r.getDouble(3)))
+    // the LAST emission per user, forward-decayed to the fixed reference,
+    // must equal the batch Σ value·2^(−(ref−tᵢ)/hl) (float tolerance: the
+    // batch folds 6dp-rounded decimal terms, the stream multiplies
+    // incrementally)
+    val refUs = java.time.Instant.parse("2024-02-01T00:00:00Z").toEpochMilli * 1000L
+    val hlUs = 30.0 * 86400e6
+    val finalPerUser = rows.groupBy(_._1).view
+      .mapValues(_.maxBy(_._2)).toMap
+    val batch = graft.operators.Relational.a26ValueDecay(spark, d).collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
+    assert(finalPerUser.keySet == batch.keySet)
+    // and the stream emitted exactly one row per purchase
+    assert(rows.length == purchases.length)
+    finalPerUser.foreach { case (u, (_, tsu, v)) =>
+      val folded = v * math.pow(2.0, -((refUs - tsu).toDouble / hlUs))
+      val want = batch(u)._2
+      assert(math.abs(folded - want) <= 1e-3 + 1e-6 * math.abs(want),
+        s"user $u folded $folded vs batch $want")
     }
   }
 
