@@ -8,18 +8,19 @@ import org.apache.spark.sql.functions._
   * gated production configuration is a minutes-scale loop instead of a
   * full sweep per candidate. Prints one JSON line; writes nothing — the
   * recorded artifact stays `BenchScaleAnn`'s.
+  *
+  * Env: `SPARK_GRAFT_SF_DIR` and `SPARK_GRAFT_SCALE_FACTOR` (default 10),
+  * read by [[Sweep.ctx]]; `SPARK_GRAFT_ANN_PLANTED=1` calibrates on the
+  * planted-cluster corpus (genuine neighbor structure) instead of the
+  * adversarial random one.
   */
 object AnnCalibrate {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
-    val spark = GraftSession.get()
-    // SPARK_GRAFT_ANN_PLANTED=1 calibrates on the planted-cluster corpus
-    // (genuine neighbor structure) instead of the adversarial random one
+    val c = Sweep.ctx(GraftSession.get(), Seq(10))
     val vecs =
       if (sys.env.get("SPARK_GRAFT_ANN_PLANTED").contains("1"))
-        BenchScaleAnn.plantedVecsFrom(spark, sfDir)
-      else BenchScaleAnn.scaledVecsFrom(spark, sfDir, factor)
+        BenchScaleAnn.plantedVecsFrom(c.spark, c.sfDir)
+      else BenchScaleAnn.scaledVecsFrom(c.spark, c.sfDir, c.factor)
 
     def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select(col("query_id"), col("neighbor_id"))
@@ -41,8 +42,7 @@ object AnnCalibrate {
       println(s"[calibrate] $name recall=$r candidates=${s.size}")
       name -> r
     }
-    spark.stop()
-    println(out.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{\"metric\":\"ann_calibrate\",\"recall\":{", ",", "}}"))
+    c.spark.stop()
+    println(Sweep.render(Sweep.obj("metric" -> "ann_calibrate", "recall" -> Sweep.obj(out: _*))))
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -41,53 +41,79 @@ case class BsDoc(doc_id: Long, text: String)
   *    state keys are bounded by docs × Bands and the trajectory is O(corpus)
   *    by design (the batch signature table's posture), recorded per batch.
   *
-  * Artifact first (`BENCH_STREAM.json`), nonzero exit on any gate violation
-  * (the BenchScale contract), so timings from an invalid run cannot be cited.
+  * A [[Sweep.Family]]: the six leg kinds run in this order, each at every
+  * factor, and `BENCH_STREAM.json` is rewritten after every leg; then the
+  * gates run, and any violation exits nonzero (the BenchScale contract),
+  * so timings from an invalid run cannot be cited.
+  *
+  * Env, read by [[Sweep.ctx]]: `SPARK_GRAFT_SF_DIR` (default sf0.1) and the
+  * factors (`SPARK_GRAFT_SCALE_FACTOR` pins one, `SPARK_GRAFT_SCALE_FACTORS`
+  * picks a list; default `1,10`). The replay is a fixed 20 batches (40 for
+  * J2).
   */
-object BenchStream {
+object BenchStream extends Sweep.Family[(String, Sweep.Leg)] {
+  import Sweep.{median, Ctx, Leg}
 
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    if (s.isEmpty) 0.0 else s(s.size / 2)
+  val artifactFile = "BENCH_STREAM.json"
+  override def defaultFactors: Seq[Int] = Seq(1, 10)
+  private val Batches = 20
+
+  /** The leg kinds in run order; each runs at every factor. The state-store
+    * A/B (round-11 verdict item 7) repeats the stateful legs on RocksDB +
+    * changelog checkpointing, probing the ~4 s/batch HDFS-backed
+    * state-commit floor; same gates, recorded side by side.
+    */
+  private val kinds: Seq[(String, (Ctx, Int) => Leg)] = Seq(
+    "warehouse" -> warehouseLeg,
+    "corpus" -> corpusLeg,
+    "j2_interval" -> (j2Leg(_, _, "hdfs")),
+    "neardup" -> (neardupLeg(_, _, "hdfs")),
+    "j2_interval_rocksdb" -> (j2Leg(_, _, "rocksdb")),
+    "neardup_rocksdb" -> (neardupLeg(_, _, "rocksdb")))
+
+  def legs(c: Ctx): Iterator[(String, Leg)] =
+    kinds.iterator.flatMap { case (kind, leg) => c.factors.iterator.map(f => kind -> leg(c, f)) }
+
+  def artifact(c: Ctx, done: Seq[(String, Leg)]): Sweep.Fields =
+    Seq("metric" -> "bench_stream", "sf" -> c.sfDir, "batches" -> Batches,
+      "factors" -> c.factors,
+      "legs" -> Sweep.obj(done.map(_._1).distinct.map { kind =>
+        kind -> Sweep.obj(done.collect { case (`kind`, l) => l.name -> Sweep.obj(l.fields: _*) }: _*)
+      }: _*))
+
+  def gates(done: Seq[(String, Leg)]): Unit = done.foreach(_._2.gate())
+
+  /** One data-carrying trigger of a query: input rows, trigger wall, state. */
+  private final case class Batch(rows: Long, ms: Long, stateRows: Long, stateBytes: Long) {
+    def sec: Double = ms / 1000.0
   }
 
-  /** Locale-pinned float rendering: the artifact is JSON, and the JVM
-    * default locale on a comma-decimal host would make `"%.3f".format`
-    * emit `1,234` — invalid JSON that crashes the artifact parser.
-    */
-  private def f3(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-  private def f0(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.0f", Double.box(v))
-
-  /** Per-batch (inputRows, triggerExecution sec, stateRows, stateBytes) from
-    * the query's progress ring, data-carrying triggers only.
-    */
-  private def progress(q: StreamingQuery): Seq[(Long, Double, Long, Long)] =
+  /** The data-carrying triggers in the query's progress ring. */
+  private def progress(q: StreamingQuery): Seq[Batch] =
     q.recentProgress.toSeq.filter(_.numInputRows > 0).map { p =>
-      (p.numInputRows,
-        Option(p.durationMs.get("triggerExecution")).map(_.toDouble / 1000.0).getOrElse(0.0),
+      Batch(p.numInputRows,
+        Option(p.durationMs.get("triggerExecution")).map(_.longValue).getOrElse(0L),
         p.stateOperators.map(_.numRowsTotal).sum,
         p.stateOperators.map(_.memoryUsedBytes).sum)
     }
 
-  private def legJson(name: String, factor: Int, rows: Long, batches: Int,
-                      walls: Seq[Double], extra: String): String = {
-    val wall = walls.sum
-    val rps = if (wall > 0) rows / wall else 0.0
-    s""""x$factor":{"factor":$factor,"input_rows":$rows,"batches":$batches,""" +
-      s""""trigger_wall_sec":${f3(wall)},"rows_per_sec":${f0(rps)},""" +
-      s""""batch_sec":[${walls.map(f3).mkString(",")}]$extra}"""
+  /** The fields every leg starts with; `rows` is the leg's input. */
+  private def legFields(factor: Int, rows: Long, prog: Seq[Batch]): Sweep.Fields = {
+    val ms = prog.map(_.ms).sum
+    Seq("factor" -> factor, "input_rows" -> rows, "batches" -> prog.size,
+      "trigger_wall_sec" -> ms / 1000.0,
+      "rows_per_sec" -> (if (ms > 0) math.round(rows * 1000.0 / ms) else 0L),
+      "batch_sec" -> prog.map(_.sec))
   }
 
   // ---- leg 1: WarehouseJob over an incremental file-topic replay ---------
 
-  private def warehouseLeg(spark: SparkSession, sfDir: String, factor: Int,
-                           nBatches: Int): (String, () => Unit) = {
+  private def warehouseLeg(c: Ctx, factor: Int): Leg = {
+    val spark = c.spark
     val src = SweepTmp.dir("bstream_wh_src")
     val out = SweepTmp.dir("bstream_wh_out")
     val ckpt = SweepTmp.dir("bstream_wh_ckpt")
-    val events = Tables.events(spark, sfDir)
+    val events = Tables.events(spark, c.sfDir)
     // per-section wall attribution (the fixed-cost floor's breakdown) —
     // negligible overhead (driver-side timers), medians land in the artifact
     spark.conf.set("spark.graft.profileBatch", "true")
@@ -95,11 +121,11 @@ object BenchStream {
     val q = job.start(src, ckpt)
     var total = 0L
     try {
-      (0 until nBatches).foreach { b =>
+      (0 until Batches).foreach { b =>
         // batch b = slice b of every replica, landed as new files in the
         // topic dir (the file source picks up arrivals per trigger)
         val slice = (0 until factor).map { r =>
-          events.filter(col("event_id") % nBatches === b)
+          events.filter(col("event_id") % Batches === b)
             .withColumn("event_id", col("event_id") + lit(r.toLong * 1000000000L))
             .withColumn("user_id", col("user_id") + lit(r.toLong * 1000000000L))
         }.reduce(_ unionByName _)
@@ -112,7 +138,7 @@ object BenchStream {
       total = spark.read.parquet(src).count()
     } finally q.stop()
     val prog = progress(q)
-    val walls = prog.map(_._2)
+    val walls = prog.map(_.sec)
     // measure-conservation: the DWS stats partials must re-aggregate to the
     // clean ingest (every routed row counted exactly once upstream).
     // coalesce: an empty stats sink must fail the GATE below with a real
@@ -132,25 +158,25 @@ object BenchStream {
     // trend, so the gate passes vacuously (the batch count is in the artifact)
     val trendOk = walls.size < 12 || median(tail) <= 2.5 * median(warm)
     // per-section medians from the profile sidecar: where the per-batch
-    // wall actually goes (dirty/facts/stats writes, dim upserts, publish)
-    val profFile = new java.io.File(s"$out/_profile.jsonl")
-    val sections: Map[String, Double] =
-      if (!profFile.exists) Map.empty
+    // wall actually goes (dirty/facts/stats writes, dim upserts, publish);
+    // a section missing from a batch's line counts as 0 s there. The file
+    // reader skips `_`-prefixed files, so its lines are handed over as is.
+    val profile = java.nio.file.Paths.get(s"$out/_profile.jsonl")
+    val sections: Seq[(String, Double)] =
+      if (!java.nio.file.Files.exists(profile)) Nil
       else {
-        val perBatch = scala.io.Source.fromFile(profFile).getLines().toSeq.map { l =>
-          l.stripPrefix("{").stripSuffix("}").split(",").map(_.split(":"))
-            .collect { case Array(k, v) if k != "\"batch\"" =>
-              k.stripPrefix("\"").stripSuffix("\"") -> v.toDouble }.toMap
-        }
-        perBatch.flatMap(_.keys).distinct
-          .map(k => k -> median(perBatch.map(_.getOrElse(k, 0.0)))).toMap
+        import spark.implicits._
+        val lines = java.nio.file.Files.readAllLines(profile)
+        val prof = spark.read.json(spark.createDataset(lines)).drop("batch")
+        val perBatch = prof.select(prof.columns.map(k =>
+          coalesce(col(k).cast("double"), lit(0.0)).as(k)): _*).collect().toSeq
+        prof.columns.toSeq.map(k => k -> median(perBatch.map(_.getAs[Double](k))))
+          .sortBy(-_._2)
       }
-    val sectionsJson = sections.toSeq.sortBy(-_._2)
-      .map { case (k, v) => s""""$k":${f3(v)}""" }.mkString("{", ",", "}")
-    val json = legJson("warehouse", factor, total, prog.size, walls,
-      s""","stats_total_ct":$statsSum,"dirty_rows":$dirtyRows,"trend_ok":$trendOk,""" +
-        s""""section_sec_median":$sectionsJson""")
-    val enforce = () => {
+    val fields = legFields(factor, total, prog) ++ Seq("stats_total_ct" -> statsSum,
+      "dirty_rows" -> dirtyRows, "trend_ok" -> trendOk,
+      "section_sec_median" -> Sweep.obj(sections: _*))
+    Leg(s"x$factor", fields, () => {
       if (statsSum != cleanRows || cleanRows == 0) throw new IllegalStateException(
         s"stream bench invalid: warehouse x$factor stats partials sum $statsSum != " +
           s"clean ingest $cleanRows (total $total, dirty $dirtyRows)")
@@ -158,8 +184,7 @@ object BenchStream {
         s"stream bench invalid: warehouse x$factor per-batch wall trends upward " +
           s"(first-5 median ${median(warm)} s, last-5 median ${median(tail)} s) — " +
           "the foreachBatch fan-out must stay stateless across batches")
-    }
-    (json, enforce)
+    })
   }
 
   // ---- leg 2: CorpusJob ingest→dedup→IVF over a MemoryStream replay ------
@@ -187,11 +212,11 @@ object BenchStream {
     else kids.map(dirBytes).sum
   }
 
-  private def corpusLeg(spark: SparkSession, sfDir: String, factor: Int,
-                        nBatches: Int): (String, () => Unit) = {
+  private def corpusLeg(c: Ctx, factor: Int): Leg = {
+    val spark = c.spark
     import spark.implicits._
-    val main = corpusDocs(spark, sfDir, factor)
-    val chunk = math.max(1, main.size / nBatches)
+    val main = corpusDocs(spark, c.sfDir, factor)
+    val chunk = math.max(1, main.size / Batches)
     // cold tail: 5 batches of UNIQUE documents (every token salted per
     // doc, so no shingle is shared with anything) landing when the store
     // is at its LARGEST — the novel-arrival regime a production ingest
@@ -216,25 +241,11 @@ object BenchStream {
     val rebuilds = scala.collection.mutable.ArrayBuffer[Long]()
     val batchBytes = scala.collection.mutable.ArrayBuffer[Long]()
     val l0Files = scala.collection.mutable.ArrayBuffer[Int]()
-    // per-batch task input bytes (parquet probe/fetch reads; the
-    // MemoryStream source reads no files) — the sublinear-probe evidence
-    val bytesRead = new java.util.concurrent.atomic.AtomicLong()
-    val lsnr = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        if (te.taskMetrics != null)
-          bytesRead.addAndGet(te.taskMetrics.inputMetrics.bytesRead)
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(lsnr)
     try {
-      all.grouped(chunk).foreach { c =>
-        val b0 = bytesRead.get()
-        in.addData(c)
-        q.processAllAvailable()
-        Thread.sleep(120) // listener-bus drain before the delta snapshot
-        batchBytes += bytesRead.get() - b0
+      all.grouped(chunk).foreach { docs =>
+        // per-batch task input bytes (parquet probe/fetch reads; the
+        // MemoryStream source reads no files) — the sublinear-probe evidence
+        batchBytes += c.log.inputBytesOf { in.addData(docs); q.processAllAvailable() }
         val sidecar = java.nio.file.Paths.get(s"$stateDir/corpus_rows")
         storeRows += (if (java.nio.file.Files.exists(sidecar))
           new String(java.nio.file.Files.readAllBytes(sidecar)).trim.toLong else 0L)
@@ -243,30 +254,20 @@ object BenchStream {
         l0Files += Option(new java.io.File(s"$stateDir/bands").listFiles())
           .getOrElse(Array.empty).count(_.getName.startsWith("append_"))
       }
-    } finally {
-      q.stop()
-      spark.sparkContext.removeSparkListener(lsnr)
-    }
+    } finally q.stop()
     val prog = progress(q)
-    val walls = prog.map(_._2)
     val survivors = storeRows.last
     val parquetRows = spark.read.parquet(s"$stateDir/corpus").count()
     val bandsStoreBytes = dirBytes(new java.io.File(s"$stateDir/bands"))
     // retrieval pruning evidence: the cell-partitioned store must let a
     // 2-of-4-cell probe read strictly less than the all-cells probe
-    val queries = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 3)
+    val queries = Tables.embeddings(spark, c.sfDir).filter(col("vec_id") < 3)
       .select(col("vec_id").as("query_id"),
         transform(col("embedding"), x => x.cast("double")).as("q_emb"))
       .localCheckpoint()
-    def retrieveBytes(nProbe: Int): Long = {
-      val r0 = bytesRead.get()
-      spark.sparkContext.addSparkListener(lsnr)
-      try {
-        graft.streaming.CorpusJob.retrieve(spark, stateDir, queries,
-          k = 3, nProbe = nProbe).collect()
-        Thread.sleep(120)
-      } finally spark.sparkContext.removeSparkListener(lsnr)
-      bytesRead.get() - r0
+    def retrieveBytes(nProbe: Int): Long = c.log.inputBytesOf {
+      graft.streaming.CorpusJob.retrieve(spark, stateDir, queries, k = 3, nProbe = nProbe)
+        .collect()
     }
     val prunedRetrieveBytes = retrieveBytes(2)
     val fullRetrieveBytes = retrieveBytes(4)
@@ -302,7 +303,7 @@ object BenchStream {
     //  - retrieval pruning: the 2-of-4-cell probe reads strictly less than
     //    the all-cells probe over the cell-partitioned store.
     val coldBytes = batchBytes.takeRight(coldBatches)
-    val coldMedian = median(coldBytes.map(_.toDouble).toSeq)
+    val coldMedian = median(coldBytes.toSeq)
     val tailStoreBytes = storeBytes.last + bandsStoreBytes
     // Gate fix (r14, measurement bug): every batch pays a store-INDEPENDENT
     // read floor proportional to its own input (the batch materialization's
@@ -327,7 +328,7 @@ object BenchStream {
     // A store-scanning probe still adds O(store) ≫ 5% of a batch floor and
     // fails loudly. The raw min stays recorded alongside.
     val batchFloorBytes = batchBytes.min
-    val floorMedian = median(batchBytes.slice(1, coldBatches + 1).map(_.toDouble).toSeq)
+    val floorMedian = median(batchBytes.slice(1, coldBatches + 1).toSeq)
     val coldFlatOk = coldMedian <= floorMedian * 1.05
     val compactEvery = spark.conf.get(
       graft.streaming.CorpusJob.CompactEveryConf,
@@ -335,28 +336,22 @@ object BenchStream {
     val l0Ok = l0Files.forall(_ <= compactEvery)
     val retrievePruneOk = prunedRetrieveBytes < fullRetrieveBytes &&
       prunedRetrieveBytes > 0
-    val json = legJson("corpus", factor, all.size.toLong, prog.size, walls,
-      s""","store_rows":[${storeRows.mkString(",")}],""" +
-        s""""store_bytes":[${storeBytes.mkString(",")}],""" +
-        s""""rebuilds":[${rebuilds.mkString(",")}],""" +
-        s""""survivors":$survivors,"oracle_survivors":$oracleSurvivors,""" +
-        s""""band_index_rows":$bandIdxRows,""" +
-        s""""batch_read_bytes":[${batchBytes.mkString(",")}],""" +
-        s""""l0_appends":[${l0Files.mkString(",")}],""" +
-        s""""cold_batches":$coldBatches,"cold_read_bytes_median":${f0(coldMedian)},""" +
-        s""""batch_floor_bytes":$batchFloorBytes,""" +
-        s""""batch_floor_median_bytes":${f0(floorMedian)},""" +
-        s""""bands_store_bytes":$bandsStoreBytes,""" +
-        s""""retrieve_bytes_pruned":$prunedRetrieveBytes,""" +
-        s""""retrieve_bytes_full":$fullRetrieveBytes,""" +
-        s""""cold_flat_ok":$coldFlatOk,"l0_ok":$l0Ok,""" +
-        s""""retrieve_prune_ok":$retrievePruneOk,""" +
-        s""""monotone":$monotone,"rebuilds_ok":$rebuildsOk""")
-    val enforce = () => {
+    val fields = legFields(factor, all.size.toLong, prog) ++ Seq(
+      "store_rows" -> storeRows, "store_bytes" -> storeBytes, "rebuilds" -> rebuilds,
+      "survivors" -> survivors, "oracle_survivors" -> oracleSurvivors,
+      "band_index_rows" -> bandIdxRows, "batch_read_bytes" -> batchBytes,
+      "l0_appends" -> l0Files, "cold_batches" -> coldBatches,
+      "cold_read_bytes_median" -> coldMedian, "batch_floor_bytes" -> batchFloorBytes,
+      "batch_floor_median_bytes" -> floorMedian, "bands_store_bytes" -> bandsStoreBytes,
+      "retrieve_bytes_pruned" -> prunedRetrieveBytes,
+      "retrieve_bytes_full" -> fullRetrieveBytes, "cold_flat_ok" -> coldFlatOk,
+      "l0_ok" -> l0Ok, "retrieve_prune_ok" -> retrievePruneOk, "monotone" -> monotone,
+      "rebuilds_ok" -> rebuildsOk)
+    Leg(s"x$factor", fields, () => {
       if (!coldFlatOk) throw new IllegalStateException(
         s"stream bench invalid: corpus x$factor cold-tail read bytes " +
-          s"(median ${f0(coldMedian)} over $coldBytes) exceed the replay's " +
-          s"store-independent per-batch floor (${f0(floorMedian)}, the " +
+          s"(median $coldMedian over $coldBytes) exceed the replay's " +
+          s"store-independent per-batch floor ($floorMedian, the " +
           s"near-empty-store batch median; raw min $batchFloorBytes) on a " +
           s"$tailStoreBytes-byte store — novel-arrival batches must stay " +
           "off the corpus (bloom prefilter + pruned probe)")
@@ -386,8 +381,7 @@ object BenchStream {
           s"one-shot oracle $oracleSurvivors — batch-size invariance broken")
       if (survivors > all.size) throw new IllegalStateException(
         s"stream bench invalid: corpus x$factor survivors $survivors > ingest ${all.size}")
-    }
-    (json, enforce)
+    })
   }
 
   // ---- leg 3: J2 interval-join state under watermark cleanup -------------
@@ -415,8 +409,9 @@ object BenchStream {
     }
   }
 
-  private def j2Leg(spark: SparkSession, factor: Int, nBatches: Int,
-                    rowsPerBatch: Int, provider: String = "hdfs"): (String, () => Unit) = {
+  private def j2Leg(c: Ctx, factor: Int, provider: String): Leg = {
+    val spark = c.spark
+    val (nBatches, rowsPerBatch) = (40, 200)
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val base = Timestamp.valueOf("2024-01-01 00:00:00").getTime
@@ -438,9 +433,7 @@ object BenchStream {
       }
     } finally q.stop()
     val prog = progress(q)
-    val walls = prog.map(_._2)
-    val states = prog.map(_._3)
-    val bytes = prog.map(_._4)
+    val states = prog.map(_.stateRows)
     val totalIngested = 2L * nBatches * n
     // retention horizon ≈ (15 min + 10 s) / 1-min batches ≈ 16 batches of
     // right rows: the store must plateau there, not track the replay length.
@@ -450,36 +443,32 @@ object BenchStream {
     // cannot see that — the round-11 ADVICE finding).
     val tail = states.takeRight(10)
     val mid = states.slice(18, 28)
-    def med(xs: Seq[Long]): Long = if (xs.isEmpty) 0L else xs.sorted.apply(xs.size / 2)
     // under ~34 recorded batches the mid window is not fully past the
     // horizon — fall back to the tail-spread check alone (replay length is
     // in the artifact); the main always replays 40
     val midVsTailOk = states.size < 34 ||
-      math.abs(med(tail) - med(mid)) <= math.ceil(0.15 * med(tail).max(1L)).toLong
+      math.abs(median(tail) - median(mid)) <= math.ceil(0.15 * median(tail).max(1L)).toLong
     val plateauOk = tail.nonEmpty && midVsTailOk &&
       tail.max - tail.min <= math.ceil(0.25 * tail.max).toLong
     val boundOk = states.nonEmpty && states.last <= totalIngested / 2 && states.last > 0
-    val json = legJson("j2_interval", factor, totalIngested, prog.size, walls,
-      s""","state_rows":[${states.mkString(",")}],""" +
-        s""""state_bytes":[${bytes.mkString(",")}],""" +
-        s""""plateau_ok":$plateauOk,"bound_ok":$boundOk""")
-    val enforce = () => {
+    val fields = legFields(factor, totalIngested, prog) ++ Seq("state_rows" -> states,
+      "state_bytes" -> prog.map(_.stateBytes), "plateau_ok" -> plateauOk, "bound_ok" -> boundOk)
+    Leg(s"x$factor", fields, () => {
       if (!plateauOk) throw new IllegalStateException(
         s"stream bench invalid: j2 x$factor state did not plateau (last 10: $tail) — " +
           "watermark cleanup must bound interval-join state at the retention horizon")
       if (!boundOk) throw new IllegalStateException(
         s"stream bench invalid: j2 x$factor final state ${states.lastOption} vs ingest $totalIngested")
-    }
-    (json, enforce)
+    })
   }
 
   // ---- leg 4: streaming near-dup band-index state -------------------------
 
-  private def neardupLeg(spark: SparkSession, sfDir: String, factor: Int,
-                         nBatches: Int, provider: String = "hdfs"): (String, () => Unit) = {
+  private def neardupLeg(c: Ctx, factor: Int, provider: String): Leg = {
+    val spark = c.spark
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = Tables.documents(spark, sfDir).select("doc_id", "text")
+    val base = Tables.documents(spark, c.sfDir).select("doc_id", "text")
       .as[(Long, String)].collect().toSeq
     val all = (0 until factor).flatMap { r =>
       base.map { case (id, t) =>
@@ -493,66 +482,21 @@ object BenchStream {
         .writeStream.outputMode("append").format("noop")
         .option("checkpointLocation", SweepTmp.dir("bstream_nd_ckpt")).start()
     }
-    val chunk = math.max(1, all.size / nBatches)
+    val chunk = math.max(1, all.size / Batches)
     try {
       all.grouped(chunk).foreach { c => in.addData(c); q.processAllAvailable() }
     } finally q.stop()
     val prog = progress(q)
-    val walls = prog.map(_._2)
-    val states = prog.map(_._3)
-    val bytes = prog.map(_._4)
+    val states = prog.map(_.stateRows)
     // state keys = populated band buckets ≤ admitted docs × Bands — the
     // O(corpus) posture of the batch signature table, never more
     val bound = all.size.toLong * graft.pipeline.Dedup.Bands
     val boundOk = states.nonEmpty && states.last > 0 && states.last <= bound
-    val json = legJson("neardup", factor, all.size.toLong, prog.size, walls,
-      s""","state_rows":[${states.mkString(",")}],""" +
-        s""""state_bytes":[${bytes.mkString(",")}],""" +
-        s""""state_bound_rows":$bound,"bound_ok":$boundOk""")
-    val enforce = () => {
+    val fields = legFields(factor, all.size.toLong, prog) ++ Seq("state_rows" -> states,
+      "state_bytes" -> prog.map(_.stateBytes), "state_bound_rows" -> bound, "bound_ok" -> boundOk)
+    Leg(s"x$factor", fields, () => {
       if (!boundOk) throw new IllegalStateException(
         s"stream bench invalid: neardup x$factor state ${states.lastOption} outside (0, $bound]")
-    }
-    (json, enforce)
-  }
-
-  // -------------------------------------------------------------------------
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val factors = sys.env.getOrElse("SPARK_GRAFT_STREAM_FACTORS", "1,10")
-      .split(",").map(_.trim.toInt).toSeq
-    val nBatches = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "20").toInt
-    val spark = GraftSession.get()
-
-    def leg(mk: Int => (String, () => Unit)): (String, Seq[() => Unit]) = {
-      val runs = factors.map(mk)
-      (runs.map(_._1).mkString(","), runs.map(_._2))
-    }
-    val (whJson, whGates) = leg(f => warehouseLeg(spark, sfDir, f, nBatches))
-    val (cpJson, cpGates) = leg(f => corpusLeg(spark, sfDir, f, nBatches))
-    val (j2Json, j2Gates) = leg(f => j2Leg(spark, f, nBatches = 40, rowsPerBatch = 200))
-    val (ndJson, ndGates) = leg(f => neardupLeg(spark, sfDir, f, nBatches))
-    // state-store A/B (round-11 verdict item 7): the same stateful legs on
-    // RocksDB + changelog checkpointing, probing the ~4 s/batch HDFS-backed
-    // state-commit floor; same gates, recorded side by side
-    val (j2RJson, j2RGates) = leg(f => j2Leg(spark, f, nBatches = 40,
-      rowsPerBatch = 200, provider = "rocksdb"))
-    val (ndRJson, ndRGates) = leg(f => neardupLeg(spark, sfDir, f, nBatches,
-      provider = "rocksdb"))
-
-    val json =
-      s"""{"metric":"bench_stream","sf":"$sfDir","batches":$nBatches,""" +
-        s""""factors":[${factors.mkString(",")}],"legs":{""" +
-        s""""warehouse":{$whJson},"corpus":{$cpJson},""" +
-        s""""j2_interval":{$j2Json},"neardup":{$ndJson},""" +
-        s""""j2_interval_rocksdb":{$j2RJson},"neardup_rocksdb":{$ndRJson}}}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_STREAM.json"),
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    spark.stop()
-    println(json)
-    // uncaught throw after the print exits the JVM nonzero (BenchScale contract)
-    (whGates ++ cpGates ++ j2Gates ++ ndGates ++ j2RGates ++ ndRGates)
-      .foreach(_.apply())
+    })
   }
 }

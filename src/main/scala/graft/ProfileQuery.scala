@@ -1,103 +1,43 @@
 package graft
 
-import scala.collection.mutable
-
 /** Per-query Spark-job/stage profiler (guide §1: decide WHERE the time goes
-  * before changing anything). For each named query: one untimed warm pass,
-  * then one timed pass with a listener recording every job's wall, stage
-  * count, task count and shuffle bytes — the local[32] stand-in for the
-  * Spark UI's Jobs/Stages pages (UI is disabled in GraftSession).
+  * before changing anything). For each named query: one untimed full warm
+  * pass, then min-of-reps timed passes with the harness's job log holding
+  * the last one — every job's wall, stage count, task count and shuffle
+  * bytes, and the stages with the most task time: the local[32] stand-in
+  * for the Spark UI's Jobs/Stages pages (UI is disabled in GraftSession).
   *
   * Env:
-  *   SPARK_GRAFT_SF_DIR        data dir (default /root/testdata/sf0.1)
   *   SPARK_GRAFT_PROFILE_ONLY  comma-separated query names (required)
-  *   SPARK_GRAFT_PROFILE_REPS  timed reps (default 1; job log from the last)
+  *   SPARK_GRAFT_SF_DIR        data dir (default: the sweeps' sf0.1 dir)
+  *   SPARK_GRAFT_BENCH_REPS    timed reps (default 2; job log from the last)
   */
 object ProfileQuery {
 
-  private final class JobLog extends org.apache.spark.scheduler.SparkListener {
-    case class Job(id: Int, desc: String, var ms: Long = -1, start: Long = 0,
-                   var stages: Int = 0, var tasks: Int = 0,
-                   var shuffleReadMB: Double = 0, var shuffleWriteMB: Double = 0)
-    val jobs = mutable.LinkedHashMap[Int, Job]()
-    private val stageToJob = mutable.HashMap[Int, Int]()
-    var enabled = false
-    override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-      if (enabled) synchronized {
-        val desc = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-        jobs(e.jobId) = Job(e.jobId, desc, start = e.time)
-        e.stageIds.foreach(sid => stageToJob(sid) = e.jobId)
-        jobs(e.jobId).stages += e.stageIds.size
-      }
-    override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-      synchronized { jobs.get(e.jobId).foreach(j => j.ms = e.time - j.start) }
-    case class Stage(id: Int, name: String, tasks: Int, maxTaskMs: Long,
-                     sumTaskMs: Long, shufRMB: Double, shufWMB: Double)
-    val stages = mutable.LinkedHashMap[Int, Stage]()
-    private val taskMs = mutable.HashMap[Int, mutable.ArrayBuffer[Long]]()
-    override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      if (enabled) synchronized {
-        taskMs.getOrElseUpdate(e.stageId, mutable.ArrayBuffer.empty) += e.taskInfo.duration
-      }
-    override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-      synchronized {
-        stageToJob.get(e.stageInfo.stageId).flatMap(jobs.get).foreach { j =>
-          j.tasks += e.stageInfo.numTasks
-          j.shuffleReadMB += e.stageInfo.taskMetrics.shuffleReadMetrics.totalBytesRead / 1e6
-          j.shuffleWriteMB += e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten / 1e6
-        }
-        val ts = taskMs.getOrElse(e.stageInfo.stageId, mutable.ArrayBuffer.empty[Long])
-        stages(e.stageInfo.stageId) = Stage(e.stageInfo.stageId,
-          e.stageInfo.name.takeWhile(_ != '\n').take(60), e.stageInfo.numTasks,
-          if (ts.isEmpty) 0 else ts.max, ts.sum,
-          e.stageInfo.taskMetrics.shuffleReadMetrics.totalBytesRead / 1e6,
-          e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten / 1e6)
-      }
-    def reset(): Unit = synchronized { jobs.clear(); stageToJob.clear(); stages.clear(); taskMs.clear() }
-  }
-
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val names = sys.env.getOrElse("SPARK_GRAFT_PROFILE_ONLY",
       sys.error("set SPARK_GRAFT_PROFILE_ONLY")).split(",").map(_.trim).filter(_.nonEmpty)
-    val reps = sys.env.getOrElse("SPARK_GRAFT_PROFILE_REPS", "1").toInt.max(1)
-    val spark = GraftSession.get()
-    val log = new JobLog
-    spark.sparkContext.addSparkListener(log)
+    val c = Sweep.ctx(GraftSession.get(), Seq(1))
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
-      def drop(): Unit = {
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-        System.gc()
-      }
-      // warm pass (codegen/JIT), untimed
-      try { fn(spark, sfDir).queryExecution.toRdd.count() }
-      catch { case e: Throwable => System.err.println(s"[profile] $name warm failed: ${e.getMessage}") }
-      drop()
-      val times = (1 to reps).map { _ =>
-        log.reset(); log.enabled = true
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).queryExecution.toRdd.count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        log.enabled = false
-        drop()
-        dt
-      }
-      println(f"== $name%s: wall ${times.min}%.3f s (min of $reps; last-rep job log below)")
-      log.jobs.values.foreach { j =>
+      Sweep.exec(fn(c.spark, c.sfDir)) // warm pass (codegen/JIT), untimed
+      c.drop()
+      val (wall, _) = c.timed { c.log.reset(); Sweep.exec(fn(c.spark, c.sfDir)) }
+      c.log.settle()
+      println(f"== $name%s: wall $wall%.3f s (min of ${c.reps}%d; last-rep job log below)")
+      val jobs = c.log.jobs
+      jobs.foreach { j =>
         val d = if (j.desc.length > 70) j.desc.take(67) + "..." else j.desc
-        println(f"   job ${j.id}%3d ${j.ms}%6d ms stages=${j.stages}%2d tasks=${j.tasks}%4d " +
-          f"shufR=${j.shuffleReadMB}%8.2fMB shufW=${j.shuffleWriteMB}%8.2fMB  $d%s")
+        println(f"   job ${j.id}%3d ${j.ms}%6d ms stages=${j.stageIds.size}%2d tasks=${j.tasks}%4d " +
+          f"shufR=${j.shuffleRead / 1e6}%8.2fMB shufW=${j.shuffleWrite / 1e6}%8.2fMB  $d%s")
       }
-      val tot = log.jobs.values.filter(_.ms > 0).map(_.ms).sum
-      println(f"   sum of job walls: $tot%d ms over ${log.jobs.size}%d jobs")
-      log.stages.values.filter(s => s.sumTaskMs > 200).toSeq.sortBy(-_.sumTaskMs).take(12)
-        .foreach { s =>
-          println(f"   stage ${s.id}%3d tasks=${s.tasks}%4d maxTask=${s.maxTaskMs}%6d ms " +
-            f"sumTask=${s.sumTaskMs}%7d ms shufR=${s.shufRMB}%8.2fMB shufW=${s.shufWMB}%8.2fMB ${s.name}%s")
-        }
+      println(f"   sum of job walls: ${jobs.filter(_.ms > 0).map(_.ms).sum}%d ms over ${jobs.size}%d jobs")
+      c.log.stages.filter(_.sumTaskMs > 200).sortBy(-_.sumTaskMs).take(12).foreach { s =>
+        println(f"   stage ${s.id}%3d tasks=${s.tasks}%4d maxTask=${s.maxTaskMs}%6d ms " +
+          f"sumTask=${s.sumTaskMs}%7d ms shufR=${s.shuffleRead / 1e6}%8.2fMB " +
+          f"shufW=${s.shuffleWrite / 1e6}%8.2fMB ${s.name}%s")
+      }
     }
-    spark.stop()
+    c.spark.stop()
   }
 }

@@ -1,19 +1,25 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.immutable.ListMap
+import scala.collection.mutable
 
-/** The scale-sweep harness behind every `BenchScale*` main. A sweep family
-  * declares only what is its own — how it builds the scaled input, the
-  * variants it times, its invariants and its artifact fields — and the
-  * harness owns the rest of the contract every sweep shares:
+/** The bench harness behind every `BenchScale*` main, `BenchStream`,
+  * `ProfileQuery` and `AnnCalibrate`. A sweep family declares only what is
+  * its own — how it builds the scaled input, the variants it times, its
+  * invariants and its artifact fields — and the harness owns the rest of
+  * the contract every sweep shares:
   *
-  *  - the env: `SPARK_GRAFT_SF_DIR` (default sf0.1), the factor list
-  *    (`SPARK_GRAFT_SCALE_FACTOR` pins one leg; a multi-leg family also
-  *    takes `SPARK_GRAFT_SCALE_FACTORS`, default `10,100`) and
-  *    `SPARK_GRAFT_BENCH_REPS` (default 2);
+  *  - the env, read here and nowhere else: `SPARK_GRAFT_SF_DIR` (default
+  *    sf0.1), the factor list (`SPARK_GRAFT_SCALE_FACTOR` pins one leg; a
+  *    multi-leg family also takes `SPARK_GRAFT_SCALE_FACTORS`, default its
+  *    own list, `10,100` for most) and `SPARK_GRAFT_BENCH_REPS` (default 2);
   *  - warm-up off the clock, min-of-reps timing, and releasing pinned
   *    blocks between runs;
+  *  - the one job listener, [[JobLog]], registered once per run;
   *  - the artifact: rewritten after EVERY leg (a crash in a late leg keeps
   *    the finished ones), printed as the last stdout line once all legs
   *    ran, then the session stops;
@@ -32,6 +38,15 @@ object Sweep {
   final case class Ctx(spark: SparkSession, sfDir: String, factors: Seq[Int], reps: Int) {
 
     def factor: Int = factors.head
+
+    /** The job log, registered with the session on first use and only
+      * then: a main never adds or removes a listener around its windows.
+      */
+    lazy val log: JobLog = {
+      val l = new JobLog(spark.sparkContext)
+      spark.sparkContext.addSparkListener(l)
+      l
+    }
 
     /** Release every pinned block (lineage checkpoints included). */
     def drop(): Unit = {
@@ -63,6 +78,94 @@ object Sweep {
 
     /** Min-of-reps wall of executing `df`. */
     def time(df: => DataFrame): Double = timed(exec(df))._1
+  }
+
+  /** The one job listener: per job its wall, stages, tasks and shuffle
+    * bytes; per completed stage its tasks, max and sum task ms and shuffle
+    * bytes; and the input bytes of every task. Events arrive on Spark's
+    * listener bus after the job returns, so read it after [[settle]].
+    */
+  final class JobLog(sc: SparkContext) extends SparkListener {
+    import JobLog.{Job, Stage}
+
+    private val FenceKey = "graft.joblog.fence"
+    private val jobMap = mutable.LinkedHashMap[Int, Job]()
+    private val stageMap = mutable.LinkedHashMap[Int, Stage]()
+    private val stageToJob = mutable.HashMap[Int, Int]()
+    private val taskMs = mutable.HashMap[Int, (Long, Long)]()
+    private var input = 0L
+    private var fence = (-1, new CountDownLatch(0))
+
+    def jobs: Seq[Job] = synchronized(jobMap.values.toSeq)
+    def stages: Seq[Stage] = synchronized(stageMap.values.toSeq)
+    def inputBytes: Long = synchronized(input)
+    def reset(): Unit = synchronized {
+      jobMap.clear(); stageMap.clear(); stageToJob.clear(); taskMs.clear(); input = 0
+    }
+
+    /** Wait until the log holds every job submitted before the call: a
+      * one-task fence job runs, and the bus delivers events in order. The
+      * fence itself is not logged.
+      */
+    def settle(): Unit = {
+      val latch = new CountDownLatch(1)
+      synchronized { fence = (-1, latch) }
+      sc.setLocalProperty(FenceKey, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(FenceKey, null)
+      if (!latch.await(60, TimeUnit.SECONDS))
+        throw new IllegalStateException("the job log saw no fence job within 60 s")
+    }
+
+    /** Task input bytes read while `body` runs. */
+    def inputBytesOf(body: => Unit): Long = {
+      settle()
+      val b0 = inputBytes
+      body
+      settle()
+      inputBytes - b0
+    }
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      val prop = (k: String) => Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+      if (prop(FenceKey).isDefined) fence = (e.jobId, fence._2)
+      else {
+        jobMap(e.jobId) = Job(e.jobId, prop("spark.job.description").getOrElse(""), e.time,
+          e.stageIds)
+        e.stageIds.foreach(stageToJob(_) = e.jobId)
+      }
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      if (e.jobId == fence._1) fence._2.countDown()
+      jobMap.get(e.jobId).foreach(j => j.ms = e.time - j.start)
+    }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      if (e.taskMetrics != null) input += e.taskMetrics.inputMetrics.bytesRead
+      if (stageToJob.contains(e.stageId)) {
+        val (mx, sum) = taskMs.getOrElse(e.stageId, (0L, 0L))
+        taskMs(e.stageId) = (mx max e.taskInfo.duration, sum + e.taskInfo.duration)
+      }
+    }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+      val s = e.stageInfo
+      stageToJob.get(s.stageId).flatMap(jobMap.get).foreach { j =>
+        val read = s.taskMetrics.shuffleReadMetrics.totalBytesRead
+        val written = s.taskMetrics.shuffleWriteMetrics.bytesWritten
+        j.tasks += s.numTasks
+        j.shuffleRead += read
+        j.shuffleWrite += written
+        val (mx, sum) = taskMs.getOrElse(s.stageId, (0L, 0L))
+        stageMap(s.stageId) = Stage(s.stageId, s.name.takeWhile(_ != '\n').take(60),
+          s.numTasks, mx, sum, read, written)
+      }
+    }
+  }
+
+  object JobLog {
+    final case class Job(id: Int, desc: String, start: Long, stageIds: Seq[Int],
+                         var ms: Long = -1, var tasks: Int = 0,
+                         var shuffleRead: Long = 0, var shuffleWrite: Long = 0)
+    final case class Stage(id: Int, name: String, tasks: Int, maxTaskMs: Long,
+                           sumTaskMs: Long, shuffleRead: Long, shuffleWrite: Long)
   }
 
   /** A sweep family. Its object's `main` runs it through the harness. */
@@ -142,6 +245,10 @@ object Sweep {
   }
 
   def exec(df: DataFrame): Long = df.queryExecution.toRdd.count()
+
+  /** The upper median; zero when `xs` is empty. */
+  def median[T](xs: Seq[T])(implicit n: Numeric[T]): T =
+    if (xs.isEmpty) n.zero else xs.sorted.apply(xs.size / 2)
 
   /** The replication invariant most families gate: the scaled run has the
     * base run's non-empty key set, and every count is `factor ×` the base.

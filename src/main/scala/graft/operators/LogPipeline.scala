@@ -116,14 +116,7 @@ object LogPipeline {
     import org.apache.spark.sql.types._
     val lineSchema = ArrayType(StructType(Seq(
       StructField("ln", IntegerType), StructField("qty", DoubleType))))
-    // spreadIfNarrow (r15): the JSON encode/decode runs in the
-    // post-exchange stage, and AQE coalesced the byte-small (5.9 MB)
-    // groupBy exchange to ~5 tasks while that stage is CPU-heavy
-    // (to_json + from_json per row — 4.3 s sumTask profiled; the
-    // cheap-bytes/expensive-CPU shape AQE misjudges). The keyed spread is
-    // user partitioning AQE must respect, the groupBy reuses the same
-    // exchange, and at production scale the helper is the identity.
-    val packed = graft.operators.Scale.spreadIfNarrow(lineitem(spark, dir), "l_orderkey")
+    val packed = lineitem(spark, dir)
       .groupBy(col("l_orderkey"))
       .agg(to_json(collect_list(struct(
         col("l_linenumber").as("ln"), col("l_quantity").as("qty")))).as("payload"))

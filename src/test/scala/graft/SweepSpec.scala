@@ -3,9 +3,10 @@ package graft
 import java.nio.file.Files
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
-/** The sweep harness contract every `BenchScale*` main relies on: the
-  * artifact is rewritten after each leg, the gates run only once it is on
-  * disk, and the JSON writer escapes what it is given. Runs on the shared
+/** The sweep harness contract every bench main relies on: the artifact is
+  * rewritten after each leg, the gates run only once it is on disk, the
+  * JSON writer escapes what it is given, the job log records what ran, and
+  * a temp tree is deleted without following links. Runs on the shared
   * session with a no-op stop.
   */
 class SweepSpec extends SparkSpecBase {
@@ -77,5 +78,34 @@ class SweepSpec extends SparkSpecBase {
       Sweep.render(Sweep.obj("s" -> s, "xs" -> Seq(1, 2), "nan" -> Double.NaN)))
     assert(j.get("s").asText == s)
     assert(j.get("xs").size == 2 && j.get("nan").isNull)
+  }
+
+  test("the job log holds a job's stages, tasks and input bytes; a reset clears it") {
+    val c = Sweep.Ctx(spark, sfDir, Seq(1), 1)
+    try {
+      c.log.reset()
+      Sweep.exec(spark.read.parquet(s"${sf("sf0.001")}/orders.parquet").repartition(3))
+      c.log.settle()
+      val reduce = c.log.stages.filter(_.tasks == 3)
+      assert(reduce.size == 1, s"one 3-task reduce stage: ${c.log.stages}")
+      val job = c.log.jobs.find(_.stageIds.contains(reduce.head.id)).get
+      assert(job.stageIds.size == 2, "the reduce stage and the scan stage it reads")
+      assert(job.tasks >= 3 && job.ms >= 0)
+      assert(c.log.inputBytes > 0, "the parquet scan's task input bytes")
+      c.log.reset()
+      assert(c.log.jobs.isEmpty && c.log.stages.isEmpty && c.log.inputBytes == 0)
+    } finally spark.sparkContext.removeSparkListener(c.log)
+  }
+
+  test("withDir deletes its tree but not the files behind a link to an outside directory") {
+    val outside = Files.createTempDirectory("sweep_outside")
+    val kept = Files.write(outside.resolve("kept.txt"), "x".getBytes("UTF-8"))
+    var tree: java.nio.file.Path = null
+    SweepTmp.withDir("sweep_link") { d =>
+      tree = java.nio.file.Paths.get(d)
+      Files.createSymbolicLink(tree.resolve("link"), outside)
+    }
+    assert(!Files.exists(tree), "the tree itself is gone")
+    assert(Files.exists(kept), "the link's target keeps its files")
   }
 }

@@ -1,20 +1,25 @@
 #!/usr/bin/env python3
-"""Sweep parity: run the BenchScale* mains of two builds, then compare them.
+"""Sweep parity: run the bench mains of two builds, then compare them.
 
-    python3 tools/sweep_parity.py run <checkout> <outdir> single|multi
+    python3 tools/sweep_parity.py run <checkout> <outdir> single|multi|stream
     python3 tools/sweep_parity.py compare <outdir-a> <outdir-b>
 
 `run` drives each main through <checkout>/tools/javarun.sh in its own
 working directory under <outdir> (artifact, stdout, stderr, exit code).
-`single` runs all eleven mains at SPARK_GRAFT_SCALE_FACTOR=2; `multi` runs
-the multi-leg mains other than BenchScaleAnn at SPARK_GRAFT_SCALE_FACTORS=2,3.
-The data dir, reps, cores and heap come from the caller's environment
+`single` runs all eleven BenchScale* mains at SPARK_GRAFT_SCALE_FACTOR=2;
+`multi` runs the multi-leg ones other than BenchScaleAnn at
+SPARK_GRAFT_SCALE_FACTORS=2,3; `stream` runs BenchStream at factor 1 (both
+SPARK_GRAFT_SCALE_FACTOR=1 and the older SPARK_GRAFT_STREAM_FACTORS=1, so
+builds on either side of that rename run the same legs). The data dir,
+reps, cores and heap come from the caller's environment
 (SPARK_GRAFT_SF_DIR, SPARK_GRAFT_BENCH_REPS, SPARK_GRAFT_CPUS, HEAP).
 
 `compare` requires, per main: the same exit code, gate message, artifact
 file names, JSON key paths, and values at every non-timing path. Timing
-paths are keys ending in `_sec`, keys under `times*` or `t_*`, and
-Retrieval's `ratios`. Exit 1 on any difference.
+paths are keys ending in `_sec`, keys under `times*`, `t_*` or
+`section_sec_median`, and Retrieval's `ratios`. BenchStream's
+`state_bytes` (state-store memory) counts as timing too: two runs of one
+build differ there, in the RocksDB legs. Exit 1 on any difference.
 """
 import json
 import os
@@ -28,6 +33,8 @@ SINGLE = ["BenchScale", "BenchScaleAnalytics", "BenchScaleAnn", "BenchScaleEr",
           "BenchScaleRetrieval", "BenchScaleSketch", "BenchScaleSubstr", "BenchScaleTpch"]
 MULTI = ["BenchScaleAnalytics", "BenchScaleEr", "BenchScaleGraph", "BenchScaleRetrieval",
          "BenchScaleSketch", "BenchScaleSubstr", "BenchScaleTpch"]
+SETS = {"single": SINGLE, "multi": MULTI, "stream": ["BenchStream"]}
+TIMING = {"ratios", "section_sec_median", "state_bytes"}
 
 
 def run(checkout, outdir, which):
@@ -36,10 +43,12 @@ def run(checkout, outdir, which):
     env.pop("SPARK_GRAFT_SCALE_FACTORS", None)
     if which == "single":
         env["SPARK_GRAFT_SCALE_FACTOR"] = "2"
-    else:
+    elif which == "multi":
         env["SPARK_GRAFT_SCALE_FACTORS"] = "2,3"
+    else:
+        env["SPARK_GRAFT_SCALE_FACTOR"] = env["SPARK_GRAFT_STREAM_FACTORS"] = "1"
     runner = os.path.join(os.path.abspath(checkout), "tools", "javarun.sh")
-    for main in SINGLE if which == "single" else MULTI:
+    for main in SETS[which]:
         d = os.path.join(outdir, main)
         os.makedirs(d, exist_ok=True)
         t0 = time.time()
@@ -54,7 +63,7 @@ def run(checkout, outdir, which):
 
 def is_timing(path):
     return any(k.endswith("_sec") or k.startswith("times") or k.startswith("t_")
-               or k == "ratios" for k in path)
+               or k in TIMING for k in path)
 
 
 def flatten(v, path=()):
@@ -71,7 +80,7 @@ def summary(d):
             if m]
     artifacts = {}
     for name in sorted(os.listdir(d)):
-        if name.startswith("BENCH_SCALE") and name.endswith(".json"):
+        if name.startswith("BENCH_") and name.endswith(".json"):
             with open(os.path.join(d, name)) as f:
                 artifacts[name] = dict(flatten(json.load(f)))
     return open(os.path.join(d, "exit.txt")).read().strip(), gate, artifacts
@@ -105,7 +114,7 @@ def compare(a, b):
 
 
 if __name__ == "__main__":
-    if len(sys.argv) == 5 and sys.argv[1] == "run" and sys.argv[4] in ("single", "multi"):
+    if len(sys.argv) == 5 and sys.argv[1] == "run" and sys.argv[4] in SETS:
         run(sys.argv[2], sys.argv[3], sys.argv[4])
     elif len(sys.argv) == 4 and sys.argv[1] == "compare":
         sys.exit(compare(sys.argv[2], sys.argv[3]))
