@@ -6,11 +6,11 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Memory-stream row shapes for the J2 interval-join leg (top-level so the
-  * product encoders derive; the StreamingParitySpec convention).
+/** Memory-stream row shapes (top-level so the product encoders derive; the
+  * StreamingParitySpec convention). A J2 row is a left row when `left`,
+  * else a right row: both sides of a slice arrive in one offset.
   */
-case class BsL(l_key: Long, l_ts: Timestamp)
-case class BsR(r_key: Long, r_ts: Timestamp)
+case class BsJ2(left: Boolean, key: Long, ts: Timestamp)
 case class BsDoc(doc_id: Long, text: String)
 
 /** Streaming performance evidence — the one engine surface the batch bench
@@ -415,9 +415,12 @@ object BenchStream extends Sweep.Family[(String, Sweep.Leg)] {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val base = Timestamp.valueOf("2024-01-01 00:00:00").getTime
-    val lIn = MemoryStream[BsL]
-    val rIn = MemoryStream[BsR]
-    val joined = graft.streaming.StreamOps.j1IntervalJoin(lIn.toDF(), rIn.toDF(),
+    // one source, split by a filter: a slice's left and right rows land in
+    // ONE offset, so no trigger can fire between the two halves
+    val in = MemoryStream[BsJ2]
+    def side(left: Boolean, p: String) = in.toDF().filter(col("left") === left)
+      .select(col("key").as(s"${p}_key"), col("ts").as(s"${p}_ts"))
+    val joined = graft.streaming.StreamOps.j1IntervalJoin(side(true, "l"), side(false, "r"),
       lowerBound = "15 minutes", upperBound = "5 seconds")
     val q = withStateStore(spark, provider) {
       joined.writeStream.format("noop")
@@ -427,8 +430,11 @@ object BenchStream extends Sweep.Family[(String, Sweep.Leg)] {
     try {
       for (b <- 0 until nBatches) {
         val t0 = base + b * 60000L
-        lIn.addData((0 until n).map(i => BsL(i.toLong, new Timestamp(t0 + (i % 50) * 1000L))))
-        rIn.addData((0 until n).map(i => BsR(i.toLong, new Timestamp(t0 + (i % 50) * 1000L + 2000L))))
+        in.addData((0 until n).flatMap { i =>
+          val ts = t0 + (i % 50) * 1000L
+          Seq(BsJ2(left = true, i.toLong, new Timestamp(ts)),
+            BsJ2(left = false, i.toLong, new Timestamp(ts + 2000L)))
+        })
         q.processAllAvailable()
       }
     } finally q.stop()

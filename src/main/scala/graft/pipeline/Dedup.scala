@@ -128,19 +128,65 @@ object Dedup {
     */
   def minhashSignatureFrom(hashed: Column): Column = call_function("graft_minhash", hashed)
 
-  /** doc_id → signature table with each stage in its own projection.
-    * `spread` first: the corpus arrives as few parquet splits, and this is
-    * the pipeline's CPU-heavy stage — it must run on all cores.
+  /** text → 64-slot signature: the one composition of the three kernels.
+    * Every near-dup path (batch, incremental, the corpus store, streaming)
+    * builds its signatures here; only `minhashAccuracy` runs the chain
+    * itself, because it keeps the shingle set as well.
+    */
+  def minhashSignature(text: Column): Column =
+    minhashSignatureFrom(shingleHashesFrom(tokenHashes(text)))
+
+  /** doc_id → signature table. `spread` first: the corpus arrives as few
+    * parquet splits, and this is the pipeline's CPU-heavy stage — it must
+    * run on all cores.
     */
   def signatureTable(spark: SparkSession, dir: String): DataFrame =
     spread(spark, documents(spark, dir))
-      .select(col("doc_id"), tokenHashes(col("text")).as("th"))
-      .select(col("doc_id"), shingleHashesFrom(col("th")).as("hs"))
-      .select(col("doc_id"), minhashSignatureFrom(col("hs")).as("sig"))
+      .select(col("doc_id"), minhashSignature(col("text")).as("sig"))
 
-  /** Column-level composition for small inputs / unit tests. */
-  def minhashSignature(text: Column): Column =
-    minhashSignatureFrom(shingleHashesFrom(tokenHashes(text)))
+  /** The `Bands` LSH keys of a signature: band b is slots
+    * [b·RowsPerBand, (b+1)·RowsPerBand) as decimal strings joined by "_"
+    * (band 0 of the signature 0..63 is "0_1_2_3").
+    *
+    * This is also a STORED format: `CorpusJob`'s band index and its
+    * `_bloom` sidecar hold these strings, so changing the encoding (or the
+    * banding) orphans every existing band index — its probes would stop
+    * finding the duplicates it holds, without an error.
+    */
+  def bandKeys(sig: Column): Column =
+    transform(sequence(lit(0), lit(Bands - 1)),
+      b => concat_ws("_", transform(
+        slice(sig, b * RowsPerBand + 1, lit(RowsPerBand)), x => x.cast("string"))))
+
+  /** One row per (document, band) of a (doc_id, sig, ...) frame: doc_id,
+    * the `carry` columns, then `band` (int) and `band_key` (`bandKeys`).
+    */
+  def bandRows(sigs: DataFrame, carry: String*): DataFrame =
+    sigs.select((col("doc_id") +: carry.map(col)) :+ posexplode(bandKeys(col("sig"))): _*)
+      .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_key")
+
+  /** Estimated Jaccard of two signatures: the matching-slot fraction,
+    * rounded to 6 dp (the figure every pair oracle hashes).
+    */
+  def estJaccard(a: Column, b: Column): Column =
+    round(call_function("graft_eq_count", a, b).cast("double") / lit(NumHashes.toDouble), 6)
+
+  /** `estJaccard` on collected signatures (the streaming operator's state).
+    * Spark rounds a double with BigDecimal HALF_UP, and so does this.
+    */
+  def estJaccard(a: Seq[Long], b: Seq[Long]): Double =
+    BigDecimal(a.zip(b).count { case (x, y) => x == y }.toDouble / NumHashes)
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** The lowest band whose `bandKeys` entries agree, if any. A pair that
+    * shares several buckets is emitted by this band only, so a per-bucket
+    * operator emits it exactly once.
+    */
+  def firstSharedBand(a: Seq[Long], b: Seq[Long]): Option[Int] =
+    (0 until Bands).find { i =>
+      val (lo, hi) = (i * RowsPerBand, (i + 1) * RowsPerBand)
+      a.slice(lo, hi) == b.slice(lo, hi)
+    }
 
   /** MinHash+LSH near-dup candidate pairs: signature → 16 band-hash keys →
     * shuffle on (band, bandHash) → pairs within each bucket, deduped.
@@ -161,13 +207,7 @@ object Dedup {
   def lshPairsFromSigs(sigs: DataFrame, threshold: Double): DataFrame = {
     // band rows carry only (band, key, id) — the 64-slot signatures stay
     // out of the candidate-generation shuffle
-    val banded = sigs.select(
-        col("doc_id"),
-        posexplode(transform(
-          sequence(lit(0), lit(Bands - 1)),
-          b => concat_ws("_", transform(
-            slice(col("sig"), b * RowsPerBand + 1, lit(RowsPerBand)), x => x.cast("string"))))))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_key")
+    val banded = bandRows(sigs)
     val cand = banded.as("x").join(banded.as("y"),
         col("x.band") === col("y.band") && col("x.band_key") === col("y.band_key") &&
           col("x.doc_id") < col("y.doc_id"))
@@ -176,9 +216,7 @@ object Dedup {
     cand
       .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), "doc_a")
       .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        round(call_function("graft_eq_count", col("sig_a"), col("sig_b"))
-          .cast("double") / lit(NumHashes.toDouble), 6).as("est_jaccard"))
+      .select(col("doc_a"), col("doc_b"), estJaccard(col("sig_a"), col("sig_b")).as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
   }
 
@@ -275,17 +313,8 @@ object Dedup {
                        batchSource: String = "src7",
                        threshold: Double = 0.5): DataFrame = {
     val sigs = spread(spark, documents(spark, dir))
-      .select(col("doc_id"), col("source"), tokenHashes(col("text")).as("th"))
-      .select(col("doc_id"), col("source"), shingleHashesFrom(col("th")).as("hs"))
-      .select(col("doc_id"), col("source"), minhashSignatureFrom(col("hs")).as("sig"))
+      .select(col("doc_id"), col("source"), minhashSignature(col("text")).as("sig"))
       .localCheckpoint()
-    def bandRows(df: DataFrame): DataFrame = df
-      .select(col("doc_id"),
-        posexplode(transform(
-          sequence(lit(0), lit(Bands - 1)),
-          b => concat_ws("_", transform(
-            slice(col("sig"), b * RowsPerBand + 1, lit(RowsPerBand)), x => x.cast("string"))))))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_key")
     val batchBands = bandRows(sigs.filter(col("source") === batchSource))
       .select(col("doc_id").as("batch_id"), col("band"), col("band_key"))
     val corpusBands = bandRows(sigs.filter(col("source") =!= batchSource))
@@ -297,8 +326,7 @@ object Dedup {
       .join(sigs.select(col("doc_id").as("batch_id"), col("sig").as("sig_a")), "batch_id")
       .join(sigs.select(col("doc_id").as("corpus_id"), col("sig").as("sig_b")), "corpus_id")
       .select(col("batch_id"), col("corpus_id"),
-        round(call_function("graft_eq_count", col("sig_a"), col("sig_b"))
-          .cast("double") / lit(NumHashes.toDouble), 6).as("est_jaccard"))
+        estJaccard(col("sig_a"), col("sig_b")).as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
   }
 

@@ -211,15 +211,6 @@ object CorpusJob {
         }(_.trim.toLong)
     }
 
-  private def bandRows(df: DataFrame): DataFrame = df
-    .select(col("doc_id"),
-      posexplode(transform(
-        sequence(lit(0), lit(Dedup.Bands - 1)),
-        b => concat_ws("_", transform(
-          slice(col("sig"), b * Dedup.RowsPerBand + 1, lit(Dedup.RowsPerBand)),
-          x => x.cast("string"))))))
-    .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_key")
-
   /** Read the WHOLE band index (gates, compaction, bloom backfill — never
     * the per-batch probe): recursive lookup over the base `kb=` buckets
     * and the `append_*` L0 files; `_`-prefixed sidecars are invisible.
@@ -301,7 +292,7 @@ object CorpusJob {
                             corpus: DataFrame, priorCount: Long): Int =
     bandBucketsOf(stateDir).getOrElse {
       val nb = confInt(spark, BandBucketsConf, BandBucketsDefault)
-      writeBandsBase(bandRows(corpus.select(col("doc_id"), col("sig"))), nb, bandsPath(stateDir))
+      writeBandsBase(Dedup.bandRows(corpus), nb, bandsPath(stateDir))
       writeMarker(stateDir, nb)
       rebuildBloom(stateDir, readBands(spark, stateDir), priorCount * Dedup.Bands)
       nb
@@ -388,10 +379,6 @@ object CorpusJob {
     spark.read.parquet(p)
   }
 
-  private def estJaccard(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-    round(call_function("graft_eq_count", a, b).cast("double") /
-      lit(Dedup.NumHashes.toDouble), 6)
-
   /** Run `body` with the parquet In-filter pushdown threshold raised to
     * cover `n` values (default 10 — above it Spark degrades the pushed
     * predicate to a min/max range, useless for hash-shaped keys), restoring
@@ -427,7 +414,7 @@ object CorpusJob {
       .select(col("doc_id"), col("text"),
         transform(col("embedding"), x => x.cast("double")).as("emb"))
       .select(col("doc_id"),
-        Dedup.minhashSignatureFrom(Dedup.shingleHashesFrom(Dedup.tokenHashes(col("text")))).as("sig"),
+        Dedup.minhashSignature(col("text")).as("sig"),
         col("emb"), norm(col("emb")).as("nrm"))
       .localCheckpoint()
     val existing = loadCorpus(spark, stateDir)
@@ -437,7 +424,7 @@ object CorpusJob {
     // tagged collect off the checkpointed `sigs`: the batch's own band
     // rows (which also carry the id list) and the within-batch near-dup
     // pairs. Bounded by batch × Bands — the ingest-batch contract.
-    val bandBranch = bandRows(sigs)
+    val bandBranch = Dedup.bandRows(sigs)
       .select(lit(0).as("tag"), col("doc_id").as("a"),
         col("band").cast("long").as("b"), col("band_key").as("key"))
     val pairBranch = Dedup.lshPairsFromSigs(
@@ -525,7 +512,7 @@ object CorpusJob {
                   "corpus_id")
                 .join(sigs.select(col("doc_id").as("batch_id"), col("sig").as("sig_a")),
                   "batch_id")
-                .filter(estJaccard(col("sig_a"), col("sig_b")) >= threshold)
+                .filter(Dedup.estJaccard(col("sig_a"), col("sig_b")) >= threshold)
                 .select(col("batch_id"), col("corpus_id"))
                 .collect().map(r => CandPair(r.getLong(0), r.getLong(1))).toSeq
             }
@@ -576,7 +563,7 @@ object CorpusJob {
         // subdir (kept sets are disjoint across batches, so
         // `append_<firstKeptId>` names this batch uniquely), so the
         // window cannot duplicate index rows under the same batching
-        val bandAppend = bandRows(keptDf.select(col("doc_id"), col("sig")))
+        val bandAppend = Dedup.bandRows(keptDf)
         val appendDest = s"${bandsPath(stateDir)}/append_${kept.head}"
         val wide = kept.size.toLong * Dedup.Bands >=
           confInt(spark, AppendWideRowsConf, AppendWideRowsDefault)
@@ -642,8 +629,7 @@ object CorpusJob {
         val cents = deriveSeeds(allChk, nCells)
         val rebuilt = assignCells(allChk, cents, nCells).localCheckpoint()
         val nb = confInt(spark, BandBucketsConf, BandBucketsDefault)
-        writeBandsBase(bandRows(rebuilt.select(col("doc_id"), col("sig"))),
-          nb, bandsPath(stateDir))
+        writeBandsBase(Dedup.bandRows(rebuilt), nb, bandsPath(stateDir))
         writeMarker(stateDir, nb)
         val total = rebuilt.count() // checkpointed: cheap, self-heals drift
         rebuildBloom(stateDir, readBands(spark, stateDir), total * Dedup.Bands)

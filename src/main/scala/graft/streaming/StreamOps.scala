@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.pipeline.Dedup
 
 /** Structured Streaming renderings of the reference's stateful operators.
   *
@@ -272,18 +273,8 @@ object StreamOps {
   def streamingNearDupPairs(docs: DataFrame, threshold: Double = 0.5): Dataset[NearDupPair] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val bands = graft.pipeline.Dedup.Bands
-    val rpb = graft.pipeline.Dedup.RowsPerBand
-    val nh = graft.pipeline.Dedup.NumHashes
-    def bandSlice(sig: Seq[Long], b: Int): Seq[Long] = sig.slice(b * rpb, b * rpb + rpb)
-    val banded = docs
-      .select(col("doc_id"), graft.pipeline.Dedup.minhashSignature(col("text")).as("sig"))
-      .select(col("doc_id"), col("sig"),
-        posexplode(transform(
-          sequence(lit(0), lit(bands - 1)),
-          b => concat_ws("_", transform(
-            slice(col("sig"), b * rpb + 1, lit(rpb)), x => x.cast("string"))))))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_key")
+    val banded = Dedup.bandRows(
+        docs.select(col("doc_id"), Dedup.minhashSignature(col("text")).as("sig")), "sig")
       .as[(Long, Seq[Long], Int, String)]
     banded
       .groupByKey(r => (r._3, r._4))
@@ -298,12 +289,8 @@ object StreamOps {
             if (!seen.exists(_._1 == id)) {
               seen.foreach { case (oid, osig) =>
                 // first-shared-band convention = global exactly-once
-                val firstShared = (0 until bands)
-                  .find(b => bandSlice(sig, b) == bandSlice(osig, b))
-                if (firstShared.contains(band)) {
-                  val eq = sig.zip(osig).count { case (x, y) => x == y }
-                  val est = BigDecimal(eq.toDouble / nh)
-                    .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+                if (Dedup.firstSharedBand(sig, osig).contains(band)) {
+                  val est = Dedup.estJaccard(sig, osig)
                   if (est >= threshold)
                     out += NearDupPair(math.min(id, oid), math.max(id, oid), est)
                 }

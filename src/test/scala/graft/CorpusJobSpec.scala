@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import graft.pipeline.Dedup
 import graft.sources.LocalFs
 import graft.streaming.CorpusJob
 import graft.streaming.CorpusJob.CorpusDoc
@@ -123,7 +124,7 @@ class CorpusJobSpec extends SparkSpecBase {
     assert(CorpusJob.retrieve(spark, wideDir, queriesDf).collect().map(_.toSeq).toSet == flatTop)
     // band index in lockstep under the wide layout too
     assert(CorpusJob.readBands(spark, wideDir).count() ==
-      flatSurv.size.toLong * graft.pipeline.Dedup.Bands)
+      flatSurv.size.toLong * Dedup.Bands)
   }
 
   test("ST8 crash-restart: survivor store recovers from checkpoint and equals the uninterrupted run") {
@@ -230,7 +231,7 @@ class CorpusJobSpec extends SparkSpecBase {
     CorpusJob.processBatch(spark, docs.drop(30).toDF(), dir) // the replay
     assert(survivors(dir) == survAfter, "replay must converge to the same survivor set")
     val bandRows = CorpusJob.readBands(spark, dir).count()
-    assert(bandRows == survAfter.size.toLong * graft.pipeline.Dedup.Bands,
+    assert(bandRows == survAfter.size.toLong * Dedup.Bands,
       s"band index must stay in lockstep after a crash-window replay: " +
         s"$bandRows rows for ${survAfter.size} survivors")
     // and the index content itself is duplicate-free per (doc_id, band)
@@ -320,7 +321,7 @@ class CorpusJobSpec extends SparkSpecBase {
       // lockstep + duplicate-free through the compactions
       val surv = survivors(dir)
       assert(CorpusJob.readBands(spark, dir).count() ==
-        surv.size.toLong * graft.pipeline.Dedup.Bands)
+        surv.size.toLong * Dedup.Bands)
       // oracle equality: same survivors as the one-shot run
       val oneDir = java.nio.file.Files.createTempDirectory("corpus_compact_one").toString
       CorpusJob.processBatch(spark, docs.toDF(), oneDir)
@@ -352,23 +353,14 @@ class CorpusJobSpec extends SparkSpecBase {
     val ghosts = docs.take(2).zip(ghostIds.toSeq.sorted).map { case (d, id) =>
       CorpusDoc(id, d.text.split(' ').map(w => s"${w}gh$id").mkString(" "), d.embedding)
     }
-    import org.apache.spark.sql.functions.{col => c}
-    val ghostSigs = ghosts.toDF()
-      .select(c("doc_id"),
-        graft.pipeline.Dedup.minhashSignatureFrom(
-          graft.pipeline.Dedup.shingleHashesFrom(
-            graft.pipeline.Dedup.tokenHashes(c("text")))).as("sig"))
-    // the phantom subdir, exactly as a crashed fast path would leave it
-    ghostSigs.select(c("doc_id"),
-        posexplode(transform(sequence(lit(0), lit(graft.pipeline.Dedup.Bands - 1)),
-          b => concat_ws("_", transform(
-            slice(c("sig"), b * graft.pipeline.Dedup.RowsPerBand + 1,
-              lit(graft.pipeline.Dedup.RowsPerBand)), x => x.cast("string"))))))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_key")
+    // the phantom subdir, exactly as a crashed fast path would leave it:
+    // the same signature chain and band rows `processBatch` writes
+    Dedup.bandRows(ghosts.toDF()
+        .select(col("doc_id"), Dedup.minhashSignature(col("text")).as("sig")))
       .repartition(1)
       .write.mode("overwrite").parquet(s"$dir/bands/append_900001")
     val lockstepBroken = CorpusJob.readBands(spark, dir).count()
-    assert(lockstepBroken > survivors(dir).size.toLong * graft.pipeline.Dedup.Bands,
+    assert(lockstepBroken > survivors(dir).size.toLong * Dedup.Bands,
       "setup: phantom rows present")
     // a live arrival near-duplicating a GHOST (not a survivor) must be
     // KEPT — phantoms are not survivors and cannot dedup anything
@@ -380,7 +372,7 @@ class CorpusJobSpec extends SparkSpecBase {
     assert(survivors(dir).contains(liveTwin.doc_id),
       "phantom band rows must never dedup a live arrival")
     assert(CorpusJob.readBands(spark, dir).count() ==
-      survivors(dir).size.toLong * graft.pipeline.Dedup.Bands,
+      survivors(dir).size.toLong * Dedup.Bands,
       "compaction must purge phantom rows back to lockstep")
   }
 
@@ -424,5 +416,73 @@ class CorpusJobSpec extends SparkSpecBase {
     CorpusJob.processBatch(spark, docs.drop(30).toDF(), dir)
     assert(sidecarCount == survivors(dir).size.toLong,
       "sidecar must be backfilled from the store and updated by the append")
+  }
+
+  test("store-backed survivors == the greedy prefix rule over the batch minhashLsh pairs") {
+    // ties the band-index/bloom path to the batch definition: three
+    // micro-batches through processBatch keep exactly the docs the batch
+    // LSH pair set keeps when a doc survives iff no pair links it to an
+    // earlier survivor
+    val loaded = loadDocs(150)
+    // a chain a ~ b ~ c with a !~ c across the three batches: greedy keeps
+    // a and c and drops b, where "drop the greater id of every pair" would
+    // drop c too; plus a cross-batch and an in-batch near-copy
+    val toks = (p: String, r: Range) => r.map(i => s"$p$i")
+    val chain = Seq(toks("x", 1 to 100), toks("x", 1 to 80) ++ toks("y", 1 to 20),
+      toks("z", 1 to 20) ++ toks("x", 21 to 80) ++ toks("y", 1 to 20)).map(_.mkString(" "))
+    val all = loaded.zipWithIndex.map {
+      case (d, 20) => d.copy(text = chain(0))
+      case (d, 70) => d.copy(text = chain(1))
+      case (d, 130) => d.copy(text = chain(2))
+      case (d, 140) => d.copy(text = loaded(10).text + " extratok")
+      case (d, 145) => d.copy(text = loaded(120).text + " othertok")
+      case (d, _) => d
+    }
+    val ids = Seq(20, 70, 130, 140, 145).map(all(_).doc_id)
+
+    val docsDir = java.nio.file.Files.createTempDirectory("corpus_lsh_docs").toString
+    all.map(d => (d.doc_id, d.text)).toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$docsDir/documents.parquet")
+    val pairs = Dedup.minhashLsh(spark, docsDir)
+      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+    assert(pairs((ids(0), ids(1))) && pairs((ids(1), ids(2))) && !pairs((ids(0), ids(2))),
+      "setup: the planted chain must be a ~ b ~ c with a !~ c")
+    val greedy = all.map(_.doc_id).sorted.foldLeft(Vector.empty[Long]) { (kept, id) =>
+      if (kept.exists(k => pairs((k, id)))) kept else kept :+ id
+    }.toSet
+
+    val dir = java.nio.file.Files.createTempDirectory("corpus_lsh_store").toString
+    all.grouped(50).foreach(chunk => CorpusJob.processBatch(spark, chunk.toDF(), dir))
+    val surv = survivors(dir)
+    assert(surv == greedy,
+      s"store-only=${surv -- greedy} greedy-only=${greedy -- surv}")
+    assert(surv(ids(0)) && !surv(ids(1)) && surv(ids(2)) && !surv(ids(3)) && !surv(ids(4)))
+  }
+
+  test("the stored band-key format is pinned: bandKeys, band index rows and bloom keys") {
+    // band_key is an on-disk format: if the encoding moves, existing band
+    // indexes stop finding the duplicates they hold, without an error
+    val keys = Seq(Tuple1((0L until 64L).toArray)).toDF("sig")
+      .select(Dedup.bandKeys(col("sig"))).as[Seq[String]].head()
+    assert(keys == (0 until 16).map(b => (4 * b until 4 * b + 4).mkString("_")))
+    assert(keys.take(2) == Seq("0_1_2_3", "4_5_6_7") && keys.last == "60_61_62_63")
+
+    // a bootstrap batch (bloom built by a Spark aggregate) and a fast-path
+    // batch (bloom merged driver-side): the index holds `bandRows` of the
+    // stored signatures, and the bloom holds `band|band_key` for each row
+    val docs = loadDocs(60)
+    val dir = java.nio.file.Files.createTempDirectory("corpus_keyfmt").toString
+    docs.grouped(30).foreach(chunk => CorpusJob.processBatch(spark, chunk.toDF(), dir))
+    val stored = CorpusJob.readBands(spark, dir).as[(Long, Int, String)].collect()
+    val want = Dedup.bandRows(spark.read.parquet(s"$dir/corpus"))
+      .as[(Long, Int, String)].collect()
+    assert(stored.length == 16 * survivors(dir).size && stored.toSet == want.toSet)
+    val in = new java.io.DataInputStream(new java.io.FileInputStream(s"$dir/bands/_bloom"))
+    val bloom =
+      try { in.readLong(); in.readLong(); org.apache.spark.util.sketch.BloomFilter.readFrom(in) }
+      finally in.close()
+    assert(stored.forall { case (_, b, k) => bloom.mightContainString(s"$b|$k") })
+    // and the check has teeth: the bloom is far from saturated
+    assert(stored.count { case (_, b, k) => bloom.mightContainString(s"$k|$b") } < stored.length / 100)
   }
 }

@@ -48,6 +48,35 @@ class TextDedupSpec extends SparkSpecBase {
     assert(est(sigs(1L), sigs(3L)) < 0.2, "unrelated pair should share few slots")
   }
 
+  test("Scala firstSharedBand and estJaccard agree with bandKeys and the estJaccard column") {
+    // the streaming near-dup operator runs the Scala twins; over real
+    // signature pairs they must give what the batch paths' columns give.
+    // The real near-dups all share band 0, so synthetic pairs whose first
+    // b bands differ (and one that shares none) cover the later bands
+    val sigs = Dedup.signatureTable(spark, "/root/testdata/sf0.001").filter($"doc_id" < 150)
+    val real = sigs.as("a").join(sigs.as("b"), $"a.doc_id" < $"b.doc_id")
+      .select($"a.sig".as("sa"), $"b.sig".as("sb"), lit(true).as("real"))
+    val ramp = (0L until 64L).toSeq
+    val synthetic = (0 to Dedup.Bands).map(b =>
+      (ramp, ramp.map(x => if (x < b * Dedup.RowsPerBand) x + 100 else x), false))
+      .toDF("sa", "sb", "real")
+    val pairs = real.union(synthetic)
+      .select($"sa", $"sb", Dedup.bandKeys($"sa"), Dedup.bandKeys($"sb"),
+        Dedup.estJaccard($"sa", $"sb"), $"real")
+      .as[(Seq[Long], Seq[Long], Seq[String], Seq[String], Double, Boolean)].collect()
+    val firstBands = pairs.map { case (sa, sb, ka, kb, _, _) =>
+      (Dedup.firstSharedBand(sa, sb), ka.indices.find(i => ka(i) == kb(i))) }
+    assert(firstBands.forall { case (got, want) => got == want },
+      s"firstSharedBand drifted: ${firstBands.filter(p => p._1 != p._2).take(5).toSeq}")
+    assert(firstBands.map(_._2).toSet == (0 until Dedup.Bands).map(Option(_)).toSet + None)
+    val ests = pairs.map { case (sa, sb, _, _, est, _) => (Dedup.estJaccard(sa, sb), est) }
+    assert(ests.forall { case (got, want) => got == want },
+      s"estJaccard drifted: ${ests.filter(p => p._1 != p._2).take(5).toSeq}")
+    // non-vacuous: real pairs above the cut and below it
+    val realEsts = pairs.filter(_._6).map(_._5)
+    assert(realEsts.exists(_ >= 0.5) && realEsts.exists(e => e > 0 && e < 0.5))
+  }
+
   test("simhash: identical texts collide, disjoint texts differ") {
     val df = Seq((1L, "a b c d e f"), (2L, "a b c d e f"), (3L, "q r s t u v"))
       .toDF("doc_id", "text")
