@@ -1,14 +1,20 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{ExplainMode, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import scala.collection.immutable.ListMap
 
-/** Whole-registry executed-plan audit: runs EVERY SparkEntry query at the
-  * given SF and records per-query plan-health counters into
-  * `PLAN_AUDIT.json` — the automated successor of per-round manual plan
-  * spot checks (`graft.PlanDump` still dumps named queries' plans).
+/** The one registry walker: a [[Sweep.Family]] whose legs are the
+  * `SparkEntry` queries, sorted by name. Each query is built and warmed
+  * off the clock, then built and run `reps` times (`Sweep.Ctx.timed`);
+  * `PLAN_AUDIT.json` is rewritten after every query and the gates run once
+  * it holds them all. A query that fails is recorded as `{"failed":1}` and
+  * the walk goes on.
   *
   * Counters per query (from the AQE-final executed plan):
   *  - `exchanges`           shuffle exchanges (corpus reshuffle points).
@@ -41,12 +47,30 @@ import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
   *                          / catalog-row scalar attaches)
   *  - `codegen_spans`       WholeStageCodegen regions
   *
-  * The artifact is written BEFORE the gates throw, so a violating run
-  * still ships its evidence (the BenchScale convention). Run with the
-  * usual Spark-jars + classes classpath: `java -cp &lt;spark jars&gt;
-  * graft.PlanAudit`.
+  * and `attrib`, from the job log of the last rep: its wall, jobs, stages,
+  * tasks, shuffle bytes, max and summed task ms, and the driver gap (the
+  * wall minus the union of the query's job intervals) — the fixed
+  * per-query cost of a sub-second query.
+  *
+  * Env, beyond [[Sweep.ctx]]'s (`SPARK_GRAFT_SF_DIR`, here default sf0.001,
+  * where the `sp_max_rows` gate is calibrated; `SPARK_GRAFT_BENCH_REPS`):
+  *   SPARK_GRAFT_SP_MAX_ROWS  the `sp_max_rows` gate (default 4000)
+  *   SPARK_GRAFT_PLAN_ONLY    comma-separated query names (default: all);
+  *                            an unknown name fails the run at start. Each
+  *                            named query's record also holds its job rows
+  *                            and top stages, and its plans are written to
+  *                            `<SPARK_GRAFT_PLAN_DIR>/<query>.txt`: the
+  *                            formatted plan of every SQL execution its
+  *                            build ran (construction-time checkpoints
+  *                            included), then the final frame's formatted
+  *                            plan, taken before it runs.
+  *   SPARK_GRAFT_PLAN_DIR     the plan dir (default `plans`)
+  *
+  * Run with `tools/javarun.sh graft.PlanAudit`; the artifact lands in the
+  * working directory.
   */
 object PlanAudit {
+  import Sweep.Ctx
 
   /** Every node of the AQE-final physical plan, descending into adaptive
     * roots, materialized query stages, and (scalar/in) subquery plans.
@@ -103,92 +127,151 @@ object PlanAudit {
     if (counts.isEmpty) 0L else counts.max
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spMaxRows = sys.env.getOrElse("SPARK_GRAFT_SP_MAX_ROWS", "4000").toLong
-    val spark = GraftSession.get()
-    val rows = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val counts =
-        try {
-          val df = fn(spark, sfDir)
-          df.queryExecution.toRdd.count() // execute so AQE finalizes
-          // the AQE toString appends an "== Initial Plan ==" section that
-          // would double-count every node: audit the FINAL plan only
-          val plan = df.queryExecution.executedPlan.toString
-            .split("== Initial Plan ==").head
-          def n(marker: String): Int =
-            plan.sliding(marker.length).count(_ == marker)
-          // shuffle exchanges print as "Exchange <partitioning>"; anchor on
-          // a preceding non-letter so "BroadcastExchange "/"ReusedExchange "
-          // tails don't count
-          val shuffleExchanges =
-            raw"(?<![A-Za-z])Exchange ".r.findAllMatchIn(plan).size
-          // whole-stage regions print as "*(k)" prefixes in tree mode —
-          // count DISTINCT region ids, not occurrences
-          val codegenIds = raw"\*\((\d+)\)".r.findAllMatchIn(plan)
-            .map(_.group(1)).toSet.size
-          val spRows = maxSinglePartitionRows(df.queryExecution.executedPlan)
-          Map(
-            "exchanges" -> shuffleExchanges.toLong,
-            "single_partition" -> n("Exchange SinglePartition").toLong,
-            "sp_max_rows" -> spRows,
-            "cartesian" -> n("CartesianProduct").toLong,
-            "bnlj" -> n("BroadcastNestedLoopJoin").toLong,
-            "codegen_spans" -> codegenIds.toLong,
-            "pushed_filters" -> pushedFilterCount(plan).toLong)
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[audit] $name failed: ${e.getMessage}")
-            Map("failed" -> 1L)
-        }
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      name -> counts
-    }
-    val failed = rows.collect { case (n, c) if c.contains("failed") => n }
-    val cartesianOffenders = rows.collect {
-      case (n, c) if c.getOrElse("cartesian", 0L) > 0 => n
-    }
-    val spOffenders = rows.collect {
-      case (n, c) if c.getOrElse("sp_max_rows", 0L) > spMaxRows =>
-        n -> c("sp_max_rows")
-    }
-    val spTotal = rows.map(_._2.getOrElse("single_partition", 0L)).sum
-    val byName = rows.toMap
-    val pushdownOffenders = MustPushFilters.filter(n =>
-      byName.get(n).exists(c => !c.contains("failed") && c.getOrElse("pushed_filters", 0L) == 0L))
-    def js(m: Map[String, Long]) =
-      m.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    val json =
-      s"""{"metric":"plan_audit","sf":"$sfDir","queries":${rows.size},""" +
-        s""""failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        s""""cartesian_offenders":${cartesianOffenders.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        s""""single_partition_total":$spTotal,""" +
-        s""""sp_max_rows_gate":$spMaxRows,""" +
-        s""""sp_offenders":${spOffenders.map { case (n, v) => "\"" + n + "\":" + v }.mkString("{", ",", "}")},""" +
-        s""""pushdown_gate":${MustPushFilters.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        s""""pushdown_offenders":${pushdownOffenders.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        s""""per_query":${rows.map { case (k, v) => "\"" + k + "\":" + js(v) }.mkString("{", ",", "}")}}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get("PLAN_AUDIT.json"),
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    spark.stop()
-    println(s"""{"metric":"plan_audit","queries":${rows.size},"failed":${failed.size},""" +
-      s""""cartesian_offenders":${cartesianOffenders.size},"single_partition_total":$spTotal,""" +
-      s""""sp_offenders":${spOffenders.size}}""")
-    if (failed.nonEmpty)
-      throw new IllegalStateException(s"plan audit: ${failed.size} queries failed: $failed")
-    if (cartesianOffenders.nonEmpty)
-      throw new IllegalStateException(
-        s"plan audit: CartesianProduct in ${cartesianOffenders.mkString(", ")} — " +
-          "every cross join must broadcast")
-    if (spOffenders.nonEmpty)
-      throw new IllegalStateException(
-        s"plan audit: corpus-sized SinglePartition stage in " +
-          spOffenders.map { case (n, v) => s"$n ($v rows)" }.mkString(", ") +
-          s" — exceeds $spMaxRows rows; partition the window/sort or pre-aggregate")
-    if (pushdownOffenders.nonEmpty)
-      throw new IllegalStateException(
-        s"plan audit: scan-bound queries with ZERO pushed filters: " +
-          s"${pushdownOffenders.mkString(", ")} — a filter stopped reaching the " +
-          "parquet scan (check for casts/wrappers on the filter column)")
+  /** The seven counters of an executed plan. */
+  def counters(root: SparkPlan): ListMap[String, Long] = {
+    // the AQE toString appends an "== Initial Plan ==" section that would
+    // double-count every node: audit the FINAL plan only
+    val plan = root.toString.split("== Initial Plan ==").head
+    def n(marker: String): Long = plan.sliding(marker.length).count(_ == marker).toLong
+    ListMap(
+      // shuffle exchanges print as "Exchange <partitioning>"; anchor on a
+      // preceding non-letter so "BroadcastExchange "/"ReusedExchange " tails
+      // don't count
+      "exchanges" -> raw"(?<![A-Za-z])Exchange ".r.findAllMatchIn(plan).size.toLong,
+      "single_partition" -> n("Exchange SinglePartition"),
+      "sp_max_rows" -> maxSinglePartitionRows(root),
+      "cartesian" -> n("CartesianProduct"),
+      "bnlj" -> n("BroadcastNestedLoopJoin"),
+      // whole-stage regions print as "*(k)" prefixes in tree mode — count
+      // DISTINCT region ids, not occurrences
+      "codegen_spans" -> raw"\*\((\d+)\)".r.findAllMatchIn(plan).map(_.group(1)).toSet.size.toLong,
+      "pushed_filters" -> pushedFilterCount(plan).toLong)
   }
+
+  /** One walked query: its counters (`failed` alone when it threw) and the
+    * attribution of its last rep.
+    */
+  final case class Row(name: String, counts: ListMap[String, Long], attrib: Sweep.Fields = Nil)
+
+  /** The walk over the queries in `only` (every query when empty). */
+  final case class Walk(only: Seq[String], planDir: String, spMaxRows: Long)
+      extends Sweep.Family[Row] {
+    val artifactFile = "PLAN_AUDIT.json"
+    override def defaultFactors: Seq[Int] = Seq(1)
+    override def defaultSfDir: String = "/root/testdata/sf0.001"
+
+    def legs(c: Ctx): Iterator[Row] = {
+      val unknown = only.filterNot(SparkEntry.queries.contains)
+      require(unknown.isEmpty, s"plan audit: unknown query names: ${unknown.mkString(", ")}")
+      if (only.nonEmpty) Files.createDirectories(Paths.get(planDir))
+      val names = if (only.isEmpty) SparkEntry.queries.keys.toSeq else only.distinct
+      names.sorted.iterator.map(walk(c, _))
+    }
+
+    private def walk(c: Ctx, name: String): Row = {
+      val build = () => SparkEntry.queries(name)(c.spark, c.sfDir)
+      try {
+        c.log.reset()
+        val df = build()
+        if (only.nonEmpty) dump(c, name, df)
+        c.warm(df)
+        var window = (0L, 0L)
+        val (_, ran) = c.timed {
+          c.log.reset()
+          val t0 = System.currentTimeMillis()
+          val df = build()
+          Sweep.exec(df)
+          window = (t0, System.currentTimeMillis())
+          df
+        }
+        c.log.settle()
+        Row(name, counters(ran.queryExecution.executedPlan), attrib(c, window._1, window._2))
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[audit] $name failed: ${e.getMessage}")
+          c.drop()
+          Row(name, ListMap("failed" -> 1L))
+      }
+    }
+
+    /** The build's SQL executions in order, then the final frame unrun. */
+    private def dump(c: Ctx, name: String, df: DataFrame): Unit = {
+      c.log.settle()
+      val execs = c.log.executions.zipWithIndex.map { case (x, i) =>
+        s"==== build execution ${i + 1}: ${x.desc} ====\n${x.plan}\n"
+      }
+      val last = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      Files.write(Paths.get(planDir, s"$name.txt"),
+        (execs.mkString + s"==== final frame ====\n$last").getBytes(UTF_8))
+    }
+
+    private def attrib(c: Ctx, t0: Long, t1: Long): Sweep.Fields = {
+      val jobs = c.log.jobs
+      val stages = c.log.stages
+      val spans = jobs.filter(_.ms >= 0)
+        .map(j => (j.start max t0, (j.start + j.ms) min t1)).sortBy(_._1)
+      val busy = spans.foldLeft((0L, t0)) { case ((b, end), (s, e)) =>
+        if (e <= end) (b, end) else (b + e - (s max end), e)
+      }._1
+      Seq("wall_ms" -> (t1 - t0), "jobs" -> jobs.size, "stages" -> stages.size,
+        "tasks" -> jobs.map(_.tasks).sum,
+        "shuffle_read_bytes" -> jobs.map(_.shuffleRead).sum,
+        "shuffle_write_bytes" -> jobs.map(_.shuffleWrite).sum,
+        "max_task_ms" -> (0L +: stages.map(_.maxTaskMs)).max,
+        "sum_task_ms" -> stages.map(_.sumTaskMs).sum,
+        "driver_gap_ms" -> (t1 - t0 - busy)) ++
+        (if (only.isEmpty) Nil
+         else Seq(
+           "job_rows" -> jobs.map(j => Sweep.obj("id" -> j.id, "ms" -> j.ms,
+             "stages" -> j.stageIds.size, "tasks" -> j.tasks,
+             "shuffle_read_bytes" -> j.shuffleRead, "shuffle_write_bytes" -> j.shuffleWrite,
+             "desc" -> j.desc)),
+           "top_stages" -> stages.sortBy(-_.sumTaskMs).take(12).map(s => Sweep.obj(
+             "id" -> s.id, "tasks" -> s.tasks, "max_task_ms" -> s.maxTaskMs,
+             "sum_task_ms" -> s.sumTaskMs, "shuffle_read_bytes" -> s.shuffleRead,
+             "shuffle_write_bytes" -> s.shuffleWrite, "name" -> s.name))))
+    }
+
+    private def count(r: Row, k: String): Long = r.counts.getOrElse(k, 0L)
+    private def failed(done: Seq[Row]) = done.collect { case r if r.counts.contains("failed") => r.name }
+    private def cartesian(done: Seq[Row]) = done.collect { case r if count(r, "cartesian") > 0 => r.name }
+    private def spOffenders(done: Seq[Row]) =
+      done.collect { case r if count(r, "sp_max_rows") > spMaxRows => r.name -> count(r, "sp_max_rows") }
+    private def pushdown(done: Seq[Row]) = MustPushFilters.filter(n => done.exists(r =>
+      r.name == n && !r.counts.contains("failed") && count(r, "pushed_filters") == 0L))
+
+    def artifact(c: Ctx, done: Seq[Row]): Sweep.Fields =
+      Seq("metric" -> "plan_audit", "sf" -> c.sfDir, "queries" -> done.size,
+        "failed" -> failed(done), "cartesian_offenders" -> cartesian(done),
+        "single_partition_total" -> done.map(count(_, "single_partition")).sum,
+        "sp_max_rows_gate" -> spMaxRows, "sp_offenders" -> Sweep.obj(spOffenders(done): _*),
+        "pushdown_gate" -> MustPushFilters, "pushdown_offenders" -> pushdown(done),
+        "per_query" -> Sweep.obj(done.map(r => r.name ->
+          (if (r.attrib.isEmpty) r.counts else r.counts + ("attrib" -> Sweep.obj(r.attrib: _*)))): _*))
+
+    def gates(done: Seq[Row]): Unit = {
+      val (f, cart, sp, push) = (failed(done), cartesian(done), spOffenders(done), pushdown(done))
+      if (f.nonEmpty)
+        throw new IllegalStateException(s"plan audit: ${f.size} queries failed: $f")
+      if (cart.nonEmpty)
+        throw new IllegalStateException(
+          s"plan audit: CartesianProduct in ${cart.mkString(", ")} — " +
+            "every cross join must broadcast")
+      if (sp.nonEmpty)
+        throw new IllegalStateException(
+          s"plan audit: corpus-sized SinglePartition stage in " +
+            sp.map { case (n, v) => s"$n ($v rows)" }.mkString(", ") +
+            s" — exceeds $spMaxRows rows; partition the window/sort or pre-aggregate")
+      if (push.nonEmpty)
+        throw new IllegalStateException(
+          s"plan audit: scan-bound queries with ZERO pushed filters: " +
+            s"${push.mkString(", ")} — a filter stopped reaching the " +
+            "parquet scan (check for casts/wrappers on the filter column)")
+    }
+  }
+
+  def main(args: Array[String]): Unit =
+    Walk(sys.env.getOrElse("SPARK_GRAFT_PLAN_ONLY", "").split(",").map(_.trim).filter(_.nonEmpty).toSeq,
+      sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans"),
+      sys.env.getOrElse("SPARK_GRAFT_SP_MAX_ROWS", "4000").toLong).main(args)
 }

@@ -4,19 +4,21 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import scala.collection.immutable.ListMap
 import scala.collection.mutable
 
 /** The bench harness behind every `BenchScale*` main, `BenchStream`,
-  * `ProfileQuery` and `AnnCalibrate`. A sweep family declares only what is
+  * `PlanAudit` and `AnnCalibrate`. A sweep family declares only what is
   * its own — how it builds the scaled input, the variants it times, its
   * invariants and its artifact fields — and the harness owns the rest of
   * the contract every sweep shares:
   *
-  *  - the env, read here and nowhere else: `SPARK_GRAFT_SF_DIR` (default
-  *    sf0.1), the factor list (`SPARK_GRAFT_SCALE_FACTOR` pins one leg; a
-  *    multi-leg family also takes `SPARK_GRAFT_SCALE_FACTORS`, default its
-  *    own list, `10,100` for most) and `SPARK_GRAFT_BENCH_REPS` (default 2);
+  *  - the sweep env, read here and nowhere else: `SPARK_GRAFT_SF_DIR`
+  *    (default the family's own dir, sf0.1 for all but `PlanAudit`), the
+  *    factor list (`SPARK_GRAFT_SCALE_FACTOR` pins one leg; a multi-leg
+  *    family also takes `SPARK_GRAFT_SCALE_FACTORS`, default its own list,
+  *    `10,100` for most) and `SPARK_GRAFT_BENCH_REPS` (default 2);
   *  - warm-up off the clock, min-of-reps timing, and releasing pinned
   *    blocks between runs;
   *  - the one job listener, [[JobLog]], registered once per run;
@@ -30,6 +32,8 @@ import scala.collection.mutable
 object Sweep {
 
   type Fields = Seq[(String, Any)]
+
+  private val DefaultSfDir = "/root/testdata/sf0.1"
 
   /** One finished leg: its artifact fields and its deferred validity gate. */
   final case class Leg(name: String, fields: Fields, gate: () => Unit = () => ())
@@ -82,25 +86,28 @@ object Sweep {
 
   /** The one job listener: per job its wall, stages, tasks and shuffle
     * bytes; per completed stage its tasks, max and sum task ms and shuffle
-    * bytes; and the input bytes of every task. Events arrive on Spark's
-    * listener bus after the job returns, so read it after [[settle]].
+    * bytes; the input bytes of every task; and per SQL execution, in start
+    * order, its description and formatted physical plan. Events arrive on
+    * Spark's listener bus after the job returns, so read it after [[settle]].
     */
   final class JobLog(sc: SparkContext) extends SparkListener {
-    import JobLog.{Job, Stage}
+    import JobLog.{Exec, Job, Stage}
 
     private val FenceKey = "graft.joblog.fence"
     private val jobMap = mutable.LinkedHashMap[Int, Job]()
     private val stageMap = mutable.LinkedHashMap[Int, Stage]()
     private val stageToJob = mutable.HashMap[Int, Int]()
     private val taskMs = mutable.HashMap[Int, (Long, Long)]()
+    private val execs = mutable.ArrayBuffer[Exec]()
     private var input = 0L
     private var fence = (-1, new CountDownLatch(0))
 
     def jobs: Seq[Job] = synchronized(jobMap.values.toSeq)
     def stages: Seq[Stage] = synchronized(stageMap.values.toSeq)
+    def executions: Seq[Exec] = synchronized(execs.toSeq)
     def inputBytes: Long = synchronized(input)
     def reset(): Unit = synchronized {
-      jobMap.clear(); stageMap.clear(); stageToJob.clear(); taskMs.clear(); input = 0
+      jobMap.clear(); stageMap.clear(); stageToJob.clear(); taskMs.clear(); execs.clear(); input = 0
     }
 
     /** Wait until the log holds every job submitted before the call: a
@@ -145,6 +152,11 @@ object Sweep {
         taskMs(e.stageId) = (mx max e.taskInfo.duration, sum + e.taskInfo.duration)
       }
     }
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case x: SparkListenerSQLExecutionStart =>
+        synchronized(execs += Exec(x.description, x.physicalPlanDescription))
+      case _ =>
+    }
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
       val s = e.stageInfo
       stageToJob.get(s.stageId).flatMap(jobMap.get).foreach { j =>
@@ -161,6 +173,7 @@ object Sweep {
   }
 
   object JobLog {
+    final case class Exec(desc: String, plan: String)
     final case class Job(id: Int, desc: String, start: Long, stageIds: Seq[Int],
                          var ms: Long = -1, var tasks: Int = 0,
                          var shuffleRead: Long = 0, var shuffleWrite: Long = 0)
@@ -172,6 +185,7 @@ object Sweep {
   trait Family[L] {
     def artifactFile: String
     def defaultFactors: Seq[Int] = Seq(10, 100)
+    def defaultSfDir: String = DefaultSfDir
     /** The legs, run lazily in order: the artifact is rewritten after each. */
     def legs(c: Ctx): Iterator[L]
     /** The artifact's fields given the legs finished so far. */
@@ -181,7 +195,7 @@ object Sweep {
 
     def main(args: Array[String]): Unit = {
       val spark = GraftSession.get()
-      run(this, ctx(spark, defaultFactors), java.nio.file.Paths.get(artifactFile),
+      run(this, ctx(spark, defaultFactors, defaultSfDir), java.nio.file.Paths.get(artifactFile),
         () => spark.stop())
     }
   }
@@ -211,13 +225,14 @@ object Sweep {
     * with a single default factor runs exactly one leg, so only
     * `SPARK_GRAFT_SCALE_FACTOR` moves it.
     */
-  def ctx(spark: SparkSession, defaultFactors: Seq[Int]): Ctx = {
+  def ctx(spark: SparkSession, defaultFactors: Seq[Int],
+          defaultSfDir: String = DefaultSfDir): Ctx = {
     val list =
       if (defaultFactors.size > 1)
         sys.env.get("SPARK_GRAFT_SCALE_FACTORS").map(_.split(",").map(_.trim.toInt).toSeq)
       else None
     Ctx(spark,
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
+      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", defaultSfDir),
       sys.env.get("SPARK_GRAFT_SCALE_FACTOR").map(f => Seq(f.toInt)).orElse(list)
         .getOrElse(defaultFactors),
       sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1))

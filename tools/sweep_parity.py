@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Sweep parity: run the bench mains of two builds, then compare them.
 
-    python3 tools/sweep_parity.py run <checkout> <outdir> single|multi|stream
+    python3 tools/sweep_parity.py run <checkout> <outdir> single|multi|stream|audit
     python3 tools/sweep_parity.py compare <outdir-a> <outdir-b>
 
 `run` drives each main through <checkout>/tools/javarun.sh in its own
@@ -10,16 +10,19 @@ working directory under <outdir> (artifact, stdout, stderr, exit code).
 `multi` runs the multi-leg ones other than BenchScaleAnn at
 SPARK_GRAFT_SCALE_FACTORS=2,3; `stream` runs BenchStream at factor 1 (both
 SPARK_GRAFT_SCALE_FACTOR=1 and the older SPARK_GRAFT_STREAM_FACTORS=1, so
-builds on either side of that rename run the same legs). The data dir,
+builds on either side of that rename run the same legs); `audit` runs the
+registry walker PlanAudit over every query (PLAN_AUDIT.json). The data dir,
 reps, cores and heap come from the caller's environment
 (SPARK_GRAFT_SF_DIR, SPARK_GRAFT_BENCH_REPS, SPARK_GRAFT_CPUS, HEAP).
 
 `compare` requires, per main: the same exit code, gate message, artifact
 file names, JSON key paths, and values at every non-timing path. Timing
 paths are keys ending in `_sec`, keys under `times*`, `t_*` or
-`section_sec_median`, and Retrieval's `ratios`. BenchStream's
-`state_bytes` (state-store memory) counts as timing too: two runs of one
-build differ there, in the RocksDB legs. Exit 1 on any difference.
+`section_sec_median`, Retrieval's `ratios`, and PlanAudit's per-query
+`attrib` (its job log: walls, task ms, and job and task counts that vary
+with timing). BenchStream's `state_bytes` (state-store memory) counts as
+timing too: two runs of one build differ there, in the RocksDB legs.
+Exit 1 on any difference.
 """
 import json
 import os
@@ -33,19 +36,20 @@ SINGLE = ["BenchScale", "BenchScaleAnalytics", "BenchScaleAnn", "BenchScaleEr",
           "BenchScaleRetrieval", "BenchScaleSketch", "BenchScaleSubstr", "BenchScaleTpch"]
 MULTI = ["BenchScaleAnalytics", "BenchScaleEr", "BenchScaleGraph", "BenchScaleRetrieval",
          "BenchScaleSketch", "BenchScaleSubstr", "BenchScaleTpch"]
-SETS = {"single": SINGLE, "multi": MULTI, "stream": ["BenchStream"]}
-TIMING = {"ratios", "section_sec_median", "state_bytes"}
+SETS = {"single": SINGLE, "multi": MULTI, "stream": ["BenchStream"], "audit": ["PlanAudit"]}
+TIMING = {"ratios", "section_sec_median", "state_bytes", "attrib"}
 
 
 def run(checkout, outdir, which):
     env = dict(os.environ)
     env.pop("SPARK_GRAFT_SCALE_FACTOR", None)
     env.pop("SPARK_GRAFT_SCALE_FACTORS", None)
+    env.pop("SPARK_GRAFT_PLAN_ONLY", None)
     if which == "single":
         env["SPARK_GRAFT_SCALE_FACTOR"] = "2"
     elif which == "multi":
         env["SPARK_GRAFT_SCALE_FACTORS"] = "2,3"
-    else:
+    elif which == "stream":
         env["SPARK_GRAFT_SCALE_FACTOR"] = env["SPARK_GRAFT_STREAM_FACTORS"] = "1"
     runner = os.path.join(os.path.abspath(checkout), "tools", "javarun.sh")
     for main in SETS[which]:
@@ -80,7 +84,7 @@ def summary(d):
             if m]
     artifacts = {}
     for name in sorted(os.listdir(d)):
-        if name.startswith("BENCH_") and name.endswith(".json"):
+        if name.startswith("BENCH_") and name.endswith(".json") or name == "PLAN_AUDIT.json":
             with open(os.path.join(d, name)) as f:
                 artifacts[name] = dict(flatten(json.load(f)))
     return open(os.path.join(d, "exit.txt")).read().strip(), gate, artifacts
