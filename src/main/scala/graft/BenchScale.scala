@@ -69,27 +69,11 @@ object BenchScale extends Sweep.SingleLeg {
     val variants: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
       "ngram_prefix"        -> (() => pipeline.Dedup.ngramJaccardPrefixFrom(scaledDocs)),
       "ngram_exhaustive"    -> (() => pipeline.Dedup.ngramJaccardExhaustiveFrom(scaledDocs)),
-      // the dispatcher should pick prefix under linear blocks and
-      // exhaustive under quadratic blowup — gated below, not assumed
-      "ngram_adaptive"      -> (() => pipeline.Dedup.ngramJaccardAdaptiveFrom(scaledDocs)),
       "containment_prefix"  -> (() => pipeline.Dedup.bagOverlapPrefixFrom(scaledDocs)),
       "containment_exhaustive" -> (() => pipeline.Dedup.bagOverlapFrom(scaledDocs)))
     c.warm(variants.map(_._2()): _*)
 
-    // snapshot the dispatcher's decision IMMEDIATELY after its timed run:
-    // the equality phase below re-runs the prefix/exhaustive builders, and
-    // reading the @volatile vars at gate time would record whatever the
-    // LAST builder call left there, not what the timed adaptive run chose
-    var adaptiveRoute = ""
-    var adaptiveEst = (0.0, 0.0)
-    val times = variants.map { case (name, fn) =>
-      val t = c.time(fn())
-      if (name == "ngram_adaptive") {
-        adaptiveRoute = pipeline.Dedup.lastAdaptiveRoute
-        adaptiveEst = pipeline.Dedup.lastAdaptiveEstimates
-      }
-      name -> t
-    }
+    val times = variants.map { case (name, fn) => name -> c.time(fn()) }
 
     // pair-set equality prefix vs exhaustive, both families: the speedup is
     // only evidence if the outputs are the same set. One family at a time,
@@ -124,42 +108,10 @@ object BenchScale extends Sweep.SingleLeg {
       pipeline.Dedup.bagOverlapPrefixFrom(scaledDocs),
       pipeline.Dedup.bagOverlapFrom(scaledDocs))
 
-    val (adExh, adPre) = adaptiveEst
-    // dispatcher tripwire: the route was chosen from candidate-volume
-    // estimates BEFORE timing — fail only when the choice measured ≥2×
-    // slower than the alternative (reps=1 same-plan noise alone reaches
-    // ~1.5×, so a tighter bound would gate on rig weather; a cost model
-    // whose verdict inverts a 2× reality is broken, not unlucky).
-    // History note: the round-5 "quadratic regime → exhaustive wins"
-    // crossover no longer exists — the in-row vocab prefix slice and the
-    // skinny candidate join have made prefix the measured winner in BOTH
-    // regimes — so the gate checks the measurement, not a remembered map.
-    // "exhaustive_toy" (corpus below the prefix crossover, estimates never
-    // computed) has no alternative measurement to compare against: record
-    // the route verbatim, skip the gate.
-    val tPrefix = times.toMap.apply("ngram_prefix")
-    val tExhaustive = times.toMap.apply("ngram_exhaustive")
-    val routeOk = adaptiveRoute match {
-      case "exhaustive_toy" => true
-      case "prefix"         => tPrefix <= 2.0 * tExhaustive
-      case _                => tExhaustive <= 2.0 * tPrefix
-    }
-    val (tChosen, tOther) =
-      if (adaptiveRoute == "prefix") (tPrefix, tExhaustive) else (tExhaustive, tPrefix)
     Sweep.Leg(s"x$factor", Seq(
       "times_sec" -> Sweep.obj(times: _*),
       "jaccard_pairs" -> jaccardPairs, "containment_pairs" -> containPairs,
-      "jaccard_pairs_equal" -> jaccardEqual, "containment_pairs_equal" -> containEqual,
-      "adaptive_route" -> adaptiveRoute,
-      "adaptive_est_pairs" -> Sweep.obj("exhaustive" -> adExh, "prefix" -> adPre),
-      "adaptive_route_within_2x" -> routeOk),
-      () => {
-        enforcePairEquality(jaccardEqual, containEqual)
-        if (!routeOk)
-          throw new IllegalStateException(
-            s"adaptive dispatcher routed '$adaptiveRoute' ($tChosen s) against a ≥2× " +
-              s"faster alternative ($tOther s) in the $regime regime: the candidate " +
-              "estimates are mis-modeling the corpus — artifact written but INVALID")
-      })
+      "jaccard_pairs_equal" -> jaccardEqual, "containment_pairs_equal" -> containEqual),
+      () => enforcePairEquality(jaccardEqual, containEqual))
   }
 }

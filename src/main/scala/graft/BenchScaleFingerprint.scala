@@ -76,55 +76,24 @@ object BenchScaleFingerprint extends Sweep.SingleLeg {
     val (amB, amBase) = timed(pipeline.Multimodal.afpPairsFrom(ids(1), 1, 16))
     val (amS, amScaled) = timed(pipeline.Multimodal.afpPairsFrom(ids(factor), 1, 16))
     // probed-MIH: SAME radius as the byte-block forms (1-bit probe
-    // expansion keeps pigeonhole recall exact) — the scale-path twin the
-    // adaptive dispatcher routes to, gated pair-set EQUAL below.
-    // 1× probed legs feed the toy-scale tripwire (the round-10 verdict's
-    // dispatcher-overhead finding).
+    // expansion keeps pigeonhole recall exact) — the route the registry's
+    // `multimodal_*_pairs` entries run, gated pair-set EQUAL below.
     val (ppB, _) = timed(pipeline.Multimodal.phashPairsProbedFrom(ids(1)))
     val (ppS, ppScaled) = timed(pipeline.Multimodal.phashPairsProbedFrom(ids(factor)))
     val (apB, _) = timed(pipeline.Multimodal.afpPairsProbedFrom(ids(1)))
     val (apS, apScaled) = timed(pipeline.Multimodal.afpPairsProbedFrom(ids(factor)))
-    // the dispatcher at BOTH operating points: estimates/routes are
-    // snapshotted IMMEDIATELY after each timed run (any later builder call
-    // could overwrite the @volatile observability vars). At 1× (5k docs at
-    // sf0.1, below dispatchMinDocs) the dispatcher must short-circuit —
-    // its whole-query wall is gated against the fixed probed route below.
-    val (padB, _) = timed(pipeline.Multimodal.phashPairsAdaptiveFrom(ids(1)))
-    val phRouteB = pipeline.Multimodal.lastFingerprintRoute
-    val phShortB = pipeline.Multimodal.lastFingerprintShortCircuit
-    val (padS, _) = timed(pipeline.Multimodal.phashPairsAdaptiveFrom(ids(factor)))
-    val phRoute = pipeline.Multimodal.lastFingerprintRoute
-    val (phByteCost, phMihCost) = pipeline.Multimodal.lastFingerprintEstimates
-    val (aadB, _) = timed(pipeline.Multimodal.afpPairsAdaptiveFrom(ids(1)))
-    val afRouteB = pipeline.Multimodal.lastFingerprintRoute
-    val afShortB = pipeline.Multimodal.lastFingerprintShortCircuit
-    val (aadS, _) = timed(pipeline.Multimodal.afpPairsAdaptiveFrom(ids(factor)))
-    val afRoute = pipeline.Multimodal.lastFingerprintRoute
-    val (afByteCost, afMihCost) = pipeline.Multimodal.lastFingerprintEstimates
 
     def cross(ps: Seq[(Long, Long, Long)]) = ps.count(p => p._1 / Shift != p._2 / Shift)
     def pairs(b: Double, s: Double, bp: Seq[(Long, Long, Long)], sp: Seq[(Long, Long, Long)]) =
       Sweep.obj("base_sec" -> b, "scaled_sec" -> s, "base_pairs" -> bp.size,
         "scaled_pairs" -> sp.size, "cross_replica" -> cross(sp))
-    def adaptive(tb: Double, routeB: String, shortB: Boolean, ts: Double, route: String,
-                 byteCost: Double, mihCost: Double) =
-      Sweep.obj("base_sec" -> tb, "base_route" -> routeB, "base_short_circuit" -> shortB,
-        "scaled_sec" -> ts, "route" -> route,
-        "est_cost" -> Sweep.obj("byte_block" -> byteCost, "mih_probed" -> mihCost))
-    // the toy-scale tripwire below applies only when the 1× corpus sits
-    // below the configured dispatchMinDocs
-    val baseDocs = Tables.documents(spark, sfDir).count()
-    val minDocs = spark.conf
-      .getOption("spark.graft.fingerprint.dispatchMinDocs").map(_.toLong).getOrElse(20000L)
     Sweep.Leg(s"x$factor", Seq(
       "phash" -> pairs(phB, phS, phBase, phScaled),
       "afp" -> pairs(afB, afS, afBase, afScaled),
       "phash_mih" -> pairs(pmB, pmS, pmBase, pmScaled),
       "afp_mih" -> pairs(amB, amS, amBase, amScaled),
       "phash_probed" -> Sweep.obj("base_sec" -> ppB, "scaled_sec" -> ppS, "scaled_pairs" -> ppScaled.size),
-      "afp_probed" -> Sweep.obj("base_sec" -> apB, "scaled_sec" -> apS, "scaled_pairs" -> apScaled.size),
-      "phash_adaptive" -> adaptive(padB, phRouteB, phShortB, padS, phRoute, phByteCost, phMihCost),
-      "afp_adaptive" -> adaptive(aadB, afRouteB, afShortB, aadS, afRoute, afByteCost, afMihCost)),
+      "afp_probed" -> Sweep.obj("base_sec" -> apB, "scaled_sec" -> apS, "scaled_pairs" -> apScaled.size)),
       () => {
         enforceCopy0(phBase.toSet, phScaled.filter(p => p._1 < Shift && p._2 < Shift).toSet)
         enforceCopy0(afBase.toSet, afScaled.filter(p => p._1 < Shift && p._2 < Shift).toSet)
@@ -150,45 +119,6 @@ object BenchScaleFingerprint extends Sweep.SingleLeg {
           throw new IllegalStateException("fingerprint sweep invalid: phash_probed != phash")
         if (apScaled.map(p => (p._1, p._2)).toSet != afScaled.map(p => (p._1, p._2)).toSet)
           throw new IllegalStateException("fingerprint sweep invalid: afp_probed != afp")
-        // dispatcher tripwire (the ngram_adaptive discipline): the chosen route
-        // must not measure ≥2× slower than the alternative at this operating
-        // point — reps=1 same-plan noise reaches ~1.5×, so 2× is the bound
-        // that flags a broken cost model rather than rig weather
-        def routeGate(name: String, route: String, tByte: Double, tProbed: Double): Unit = {
-          val ok = route match {
-            case "mih_probed" => tProbed <= 2.0 * tByte
-            case _            => tByte <= 2.0 * tProbed
-          }
-          if (!ok)
-            throw new IllegalStateException(
-              s"fingerprint sweep invalid: $name adaptive routed '$route' against a ≥2× " +
-                s"faster alternative (byte_block $tByte s, mih_probed $tProbed s)")
-        }
-        routeGate("phash", phRoute, phS, ppS)
-        routeGate("afp", afRoute, afS, apS)
-        // toy-scale tripwire (round-10 verdict): at 1× the dispatcher must
-        // short-circuit — no estimation aggregates — and its whole-query wall
-        // must stay within 2× of the BETTER fixed route (same-plan noise bound;
-        // the pre-fix overhead measured 1.6–2×, the short-circuit targets
-        // ≤1.2×). Applies only when the 1× corpus actually sits below the
-        // configured dispatchMinDocs: pointed at a ≥20k-doc corpus the adaptive
-        // 1× call legitimately takes the estimation path (round-11 ADVICE), so
-        // the gate is skipped and the artifact's recorded route stands alone.
-        def overheadGate(name: String, short: Boolean, tAdaptive: Double,
-                         tByte: Double, tProbed: Double): Unit = {
-          if (baseDocs >= minDocs) return
-          if (!short)
-            throw new IllegalStateException(
-              s"fingerprint sweep invalid: $name adaptive did not short-circuit at 1× " +
-                s"(corpus $baseDocs docs < dispatchMinDocs $minDocs must skip estimation)")
-          val best = math.min(tByte, tProbed)
-          if (tAdaptive > 2.0 * best)
-            throw new IllegalStateException(
-              s"fingerprint sweep invalid: $name adaptive 1× wall $tAdaptive s > 2× the " +
-                s"better fixed route ($best s) — dispatcher overhead regressed")
-        }
-        overheadGate("phash", phShortB, padB, phB, ppB)
-        overheadGate("afp", afShortB, aadB, afB, apB)
       })
   }
 }

@@ -172,8 +172,8 @@ object BenchScaleSketch extends Sweep.Legs {
       gate(rankErrScaled <= 0.05, s"t-digest scaled rank error $rankErrScaled > 0.05")
 
       // Per-op MEASURED verdict (round-10 verdict item 5): the swap rule is
-      // measurement-backed like the dedup/fingerprint dispatchers, not an
-      // assumed "sketches always win". "sketch" only when the sketch run is
+      // measurement-backed, not an assumed "sketches always win".
+      // "sketch" only when the sketch run is
       // >1.2× faster at the scaled point (outside same-plan noise);
       // "either" inside the band; "exact" when exact wins — the x100
       // recording showed a8's t-digest ~1.8× SLOWER than exact and a3's

@@ -58,7 +58,10 @@ import scala.collection.immutable.ListMap
   *   SPARK_GRAFT_PLAN_ONLY    comma-separated query names (default: all);
   *                            an unknown name fails the run at start. Each
   *                            named query's record also holds its job rows
-  *                            and top stages, and its plans are written to
+  *                            and top stages, each named after the SQL
+  *                            execution that ran it (`count at …`; a job
+  *                            outside any execution stays unnamed), and its
+  *                            plans are written to
   *                            `<SPARK_GRAFT_PLAN_DIR>/<query>.txt`: the
   *                            formatted plan of every SQL execution its
   *                            build ran (construction-time checkpoints
@@ -229,7 +232,7 @@ object PlanAudit {
            "top_stages" -> stages.sortBy(-_.sumTaskMs).take(12).map(s => Sweep.obj(
              "id" -> s.id, "tasks" -> s.tasks, "max_task_ms" -> s.maxTaskMs,
              "sum_task_ms" -> s.sumTaskMs, "shuffle_read_bytes" -> s.shuffleRead,
-             "shuffle_write_bytes" -> s.shuffleWrite, "name" -> s.name))))
+             "shuffle_write_bytes" -> s.shuffleWrite, "name" -> s.name, "job" -> s.job))))
     }
 
     private def count(r: Row, k: String): Long = r.counts.getOrElse(k, 0L)

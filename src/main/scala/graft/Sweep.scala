@@ -84,11 +84,15 @@ object Sweep {
     def time(df: => DataFrame): Double = timed(exec(df))._1
   }
 
-  /** The one job listener: per job its wall, stages, tasks and shuffle
-    * bytes; per completed stage its tasks, max and sum task ms and shuffle
-    * bytes; the input bytes of every task; and per SQL execution, in start
-    * order, its description and formatted physical plan. Events arrive on
-    * Spark's listener bus after the job returns, so read it after [[settle]].
+  /** The one job listener: per job its name, wall, stages, tasks and
+    * shuffle bytes; per completed stage its job's name, tasks, max and sum
+    * task ms and shuffle bytes; the input bytes of every task; and per SQL
+    * execution, in start order, its id, description and formatted physical
+    * plan. A job without a `spark.job.description` is named after its SQL
+    * execution (`count at Multimodal.scala:NNN`), so the stages AQE submits
+    * under a generic call site still say which action ran them. Events
+    * arrive on Spark's listener bus after the job returns, so read it after
+    * [[settle]].
     */
   final class JobLog(sc: SparkContext) extends SparkListener {
     import JobLog.{Exec, Job, Stage}
@@ -136,8 +140,10 @@ object Sweep {
       val prop = (k: String) => Option(e.properties).flatMap(p => Option(p.getProperty(k)))
       if (prop(FenceKey).isDefined) fence = (e.jobId, fence._2)
       else {
-        jobMap(e.jobId) = Job(e.jobId, prop("spark.job.description").getOrElse(""), e.time,
-          e.stageIds)
+        val exec = prop("spark.sql.execution.id").map(_.toLong)
+          .flatMap(id => execs.find(_.id == id)).map(_.desc)
+        jobMap(e.jobId) = Job(e.jobId,
+          prop("spark.job.description").orElse(exec).getOrElse(""), e.time, e.stageIds)
         e.stageIds.foreach(stageToJob(_) = e.jobId)
       }
     }
@@ -154,7 +160,7 @@ object Sweep {
     }
     override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
       case x: SparkListenerSQLExecutionStart =>
-        synchronized(execs += Exec(x.description, x.physicalPlanDescription))
+        synchronized(execs += Exec(x.executionId, x.description, x.physicalPlanDescription))
       case _ =>
     }
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
@@ -166,18 +172,18 @@ object Sweep {
         j.shuffleRead += read
         j.shuffleWrite += written
         val (mx, sum) = taskMs.getOrElse(s.stageId, (0L, 0L))
-        stageMap(s.stageId) = Stage(s.stageId, s.name.takeWhile(_ != '\n').take(60),
+        stageMap(s.stageId) = Stage(s.stageId, s.name.takeWhile(_ != '\n').take(60), j.desc,
           s.numTasks, mx, sum, read, written)
       }
     }
   }
 
   object JobLog {
-    final case class Exec(desc: String, plan: String)
+    final case class Exec(id: Long, desc: String, plan: String)
     final case class Job(id: Int, desc: String, start: Long, stageIds: Seq[Int],
                          var ms: Long = -1, var tasks: Int = 0,
                          var shuffleRead: Long = 0, var shuffleWrite: Long = 0)
-    final case class Stage(id: Int, name: String, tasks: Int, maxTaskMs: Long,
+    final case class Stage(id: Int, name: String, job: String, tasks: Int, maxTaskMs: Long,
                            sumTaskMs: Long, shuffleRead: Long, shuffleWrite: Long)
   }
 

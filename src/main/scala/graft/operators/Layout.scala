@@ -32,7 +32,7 @@ object Layout {
     * of the 1-row wide result into the long (column, stats) form via
     * `stack`. The exact `count(distinct)` is what the DuckDB oracle can
     * verify; in scale mode the same query under
-    * `spark.graft.approxDistinct=true` rewrites `size(collect_set)` to
+    * `spark.graft.scaleMode=true` rewrites `size(collect_set)` to
     * HLL — profiling is the textbook consumer of that trade, so the
     * distinct here is written in the rewrite-eligible `size(collect_set)`
     * form rather than `countDistinct`.
@@ -279,8 +279,8 @@ object Layout {
   }
 
   /** Shuffle-key skew profile — the diagnostic that decides WHETHER the
-    * scale toolkit's mitigations (`Scale.saltedJoin`, salted distinct, AQE
-    * skew thresholds) are needed for a key before paying for them: one row
+    * scale toolkit's mitigations (salted distinct, AQE skew thresholds)
+    * are needed for a key before paying for them: one row
     * of distribution facts for `events.user_id` as a shuffle key. Reports
     * key/row counts, the hottest key's absolute count and share, the Gini
     * coefficient of the per-key count distribution (0 = perfectly even,

@@ -1,50 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale utilities: the levers a 100 TB deployment pulls that small-SF
   * correctness tests never force.
   */
 object Scale {
-
-  /** Salted equi-join for skewed keys: explode the build side `salt` ways,
-    * scatter the probe side across salts, join on (key, salt). Same rows
-    * as a plain inner equi-join, but a hot key's rows spread over `salt`
-    * reducers instead of one straggler.
-    *
-    * AQE's skew-join split (enabled in `GraftSession`) handles moderate
-    * skew adaptively; explicit salting is for the pathological
-    * one-key-dominates case (a viral item in the reference's product
-    * stats, a boilerplate dup-cluster in corpus dedup).
-    */
-  /** @param saltCols columns the salt is derived from; defaults to every
-    *                  hashable (non-map) probe column. Pass a
-    *                  high-cardinality column (a unique id, an offset) when
-    *                  the probe can contain fully IDENTICAL rows under a
-    *                  hot key — identical rows hash to the same salt, which
-    *                  would re-concentrate them on one reducer. (A salt
-    *                  that distinguishes identical rows AND is stable under
-    *                  task retry cannot exist without a row identity; the
-    *                  caller is the one who knows where that identity is.)
-    */
-  def saltedJoin(probe: DataFrame, build: DataFrame, key: String, salt: Int,
-                 saltCols: Seq[String] = Seq.empty): DataFrame = {
-    // Salt must be a deterministic function of the row itself: an id- or
-    // rand-based salt recomputes differently on stage retry after a shuffle
-    // fetch failure, duplicating/dropping rows against reducers that already
-    // consumed the first attempt's output (the SPARK-23207 class of bug).
-    val source =
-      if (saltCols.nonEmpty) saltCols.map(col)
-      else probe.schema.fields // xxhash64 cannot hash MapType columns
-        .filterNot(_.dataType.isInstanceOf[org.apache.spark.sql.types.MapType])
-        .map(f => col(f.name)).toSeq
-    val saltedProbe = probe.withColumn("__salt",
-      pmod(xxhash64(source: _*), lit(salt.toLong)).cast("int"))
-    val saltedBuild = build.withColumn("__salt",
-      explode(sequence(lit(0), lit(salt - 1))))
-    saltedProbe.join(saltedBuild, Seq(key, "__salt")).drop("__salt")
-  }
 
   /** Broadcast-hint `df` only when Catalyst's own size estimate says it is
     * genuinely small. An explicit `broadcast()` hint BYPASSES the planner's
@@ -154,15 +116,6 @@ object Scale {
       case None => df.localCheckpoint(false)
     }
 
-  /** Skew flag for the exhaustive dedup joins (`Dedup.sharedTokenJoin`):
-    * 0/1 = plain blocked join (default); k > 1 = salt the (source, tok)
-    * block key k ways through `saltedJoin`, for corpora where ONE block
-    * dominates (a single-source corpus is the pathological case) and
-    * AQE's skew splitting isn't enough. Output is identical either way
-    * (spec-asserted).
-    */
-  val DedupSaltConf = "spark.graft.dedup.saltBuckets"
-
   /** Crossover bound for the prefix-filtered dedup joins
     * (`Dedup.ngramJaccardPrefixFrom` / `bagOverlapPrefixFrom`): an input
     * whose plan-stats estimate is at or below this many bytes runs the
@@ -178,28 +131,12 @@ object Scale {
   val PrefixCrossoverConf = "spark.graft.prefixCrossoverBytes"
   val PrefixCrossoverDefault: Long = 2L << 20
 
-  /** Pruning-power bound for the adaptive Jaccard dispatcher
-    * (`Dedup.ngramJaccardAdaptiveFrom`): when the prefix rendering's
-    * estimated candidate-pair volume is at least this fraction of the
-    * exhaustive rendering's, prefix filtering cannot pay for its extra
-    * stages and the dispatcher routes to the exhaustive token join.
-    * A fully unprunable corpus keeps ~all candidates (ratio → 1); the
-    * recorded corpora keep well under half even in the quadratic
-    * block-blowup regime (where prefix now measures faster too — see
-    * `BENCH_SCALE_quadratic.json`), so 0.5 routes exhaustive only when
-    * pruning has genuinely collapsed. The sweep trips nonzero if the
-    * chosen route measures ≥2× slower than the alternative.
-    */
-  val AdaptivePruneRatioConf = "spark.graft.dedup.adaptivePruneRatio"
-  val AdaptivePruneRatioDefault: Double = 0.5
-
   /** The 100 TB configuration as ONE switch (README "Scale mode"):
     * `spark.graft.scaleMode=true` — settable here, per session, or via
     * `spark-submit --conf` — turns on every sketch rewrite at once
     * (`ApproxDistinctRule`: exact `size(collect_set)` → HLL;
-    * `ApproxPercentileRule`: exact `percentile` → t-digest). The
-    * per-rule flags (`spark.graft.approxDistinct` / `approxPercentile`)
-    * still override individually. Oracle-gated runs keep it off — scale
+    * `ApproxPercentileRule`: exact `percentile` → t-digest); it is the
+    * only flag either rule reads. Oracle-gated runs keep it off — scale
     * mode trades exactness for O(1) per-group state, which is the right
     * trade only at corpus scale.
     */

@@ -832,78 +832,13 @@ object Dedup {
     // no spread: bagTable hash-partitions by doc_id itself
     ngramJaccardPrefixFrom(documents(spark, dir), threshold)
 
-  /** Route taken by the last `ngramJaccardAdaptiveFrom` call ("prefix",
-    * "exhaustive", or "exhaustive_toy") — decision observability for
-    * specs and the scale sweep, the `lastClusterIterations` convention.
+  /** The registry's `dedup_ngram_adaptive` entry, kept under its name: the
+    * prefix rendering, which beats the exhaustive one in both recorded
+    * sweep regimes (`BENCH_SCALE_linear.json`, `BENCH_SCALE_quadratic.json`).
     */
-  @volatile var lastAdaptiveRoute: String = ""
-
-  /** (exhaustive, prefix) candidate-pair estimates behind the last route
-    * decision — recorded into the sweep artifact so the cost model is
-    * auditable, not just its verdict.
-    */
-  @volatile var lastAdaptiveEstimates: (Double, Double) = (0.0, 0.0)
-
   def ngramJaccardAdaptive(spark: SparkSession, dir: String,
                            threshold: Double = 0.5): DataFrame =
-    ngramJaccardAdaptiveFrom(documents(spark, dir), threshold)
-
-  /** Cost-based dispatch between the two proven-identical Jaccard pair
-    * renderings. A corpus where every block grows with the corpus (an
-    * all-near-dup ingest, a uniform tiny vocabulary) leaves the prefix
-    * filter little to prune, and its extra stages stop paying — the
-    * round-5 quadratic sweep measured exhaustive winning 2× there. The
-    * prefix improvements since (in-row vocab df slice, skinny candidate
-    * join) have made prefix the measured winner in BOTH recorded regimes
-    * (quadratic is now prefix 53 s vs exhaustive 100 s), but the
-    * structural regime is real — pruning power is a property of the
-    * INGEST, and input BYTES cannot see it. So the dispatcher decides
-    * from the candidate-pair volume each plan would shuffle: exact
-    * block-count sums (Σ n·(n−1)/2 over (source, token) blocks, the
-    * pre-length-band candidate counts — the band prunes both plans
-    * alike, so it cancels in the ratio), one cheap aggregate each — the
-    * exhaustive estimate over the full bag, the prefix estimate over the
-    * PPJoin prefix rows the prefix plan would actually join. If the
-    * prefix keeps ≥ `Scale.AdaptivePruneRatio` (default 0.5) of the
-    * exhaustive candidates, route exhaustive; otherwise prefix. Decision
-    * cost is two scalar aggregates over the checkpointed bag table the
-    * prefix route then reuses — noise next to either candidate join at
-    * corpus scale, and the plan is chosen by the data instead of by a
-    * configuration guess. `BenchScale` trips nonzero if the chosen route
-    * ever measures ≥2× slower than the alternative.
-    */
-  def ngramJaccardAdaptiveFrom(docsIn: DataFrame, threshold: Double = 0.5): DataFrame = {
-    if (belowPrefixCrossover(docsIn)) {
-      lastAdaptiveRoute = "exhaustive_toy"
-      return ngramJaccardExhaustiveFrom(spread(docsIn.sparkSession, docsIn), threshold)
-    }
-    val pruneT = threshold - 1e-6 // see prefixPairsFromBase: round(J,6) slack
-    val base = bagTable(docsIn)
-    // Σ C(n,2) over (source, tok) blocks as double: the ratio is what
-    // decides, and a double sum cannot overflow where a corpus-scale
-    // block count could push a long past 2⁶³
-    def candPairs(rows: DataFrame): Double =
-      rows.groupBy(col("source"), col("tok")).agg(count(lit(1)).as("n"))
-        .agg(coalesce(sum((col("n") * (col("n") - lit(1L)) / lit(2.0))
-          .cast("double")), lit(0.0)).as("c"))
-        .collect()(0).getDouble(0)
-    val exhaustiveEst = candPairs(
-      base.select(col("source"), explode(col("bag")).as("b"))
-        .select(col("source"), col("b.tok").as("tok")))
-    val prefixEst = candPairs(
-      prefixProbe(base, pruneT).select(col("source"), col("tok")))
-    val ratio = docsIn.sparkSession.conf
-      .get(graft.operators.Scale.AdaptivePruneRatioConf,
-        graft.operators.Scale.AdaptivePruneRatioDefault.toString).toDouble
-    lastAdaptiveEstimates = (exhaustiveEst, prefixEst)
-    if (prefixEst >= ratio * exhaustiveEst) {
-      lastAdaptiveRoute = "exhaustive"
-      ngramJaccardExhaustiveFrom(spread(docsIn.sparkSession, docsIn), threshold)
-    } else {
-      lastAdaptiveRoute = "prefix"
-      prefixPairsFromBase(base, threshold)
-    }
-  }
+    ngramJaccardPrefixFrom(documents(spark, dir), threshold)
 
   /** Exact threshold-kNN over token-bag Jaccard: for every document, its
     * top-`k` most similar neighbors among pairs with similarity ≥
@@ -935,21 +870,6 @@ object Dedup {
         col("doc_b").as("neighbor"), col("jaccard"))
   }
 
-  /** Core prefix-filtered join over any (doc_id, source, text) frame.
-    *
-    * The prefix is computed IN-ROW, not with a `Window.partitionBy(doc_id)`
-    * pass: the old rendering paid a full-corpus sort-shuffle of every token
-    * OCCURRENCE row just to rank each doc's tokens by global df. Here the
-    * per-doc (tok, tf) bag is a run-length pass over the already-sorted
-    * token array (`graft_bag_counts` — no tf shuffle at all), global df is
-    * attached with one join (map-side below the broadcast gate), and the
-    * prefix slice — sort the doc's DISTINCT tokens by (df, tok), keep
-    * occurrences while cum < L — happens inside one codegen'd projection
-    * (`graft_prefix_tokens`). Shuffles: dfreq agg (+ df join above the
-    * gate) + the collect-back groupBy, vs tf agg + df join + window sort
-    * before; and the window sorted all occurrence rows where the kernel
-    * sorts each doc's distinct tokens.
-    */
   /** (doc_id, source, text) → the checkpointed per-doc run-length bag frame
     * every prefix join starts from: (doc_id, source, total, bag). Tokenize +
     * sort + run-length encode ONCE per doc. localCheckpoint rather than
@@ -1040,21 +960,29 @@ object Dedup {
     }
   }
 
+  /** Core prefix-filtered join over any (doc_id, source, text) frame.
+    *
+    * The prefix is computed IN-ROW, not with a `Window.partitionBy(doc_id)`
+    * pass: the old rendering paid a full-corpus sort-shuffle of every token
+    * OCCURRENCE row just to rank each doc's tokens by global df. Here the
+    * per-doc (tok, tf) bag is a run-length pass over the already-sorted
+    * token array (`graft_bag_counts` — no tf shuffle at all), global df is
+    * attached with one join (map-side below the broadcast gate), and the
+    * prefix slice — sort the doc's DISTINCT tokens by (df, tok), keep
+    * occurrences while cum < L — happens inside one codegen'd projection
+    * (`graft_prefix_tokens`). Shuffles: dfreq agg (+ df join above the
+    * gate) + the collect-back groupBy, vs tf agg + df join + window sort
+    * before; and the window sorted all occurrence rows where the kernel
+    * sorts each doc's distinct tokens.
+    */
   def ngramJaccardPrefixFrom(docsIn: DataFrame, threshold: Double = 0.5): DataFrame = {
+    val spark = docsIn.sparkSession
     // toy-scale crossover: identical output through the exhaustive plan
     // (spread first — a toy input is typically one parquet split, and the
     // exhaustive tokenize stage must still run on all cores)
     if (belowPrefixCrossover(docsIn))
-      return ngramJaccardExhaustiveFrom(spread(docsIn.sparkSession, docsIn), threshold)
-    prefixPairsFromBase(bagTable(docsIn), threshold)
-  }
-
-  /** The prefix rendering's body after bag construction — split out so the
-    * adaptive dispatcher can reuse ITS bag table instead of building a
-    * second one.
-    */
-  private def prefixPairsFromBase(base: DataFrame, threshold: Double): DataFrame = {
-    val spark = base.sparkSession
+      return ngramJaccardExhaustiveFrom(spread(spark, docsIn), threshold)
+    val base = bagTable(docsIn)
     // The final filter (and the oracle) gate on round(J, 6), which admits
     // J down to threshold - 5e-7 — every PRUNING bound must therefore use
     // the slackened threshold or boundary pairs the oracle kept would be
@@ -1096,40 +1024,16 @@ object Dedup {
   /** The shared-token pair join both exhaustive renderings run: probe ⋈
     * build on the (source, tok) block key with `extraCond` (role/band
     * predicates) on top, output renamed to x_- and y_-prefixed columns.
-    *
-    * Skew flag (`Scale.DedupSaltConf`, 0 = off): a corpus dominated by ONE
-    * block — the single-source pathological case PLANS.md names — lands
-    * every pair of that block on one reducer under the plain shuffle join.
-    * With saltBuckets = k the block key is salted through
-    * `Scale.saltedJoin`: the build side replicates k ways, the probe side
-    * scatters by a deterministic row hash (doc_id, tok — distinct under a
-    * hot block), and the hot block's work spreads over k reducers. Same
-    * rows by construction (spec-asserted under a one-block corpus). The
-    * broadcast-gated fast path is skipped when salting — salting exists
-    * precisely for the build-side-too-big-to-broadcast regime.
     */
   private def sharedTokenJoin(tf: DataFrame, extraCond: Column): DataFrame = {
-    val spark = tf.sparkSession
-    val saltN = spark.conf
-      .get(graft.operators.Scale.DedupSaltConf, "0").toInt
-    val xSide = spread(spark, tf).select(
+    val xSide = spread(tf.sparkSession, tf).select(
       col("doc_id").as("x_doc_id"), col("source").as("x_source"),
       col("total").as("x_total"), col("tok").as("x_tok"), col("tf").as("x_tf"))
     val ySide = tf.select(
       col("doc_id").as("y_doc_id"), col("source").as("y_source"),
       col("total").as("y_total"), col("tok").as("y_tok"), col("tf").as("y_tf"))
-    if (saltN > 1) {
-      // STRUCT block key: exact (source, tok) equality, no separator games
-      val blk = (s: String) => struct(col(s + "_source"), col(s + "_tok"))
-      graft.operators.Scale.saltedJoin(
-          xSide.withColumn("__blk", blk("x")),
-          ySide.withColumn("__blk", blk("y")),
-          "__blk", saltN, saltCols = Seq("x_doc_id", "x_tok"))
-        .filter(extraCond)
-        .drop("__blk")
-    } else
-      xSide.join(maybeBroadcast(ySide),
-        col("x_source") === col("y_source") && col("x_tok") === col("y_tok") && extraCond)
+    xSide.join(maybeBroadcast(ySide),
+      col("x_source") === col("y_source") && col("x_tok") === col("y_tok") && extraCond)
   }
 
   /** The exhaustive all-shared-tokens rendering. */

@@ -66,8 +66,7 @@ object Mining {
     * key), verified by Levenshtein distance ≤ `maxDist`. The
     * blocking-then-verify shape is what makes ER tractable at scale: the
     * edit-distance kernel runs on within-block pairs only, never on the
-    * full cross product, and a skewed block salts through
-    * `Scale.saltedJoin` exactly like the dedup block joins.
+    * full cross product; a skewed block is left to AQE's skew-join split.
     */
   def erBlockedPairs(spark: SparkSession, dir: String, maxDist: Int = 2): DataFrame = {
     // spread the probe leg: the block join fans ~|block|²/2 candidates out

@@ -385,8 +385,8 @@ object Multimodal {
     blockHammingPairs(phashBlocksFrom(idsIn, blockBits), maxHam)
 
   /** The aHash stage alone: (doc_id, bs) with the 64-bit hash split into
-    * `blockBits`-wide substrings — shared by the exact, probed, and
-    * adaptive pair forms so hashing happens once per plan.
+    * `blockBits`-wide substrings — shared by the byte-block and probed
+    * pair forms so hashing happens once per plan.
     */
   private def phashBlocksFrom(idsIn: DataFrame, blockBits: Int): DataFrame = {
     val spark = idsIn.sparkSession
@@ -498,101 +498,6 @@ object Multimodal {
       .distinct()
   }
 
-  /** Route taken by the last adaptive fingerprint call ("byte_block" or
-    * "mih_probed") and the candidate-volume estimates that decided it
-    * ((byteCost, mihCost), candidate rows + explode rows each) — decision
-    * observability for `BenchScaleFingerprint`'s tripwire.
-    */
-  @volatile var lastFingerprintRoute: String = ""
-  @volatile var lastFingerprintEstimates: (Double, Double) = (0.0, 0.0)
-  /** True when the last adaptive call skipped cost estimation entirely
-    * (corpus below `spark.graft.fingerprint.dispatchMinDocs`). */
-  @volatile var lastFingerprintShortCircuit: Boolean = false
-
-  /** Cost-based dispatch between the byte-block and probed-MIH renderings
-    * of the SAME radius-`maxHam` pair query (both exact by pigeonhole, so
-    * the answer is route-independent — unlike the tighter-radius
-    * `*_mih` scale forms). The round-9 sweep measured the byte-block
-    * candidate join at 21–25× wall under 10× data (the n²/256 regime)
-    * while the 16-bit forms stayed 3–6×; this dispatcher makes that
-    * choice self-correcting the way `Dedup.ngramJaccardAdaptiveFrom`
-    * does for Jaccard: estimate each plan's shuffled row volume with
-    * cheap aggregates over per-key count tables (hashing runs ONCE — the
-    * 16-bit substrings are derived from the checkpointed 8-bit blocks),
-    * then run the cheaper plan. Costs: candidate rows the verify join
-    * would receive (Σ C(n,2) over exact-key blocks; Σ nProbe·nExact over
-    * probed keys, self-hits removed, halved for the id< direction) plus
-    * each plan's explode volume (n·blocks vs n·blocks·17). Driver work is
-    * two scalar collects over tiny aggregated tables — SKIPPED entirely
-    * below `spark.graft.fingerprint.dispatchMinDocs` (default 20k) docs,
-    * where estimation overhead exceeds either route's whole cost and the
-    * probed route is taken directly (`lastFingerprintShortCircuit`).
-    * `BenchScaleFingerprint` trips nonzero if the chosen route measures
-    * ≥2× slower than the alternative.
-    */
-  private def blockHammingPairsAdaptive(raw8: DataFrame, maxHam: Int,
-                                        totalBits: Int): DataFrame = {
-    val nb16 = totalBits / 16
-    val nb8 = totalBits / 8
-    require(maxHam < 2 * nb16,
-      s"probed MIH at per-block radius 1 covers ham < ${2 * nb16}, got $maxHam")
-    val rb = maxHam / nb16
-    val blocks8 = raw8.localCheckpoint()
-    // Short-circuit below a corpus-size threshold: the two estimation
-    // aggregates cost ~0.4–0.6 s of fixed overhead, which is 1.6–2× the
-    // ENTIRE query where either route is sub-second (measured at sf0.1,
-    // 5k docs: adaptive 1.04/1.28 s vs 0.65/0.65 s fixed). Below the
-    // threshold the probed route is taken directly — both routes are
-    // same-answer and sub-second there, and probed's 17-key selectivity
-    // never loses by more than the noise band at small n, while byte-block
-    // is the one with a quadratic tail if the corpus was mis-estimated.
-    // The blocks frame is checkpointed, so the count() is one cheap scan
-    // reused as nDocs by the estimation path when it does run.
-    val nDocsL = blocks8.count()
-    val minDocs = raw8.sparkSession.conf
-      .getOption("spark.graft.fingerprint.dispatchMinDocs").map(_.toLong).getOrElse(20000L)
-    if (nDocsL < minDocs) {
-      lastFingerprintShortCircuit = true
-      lastFingerprintEstimates = (0.0, 0.0)
-      lastFingerprintRoute = "mih_probed"
-      return verifyHamming(blocks8, probedCandidates(widen16(blocks8), rb), maxHam)
-    }
-    lastFingerprintShortCircuit = false
-    // per-key count tables: distinct (pos, value) is bounded by min(n·blocks,
-    // blocks·2^bits) — scalar aggregates over them are noise next to either
-    // candidate join
-    val c8 = blocks8.select(posexplode(col("bs")))
-      .groupBy(col("pos"), col("col")).agg(count(lit(1)).as("n"))
-    val byteCand = c8.agg(
-        coalesce(sum((col("n") * (col("n") - lit(1L)) / lit(2.0)).cast("double")), lit(0.0)))
-      .collect()(0).getDouble(0)
-    val nDocs = nDocsL.toDouble
-    val c16 = widen16(blocks8).select(posexplode(col("bs")))
-      .groupBy(col("pos"), col("col")).agg(count(lit(1)).as("n"))
-      .localCheckpoint()
-    val probeKeys = Seq(col("col")) ++
-      (if (rb >= 1) (0 until 16).map(i => col("col").bitwiseXOR(lit(1 << i))) else Seq.empty)
-    val landed = c16.select(col("pos"), explode(array(probeKeys: _*)).as("col"),
-        col("n").as("np"))
-      .groupBy(col("pos"), col("col")).agg(sum(col("np")).as("np"))
-      .join(c16, Seq("pos", "col"))
-      .agg(coalesce(sum((col("np") * col("n")).cast("double")), lit(0.0)))
-      .collect()(0).getDouble(0)
-    // landed counts ordered (probe-doc, build-doc) hits incl. each doc's
-    // identity self-hit (one per substring); the id< join keeps half the rest
-    val mihCand = (landed - nDocs * nb16) / 2.0
-    val byteCost = byteCand + nDocs * nb8
-    val mihCost = mihCand + nDocs * nb16 * (1 + (if (rb >= 1) 16 else 0))
-    lastFingerprintEstimates = (byteCost, mihCost)
-    if (mihCost < byteCost) {
-      lastFingerprintRoute = "mih_probed"
-      verifyHamming(blocks8, probedCandidates(widen16(blocks8), rb), maxHam)
-    } else {
-      lastFingerprintRoute = "byte_block"
-      verifyHamming(blocks8, exactCandidates(blocks8), maxHam)
-    }
-  }
-
   /** Image dedup COLLAPSE: connected components over the multi-index
     * fingerprint pairs (shared pointer-jumping labeler), then keep the
     * highest-RESOLUTION variant per cluster (area desc, ties to low id) —
@@ -688,7 +593,7 @@ object Multimodal {
     blockHammingPairs(afpBlocksFrom(idsIn, blockBits), maxHam)
 
   /** The audio-fingerprint stage alone (32-bit hash in `blockBits`-wide
-    * substrings) — shared by the exact, probed, and adaptive pair forms.
+    * substrings) — shared by the byte-block and probed pair forms.
     */
   private def afpBlocksFrom(idsIn: DataFrame, blockBits: Int): DataFrame = {
     val spark = idsIn.sparkSession
@@ -716,9 +621,9 @@ object Multimodal {
   }
 
   /** Probed-MIH rendering of [[phashPairs]] — SAME radius-7 answer (see
-    * [[probedCandidates]]), ~55× more selective candidate keys: the plan
-    * the adaptive dispatcher picks once the byte-block n²/256 regime
-    * bites (21–25× wall at 10× data in `BENCH_SCALE_fingerprint.json`).
+    * [[probedCandidates]]), ~55× more selective candidate keys: the
+    * byte-block n²/256 candidate join grows 21–25× in wall under 10× data
+    * (`BENCH_SCALE_fingerprint.json`).
     */
   def phashPairsProbed(spark: SparkSession, dir: String, maxHam: Int = 7): DataFrame =
     phashPairsProbedFrom(Tables.documents(spark, dir).select(col("doc_id")), maxHam)
@@ -741,21 +646,16 @@ object Multimodal {
     verifyHamming(blocks8, probedCandidates(widen16(blocks8), maxHam / 2), maxHam)
   }
 
-  /** Cost-routed [[phashPairs]]: byte-block vs probed-MIH, chosen from
-    * exact candidate-volume estimates (see [[blockHammingPairsAdaptive]]).
+  /** The registry's `multimodal_phash_pairs` entry, kept under its name:
+    * [[phashPairsProbed]], which beats the byte-block rendering at 1× and
+    * 10× for both families (`BENCH_SCALE_fingerprint.json`).
     */
   def phashPairsAdaptive(spark: SparkSession, dir: String, maxHam: Int = 7): DataFrame =
-    phashPairsAdaptiveFrom(Tables.documents(spark, dir).select(col("doc_id")), maxHam)
+    phashPairsProbed(spark, dir, maxHam)
 
-  def phashPairsAdaptiveFrom(idsIn: DataFrame, maxHam: Int = 7): DataFrame =
-    blockHammingPairsAdaptive(phashBlocksFrom(idsIn, 8), maxHam, 64)
-
-  /** Cost-routed [[afpPairs]]: byte-block vs probed-MIH. */
+  /** The registry's `multimodal_afp_pairs` entry: [[afpPairsProbed]]. */
   def afpPairsAdaptive(spark: SparkSession, dir: String, maxHam: Int = 2): DataFrame =
-    afpPairsAdaptiveFrom(Tables.documents(spark, dir).select(col("doc_id")), maxHam)
-
-  def afpPairsAdaptiveFrom(idsIn: DataFrame, maxHam: Int = 2): DataFrame =
-    blockHammingPairsAdaptive(afpBlocksFrom(idsIn, 8), maxHam, 32)
+    afpPairsProbed(spark, dir, maxHam)
 
   /** One sampled frame: position, time offset, decoded features. */
   case class FrameRow(id: Long, media_type: String, n_frames: Long,

@@ -729,7 +729,7 @@ object Similarity {
     // candidate set is BYTE-small (two longs a row) so AQE coalesces it
     // to ~1 partition, but each row costs a full-dim cosine — profiled
     // as a 1.6 s single-task stage = the whole verify pass run serially
-    // (the prefixPairsFromBase lesson, verbatim; guide §2.5 cheap-bytes/
+    // (the ngramJaccardPrefixFrom lesson, verbatim; guide §2.5 cheap-bytes/
     // expensive-CPU)
     graft.Tables.spread(e.sparkSession, cand)
       .join(e.select(col("vec_id").as("vec_a"), col("embedding").as("ea"), col("nrm").as("na")), "vec_a")

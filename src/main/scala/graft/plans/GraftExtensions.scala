@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.LongType
   * state per group. The engine mirrors that exactly with
   * `size(collect_set(x))` (oracle-verified). At 100 TB the exact set is the
   * wrong trade: this rule rewrites `size(collect_set(x))` aggregates to
-  * `approx_count_distinct(x)` when `spark.graft.approxDistinct=true`,
+  * `approx_count_distinct(x)` when `spark.graft.scaleMode=true`,
   * turning per-group state from O(n) to O(1) sketch registers without
   * touching query code.
   *
@@ -25,12 +25,6 @@ import org.apache.spark.sql.types.LongType
   * programmatically: `GraftSession.builder().withExtensions(...)`.
   */
 class ApproxDistinctRule extends Rule[LogicalPlan] {
-
-  // specific flag wins; otherwise the one-switch profile flag
-  // spark.graft.scaleMode enables every sketch rewrite at once
-  private def enabled: Boolean =
-    conf.getConfString("spark.graft.approxDistinct",
-      conf.getConfString("spark.graft.scaleMode", "false")).toBoolean
 
   private def hll(child: Expression, filter: Option[Expression]): Expression =
     AggregateExpression(HyperLogLogPlusPlus(child), Complete, isDistinct = false, filter)
@@ -58,7 +52,7 @@ class ApproxDistinctRule extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabled) plan
+    if (!conf.getConfString("spark.graft.scaleMode", "false").toBoolean) plan
     else plan.transformUp {
       case agg @ Aggregate(_, aggExprs, _, _) =>
         val rewritten = aggExprs.map { ne =>
@@ -78,7 +72,7 @@ class ApproxDistinctRule extends Rule[LogicalPlan] {
 /** Scale-mode rewrite of exact interpolated percentiles into t-digest
   * sketches: `percentile(x, p)` keeps O(n) per-group state (it buffers
   * every value), the wrong trade at 100 TB; under
-  * `spark.graft.approxPercentile=true` it becomes
+  * `spark.graft.scaleMode=true` it becomes
   * `approx_percentile(x, p)` (bounded sketch state, same result shape) —
   * the same swap pattern as `ApproxDistinctRule` for distinct counts.
   * Only frequency-1 percentiles (the common form) are rewritten.
@@ -87,12 +81,8 @@ class ApproxPercentileRule extends Rule[LogicalPlan] {
   import org.apache.spark.sql.catalyst.expressions.aggregate.{ApproximatePercentile, Percentile}
   import org.apache.spark.sql.catalyst.expressions.Literal
 
-  private def enabled: Boolean =
-    conf.getConfString("spark.graft.approxPercentile",
-      conf.getConfString("spark.graft.scaleMode", "false")).toBoolean
-
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabled) plan
+    if (!conf.getConfString("spark.graft.scaleMode", "false").toBoolean) plan
     else plan.transformUp {
       case agg: Aggregate =>
         agg.transformExpressions {

@@ -2,10 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.operators.Scale
 import graft.plans.GraftExtensions
 
-/** ApproxDistinctRule: `size(collect_set(x))` → `approx_count_distinct(x)`
-  * under `spark.graft.approxDistinct=true`, untouched otherwise.
+/** The scale-mode sketch rewrites, both driven by `spark.graft.scaleMode`
+  * alone: `size(collect_set(x))` → `approx_count_distinct(x)` and
+  * `percentile(x, p)` → `approx_percentile(x, p)`, untouched otherwise.
   */
 class ExtensionSpec extends SparkSpecBase {
 
@@ -30,12 +32,12 @@ class ExtensionSpec extends SparkSpecBase {
       import s.implicits._
       val df = (1 to 2000).map(i => (i % 4, i.toDouble)).toDF("k", "v")
 
-      s.conf.set("spark.graft.approxPercentile", "false")
+      Scale.scaleMode(s, on = false)
       val exact = df.groupBy("k").agg(expr("percentile(v, 0.5)").as("p50"))
       assert(exact.queryExecution.optimizedPlan.toString.contains("percentile("))
       val exactRows = exact.collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
 
-      s.conf.set("spark.graft.approxPercentile", "true")
+      Scale.scaleMode(s)
       val approx = df.groupBy("k").agg(expr("percentile(v, 0.5)").as("p50"))
       val plan = approx.queryExecution.optimizedPlan.toString
       assert(plan.contains("percentile_approx") || plan.contains("approx_percentile"),
@@ -46,7 +48,7 @@ class ExtensionSpec extends SparkSpecBase {
       exactRows.foreach { case (k, v) =>
         assert(math.abs(approxRows(k) - v) <= math.max(2.0, v * 0.02), s"k=$k: ${approxRows(k)} vs $v")
       }
-      s.conf.set("spark.graft.approxPercentile", "false")
+      Scale.scaleMode(s, on = false)
     }
   }
 
@@ -60,21 +62,14 @@ class ExtensionSpec extends SparkSpecBase {
         df.groupBy("k").agg(expr("percentile(v, 0.5)").as("p50"))
           .queryExecution.optimizedPlan.toString)
 
-      graft.operators.Scale.scaleMode(s)
+      Scale.scaleMode(s)
       val (d1, p1) = plans()
       assert(d1.contains("approx_count_distinct") && !d1.contains("collect_set"))
       assert(p1.contains("percentile_approx") || p1.contains("approx_percentile"))
 
-      // specific flag overrides the profile flag individually
-      s.conf.set("spark.graft.approxDistinct", "false")
+      Scale.scaleMode(s, on = false)
       val (d2, p2) = plans()
-      assert(d2.contains("collect_set"), "specific off-flag must win over scaleMode")
-      assert(p2.contains("percentile_approx") || p2.contains("approx_percentile"))
-      s.conf.unset("spark.graft.approxDistinct")
-
-      graft.operators.Scale.scaleMode(s, on = false)
-      val (d3, p3) = plans()
-      assert(d3.contains("collect_set") && p3.contains("percentile("))
+      assert(d2.contains("collect_set") && p2.contains("percentile("))
     }
   }
 
@@ -83,13 +78,13 @@ class ExtensionSpec extends SparkSpecBase {
       import s.implicits._
       val df = (1 to 1000).map(i => (i % 7, i % 101)).toDF("k", "u")
 
-      s.conf.set("spark.graft.approxDistinct", "false")
+      Scale.scaleMode(s, on = false)
       val exact = df.groupBy("k").agg(size(collect_set($"u")).as("ct"))
       assert(exact.queryExecution.optimizedPlan.toString.contains("collect_set"))
       val exactRows = exact.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
       assert(exactRows.values.forall(_ == 101))
 
-      s.conf.set("spark.graft.approxDistinct", "true")
+      Scale.scaleMode(s)
       val approx = df.groupBy("k").agg(size(collect_set($"u")).as("ct"))
       val optimized = approx.queryExecution.optimizedPlan.toString
       assert(!optimized.contains("collect_set"), s"not rewritten:\n$optimized")
@@ -98,7 +93,7 @@ class ExtensionSpec extends SparkSpecBase {
       val approxRows = approx.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
       assert(approxRows.keySet == exactRows.keySet)
       approxRows.values.foreach(v => assert(math.abs(v - 101) <= 10, s"approx too far: $v"))
-      s.conf.set("spark.graft.approxDistinct", "false")
+      Scale.scaleMode(s, on = false)
     }
   }
 }

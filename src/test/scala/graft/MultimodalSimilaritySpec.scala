@@ -538,8 +538,7 @@ class MultimodalSimilaritySpec extends SparkSpecBase {
     // The probe-expanded 16-bit form claims EXACT recall at the byte-block
     // radius (pigeonhole: ham ≤ 7 over 4 substrings ⟹ one substring within
     // 1 bit). Gate it row-for-row against the byte-block form on the real
-    // corpus, both families, and pin the adaptive entry to the same rows
-    // (the dispatcher may pick either plan — the answer must not move).
+    // corpus, both families, and pin the registry entries to the same rows.
     val dir = "/root/testdata/sf0.001"
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -547,27 +546,11 @@ class MultimodalSimilaritySpec extends SparkSpecBase {
     val phByte = rows(Multimodal.phashPairs(spark, dir))
     assert(phByte.nonEmpty)
     assert(rows(Multimodal.phashPairsProbed(spark, dir)) == phByte)
-    // default threshold: this corpus (500 docs < 20k) must SHORT-CIRCUIT —
-    // no estimation aggregates, probed route, estimates deliberately (0,0)
-    assert(rows(Multimodal.phashPairsAdaptive(spark, dir)) == phByte)
-    assert(Multimodal.lastFingerprintShortCircuit &&
-      Multimodal.lastFingerprintRoute == "mih_probed",
-      s"small corpus must short-circuit to probed: route=${Multimodal.lastFingerprintRoute}")
-    // threshold forced to 1: the estimation path must run, record positive
-    // cost estimates, and STILL return the same rows whichever way it routes
-    spark.conf.set("spark.graft.fingerprint.dispatchMinDocs", "1")
-    try {
-      assert(rows(Multimodal.phashPairsAdaptive(spark, dir)) == phByte)
-      val phRoute = Multimodal.lastFingerprintRoute
-      val (phB, phM) = Multimodal.lastFingerprintEstimates
-      assert(!Multimodal.lastFingerprintShortCircuit &&
-        Set("byte_block", "mih_probed")(phRoute) && phB > 0 && phM > 0,
-        s"dispatcher observability broken: route=$phRoute est=($phB,$phM)")
-    } finally spark.conf.unset("spark.graft.fingerprint.dispatchMinDocs")
-
     val afByte = rows(Multimodal.afpPairs(spark, dir))
     assert(afByte.nonEmpty)
     assert(rows(Multimodal.afpPairsProbed(spark, dir)) == afByte)
-    assert(rows(Multimodal.afpPairsAdaptive(spark, dir)) == afByte)
+    assert(rows(SparkEntry.queries("multimodal_phash_pairs")(spark, dir)) == phByte &&
+      rows(SparkEntry.queries("multimodal_afp_pairs")(spark, dir)) == afByte,
+      "the registry entries must return the byte-block rows")
   }
 }

@@ -91,47 +91,6 @@ class PropertySpec extends SparkSpecBase {
     } finally spark.conf.unset(graft.operators.Scale.PrefixCrossoverConf)
   }
 
-  test("adaptive Jaccard dispatcher: identical pairs on either route, route follows the pruning estimate") {
-    val r = new Random(7)
-    def word() = if (r.nextInt(3) == 0) s"hot${r.nextInt(3)}" else s"w${r.nextInt(200)}"
-    val base = (0 until 60).map { i =>
-      (i.toLong, s"s${i % 3}", (0 until 8 + r.nextInt(20)).map(_ => word()).mkString(" "))
-    }
-    val mutated = (0 until 20).map { i =>
-      val (_, src, text) = base(r.nextInt(base.length))
-      val ws = text.split(" ").toSeq
-      (100L + i, src, (ws.drop(r.nextInt(1 + ws.length / 4)) ++
-        Seq.fill(r.nextInt(3))(word())).mkString(" "))
-    }
-    val df = (base ++ mutated).toDF("doc_id", "source", "text")
-    // crossover off: exercise the real dispatcher, not the toy re-route
-    spark.conf.set(graft.operators.Scale.PrefixCrossoverConf, "0")
-    try {
-      val want = Dedup.ngramJaccardExhaustiveFrom(df)
-        .as[(Long, Long, Double)].collect().toSet
-      assert(want.nonEmpty, "fixture planted no qualifying pairs")
-      def adaptive() = Dedup.ngramJaccardAdaptiveFrom(df)
-        .as[(Long, Long, Double)].collect().toSet
-      // ratio 0: any prefix estimate clears the bound -> exhaustive route
-      spark.conf.set(graft.operators.Scale.AdaptivePruneRatioConf, "0.0")
-      assert(adaptive() == want)
-      assert(Dedup.lastAdaptiveRoute == "exhaustive")
-      // ratio just above 1: prefix rows are a subset of bag rows, so the
-      // estimate can never clear the bound -> prefix route
-      spark.conf.set(graft.operators.Scale.AdaptivePruneRatioConf, "1.01")
-      assert(adaptive() == want)
-      assert(Dedup.lastAdaptiveRoute == "prefix")
-      // default bound: the route is the data's call (this tiny corpus
-      // plants no regime) — the CONTRACT is identical output either way
-      spark.conf.unset(graft.operators.Scale.AdaptivePruneRatioConf)
-      assert(adaptive() == want)
-      assert(Set("prefix", "exhaustive")(Dedup.lastAdaptiveRoute))
-    } finally {
-      spark.conf.unset(graft.operators.Scale.PrefixCrossoverConf)
-      spark.conf.unset(graft.operators.Scale.AdaptivePruneRatioConf)
-    }
-  }
-
   test("bag overlap (containment) == driver-side multiset reference on random corpora") {
     def reference(rows: Seq[(Long, String, String)], t: Double): Set[(Long, Long, Double)] = {
       def bag(s: String): Map[String, Int] =

@@ -115,44 +115,6 @@ class ScaleSpec extends SparkSpecBase {
     }
   }
 
-  test("salted join returns exactly the plain-join rows under skew") {
-    // pathological skew: 90% of probe rows share one key
-    val probe = (1 to 2000).map(i => (if (i <= 1800) 1L else i.toLong % 50, i))
-      .toDF("k", "v")
-    val build = (0L to 60L).map(k => (k, s"dim$k")).toDF("k", "name")
-    val plain = probe.join(build, "k")
-    val salted = Scale.saltedJoin(probe, build, "k", salt = 8)
-    assert(salted.count() == plain.count())
-    val a = plain.select("k", "v", "name").collect().map(_.toSeq).sorted(
-      Ordering.by((s: Seq[Any]) => s.mkString(",")))
-    val b = salted.select("k", "v", "name").collect().map(_.toSeq).sorted(
-      Ordering.by((s: Seq[Any]) => s.mkString(",")))
-    assert(a.toSeq == b.toSeq)
-  }
-
-  test("skew flag: salted exhaustive dedup joins match plain output on a one-block corpus") {
-    // the pathological case PLANS.md names: EVERY doc in one source, so the
-    // whole (source, tok) block family lands on a handful of reducers under
-    // the plain shuffle join; the flag salts it through Scale.saltedJoin
-    val r = new scala.util.Random(7)
-    val docs = (0 until 120).map { i =>
-      (i.toLong, "s0", (0 until 6 + r.nextInt(12)).map(_ => s"w${r.nextInt(20)}").mkString(" "))
-    }.toDF("doc_id", "source", "text")
-    val plainJ = pipeline.Dedup.ngramJaccardExhaustiveFrom(docs).collect().map(_.toSeq).toSet
-    val plainC = pipeline.Dedup.bagOverlapFrom(docs).collect().map(_.toSeq).toSet
-    assert(plainJ.nonEmpty && plainC.nonEmpty, "fixture produced no pairs — vacuous")
-    spark.conf.set(Scale.DedupSaltConf, "8")
-    try {
-      val saltedJ = pipeline.Dedup.ngramJaccardExhaustiveFrom(docs)
-      assert(saltedJ.queryExecution.executedPlan.toString.contains("__salt"),
-        "salt machinery missing from the flagged plan")
-      assert(saltedJ.collect().map(_.toSeq).toSet == plainJ,
-        "salted jaccard join diverged from plain")
-      assert(pipeline.Dedup.bagOverlapFrom(docs).collect().map(_.toSeq).toSet == plainC,
-        "salted containment join diverged from plain")
-    } finally spark.conf.unset(Scale.DedupSaltConf)
-  }
-
   test("BenchScale enforces prefix/exhaustive pair-set equality (diverging run fails)") {
     intercept[IllegalStateException] { BenchScale.enforcePairEquality(false, true) }
     intercept[IllegalStateException] { BenchScale.enforcePairEquality(true, false) }

@@ -5,9 +5,9 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 /** The sweep harness contract every bench main relies on: the artifact is
   * rewritten after each leg, the gates run only once it is on disk, the
-  * JSON writer escapes what it is given, the job log records what ran, and
-  * a temp tree is deleted without following links. Runs on the shared
-  * session with a no-op stop.
+  * JSON writer escapes what it is given, the job log records and names
+  * what ran, and a temp tree is deleted without following links. Runs on
+  * the shared session with a no-op stop.
   */
 class SweepSpec extends SparkSpecBase {
 
@@ -94,6 +94,22 @@ class SweepSpec extends SparkSpecBase {
       assert(c.log.inputBytes > 0, "the parquet scan's task input bytes")
       c.log.reset()
       assert(c.log.jobs.isEmpty && c.log.stages.isEmpty && c.log.inputBytes == 0)
+    } finally spark.sparkContext.removeSparkListener(c.log)
+  }
+
+  test("the job log names each job and its stages after the SQL execution that ran them") {
+    val c = Sweep.Ctx(spark, sfDir, Seq(1), 1)
+    try {
+      c.log.reset()
+      spark.range(0, 100, 1, 2).repartition(3).localCheckpoint().count()
+      c.log.settle()
+      val names = c.log.jobs.map(_.desc)
+      assert(names.exists(_.startsWith("localCheckpoint at SweepSpec.scala:")), names)
+      assert(names.exists(_.startsWith("count at SweepSpec.scala:")), names)
+      assert(names.forall(n => n.startsWith("localCheckpoint at ") || n.startsWith("count at ")),
+        s"every job, AQE's shuffle-stage jobs included, is named: $names")
+      assert(c.log.stages.nonEmpty && c.log.stages.forall(s => names.contains(s.job)),
+        s"every stage carries its job's name: ${c.log.stages}")
     } finally spark.sparkContext.removeSparkListener(c.log)
   }
 

@@ -8,9 +8,8 @@
 working directory under <outdir> (artifact, stdout, stderr, exit code).
 `single` runs all eleven BenchScale* mains at SPARK_GRAFT_SCALE_FACTOR=2;
 `multi` runs the multi-leg ones other than BenchScaleAnn at
-SPARK_GRAFT_SCALE_FACTORS=2,3; `stream` runs BenchStream at factor 1 (both
-SPARK_GRAFT_SCALE_FACTOR=1 and the older SPARK_GRAFT_STREAM_FACTORS=1, so
-builds on either side of that rename run the same legs); `audit` runs the
+SPARK_GRAFT_SCALE_FACTORS=2,3; `stream` runs BenchStream at factor 1
+(SPARK_GRAFT_SCALE_FACTOR=1); `audit` runs the
 registry walker PlanAudit over every query (PLAN_AUDIT.json). The data dir,
 reps, cores and heap come from the caller's environment
 (SPARK_GRAFT_SF_DIR, SPARK_GRAFT_BENCH_REPS, SPARK_GRAFT_CPUS, HEAP).
@@ -50,7 +49,7 @@ def run(checkout, outdir, which):
     elif which == "multi":
         env["SPARK_GRAFT_SCALE_FACTORS"] = "2,3"
     elif which == "stream":
-        env["SPARK_GRAFT_SCALE_FACTOR"] = env["SPARK_GRAFT_STREAM_FACTORS"] = "1"
+        env["SPARK_GRAFT_SCALE_FACTOR"] = "1"
     runner = os.path.join(os.path.abspath(checkout), "tools", "javarun.sh")
     for main in SETS[which]:
         d = os.path.join(outdir, main)
